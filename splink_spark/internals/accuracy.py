@@ -164,7 +164,6 @@ def unlinkables_table(linker) -> DataFrame:
     """Self-link match-weight distribution (reference unlinkables.py;
     linker.py:493-552): score every record against itself; records whose
     self-match weight is low are intrinsically unlinkable."""
-    from .comparison_vectors import blocked_pairs_with_columns, compute_comparison_vectors
     from .predict import predict_from_comparison_vectors
 
     s = linker.settings
@@ -185,10 +184,7 @@ def unlinkables_table(linker) -> DataFrame:
         F.col(uid).alias("join_key_l"),
         F.col(uid).alias("join_key_r"),
     )
-    cv = compute_comparison_vectors(
-        blocked_pairs_with_columns(pairs, concat, s), s
-    )
-    scored = predict_from_comparison_vectors(cv, s)
+    scored = predict_from_comparison_vectors(linker.comparison_vectors(pairs=pairs), s)
     rounded = F.round(F.col("match_weight"), 2).alias("match_weight")
     return (
         scored.select(rounded)

@@ -16,6 +16,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .blocking import block_using_rules
+from .misc import row_count
 from .settings import Settings
 
 
@@ -76,14 +78,7 @@ def blocked_pairs_with_columns(
     right_src = concat_with_tf_right if concat_with_tf_right is not None else concat_with_tf
     narrow_r = right_src.select([F.col(c).alias(f"{c}_r") for c in cols])
     if broadcast_nodes_max_rows:
-        n_nodes = getattr(concat_with_tf, "_splink_row_count", None)
-        if n_nodes is None:
-            n_nodes = concat_with_tf.count()
-            try:
-                concat_with_tf._splink_row_count = n_nodes  # type: ignore[attr-defined]
-            except Exception:
-                pass
-        if n_nodes <= broadcast_nodes_max_rows:
+        if row_count(concat_with_tf) <= broadcast_nodes_max_rows:
             narrow_l = F.broadcast(narrow_l)
             narrow_r = F.broadcast(narrow_r)
 
@@ -113,6 +108,7 @@ def build_pairs_with_columns(
     settings: Settings,
     nodes_right: Optional[DataFrame] = None,
     repartition_count: Optional[int] = None,
+    link_type: Optional[str] = None,
 ) -> DataFrame:
     """Blocked pairs WITH their compared columns, by whichever join shape is
     right for the node-table size:
@@ -128,40 +124,24 @@ def build_pairs_with_columns(
 
     ``repartition_count`` (small-table path only) spreads the ids-only join
     output before the junction so a fuzzy-metric stage keeps full
-    parallelism under AQE coalescing.
+    parallelism under AQE coalescing. ``link_type`` overrides the
+    settings' link type for the pair filter.
     """
-    from .blocking import block_using_rules
-
     s = settings
-    sd = s.source_dataset_column_name if s.needs_source_dataset else None
-    can_carry = not any(r.exploded_columns for r in rules)
-    n_nodes = getattr(nodes, "_splink_row_count", None)
-    if can_carry:
-        if n_nodes is None:
-            n_nodes = nodes.count()
-            try:
-                nodes._splink_row_count = n_nodes  # type: ignore[attr-defined]
-            except Exception:
-                pass
-        if n_nodes > BROADCAST_NODES_MAX_ROWS:
-            cols = _needed_columns(s, nodes)
-            return block_using_rules(
-                nodes,
-                rules,
-                link_type=s.link_type,
-                unique_id_column_name=s.unique_id_column_name,
-                source_dataset_column_name=sd,
-                nodes_right=nodes_right,
-                output_columns=cols,
-            )
-    pairs = block_using_rules(
-        nodes,
-        rules,
-        link_type=s.link_type,
+    block = dict(
+        link_type=link_type or s.link_type,
         unique_id_column_name=s.unique_id_column_name,
-        source_dataset_column_name=sd,
+        source_dataset_column_name=(
+            s.source_dataset_column_name if s.needs_source_dataset else None
+        ),
         nodes_right=nodes_right,
     )
+    can_carry = not any(r.exploded_columns for r in rules)
+    if can_carry and row_count(nodes) > BROADCAST_NODES_MAX_ROWS:
+        return block_using_rules(
+            nodes, rules, output_columns=_needed_columns(s, nodes), **block
+        )
+    pairs = block_using_rules(nodes, rules, **block)
     if repartition_count:
         pairs = pairs.repartition(repartition_count)
     return blocked_pairs_with_columns(

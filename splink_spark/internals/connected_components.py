@@ -21,7 +21,7 @@ import logging
 import time
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .materialize import MaterializationPolicy
@@ -35,11 +35,9 @@ logger = logging.getLogger(__name__)
 #: scheduling latency per round, which dwarfs the actual work on small edge
 #: sets, while 5M edges collect to ~80 MB of Arrow. The reference solves CC
 #: single-node *always* (DuckDB recursive loop); we keep the distributed loop
-#: as the default for anything larger. Override via env
-#: SPLINK_SPARK_CC_DRIVER_MAX_EDGES or the function parameter (0 disables).
-import os as _os
-
-DRIVER_SOLVE_MAX_EDGES = int(_os.environ.get("SPLINK_SPARK_CC_DRIVER_MAX_EDGES", 5_000_000))
+#: as the default for anything larger. Override via the function parameter
+#: (0 disables).
+DRIVER_SOLVE_MAX_EDGES = 5_000_000
 
 
 def _solve_cc_driver(
@@ -114,21 +112,15 @@ def _solve_cc_driver(
         # of components for free
         out = out[out["node"] != out["cluster_id"]]
         assignments = spark.createDataFrame(out, schema)
-        try:
-            assignments._splink_row_count = len(out)  # type: ignore[attr-defined]
-        except Exception:
-            pass
+        assignments._splink_row_count = len(out)  # type: ignore[attr-defined]
 
     if assignments_only:
         out_df = assignments.select(
             F.col("node").alias(node_col), F.col("cluster_id")
         )
-        try:
-            out_df._splink_row_count = getattr(  # type: ignore[attr-defined]
-                assignments, "_splink_row_count", None
-            )
-        except Exception:
-            pass
+        out_df._splink_row_count = getattr(  # type: ignore[attr-defined]
+            assignments, "_splink_row_count", None
+        )
         return out_df
     rep = (
         nodes.select(F.col(node_col).alias("node"))
@@ -153,7 +145,7 @@ def solve_connected_components(
     driver_solve_max_edges: Optional[int] = None,
     assignments_only: bool = False,
     edges_cheap_to_recompute: bool = False,
-    contract_frac: Optional[float] = None,
+    contract_frac: Optional[float] = 0.05,
     contract_min_gap: int = 2,
 ) -> DataFrame:
     """Return (node_id, cluster_id) with cluster_id = min node id in component.
@@ -190,9 +182,8 @@ def solve_connected_components(
     frontier-derived side, so hash beats sort-merge and skips both sorts
     (guide: prefer shuffled-hash when the per-partition build side fits).
 
-    ``contract_frac`` (default from env SPLINK_SPARK_CC_CONTRACT_FRAC,
-    0.05; 0/None disables): graph contraction once the frontier has
-    collapsed. Every round scans the FULL cached neighbour table (the
+    ``contract_frac`` (default 0.05; 0/None disables): graph contraction
+    once the frontier has collapsed. Every round scans the FULL cached neighbour table (the
     broadcast-join probe side) and rebuilds jump parents from the FULL rep
     table, even when only a sliver of nodes is still moving — at 10M+ nodes
     those two scans ARE the near-converged rounds' cost. When
@@ -301,10 +292,6 @@ def solve_connected_components(
     n_delta_init = n_delta
     since_rep_checkpoint = 0
     rounds_run = 0
-    if contract_frac is None:
-        contract_frac = float(
-            _os.environ.get("SPLINK_SPARK_CC_CONTRACT_FRAC", "0.05")
-        )
     rounds_since_contract = 0
     # archived full (node -> rep) mappings, outermost first; composed back
     # over the contracted result at exit
@@ -483,14 +470,32 @@ def solve_connected_components(
             rep = mat.materialize(rep, "clustering", iterative=True)
 
     out = rep.select(F.col("node").alias(node_col), F.col("rep").alias("cluster_id"))
-    try:
-        # observability for benches/tests: how many delta rounds the
-        # distributed loop ran (the loop is eager, so this is final)
-        out._splink_cc_rounds = rounds_run  # type: ignore[attr-defined]
-        out._splink_cc_contractions = n_contractions  # type: ignore[attr-defined]
-    except Exception:
-        pass
+    # observability for benches/tests: how many delta rounds the
+    # distributed loop ran (the loop is eager, so this is final)
+    out._splink_cc_rounds = rounds_run  # type: ignore[attr-defined]
+    out._splink_cc_contractions = n_contractions  # type: ignore[attr-defined]
     return out
+
+
+def node_id_columns(
+    uid: str, source_dataset: Optional[str] = None
+) -> tuple[Column, Column, Column]:
+    """Graph node-id expressions ``(node, edge_l, edge_r)``: over a record
+    table, and over a pair table's ``_l`` / ``_r`` columns. With
+    ``source_dataset`` they are the composite ``<dataset>-__-<uid>`` strings
+    (unique_id_concat.py:8-43), since uids are only unique per dataset;
+    without, the bare uid columns."""
+    if source_dataset is None:
+        return F.col(uid), F.col(f"{uid}_l"), F.col(f"{uid}_r")
+
+    def composite(suffix: str) -> Column:
+        return F.concat_ws(
+            "-__-",
+            F.col(f"{source_dataset}{suffix}").cast("string"),
+            F.col(f"{uid}{suffix}").cast("string"),
+        )
+
+    return composite(""), composite("_l"), composite("_r")
 
 
 def join_assignments_onto_nodes(
@@ -539,20 +544,10 @@ def cluster_pairwise_predictions_at_threshold(
     if edges_cached:
         df_predict = narrow
 
-    if s.needs_source_dataset and s.source_dataset_column_name in concat.columns:
-        # composite node id (unique_id_concat.py:8-43)
-        sd = s.source_dataset_column_name
-        node_expr = F.concat_ws("-__-", F.col(sd).cast("string"), F.col(uid).cast("string"))
-        edge_l = F.concat_ws(
-            "-__-", F.col(f"{sd}_l").cast("string"), F.col(f"{uid}_l").cast("string")
-        )
-        edge_r = F.concat_ws(
-            "-__-", F.col(f"{sd}_r").cast("string"), F.col(f"{uid}_r").cast("string")
-        )
-    else:
-        node_expr = F.col(uid)
-        edge_l = F.col(f"{uid}_l")
-        edge_r = F.col(f"{uid}_r")
+    sd = s.source_dataset_column_name
+    node_expr, edge_l, edge_r = node_id_columns(
+        uid, sd if s.needs_source_dataset and sd in concat.columns else None
+    )
 
     has_match_prob = "match_probability" in df_predict.columns
     if threshold_match_probability is not None and not has_match_prob:

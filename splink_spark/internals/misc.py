@@ -67,6 +67,17 @@ def default_parallelism(spark) -> int:
             return 200
 
 
+def row_count(df) -> int:
+    """``df.count()``, memoised on the frame as ``_splink_row_count`` so
+    every size decision on the same (usually persisted) frame shares one
+    count job."""
+    n = getattr(df, "_splink_row_count", None)
+    if n is None:
+        n = df.count()
+        df._splink_row_count = n
+    return n
+
+
 def optimizer_barrier(col):
     """Value-stable identity wrapper that Catalyst cannot optimize through:
     ``shuffle(array(col))[0]`` — shuffling a one-element array is the

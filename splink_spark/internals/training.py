@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .blocking import BlockingRule, CustomRule, block_using_rules
 from .comparison_vectors import blocked_pairs_with_columns, compute_comparison_vectors
+from .misc import row_count
 
 logger = logging.getLogger(__name__)
 
@@ -43,7 +44,7 @@ def _cartesian_total(linker) -> float:
     s = linker.settings
     concat = linker.df_concat()
     if not s.needs_source_dataset:
-        n = getattr(concat, "_splink_row_count", None) or concat.count()
+        n = row_count(concat)
         return n * (n - 1) / 2
     counts = [
         r["count"]
@@ -237,7 +238,7 @@ def estimate_u_using_random_sampling(
     # TF join would only widen every row this stage touches (the TF build
     # itself still happens exactly once, at the first consumer that scores)
     concat = _concat_for_gammas(linker)
-    n = getattr(concat, "_splink_row_count", None) or concat.count()
+    n = row_count(concat)
     target_sample = math.sqrt(max_pairs * 2)
     fraction = min(1.0, target_sample / max(n, 1))
 
@@ -401,9 +402,7 @@ def estimate_m_from_pairwise_labels(linker, labels: "DataFrame") -> dict:
             lo.alias("join_key_l"),
             hi.alias("join_key_r"),
         ).distinct()
-    with_cols = blocked_pairs_with_columns(pairs, linker.df_concat_with_tf(), s)
-    cv = compute_comparison_vectors(with_cols, s)
-    return _m_from_cv(s, cv)
+    return _m_from_cv(s, linker.comparison_vectors(pairs=pairs))
 
 
 def _m_from_cv(s, cv) -> dict:
@@ -441,17 +440,10 @@ def estimate_m_from_label_column(linker, label_column: str) -> dict:
     from .blocking import block_on
 
     s = linker.settings
-    pairs = block_using_rules(
-        linker.df_concat_with_tf(),
-        [block_on(label_column)],
+    cv = linker.comparison_vectors(
+        rules=[block_on(label_column)],
         link_type=s.link_type if not s.needs_source_dataset else "link_and_dedupe",
-        unique_id_column_name=s.unique_id_column_name,
-        source_dataset_column_name=s.source_dataset_column_name
-        if s.needs_source_dataset
-        else None,
     )
-    with_cols = blocked_pairs_with_columns(pairs, linker.df_concat_with_tf(), s)
-    cv = compute_comparison_vectors(with_cols, s)
     return _m_from_cv(s, cv)
 
 

@@ -17,8 +17,10 @@ from pyspark.sql import functions as F
 from .internals.blocking import BlockingRule, block_using_rules, count_comparisons_per_rule
 from .internals.comparison_vectors import (
     blocked_pairs_with_columns,
+    build_pairs_with_columns,
     compute_comparison_vectors,
 )
+from .internals.connected_components import node_id_columns
 from .internals.functions import register_udfs
 from .internals.materialize import MaterializationPolicy
 from .internals.predict import predict_from_comparison_vectors
@@ -193,18 +195,6 @@ class Linker:
             self._concat = df
         return self._concat
 
-    def concat_row_count(self) -> int:
-        """Row count of df_concat, computed once and cached."""
-        concat = self.df_concat()
-        n = getattr(concat, "_splink_row_count", None)
-        if n is None:
-            n = concat.count()
-            try:
-                concat._splink_row_count = n  # type: ignore[attr-defined]
-            except Exception:
-                pass
-        return n
-
     def tf_tables(self) -> dict[str, DataFrame]:
         if self._tf_tables is None:
             self._tf_tables = compute_all_term_frequencies(
@@ -248,6 +238,27 @@ class Linker:
             self._concat_with_tf = df
         return self._concat_with_tf
 
+    def _blocking_nodes(
+        self, link_type: str
+    ) -> tuple[DataFrame, Optional[DataFrame]]:
+        """The records a blocking join over the linker's input reads:
+        ``(concat_with_tf, None)``, or for a two-dataset link_only job the
+        (lower, upper) dataset split, so the join runs table-to-table
+        instead of self-joining the union (blocking.py:637-659)."""
+        concat = self.df_concat_with_tf()
+        sd = self.settings.source_dataset_column_name
+        if link_type == "link_only" and sd:
+            split = split_link_only_two_datasets(concat, sd)
+            if split is not None:
+                # the split frames are filters of the persisted concat — the
+                # broadcast/carry decision can reuse the parent's row count
+                # as an upper bound
+                parent_n = getattr(concat, "_splink_row_count", None)
+                if parent_n is not None:
+                    split[0]._splink_row_count = parent_n  # type: ignore[attr-defined]
+                return split
+        return concat, None
+
     def blocked_pairs(
         self, rules: Optional[Sequence[BlockingRule]] = None, materialize: bool = True
     ) -> DataFrame:
@@ -255,30 +266,17 @@ class Linker:
         lineage-break point the reference marks (blocking.py:603-695)."""
         s = self.settings
         rules = list(rules or s.blocking_rules_to_generate_predictions)
-        concat = self.df_concat_with_tf()
-        split = None
-        if s.link_type == "link_only" and s.source_dataset_column_name:
-            split = split_link_only_two_datasets(concat, s.source_dataset_column_name)
-        if split is not None:
-            left, right = split
-            pairs = block_using_rules(
-                left,
-                rules,
-                link_type=s.link_type,
-                unique_id_column_name=s.unique_id_column_name,
-                source_dataset_column_name=s.source_dataset_column_name,
-                nodes_right=right,
-            )
-        else:
-            pairs = block_using_rules(
-                concat,
-                rules,
-                link_type=s.link_type,
-                unique_id_column_name=s.unique_id_column_name,
-                source_dataset_column_name=s.source_dataset_column_name
-                if s.needs_source_dataset
-                else None,
-            )
+        nodes, nodes_right = self._blocking_nodes(s.link_type)
+        pairs = block_using_rules(
+            nodes,
+            rules,
+            link_type=s.link_type,
+            unique_id_column_name=s.unique_id_column_name,
+            source_dataset_column_name=s.source_dataset_column_name
+            if s.needs_source_dataset
+            else None,
+            nodes_right=nodes_right,
+        )
         if materialize:
             n = self.materialization.repartition_count(pairs, "blocked_pairs")
             if n:
@@ -298,41 +296,75 @@ class Linker:
         ids+broadcast-junction (small node tables / exploding rules) and
         carry-through blocking (large node tables) — see
         comparison_vectors.build_pairs_with_columns."""
-        from .internals.comparison_vectors import build_pairs_with_columns
-
-        s = self.settings
-        rules = list(rules or s.blocking_rules_to_generate_predictions)
-        concat = self.df_concat_with_tf()
-        nodes, nodes_right = concat, None
-        if s.link_type == "link_only" and s.source_dataset_column_name:
-            split = split_link_only_two_datasets(concat, s.source_dataset_column_name)
-            if split is not None:
-                nodes, nodes_right = split
-                # the split frames are filters of the persisted concat — the
-                # broadcast/carry decision can reuse the parent's row count
-                # as an upper bound
-                parent_n = getattr(concat, "_splink_row_count", None)
-                if parent_n is not None:
-                    try:
-                        nodes._splink_row_count = parent_n  # type: ignore[attr-defined]
-                    except Exception:
-                        pass
-        n_parts = None
-        if repartition_for_udfs:
-            n_parts = self.materialization.repartition_count(concat, "blocked_pairs")
-        return build_pairs_with_columns(
-            nodes, rules, s, nodes_right=nodes_right, repartition_count=n_parts
+        return self._pairs_with_columns(
+            rules, self.settings.link_type, repartition_for_udfs
         )
 
-    def comparison_vectors(self, pairs: Optional[DataFrame] = None) -> DataFrame:
-        if pairs is None:
-            with_cols = self.pairs_with_columns()
-        else:
+    def _pairs_with_columns(
+        self,
+        rules: Optional[Sequence[BlockingRule]],
+        link_type: str,
+        repartition_for_udfs: bool,
+        nodes: Optional[DataFrame] = None,
+        nodes_right: Optional[DataFrame] = None,
+    ) -> DataFrame:
+        s = self.settings
+        if nodes is None:
+            nodes, nodes_right = self._blocking_nodes(link_type)
+        n_parts = None
+        if repartition_for_udfs:
+            n_parts = self.materialization.repartition_count(nodes, "blocked_pairs")
+        return build_pairs_with_columns(
+            nodes,
+            list(rules or s.blocking_rules_to_generate_predictions),
+            s,
+            nodes_right=nodes_right,
+            repartition_count=n_parts,
+            link_type=link_type,
+        )
+
+    def comparison_vectors(
+        self,
+        pairs: Optional[DataFrame] = None,
+        rules: Optional[Sequence[BlockingRule]] = None,
+        nodes: Optional[DataFrame] = None,
+        nodes_right: Optional[DataFrame] = None,
+        link_type: Optional[str] = None,
+    ) -> DataFrame:
+        """The one place records become a gamma frame
+        (``__splink__df_comparison_vectors``).
+
+        ``nodes`` are the TF-joined records, by default the linker's
+        ``df_concat_with_tf``; pairs lie within them unless ``nodes_right``
+        gives a second, disjoint record set for the right side. Given
+        ``pairs`` (``join_key_l`` / ``join_key_r`` [+ ``source_dataset_l`` /
+        ``_r``] id pairs, e.g. registered or labelled), the records are
+        junction-joined onto them. Otherwise the pairs are blocked from
+        ``rules`` (default: the prediction rules) under ``link_type``
+        (default: the settings') by ``build_pairs_with_columns``, which picks
+        the join shape by node-table size. Blocking the linker's own records
+        also applies the link_only split and spreads the pairs for the
+        fuzzy-metric stage; caller-supplied records (new batches, single
+        requests) are blocked as given.
+        """
+        s = self.settings
+        if pairs is not None:
             with_cols = blocked_pairs_with_columns(
-                pairs, self.df_concat_with_tf(), self.settings
+                pairs,
+                nodes if nodes is not None else self.df_concat_with_tf(),
+                s,
+                concat_with_tf_right=nodes_right,
+            )
+        else:
+            with_cols = self._pairs_with_columns(
+                rules,
+                link_type or s.link_type,
+                repartition_for_udfs=nodes is None,
+                nodes=nodes,
+                nodes_right=nodes_right,
             )
         return self._debug_stage(
-            compute_comparison_vectors(with_cols, self.settings),
+            compute_comparison_vectors(with_cols, s),
             "__splink__df_comparison_vectors",
         )
 
@@ -366,14 +398,12 @@ class LinkerInference:
         point the reference marks as ``__splink__df_predict``, kept narrow
         because the record columns are recoverable by key.
 
-        ``num_chunks`` > 1 partitions the pair space by deterministic uid-hash
-        chunks run as separate jobs and unioned (reference chunking.py:12-42 /
-        inference.py:384-444) — the >memory-per-job splitting lever at scale;
-        output is identical to the unchunked run. ``num_chunks_l`` /
-        ``num_chunks_r`` set the split of each pair endpoint independently
-        (reference inference.py:294-444 asymmetric chunking — useful when the
-        two sides differ in size, e.g. link_only with a small rhs); either
-        defaults to ``num_chunks`` when omitted.
+        ``num_chunks`` / ``num_chunks_l`` / ``num_chunks_r`` are accepted for
+        reference parity (inference.py:294-444) and must be >= 1; the output
+        is the same as unchunked for any value. Blocking, gammas and scores
+        run as one fused plan into the narrow core; splitting the pair space
+        into separate jobs would re-run that plan once per chunk. To score
+        one slice of the pair space on its own, use ``predict_chunk``.
 
         ``cache_result=True`` additionally persists the WIDE output (opt in
         when >2 downstream consumers scan the full-width rows).
@@ -382,138 +412,102 @@ class LinkerInference:
         chunks_r = num_chunks_r if num_chunks_r is not None else num_chunks
         if chunks_l < 1 or chunks_r < 1:
             raise ValueError("num_chunks values must be >= 1")
-        if chunks_l <= 1 and chunks_r <= 1:
-            s = self._l.settings
-            # the narrow core below is the lineage break, so the blocking
-            # join is NOT separately materialized — blocking → [junction →]
-            # gamma → score run as ONE fused pipeline into the core's
-            # persist. pairs_with_columns picks ids+broadcast-junction or
-            # carry-through by node-table size, and repartitions the
-            # small-table path so a fuzzy-UDF stage keeps full parallelism.
-            if self._l._registered_blocked_pairs is not None:
-                # user-registered pair table replaces the blocking join
-                # (reference table_management.py:95-140)
-                cv = self._l.comparison_vectors(
-                    pairs=self._l._registered_blocked_pairs
-                )
-            else:
-                cv = self._l._debug_stage(
-                    compute_comparison_vectors(
-                        self._l.pairs_with_columns(), s
-                    ),
-                    "__splink__df_comparison_vectors",
-                )
-            # score WITHOUT the threshold: a threshold WHERE below the persist
-            # would be pushed under the score projection, and Catalyst's
-            # filter/project split re-evaluates the fuzzy-metric pandas UDFs
-            # once per copy (two ArrowEvalPython passes over every pair —
-            # measured ~2x the scoring cost). The unfiltered core is persisted
-            # once; the threshold is a cheap WHERE on the cached rows.
-            wide = predict_from_comparison_vectors(cv, s)
-            # narrow core: project away the compare-value columns (recoverable
-            # by key), persist lazily, re-attach the record columns by node
-            # re-join for the returned wide frame
-            uid = s.unique_id_column_name
-            sd = s.source_dataset_column_name if s.needs_source_dataset else None
-            keep_prefixes = {uid} | ({sd} if sd else set())
-            drop_cols = [
-                c
-                for c in wide.columns
-                if (c.endswith("_l") or c.endswith("_r"))
-                and c[:-2] not in keep_prefixes
-                and not c.startswith(s.term_frequency_adjustment_column_prefix)
-            ]
-            if not drop_cols:
-                wide = predict_from_comparison_vectors(
-                    cv,
-                    s,
-                    threshold_match_probability=threshold_match_probability,
-                    threshold_match_weight=threshold_match_weight,
-                )
-                return self._cache(wide) if cache_result else wide
-            from pyspark import StorageLevel
-
-            narrow = wide.drop(*drop_cols)
-            if threshold_match_weight is not None or threshold_match_probability is not None:
-                # thresholded predict (VERDICT r3 #4): persist ONLY the
-                # surviving rows — at scale a selective threshold means the
-                # cache holds ~1% of the pair table, not all of it. A naive
-                # WHERE below the persist is 2x: Catalyst substitutes the
-                # score aliases into the predicate and pushes the whole
-                # scoring expression tree (gamma CASE ladders + similarity
-                # UDFs) into the junction join condition, evaluating it twice
-                # per pair (measured; see plan test). Re-aliasing the score
-                # columns through a nondeterministic identity
-                # (shuffle(array(x))[0] — exact same value, O(1) per row)
-                # makes the aliases non-substitutable, so the filter stays a
-                # plain attribute comparison directly above ONE scoring pass.
-                others = [
-                    c for c in narrow.columns
-                    if c not in ("match_weight", "match_probability")
-                ]
-
-                from .internals.misc import optimizer_barrier
-
-                def _barrier(c: str):
-                    return optimizer_barrier(F.col(c)).alias(c)
-
-                narrow = narrow.select(
-                    *others, _barrier("match_weight"), _barrier("match_probability")
-                )
-                if threshold_match_weight is not None:
-                    narrow = narrow.where(
-                        F.col("match_weight") >= threshold_match_weight
-                    )
-                if threshold_match_probability is not None:
-                    narrow = narrow.where(
-                        F.col("match_probability") >= threshold_match_probability
-                    )
-            narrow = narrow.persist(StorageLevel.MEMORY_AND_DISK)
-            self._l.materialization._registry.append(narrow)
-            narrow = self._l._debug_stage(narrow, "__splink__df_predict")
-            logger.log(PIPELINE, "stage __splink__df_predict narrow core "
-                       "persisted (thresholded=%s)",
-                       threshold_match_probability is not None
-                       or threshold_match_weight is not None)
-            rejoin_pairs = narrow.withColumnsRenamed(
-                {f"{uid}_l": "join_key_l", f"{uid}_r": "join_key_r"}
-                | ({f"{sd}_l": "source_dataset_l", f"{sd}_r": "source_dataset_r"} if sd else {})
-            )
-            rejoined = blocked_pairs_with_columns(
-                rejoin_pairs, self._l.df_concat_with_tf(), s
-            )
-            # the node re-join re-attaches tf_* columns too — drop the core's
-            # copies in favour of the node side's (identical values)
-            dup_tf = [
-                c for c in narrow.columns
-                if c.startswith(s.term_frequency_adjustment_column_prefix)
-            ]
-            for c in dup_tf:
-                rejoined = rejoined.drop(rejoin_pairs[c])
-            out = rejoined.select(*wide.columns)
-            out._splink_narrow = narrow  # type: ignore[attr-defined]
-            return self._cache(out) if cache_result else out
         s = self._l.settings
-        # materialize the blocking join ONCE; each chunk filters the cached
-        # pair table (reference chunking.py:45-81 caches blocked pairs
-        # chunk-aware — re-running the join per chunk defeats the memory
-        # lever this API exists for)
-        all_pairs = self._l.blocked_pairs(materialize=True)
-        out: Optional[DataFrame] = None
-        for ci in range(chunks_l):
-            for cj in range(chunks_r):
-                pairs = all_pairs.where(
-                    (F.pmod(F.xxhash64(F.col("join_key_l")), F.lit(chunks_l)) == ci)
-                    & (F.pmod(F.xxhash64(F.col("join_key_r")), F.lit(chunks_r)) == cj)
+        # the narrow core below is the lineage break, so the blocking join is
+        # NOT separately materialized — blocking → [junction →] gamma → score
+        # run as ONE fused pipeline into the core's persist. A user-registered
+        # pair table replaces the blocking join (reference
+        # table_management.py:95-140).
+        cv = self._l.comparison_vectors(pairs=self._l._registered_blocked_pairs)
+        # score WITHOUT the threshold: a threshold WHERE below the persist
+        # would be pushed under the score projection, and Catalyst's
+        # filter/project split re-evaluates the fuzzy-metric pandas UDFs
+        # once per copy (two ArrowEvalPython passes over every pair —
+        # measured ~2x the scoring cost). The unfiltered core is persisted
+        # once; the threshold is a cheap WHERE on the cached rows.
+        wide = predict_from_comparison_vectors(cv, s)
+        # narrow core: project away the compare-value columns (recoverable
+        # by key), persist lazily, re-attach the record columns by node
+        # re-join for the returned wide frame
+        uid = s.unique_id_column_name
+        sd = s.source_dataset_column_name if s.needs_source_dataset else None
+        keep_prefixes = {uid} | ({sd} if sd else set())
+        drop_cols = [
+            c
+            for c in wide.columns
+            if (c.endswith("_l") or c.endswith("_r"))
+            and c[:-2] not in keep_prefixes
+            and not c.startswith(s.term_frequency_adjustment_column_prefix)
+        ]
+        if not drop_cols:
+            wide = predict_from_comparison_vectors(
+                cv,
+                s,
+                threshold_match_probability=threshold_match_probability,
+                threshold_match_weight=threshold_match_weight,
+            )
+            return self._cache(wide) if cache_result else wide
+        from pyspark import StorageLevel
+
+        narrow = wide.drop(*drop_cols)
+        if threshold_match_weight is not None or threshold_match_probability is not None:
+            # thresholded predict (VERDICT r3 #4): persist ONLY the
+            # surviving rows — at scale a selective threshold means the
+            # cache holds ~1% of the pair table, not all of it. A naive
+            # WHERE below the persist is 2x: Catalyst substitutes the
+            # score aliases into the predicate and pushes the whole
+            # scoring expression tree (gamma CASE ladders + similarity
+            # UDFs) into the junction join condition, evaluating it twice
+            # per pair (measured; see plan test). Re-aliasing the score
+            # columns through a nondeterministic identity
+            # (shuffle(array(x))[0] — exact same value, O(1) per row)
+            # makes the aliases non-substitutable, so the filter stays a
+            # plain attribute comparison directly above ONE scoring pass.
+            others = [
+                c for c in narrow.columns
+                if c not in ("match_weight", "match_probability")
+            ]
+
+            from .internals.misc import optimizer_barrier
+
+            def _barrier(c: str):
+                return optimizer_barrier(F.col(c)).alias(c)
+
+            narrow = narrow.select(
+                *others, _barrier("match_weight"), _barrier("match_probability")
+            )
+            if threshold_match_weight is not None:
+                narrow = narrow.where(
+                    F.col("match_weight") >= threshold_match_weight
                 )
-                cv = self._l.comparison_vectors(pairs=pairs)
-                scored = predict_from_comparison_vectors(
-                    cv,
-                    s,
-                    threshold_match_probability=threshold_match_probability,
-                    threshold_match_weight=threshold_match_weight,
+            if threshold_match_probability is not None:
+                narrow = narrow.where(
+                    F.col("match_probability") >= threshold_match_probability
                 )
-                out = scored if out is None else out.unionByName(scored)
+        narrow = narrow.persist(StorageLevel.MEMORY_AND_DISK)
+        self._l.materialization._registry.append(narrow)
+        narrow = self._l._debug_stage(narrow, "__splink__df_predict")
+        logger.log(PIPELINE, "stage __splink__df_predict narrow core "
+                   "persisted (thresholded=%s)",
+                   threshold_match_probability is not None
+                   or threshold_match_weight is not None)
+        rejoin_pairs = narrow.withColumnsRenamed(
+            {f"{uid}_l": "join_key_l", f"{uid}_r": "join_key_r"}
+            | ({f"{sd}_l": "source_dataset_l", f"{sd}_r": "source_dataset_r"} if sd else {})
+        )
+        rejoined = blocked_pairs_with_columns(
+            rejoin_pairs, self._l.df_concat_with_tf(), s
+        )
+        # the node re-join re-attaches tf_* columns too — drop the core's
+        # copies in favour of the node side's (identical values)
+        dup_tf = [
+            c for c in narrow.columns
+            if c.startswith(s.term_frequency_adjustment_column_prefix)
+        ]
+        for c in dup_tf:
+            rejoined = rejoined.drop(rejoin_pairs[c])
+        out = rejoined.select(*wide.columns)
+        out._splink_narrow = narrow  # type: ignore[attr-defined]
         return self._cache(out) if cache_result else out
 
     def _cache(self, df: DataFrame) -> DataFrame:
@@ -526,10 +520,8 @@ class LinkerInference:
     def deterministic_link(self) -> DataFrame:
         """Pairs from the blocking rules alone, no scoring
         (inference.py:223-292)."""
-        pairs = self._l.blocked_pairs(materialize=False)
-        return blocked_pairs_with_columns(
-            pairs, self._l.df_concat_with_tf(), self._l.settings
-        )
+        cv = self._l.comparison_vectors()
+        return cv.drop(*[c.gamma_column_name for c in self._l.settings.comparisons])
 
     def score_pairs(self, id_pairs: DataFrame) -> DataFrame:
         """Score caller-supplied id pairs (inference.py:746-1021). ``id_pairs``
@@ -555,23 +547,15 @@ class LinkerInference:
         from .internals.blocking import CustomRule
 
         s = self._l.settings
-        rules = [
-            r if isinstance(r, BlockingRule) else CustomRule(r)
-            for r in (blocking_rules or s.blocking_rules_to_generate_predictions)
-        ]
-        left_tf = join_term_frequencies(left, self._l.tf_tables())
-        right_tf = join_term_frequencies(right, self._l.tf_tables())
-        pairs = block_using_rules(
-            left_tf,
-            rules,
-            link_type=s.link_type,
-            unique_id_column_name=s.unique_id_column_name,
-            nodes_right=right_tf,
+        tf = self._l.tf_tables()
+        cv = self._l.comparison_vectors(
+            rules=[
+                r if isinstance(r, BlockingRule) else CustomRule(r)
+                for r in (blocking_rules or s.blocking_rules_to_generate_predictions)
+            ],
+            nodes=join_term_frequencies(left, tf),
+            nodes_right=join_term_frequencies(right, tf),
         )
-        with_cols = blocked_pairs_with_columns(
-            pairs, left_tf, s, concat_with_tf_right=right_tf
-        )
-        cv = compute_comparison_vectors(with_cols, s)
         return predict_from_comparison_vectors(
             cv,
             s,
@@ -593,9 +577,9 @@ class LinkerInference:
     ) -> DataFrame:
         """One uid-hash chunk of the candidate pairs (reference
         inference.py:161-230): ``left_chunk``/``right_chunk`` are
-        (index, num_chunks) tuples partitioning each pair endpoint — the
-        same deterministic pmod(xxhash64) split chunked predict uses, so
-        the union over all (i, j) chunks is exactly the full pair table."""
+        (index, num_chunks) tuples partitioning each pair endpoint by a
+        deterministic pmod(xxhash64) split of its uid, so the union over
+        all (i, j) chunks is exactly the full pair table."""
         pairs = self._l.blocked_pairs(materialize=False)
         for chunk, key in ((left_chunk, "join_key_l"), (right_chunk, "join_key_r")):
             if chunk is None:
@@ -618,11 +602,10 @@ class LinkerInference:
         """Compute and score blocking for a single slice of the pair space
         (reference inference.py:446-530) — e.g. one worker per slice in a
         split run. ``left_chunk``/``right_chunk`` are (index, num_chunks)
-        tuples using the same deterministic ``pmod(xxhash64(uid))`` split as
-        chunked ``predict``, so the union over all (i, j) slices equals the
-        full predict output. Not supported when blocked pairs were manually
-        registered (matching the reference): call ``predict()`` to score a
-        registered table."""
+        tuples using the ``compute_blocked_pairs_for_predict_chunk`` split,
+        so the union over all (i, j) slices equals the full predict output.
+        Not supported when blocked pairs were manually registered (matching
+        the reference): call ``predict()`` to score a registered table."""
         if self._l._registered_blocked_pairs is not None:
             raise ValueError(
                 "predict_chunk is not supported when blocked pairs have been "
@@ -656,40 +639,25 @@ class LinkerInference:
 
     def find_matches_to_new_records(self, new_records: DataFrame) -> DataFrame:
         """Link a new batch against the indexed base (inference.py:1156-1511
-        predict_between + find_matches_to_new_records.py:14-60). TF values for
-        new records come from the base's TF tables (the
+        predict_between + find_matches_to_new_records.py:14-60):
+        ``predict_between`` with the cached, already TF-joined base on the
+        left. TF values for new records come from the base's TF tables (the
         register_term_frequency_lookup semantics, table_management.py:204-253).
         """
-        s = self._l.settings
-        base = self._l.df_concat_with_tf()
-        new_tf = join_term_frequencies(new_records, self._l.tf_tables())
-        pairs = block_using_rules(
-            base,
-            s.blocking_rules_to_generate_predictions,
-            link_type=s.link_type,
-            unique_id_column_name=s.unique_id_column_name,
-            nodes_right=new_tf,
+        cv = self._l.comparison_vectors(
+            nodes=self._l.df_concat_with_tf(),
+            nodes_right=join_term_frequencies(new_records, self._l.tf_tables()),
         )
-        with_cols = blocked_pairs_with_columns(
-            pairs, base, s, concat_with_tf_right=new_tf
-        )
-        cv = compute_comparison_vectors(with_cols, s)
-        return predict_from_comparison_vectors(cv, s)
+        return predict_from_comparison_vectors(cv, self._l.settings)
 
     def predict_within(self, new_records: DataFrame) -> DataFrame:
         """Dedupe within a new batch using the trained model + base TF tables
         (inference.py predict_within)."""
-        s = self._l.settings
-        new_tf = join_term_frequencies(new_records, self._l.tf_tables())
-        pairs = block_using_rules(
-            new_tf,
-            s.blocking_rules_to_generate_predictions,
+        cv = self._l.comparison_vectors(
+            nodes=join_term_frequencies(new_records, self._l.tf_tables()),
             link_type="dedupe_only",
-            unique_id_column_name=s.unique_id_column_name,
         )
-        with_cols = blocked_pairs_with_columns(pairs, new_tf, s)
-        cv = compute_comparison_vectors(with_cols, s)
-        return predict_from_comparison_vectors(cv, s)
+        return predict_from_comparison_vectors(cv, self._l.settings)
 
     def score_missing_cluster_edges(
         self, df_clustered: DataFrame, df_predict: DataFrame
@@ -740,8 +708,7 @@ class LinkerInference:
             [("0", r1[s.unique_id_column_name], r2[s.unique_id_column_name])],
             ["match_key", "join_key_l", "join_key_r"],
         )
-        with_cols = blocked_pairs_with_columns(pairs, two_tf, s)
-        cv = compute_comparison_vectors(with_cols, s)
+        cv = self._l.comparison_vectors(pairs=pairs, nodes=two_tf)
         return predict_from_comparison_vectors(cv, s)
 
 
@@ -840,20 +807,9 @@ class LinkerClustering:
         # composite node ids for link jobs: uids are only unique PER DATASET
         # (same reason cluster_pairwise_predictions_at_threshold builds them)
         sd = s.source_dataset_column_name if s.needs_source_dataset else None
-        if sd and sd in concat.columns:
-            node_expr = F.concat_ws(
-                "-__-", F.col(sd).cast("string"), F.col(uid).cast("string")
-            )
-            edge_l = F.concat_ws(
-                "-__-", F.col(f"{sd}_l").cast("string"), F.col(f"{uid}_l").cast("string")
-            )
-            edge_r = F.concat_ws(
-                "-__-", F.col(f"{sd}_r").cast("string"), F.col(f"{uid}_r").cast("string")
-            )
-        else:
-            node_expr = F.col(uid)
-            edge_l = F.col(f"{uid}_l")
-            edge_r = F.col(f"{uid}_r")
+        node_expr, edge_l, edge_r = node_id_columns(
+            uid, sd if sd and sd in concat.columns else None
+        )
         edges = df_predict.select(
             edge_l.alias("node_id_l"),
             edge_r.alias("node_id_r"),
@@ -883,15 +839,7 @@ class LinkerClustering:
         # cluster_pairwise_predictions_at_threshold builds them) — bare uids
         # would conflate colliding records across datasets into one graph
         # node and corrupt the per-cluster dataset flags
-        node_expr = F.concat_ws(
-            "-__-", F.col(sd).cast("string"), F.col(uid).cast("string")
-        )
-        edge_l = F.concat_ws(
-            "-__-", F.col(f"{sd}_l").cast("string"), F.col(f"{uid}_l").cast("string")
-        )
-        edge_r = F.concat_ws(
-            "-__-", F.col(f"{sd}_r").cast("string"), F.col(f"{uid}_r").cast("string")
-        )
+        node_expr, edge_l, edge_r = node_id_columns(uid, sd)
         edges = df_predict.select(
             edge_l.alias("node_id_l"),
             edge_r.alias("node_id_r"),
@@ -946,20 +894,8 @@ class LinkerClustering:
         # composite node ids for link jobs — clustering keyed nodes on
         # (dataset, uid), so graph/edge metrics must too, or colliding uids
         # conflate records and duplicate edge-join matches
-        if sd and f"{sd}_l" in df_predict.columns and sd in df_clustered.columns:
-            edge_l = F.concat_ws(
-                "-__-", F.col(f"{sd}_l").cast("string"), F.col(f"{uid}_l").cast("string")
-            )
-            edge_r = F.concat_ws(
-                "-__-", F.col(f"{sd}_r").cast("string"), F.col(f"{uid}_r").cast("string")
-            )
-            node = F.concat_ws(
-                "-__-", F.col(sd).cast("string"), F.col(uid).cast("string")
-            )
-        else:
-            edge_l, edge_r, node = (
-                F.col(f"{uid}_l"), F.col(f"{uid}_r"), F.col(uid),
-            )
+        composite = sd and f"{sd}_l" in df_predict.columns and sd in df_clustered.columns
+        node, edge_l, edge_r = node_id_columns(uid, sd if composite else None)
         edges = df_predict.where(
             F.col("match_probability") >= threshold_match_probability
         ).select(edge_l.alias("node_id_l"), edge_r.alias("node_id_r"))

@@ -13,7 +13,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-import splink_spark.linker as linker_mod
+import splink_spark.internals.comparison_vectors as cv_mod
 from splink_spark import Linker, SettingsCreator, block_on
 from splink_spark import comparison_library as cl
 from splink_spark.internals.blocking import (
@@ -202,34 +202,52 @@ def test_single_best_links_longer_chain(spark):
     assert set(out.values()) == {10}
 
 
-# -- chunked predict reuses the materialized blocking join --------------------
+# -- chunked predict is the unchunked pipeline ---------------------------------
 
 
-def test_chunked_predict_runs_blocking_join_once(spark, persons, monkeypatch):
-    calls = {"n": 0}
-    real = linker_mod.block_using_rules
-
-    def counting(*a, **kw):
-        calls["n"] += 1
-        return real(*a, **kw)
-
-    monkeypatch.setattr(linker_mod, "block_using_rules", counting)
-
+def _surname_settings():
     def _set(comp, mus):
         for lv in comp.comparison_levels:
             if not lv.is_null_level:
                 lv.m_probability, lv.u_probability = mus[lv.comparison_vector_value]
         return comp
 
-    settings = SettingsCreator(
+    return SettingsCreator(
         comparisons=[_set(cl.ExactMatch("surname"), {1: (0.9, 0.02), 0: (0.1, 0.98)})],
         blocking_rules_to_generate_predictions=[block_on("dob")],
         probability_two_random_records_match=0.05,
     )
-    linker = Linker(persons, settings)
+
+
+def test_chunked_predict_runs_blocking_join_once(spark, persons, monkeypatch):
+    calls = {"n": 0}
+    real = cv_mod.block_using_rules
+
+    def counting(*a, **kw):
+        calls["n"] += 1
+        return real(*a, **kw)
+
+    monkeypatch.setattr(cv_mod, "block_using_rules", counting)
+    linker = Linker(persons, _surname_settings())
     result = linker.inference.predict(num_chunks=3)
     assert result.count() > 0
-    assert calls["n"] == 1  # 3 chunks → 9 sub-jobs, ONE blocking join
+    assert calls["n"] == 1  # one blocking join, whatever num_chunks says
+
+
+def test_chunked_predict_scores_registered_blocked_pairs(spark, persons):
+    """Registered pairs replace the blocking join for every num_chunks
+    value, and chunked output carries the persisted narrow core."""
+    linker = Linker(persons, _surname_settings())
+    linker.table_management.register_blocked_pairs_for_predict(
+        spark.createDataFrame([(0, 1), (0, 6), (2, 3)], "join_key_l long, join_key_r long")
+    )
+
+    def ids(df):
+        return sorted((r["unique_id_l"], r["unique_id_r"]) for r in df.collect())
+
+    chunked = linker.inference.predict(num_chunks=2)
+    assert ids(linker.inference.predict()) == ids(chunked) == [(0, 1), (0, 6), (2, 3)]
+    assert hasattr(chunked, "_splink_narrow")
 
 
 def test_single_best_links_merges_whole_clusters(spark):
