@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .column_expression import ColumnExpression
+from .misc import calculate_cartesian, row_count
 
 ColSpec = Union[str, ColumnExpression]
 
@@ -490,6 +491,19 @@ def _sample_records(
     return sampled, threshold / _SAMPLE_MODULUS
 
 
+def cartesian_count(
+    nodes: DataFrame, link_type: str, source_dataset_column_name: Optional[str] = None
+) -> int:
+    """Total possible comparisons among ``nodes`` (misc.calculate_cartesian):
+    link_only counts per source dataset; every other link type, and nodes
+    without a source-dataset column, pair all records once."""
+    sd = source_dataset_column_name
+    if link_type == "link_only" and sd and sd in nodes.columns:
+        counts = [r["count"] for r in nodes.groupBy(sd).count().collect()]
+        return calculate_cartesian(counts, link_type)
+    return calculate_cartesian([row_count(nodes)], "dedupe_only")
+
+
 def count_comparisons_per_rule(
     nodes: DataFrame,
     rules: Sequence[BlockingRule],
@@ -525,22 +539,7 @@ def count_comparisons_per_rule(
         r["match_key"]: r["n"]
         for r in pairs.groupBy("match_key").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    # total possible comparisons (reference misc.py calculate_cartesian)
-    if source_dataset_column_name and source_dataset_column_name in nodes.columns:
-        per_ds = [
-            r["count"]
-            for r in nodes.groupBy(source_dataset_column_name).count().collect()
-        ]
-        n_total = sum(per_ds)
-        if link_type == "link_only":
-            cartesian = sum(
-                a * b for i, a in enumerate(per_ds) for b in per_ds[i + 1 :]
-            )
-        else:
-            cartesian = n_total * (n_total - 1) // 2
-    else:
-        n_total = nodes.count()
-        cartesian = n_total * (n_total - 1) // 2
+    cartesian = cartesian_count(nodes, link_type, source_dataset_column_name)
 
     scale = 1.0 / (fraction**2)
     out = []

@@ -2,7 +2,7 @@
 
 Reference: splink/internals/spark/database_api.py:289-349 — the Spark backend
 breaks lineage at named stages via a configurable menu (persist | checkpoint |
-parquet round-trip | delta), with per-stage repartition counts derived from
+parquet round-trip | delta), with repartition counts derived from
 ``spark.sql.shuffle.partitions`` (:211-287; BASELINE.md row 9). Long lineage
 is the documented Spark bottleneck for the iterative EM/CC loops
 (docs/topic_guides/performance/optimising_spark.md).
@@ -20,17 +20,6 @@ import uuid
 from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark import StorageLevel
-
-
-# fraction of spark.sql.shuffle.partitions per stage
-# (reference spark/database_api.py:211-287)
-_STAGE_PARTITION_FRACTIONS = {
-    "blocked_pairs": 1 / 6,
-    "concat_with_tf": 1 / 4,
-    "predict": 1.0,
-    "clustering": 1 / 10,
-    "distinct_clusters": None,  # tiny: coalesce(1)-ish, leave to AQE
-}
 
 
 # every Nth iterative materialization per stage round-trips through parquet
@@ -56,21 +45,15 @@ class MaterializationPolicy:
     _iterative_counts: dict = field(default_factory=dict)
     _bucketed_tables: list = field(default_factory=list)
 
-    def repartition_count(self, df: DataFrame, stage: str) -> int | None:
-        frac = _STAGE_PARTITION_FRACTIONS.get(stage)
-        if frac is None:
-            return None
-        base = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-        # wide stages (pair scoring) floor at the core count — the reference's
-        # /6-style fractions assume shuffle.partitions >> cores. The iterative
-        # clustering stages keep the small reference fractions: their tables
-        # are tiny and per-iteration task-scheduling overhead dominates.
-        if stage in ("blocked_pairs", "predict", "concat_with_tf"):
-            from .misc import default_parallelism
+    def repartition_count(self, df: DataFrame) -> int:
+        """Partitions to spread blocked pairs over before the fuzzy-metric
+        stage: the reference's shuffle.partitions / 6
+        (spark/database_api.py:211-287), floored at the core count — the
+        fraction assumes shuffle.partitions >> cores."""
+        from .misc import default_parallelism
 
-            floor = default_parallelism(df.sparkSession)
-            return max(1, int(base * frac), floor)
-        return max(1, int(base * frac))
+        base = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+        return max(1, base // 6, default_parallelism(df.sparkSession))
 
     def materialize(
         self,
@@ -121,6 +104,12 @@ class MaterializationPolicy:
         if self.method == "parquet":
             return self._parquet_roundtrip(df, stage)
         raise ValueError(f"unknown materialization method {self.method!r}")
+
+    def release(self, df: DataFrame) -> None:
+        """Unpersist one frame ``materialize`` returned, before the policy's
+        owner is done with the rest."""
+        df.unpersist()
+        self._registry = [d for d in self._registry if d is not df]
 
     def materialize_bucketed(
         self,

@@ -36,7 +36,7 @@ def threshold_args_to_match_weight(
     return threshold_match_weight
 
 
-def calculate_cartesian(counts: list[int], link_type: str) -> float:
+def calculate_cartesian(counts: list[int], link_type: str) -> int:
     """Total possible comparisons given per-dataset row counts
     (reference misc.py calculate_cartesian, incl. its frame-count guards:
     dedupe_only is single-frame, link_only needs at least two)."""
@@ -45,13 +45,13 @@ def calculate_cartesian(counts: list[int], link_type: str) -> float:
     if link_type == "link_only":
         if len(counts) < 2:
             raise ValueError("link_only expects at least two input frames")
-        total = 0.0
+        total = 0
         for i, a in enumerate(counts):
             for b in counts[i + 1 :]:
                 total += a * b
         return total
     n = sum(counts)
-    return n * (n - 1) / 2
+    return n * (n - 1) // 2
 
 
 def default_parallelism(spark) -> int:

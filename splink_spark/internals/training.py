@@ -1,5 +1,9 @@
 """Training: deterministic-lambda, u-by-random-sampling, EM.
 
+Every stage that needs gammas gets its gamma frame from
+``Linker.comparison_vectors``, over the linker's one node table
+(``df_concat_with_tf``) — the same pair path predict scores through.
+
 Reference:
 - ``estimate_probability_two_random_records_match`` — count pairs produced by
   deterministic rules / total possible pairs / recall
@@ -10,8 +14,8 @@ Reference:
   Sampling uses ``pmod(hash(uid), m) < k`` (dialects.py:170-206, :545-549) —
   deterministic across runs/partitionings, unlike ``df.sample``.
 - ``estimate_parameters_using_expectation_maximisation`` — block on the
-  training rule, compute comparison vectors ONCE (materialized), pre-aggregate
-  to agreement-pattern counts (expectation_maximisation.py:28-42, 247-251 —
+  training rule, compute comparison vectors ONCE, pre-aggregate to
+  agreement-pattern counts (expectation_maximisation.py:28-42, 247-251 —
   the loop-invariant hoist), then iterate E/M on the driver over the tiny
   pattern table: mathematically identical to the reference's SQL loop, and
   the idiomatic Spark design (per-iteration work is O(#patterns), no reason
@@ -26,8 +30,14 @@ from typing import Optional, Sequence, Union
 
 from pyspark.sql import functions as F
 
-from .blocking import BlockingRule, CustomRule, block_using_rules
-from .comparison_vectors import blocked_pairs_with_columns, compute_comparison_vectors
+from .blocking import (
+    BlockingRule,
+    CustomRule,
+    _sample_records,
+    block_using_rules,
+    cartesian_count,
+    count_comparisons_per_rule,
+)
 from .misc import row_count
 
 logger = logging.getLogger(__name__)
@@ -36,28 +46,6 @@ logger = logging.getLogger(__name__)
 # ---------------------------------------------------------------------------
 # lambda from deterministic rules
 # ---------------------------------------------------------------------------
-
-
-def _cartesian_total(linker) -> float:
-    """Total comparisons the blank-blocking space contains
-    (reference misc.py calculate_cartesian)."""
-    s = linker.settings
-    concat = linker.df_concat()
-    if not s.needs_source_dataset:
-        n = row_count(concat)
-        return n * (n - 1) / 2
-    counts = [
-        r["count"]
-        for r in concat.groupBy(s.source_dataset_column_name).count().collect()
-    ]
-    if s.link_type == "link_only":
-        total = 0.0
-        for i, a in enumerate(counts):
-            for b in counts[i + 1 :]:
-                total += a * b
-        return total
-    n = sum(counts)
-    return n * (n - 1) / 2
 
 
 def _deterministic_pairs_count_via_aggregation(linker, rules) -> Optional[int]:
@@ -130,25 +118,6 @@ def _deterministic_pairs_count_via_aggregation(linker, rules) -> Optional[int]:
     return int(total or 0)
 
 
-def _concat_for_gammas(linker):
-    """The node table for stages that compute GAMMAS but never score
-    (u-sampling, pattern-path EM): tf_* columns are dead weight there, so
-    prefer the plain concat. Falls back to concat_with_tf when any
-    comparison has undeclared (custom-SQL) inputs, or any level's recorded
-    SQL/label mentions a tf_ column — those conditions read tf_* directly."""
-    s = linker.settings
-    for comp in s.comparisons:
-        if not getattr(comp, "input_columns", None):
-            return linker.df_concat_with_tf()
-        for lv in comp.comparison_levels:
-            texts = [lv.label_for_charts or ""]
-            if lv.spec:
-                texts.append(repr(lv.spec))
-            if any("tf_" in t for t in texts):
-                return linker.df_concat_with_tf()
-    return linker.df_concat()
-
-
 def estimate_probability_two_random_records_match(
     linker,
     deterministic_rules: Sequence[Union[str, BlockingRule]],
@@ -159,38 +128,24 @@ def estimate_probability_two_random_records_match(
         raise ValueError("recall must be in (0, 1]")
     rules = [r if isinstance(r, BlockingRule) else CustomRule(r) for r in deterministic_rules]
     s = linker.settings
-    if record_sample_proportion < 1.0:
-        # reference linker_components/training.py:39 — sample records on
-        # both sides of the deterministic-match join and scale the count
-        # back up by 1/p**2; the blocking-analysis counter owns the
-        # sampling, dedup-across-rules, and small-sample warning
-        from .blocking import count_comparisons_per_rule
-
-        recs = count_comparisons_per_rule(
-            linker.df_concat(),
-            rules,
-            link_type=s.link_type,
-            unique_id_column_name=s.unique_id_column_name,
-            source_dataset_column_name=s.source_dataset_column_name
-            if s.needs_source_dataset
-            else None,
-            record_sample_proportion=record_sample_proportion,
-        )
-        observed = recs[-1]["cumulative_comparison_count"]
-    else:
+    sd = s.source_dataset_column_name if s.needs_source_dataset else None
+    observed = None
+    if record_sample_proportion >= 1.0:
         observed = _deterministic_pairs_count_via_aggregation(linker, rules)
     if observed is None:
-        pairs = block_using_rules(
+        # reference linker_components/training.py:39 — the blocking-analysis
+        # counter executes the join (on records sampled on both sides and
+        # scaled back up by 1/p**2 when p < 1) and owns the dedup across
+        # rules and the small-sample warning
+        observed = count_comparisons_per_rule(
             linker.df_concat(),
             rules,
             link_type=s.link_type,
             unique_id_column_name=s.unique_id_column_name,
-            source_dataset_column_name=s.source_dataset_column_name
-            if s.needs_source_dataset
-            else None,
-        )
-        observed = pairs.count()
-    total = _cartesian_total(linker)
+            source_dataset_column_name=sd,
+            record_sample_proportion=record_sample_proportion,
+        )[-1]["cumulative_comparison_count"]
+    total = cartesian_count(linker.df_concat(), s.link_type, sd)
     prob = observed / recall / total if total else 0.0
     prob = min(max(prob, 1e-12), 1 - 1e-12)
     s.probability_two_random_records_match = prob
@@ -200,6 +155,45 @@ def estimate_probability_two_random_records_match(
         prob, observed, recall, total,
     )
     return prob
+
+
+# ---------------------------------------------------------------------------
+# gamma-level tallies (u and m estimation)
+# ---------------------------------------------------------------------------
+
+
+def _level_counts(comparisons, cv) -> dict:
+    """Per comparison, the pair count at each non-null level (``g__k``) and
+    at any non-null level (``g__total``), in one aggregate job."""
+    aggs = []
+    for comp in comparisons:
+        g = comp.gamma_column_name
+        for lv in comp.comparison_levels:
+            if not lv.is_null_level:
+                k = lv.comparison_vector_value
+                aggs.append(
+                    F.sum(F.when(F.col(g) == k, 1).otherwise(0)).alias(f"{g}__{k}")
+                )
+        aggs.append(F.sum(F.when(F.col(g) != -1, 1).otherwise(0)).alias(f"{g}__total"))
+    return {key: v or 0 for key, v in cv.agg(*aggs).collect()[0].asDict().items()}
+
+
+def _set_level_proportions(comparisons, counts: dict, which: str) -> dict:
+    """Set each non-null level's ``which`` ("m" or "u") probability to its
+    share of the comparison's non-null pairs (floored at 1e-9), unless that
+    probability is fixed or the comparison saw no pairs."""
+    result = {}
+    for comp in comparisons:
+        g = comp.gamma_column_name
+        total = counts[f"{g}__total"]
+        for lv in comp.comparison_levels:
+            if lv.is_null_level or total == 0 or getattr(lv, f"fix_{which}_probability"):
+                continue
+            k = lv.comparison_vector_value
+            p = max(counts[f"{g}__{k}"] / total, 1e-9)
+            setattr(lv, f"{which}_probability", p)
+            result[f"{comp.output_column_name}[{k}]"] = p
+    return result
 
 
 # ---------------------------------------------------------------------------
@@ -234,10 +228,7 @@ def estimate_u_using_random_sampling(
     """
     s = linker.settings
     uid = s.unique_id_column_name
-    # gammas never read tf_* columns, so sample from the PLAIN concat — the
-    # TF join would only widen every row this stage touches (the TF build
-    # itself still happens exactly once, at the first consumer that scores)
-    concat = _concat_for_gammas(linker)
+    concat = linker.df_concat_with_tf()
     n = row_count(concat)
     target_sample = math.sqrt(max_pairs * 2)
     fraction = min(1.0, target_sample / max(n, 1))
@@ -264,101 +255,36 @@ def estimate_u_using_random_sampling(
 
     side = max(2, math.isqrt(2 * default_parallelism(sample.sparkSession)))
     sample = sample.coalesce(side).persist()
-    sample._splink_row_count = sample.count()  # type: ignore[attr-defined]
-
-    level_keys: list[tuple[str, int]] = []
-    aggs = []
-    for comp in s.comparisons:
-        g = comp.gamma_column_name
-        for lv in comp.comparison_levels:
-            if lv.is_null_level:
-                continue
-            k = lv.comparison_vector_value
-            level_keys.append((g, k))
-            aggs.append(
-                F.sum(F.when(F.col(g) == k, 1).otherwise(0)).alias(f"{g}__{k}")
-            )
-        aggs.append(F.sum(F.when(F.col(g) != -1, 1).otherwise(0)).alias(f"{g}__total"))
-
-    # pairs must span the SAME space predict scores: link_only must not count
-    # within-dataset pairs, and with per-dataset-unique uids the pair keys
-    # (and the junction join) need the source dataset carried through —
-    # a bare-uid join fans out on cross-dataset uid collisions
-    sd = s.source_dataset_column_name if s.needs_source_dataset else None
-
-    def _ordered_once(pairs):
-        """Keep each unordered pair exactly once (drops self-pairs) —
-        (source_dataset, uid) lexicographic when datasets exist, mirroring
-        blocking._pair_filter."""
-        if sd and "source_dataset_l" in pairs.columns:
-            ordered = (F.col("source_dataset_l") < F.col("source_dataset_r")) | (
-                (F.col("source_dataset_l") == F.col("source_dataset_r"))
-                & (F.col("join_key_l") < F.col("join_key_r"))
-            )
-            if s.link_type == "link_only":
-                ordered = ordered & (
-                    F.col("source_dataset_l") != F.col("source_dataset_r")
-                )
-            return pairs.where(ordered)
-        return pairs.where(F.col("join_key_l") < F.col("join_key_r"))
-
-    def count_chunk(rhs) -> dict:
-        if rhs is sample:
-            pairs = block_using_rules(
-                sample, [CustomRule("TRUE")], link_type=s.link_type,
-                unique_id_column_name=uid, source_dataset_column_name=sd,
-            )
+    try:
+        sample._splink_row_count = sample.count()  # type: ignore[attr-defined]
+        # every unordered pair of sampled records once, in the space predict
+        # scores (link_only drops within-dataset pairs)
+        cv = linker.comparison_vectors(rules=[CustomRule("TRUE")], nodes=sample)
+        if num_chunks <= 1:
+            totals = _level_counts(s.comparisons, cv)
         else:
-            # full-sample x chunk: block_using_rules' nodes_right branch
-            # assumes disjoint tables, so the once-per-unordered-pair filter
-            # is applied manually — each pair lands in exactly one chunk
-            # (the one containing its greater endpoint)
-            pairs = _ordered_once(
-                block_using_rules(
-                    sample, [CustomRule("TRUE")], link_type=s.link_type,
-                    unique_id_column_name=uid, source_dataset_column_name=sd,
-                    nodes_right=rhs,
-                )
+            # the pair filter puts each pair's greater endpoint on the right,
+            # so hashing the right uid puts every pair in exactly one chunk;
+            # the filter lands below the cartesian, on its right side
+            chunk_of = F.pmod(
+                F.xxhash64(F.col(f"{uid}_r"), F.lit((seed or 0) + 1)),
+                F.lit(num_chunks),
             )
-        with_cols = blocked_pairs_with_columns(
-            pairs, sample, s, concat_with_tf_right=rhs if rhs is not sample else None
-        )
-        cv = compute_comparison_vectors(with_cols, s)
-        return cv.agg(*aggs).collect()[0].asDict()
-
-    totals: dict[str, int] = {}
-    if num_chunks <= 1:
-        totals = count_chunk(sample)
-    else:
-        for ci in range(num_chunks):
-            rhs = sample.where(
-                F.pmod(F.xxhash64(F.col(uid), F.lit((seed or 0) + 1)), F.lit(num_chunks))
-                == ci
-            )
-            row = count_chunk(rhs)
-            for key, v in row.items():
-                totals[key] = totals.get(key, 0) + (v or 0)
-            if min_count_per_level is not None and all(
-                totals.get(f"{g}__{k}", 0) >= min_count_per_level for g, k in level_keys
-            ):
-                logger.info("u-estimation early stop after chunk %d", ci)
-                break
-
-    result = {}
-    for comp in s.comparisons:
-        g = comp.gamma_column_name
-        total = totals.get(f"{g}__total", 0) or 0
-        for lv in comp.comparison_levels:
-            if lv.is_null_level:
-                continue
-            k = lv.comparison_vector_value
-            count = totals.get(f"{g}__{k}", 0) or 0
-            if total > 0 and not lv.fix_u_probability:
-                u = count / total
-                lv.u_probability = max(u, 1e-9)
-                result[f"{comp.output_column_name}[{k}]"] = lv.u_probability
-    sample.unpersist()
-    return result
+            totals = {}
+            for ci in range(num_chunks):
+                row = _level_counts(s.comparisons, cv.where(chunk_of == ci))
+                for key, v in row.items():
+                    totals[key] = totals.get(key, 0) + v
+                if min_count_per_level is not None and all(
+                    v >= min_count_per_level
+                    for key, v in totals.items()
+                    if not key.endswith("__total")
+                ):
+                    logger.info("u-estimation early stop after chunk %d", ci)
+                    break
+    finally:
+        sample.unpersist()
+    return _set_level_proportions(s.comparisons, totals, "u")
 
 
 # ---------------------------------------------------------------------------
@@ -406,31 +332,7 @@ def estimate_m_from_pairwise_labels(linker, labels: "DataFrame") -> dict:
 
 
 def _m_from_cv(s, cv) -> dict:
-    aggs = []
-    for comp in s.comparisons:
-        g = comp.gamma_column_name
-        for lv in comp.comparison_levels:
-            if lv.is_null_level:
-                continue
-            aggs.append(
-                F.sum(
-                    F.when(F.col(g) == lv.comparison_vector_value, 1).otherwise(0)
-                ).alias(f"{g}__{lv.comparison_vector_value}")
-            )
-        aggs.append(F.sum(F.when(F.col(g) != -1, 1).otherwise(0)).alias(f"{g}__total"))
-    row = cv.agg(*aggs).collect()[0].asDict()
-    result = {}
-    for comp in s.comparisons:
-        g = comp.gamma_column_name
-        total = row[f"{g}__total"] or 0
-        for lv in comp.comparison_levels:
-            if lv.is_null_level:
-                continue
-            k = lv.comparison_vector_value
-            if total > 0 and not lv.fix_m_probability:
-                lv.m_probability = max((row[f"{g}__{k}"] or 0) / total, 1e-9)
-                result[f"{comp.output_column_name}[{k}]"] = lv.m_probability
-    return result
+    return _set_level_proportions(s.comparisons, _level_counts(s.comparisons, cv), "m")
 
 
 def estimate_m_from_label_column(linker, label_column: str) -> dict:
@@ -558,8 +460,8 @@ def _levels_to_reverse_blocking_rule(s, rule: BlockingRule) -> list:
     return out
 
 
-# EM record-sampling moduli (reference em_sampling.py:20-29)
-_EM_PROBE_MODULUS = 10_000
+# EM record-sampling modulus (reference em_sampling.py:20-29); the probe
+# uses blocking._sample_records' coarser one
 _EM_SAMPLE_MODULUS = 1_000_000_000
 
 
@@ -643,23 +545,11 @@ def estimate_parameters_using_em(
 
     # -- optional max_pairs record sampling (em_sampling.py:143-249) ----------
     uid = s.unique_id_column_name
-    # the agreement-pattern fast path never scores, so tf_* columns would
-    # only widen the blocking join; the with-TF E-step reads them
-    nodes = (
-        _concat_for_gammas(linker)
-        if estimate_without_term_frequencies
-        else linker.df_concat_with_tf()
-    )
+    nodes = None  # the linker's own records, blocked as predict blocks them
     sample_info: dict = {"sampling_applied": False, "max_pairs": max_pairs}
     if max_pairs is not None:
-        probe_threshold = min(
-            _EM_PROBE_MODULUS,
-            max(1, math.ceil(record_sample_proportion * _EM_PROBE_MODULUS)),
-        )
-        probe_fraction = probe_threshold / _EM_PROBE_MODULUS
-        probe = nodes.where(
-            F.pmod(F.xxhash64(F.col(uid)), F.lit(_EM_PROBE_MODULUS)) < probe_threshold
-        )
+        concat = linker.df_concat_with_tf()
+        probe, probe_fraction = _sample_records(concat, uid, record_sample_proportion)
         probe_count = block_using_rules(
             probe, [rule], link_type=s.link_type,
             unique_id_column_name=uid,
@@ -671,7 +561,7 @@ def estimate_parameters_using_em(
         if probe_count > 0 and p_hat > max_pairs:
             p_star = min(1.0, math.sqrt(max_pairs / p_hat))
             threshold = max(1, int(round(p_star * _EM_SAMPLE_MODULUS)))
-            nodes = nodes.where(
+            nodes = concat.where(
                 F.pmod(F.xxhash64(F.col(uid)), F.lit(_EM_SAMPLE_MODULUS)) < threshold
             )
             sample_info.update(
@@ -683,34 +573,28 @@ def estimate_parameters_using_em(
                 "at p*=%.4f", p_hat, max_pairs, p_star,
             )
 
-    # blocked pairs → comparison vectors, materialized ONCE, then the
-    # loop-invariant agreement-pattern aggregation. build_pairs_with_columns
-    # picks ids+broadcast-junction (small node tables, repartitioned so a
-    # fuzzy-gamma stage keeps full parallelism under AQE coalescing) or
-    # carry-through blocking (large node tables — no mega-broadcast).
-    from .comparison_vectors import build_pairs_with_columns
-
-    with_cols = build_pairs_with_columns(
-        nodes, [rule], s,
-        repartition_count=linker.materialization.repartition_count(
-            nodes, "blocked_pairs"
-        ),
-    )
-    cv = compute_comparison_vectors(with_cols, s)
+    # blocked pairs → comparison vectors, then the loop-invariant
+    # agreement-pattern aggregation
+    cv = linker.comparison_vectors(rules=[rule], nodes=nodes)
     gamma_cols = [c.gamma_column_name for c in active]
     if estimate_without_term_frequencies:
         patterns = cv.groupBy(*gamma_cols).agg(F.count(F.lit(1)).alias("pattern_count"))
         rows = patterns.collect()  # O(prod levels) rows — tiny
-        counts = [(tuple(r[g] for g in gamma_cols), r["pattern_count"]) for r in rows]
+        # sorted, so the E-step's float sums do not depend on the gamma
+        # frame's partitioning
+        counts = sorted(
+            (tuple(r[g] for g in gamma_cols), r["pattern_count"]) for r in rows
+        )
+        em_cv = None
     else:
         # with-TF path: keep gamma + tf columns only, materialize (the loop
-        # re-scans this table every iteration)
+        # re-scans this table every iteration; released when the session ends)
         keep = list(gamma_cols)
         for comp in active:
             for c in comp.tf_adjustment_input_columns:
                 keep += [f"{comp.tf_prefix}{c}_l", f"{comp.tf_prefix}{c}_r"]
         keep = [c for c in dict.fromkeys(keep) if c in cv.columns]
-        cv = linker.materialization.materialize(cv.select(*keep), "em_cv")
+        em_cv = linker.materialization.materialize(cv.select(*keep), "em_cv")
         counts = None
 
     # init params from current settings (defaults if unset)
@@ -749,93 +633,97 @@ def estimate_parameters_using_em(
     initial_snapshot = {"lambda": session_lam, "m": dict(m), "u": dict(u)}
 
     history = []
-    for it in range(max_iterations):
-        # E step (predict.py:135-200 semantics)
-        new_m = {k: 0.0 for k in m}
-        new_u = {k: 0.0 for k in u}
-        m_tot = {ci: 0.0 for ci in range(len(active))}
-        u_tot = {ci: 0.0 for ci in range(len(active))}
-        lam_num = 0.0
-        lam_den = 0.0
-        if counts is not None:
-            for gammas, cnt in counts:
-                bf = 1.0
+    try:
+        for it in range(max_iterations):
+            # E step (predict.py:135-200 semantics)
+            new_m = {k: 0.0 for k in m}
+            new_u = {k: 0.0 for k in u}
+            m_tot = {ci: 0.0 for ci in range(len(active))}
+            u_tot = {ci: 0.0 for ci in range(len(active))}
+            lam_num = 0.0
+            lam_den = 0.0
+            if counts is not None:
+                for gammas, cnt in counts:
+                    bf = 1.0
+                    for ci in range(len(active)):
+                        g = gammas[ci]
+                        if g == -1:
+                            continue
+                        bf *= m[(ci, g)] / max(u[(ci, g)], 1e-300)
+                    prior_odds = session_lam / (1 - session_lam)
+                    odds = prior_odds * bf
+                    p = odds / (1 + odds)
+                    lam_num += p * cnt
+                    lam_den += cnt
+                    for ci in range(len(active)):
+                        g = gammas[ci]
+                        if g == -1:
+                            continue
+                        new_m[(ci, g)] += p * cnt
+                        new_u[(ci, g)] += (1 - p) * cnt
+                        m_tot[ci] += p * cnt
+                        u_tot[ci] += (1 - p) * cnt
+            else:
+                # with-TF path: score every pair with current params incl. TF
+                # adjustments, aggregate expected counts in ONE Spark job
+                row = em_cv.agg(*_em_tf_aggs(active, m, u, session_lam)).collect()[0].asDict()
+                lam_num = row["__lam_num"] or 0.0
+                lam_den = row["__lam_den"] or 0.0
                 for ci in range(len(active)):
-                    g = gammas[ci]
-                    if g == -1:
-                        continue
-                    bf *= m[(ci, g)] / max(u[(ci, g)], 1e-300)
-                prior_odds = session_lam / (1 - session_lam)
-                odds = prior_odds * bf
-                p = odds / (1 + odds)
-                lam_num += p * cnt
-                lam_den += cnt
-                for ci in range(len(active)):
-                    g = gammas[ci]
-                    if g == -1:
-                        continue
-                    new_m[(ci, g)] += p * cnt
-                    new_u[(ci, g)] += (1 - p) * cnt
-                    m_tot[ci] += p * cnt
-                    u_tot[ci] += (1 - p) * cnt
-        else:
-            # with-TF path: score every pair with current params incl. TF
-            # adjustments, aggregate expected counts in ONE Spark job
-            row = cv.agg(*_em_tf_aggs(active, m, u, session_lam)).collect()[0].asDict()
-            lam_num = row["__lam_num"] or 0.0
-            lam_den = row["__lam_den"] or 0.0
-            for ci in range(len(active)):
-                for lv in active[ci].comparison_levels:
-                    if lv.is_null_level:
-                        continue
-                    k = lv.comparison_vector_value
-                    mn = row[f"__m_{ci}_{k}"] or 0.0
-                    un = row[f"__u_{ci}_{k}"] or 0.0
-                    new_m[(ci, k)] += mn
-                    new_u[(ci, k)] += un
-                    m_tot[ci] += mn
-                    u_tot[ci] += un
-        # M step: normalise within comparison (expectation_maximisation.py:89-118)
-        max_delta = 0.0
-        for key in list(new_m):
-            ci, k = key
-            nm = new_m[key] / m_tot[ci] if m_tot[ci] > 0 else m[key]
-            nu = new_u[key] / u_tot[ci] if u_tot[ci] > 0 else u[key]
-            if not fix_m_probabilities:
-                max_delta = max(max_delta, abs(nm - m[key]))
-                m[key] = max(nm, 1e-12)
-            if not fix_u_probabilities:
-                max_delta = max(max_delta, abs(nu - u[key]))
-                u[key] = max(nu, 1e-12)
-        if not fix_probability_two_random_records_match:
-            new_lam = lam_num / lam_den if lam_den else session_lam
-            # clamp: p rounds to exactly 1.0 in float64 once a pattern's
-            # odds exceed ~2^53 (a few strong comparisons suffice); an
-            # unclamped lambda of 1.0 divides by zero in the next E-step
-            new_lam = min(max(new_lam, 1e-12), 1 - 1e-12)
-            max_delta = max(max_delta, abs(new_lam - session_lam))
-            session_lam = new_lam
-        history.append(
-            {
-                "iteration": it,
-                "max_delta": max_delta,
-                "lambda": session_lam,
-                # per-iteration parameter snapshots (reference
-                # em_training_session.py keeps _iteration_history_records;
-                # splink2-parity tests compare these trajectories)
-                "m": {
-                    f"{active[ci].output_column_name}[{k}]": v
-                    for (ci, k), v in m.items()
-                },
-                "u": {
-                    f"{active[ci].output_column_name}[{k}]": v
-                    for (ci, k), v in u.items()
-                },
-            }
-        )
-        logger.info("EM iteration %d: max_delta=%.3g lambda=%.4f", it, max_delta, session_lam)
-        if max_delta < em_convergence:
-            break
+                    for lv in active[ci].comparison_levels:
+                        if lv.is_null_level:
+                            continue
+                        k = lv.comparison_vector_value
+                        mn = row[f"__m_{ci}_{k}"] or 0.0
+                        un = row[f"__u_{ci}_{k}"] or 0.0
+                        new_m[(ci, k)] += mn
+                        new_u[(ci, k)] += un
+                        m_tot[ci] += mn
+                        u_tot[ci] += un
+            # M step: normalise within comparison (expectation_maximisation.py:89-118)
+            max_delta = 0.0
+            for key in list(new_m):
+                ci, k = key
+                nm = new_m[key] / m_tot[ci] if m_tot[ci] > 0 else m[key]
+                nu = new_u[key] / u_tot[ci] if u_tot[ci] > 0 else u[key]
+                if not fix_m_probabilities:
+                    max_delta = max(max_delta, abs(nm - m[key]))
+                    m[key] = max(nm, 1e-12)
+                if not fix_u_probabilities:
+                    max_delta = max(max_delta, abs(nu - u[key]))
+                    u[key] = max(nu, 1e-12)
+            if not fix_probability_two_random_records_match:
+                new_lam = lam_num / lam_den if lam_den else session_lam
+                # clamp: p rounds to exactly 1.0 in float64 once a pattern's
+                # odds exceed ~2^53 (a few strong comparisons suffice); an
+                # unclamped lambda of 1.0 divides by zero in the next E-step
+                new_lam = min(max(new_lam, 1e-12), 1 - 1e-12)
+                max_delta = max(max_delta, abs(new_lam - session_lam))
+                session_lam = new_lam
+            history.append(
+                {
+                    "iteration": it,
+                    "max_delta": max_delta,
+                    "lambda": session_lam,
+                    # per-iteration parameter snapshots (reference
+                    # em_training_session.py keeps _iteration_history_records;
+                    # splink2-parity tests compare these trajectories)
+                    "m": {
+                        f"{active[ci].output_column_name}[{k}]": v
+                        for (ci, k), v in m.items()
+                    },
+                    "u": {
+                        f"{active[ci].output_column_name}[{k}]": v
+                        for (ci, k), v in u.items()
+                    },
+                }
+            )
+            logger.info("EM iteration %d: max_delta=%.3g lambda=%.4f", it, max_delta, session_lam)
+            if max_delta < em_convergence:
+                break
+    finally:
+        if em_cv is not None:
+            linker.materialization.release(em_cv)
 
     # write back (median across sessions via fold_trained_values)
     for ci, comp in enumerate(active):

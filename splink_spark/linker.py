@@ -278,9 +278,7 @@ class Linker:
             nodes_right=nodes_right,
         )
         if materialize:
-            n = self.materialization.repartition_count(pairs, "blocked_pairs")
-            if n:
-                pairs = pairs.repartition(n)
+            pairs = pairs.repartition(self.materialization.repartition_count(pairs))
             pairs = self.materialization.materialize(pairs, "blocked_pairs")
             logger.log(PIPELINE, "stage __splink__blocked_id_pairs "
                        "materialized (%d rules)", len(rules))
@@ -313,7 +311,7 @@ class Linker:
             nodes, nodes_right = self._blocking_nodes(link_type)
         n_parts = None
         if repartition_for_udfs:
-            n_parts = self.materialization.repartition_count(nodes, "blocked_pairs")
+            n_parts = self.materialization.repartition_count(nodes)
         return build_pairs_with_columns(
             nodes,
             list(rules or s.blocking_rules_to_generate_predictions),
@@ -345,7 +343,11 @@ class Linker:
         the join shape by node-table size. Blocking the linker's own records
         also applies the link_only split and spreads the pairs for the
         fuzzy-metric stage; caller-supplied records (new batches, single
-        requests) are blocked as given.
+        requests, training's hash samples) are blocked as given.
+
+        Training reads its gammas here too: EM blocks on its training rule
+        (over its ``max_pairs`` record sample when one is drawn), and
+        u-sampling blocks its record sample with a ``TRUE`` rule.
         """
         s = self.settings
         if pairs is not None:

@@ -234,25 +234,71 @@ def test_estimate_u_chunked_equals_unchunked(spark):
     rng = random.Random(11)
     rows = [(i, f"v{rng.randrange(10)}") for i in range(1500)]
     df = spark.createDataFrame(rows, ["unique_id", "col"])
+    # two datasets whose uids collide: chunks must split the
+    # (source_dataset, uid)-ordered pairs of a link_and_dedupe job exactly
+    df_a = spark.createDataFrame(rows[:750], ["unique_id", "col"])
+    df_b = spark.createDataFrame(
+        [(i - 750, c) for i, c in rows[750:]], ["unique_id", "col"]
+    )
 
-    def run(**kw):
+    def run(frames, link_type, **kw):
         settings = SettingsCreator(
+            link_type=link_type,
             comparisons=[cl.ExactMatch("col")],
             blocking_rules_to_generate_predictions=[block_on("col")],
         )
-        linker = Linker(df, settings)
+        linker = Linker(frames, settings)
         return linker.training.estimate_u_using_random_sampling(
             max_pairs=2e5, seed=1, **kw
         )
 
-    base = run()
-    chunked = run(num_chunks=4)
-    # all chunks processed -> identical pair set -> identical estimates
-    assert chunked["col[1]"] == pytest.approx(base["col[1]"], rel=1e-9)
+    for frames, link_type in ((df, "dedupe_only"), ([df_a, df_b], "link_and_dedupe")):
+        base = run(frames, link_type)
+        chunked = run(frames, link_type, num_chunks=4)
+        # all chunks processed -> identical pair set -> identical estimates
+        assert chunked["col[1]"] == pytest.approx(base["col[1]"], rel=1e-9), link_type
+        assert chunked["col[0]"] == pytest.approx(base["col[0]"], rel=1e-9), link_type
 
-    early = run(num_chunks=4, min_count_per_level=5)
+    early = run(df, "dedupe_only", num_chunks=4, min_count_per_level=5)
     # early stop uses fewer pairs but must stay near the true value 0.1
     assert early["col[1]"] == pytest.approx(0.1, abs=0.04)
+
+
+def test_training_releases_what_it_caches(spark):
+    """u-sampling's record sample and the with-TF EM session's comparison
+    vectors are cached for the stage and released when it ends: a long
+    session keeps no persisted RDD they created."""
+    rng = random.Random(3)
+    rows = [
+        (i, f"f{rng.randrange(40)}", f"s{rng.randrange(30)}",
+         f"d{rng.randrange(50)}", f"c{rng.randrange(8)}")
+        for i in range(600)
+    ]
+    df = spark.createDataFrame(rows, ["unique_id", "first_name", "surname", "dob", "city"])
+    settings = SettingsCreator(
+        comparisons=[
+            cl.ExactMatch("first_name", term_frequency_adjustments=True),
+            cl.ExactMatch("surname", term_frequency_adjustments=True),
+            cl.ExactMatch("dob"),
+            cl.ExactMatch("city", term_frequency_adjustments=True),
+        ],
+        blocking_rules_to_generate_predictions=[block_on("dob")],
+    )
+    linker = Linker(df, settings)
+    linker.df_concat_with_tf().count()  # the linker's own node table stays
+    # compare ids, not sizes: the context cleaner may release other tests'
+    # caches while this one runs
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    baseline = persisted()
+    for col in ("dob", "surname", "city"):
+        estimate_parameters_using_em(
+            linker, block_on(col), estimate_without_term_frequencies=False
+        )
+    for seed in (1, 2):
+        linker.training.estimate_u_using_random_sampling(max_pairs=1e4, seed=seed)
+    assert persisted() - baseline == set()
 
 
 def test_em_with_tf_path_matches_pattern_path_without_tf(spark, em_fixture):
@@ -469,6 +515,13 @@ def test_em_max_pairs_bounds_cv_and_stays_close(spark, em_fixture):
     assert info["expected_pairs_after_sampling"] == pytest.approx(1000, rel=0.25)
     # parameters still in the right neighbourhood despite 4x fewer pairs
     assert out["m"]["col_2[1]"] == pytest.approx(TRUE_M["col_2"], abs=0.12)
+    # the probe's record sampler rejects a proportion outside (0, 1]
+    for bad in (0.0, 1.5):
+        with pytest.raises(ValueError):
+            estimate_parameters_using_em(
+                linker, block_on("pair_id"), max_pairs=1000,
+                record_sample_proportion=bad,
+            )
 
 
 def test_estimate_u_minstd_sampler_matches_xxhash_statistically(spark):
