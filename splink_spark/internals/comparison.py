@@ -174,6 +174,39 @@ class Comparison:
         assert expr is not None
         return expr.otherwise(F.lit(0.0)).alias(f"{self.mw_prefix}tf_{self.output_column_name}".replace(" ", "_"))
 
+    def score_bound_column(self) -> Column:
+        """Per-pair upper bound on this comparison's share of the match
+        weight (``mw_<col>`` plus ``mw_tf_<col>``), decided by the cheap
+        leading null / exact-match conditions alone — see
+        :func:`score_bound_arms`. Same first-match CASE semantics as
+        :meth:`gamma_column`, so a pair taking arm k lands on level k."""
+        leading, else_max = score_bound_arms(self.comparison_levels)
+        expr: Optional[Column] = None
+        for i, bound in leading:
+            cond, arm = self.comparison_levels[i].condition(), F.lit(bound)
+            expr = F.when(cond, arm) if expr is None else expr.when(cond, arm)
+        if expr is None:
+            return F.lit(else_max)
+        return expr.otherwise(F.lit(else_max))
+
+    def score_bound_record(self) -> dict:
+        """The bound table as data: each leading arm's level label and
+        bound, the ELSE arm's maximum, and why the bound is infinite where
+        it is (term-frequency adjusted levels have a data-dependent
+        weight)."""
+        leading, else_max = score_bound_arms(self.comparison_levels)
+        tf_labels = [
+            lv.label_for_charts for lv in self.comparison_levels if lv.has_tf_adjustment
+        ]
+        return {
+            "comparison": self.output_column_name,
+            "arms": [(self.comparison_levels[i].label_for_charts, b) for i, b in leading],
+            "else_max": else_max,
+            "unbounded": (
+                f"term-frequency adjusted: {', '.join(tf_labels)}" if tf_labels else None
+            ),
+        }
+
     def tf_adjustment_column_expr(self) -> Optional[Column]:
         """Term-frequency adjusted bayes-factor multiplier (``bf_tf_adj_*``).
 
@@ -361,6 +394,42 @@ def _infer_input_columns_from_level_dicts(level_dicts: list) -> Optional[list[st
             if c not in cols:
                 cols.append(c)
     return cols or None
+
+
+def _level_weight_bound(lv: ComparisonLevel) -> float:
+    """The most a pair on ``lv`` adds to the match weight: 0 for a null
+    level, +inf when a term-frequency term (unbounded above) rides on it."""
+    if lv.is_null_level:
+        return 0.0
+    if lv.has_tf_adjustment:
+        return math.inf
+    return float(lv.log2_bayes_factor)
+
+
+def score_bound_arms(
+    levels: list[ComparisonLevel],
+) -> tuple[list[tuple[int, float]], float]:
+    """A comparison's weight-bound table, computed on the driver.
+
+    Returns ``(leading, else_max)``. ``leading`` lists ``(index, bound)``
+    for the ladder's leading run of null and exact-match levels, in
+    declaration order: their conditions are cheap, and a pair whose first
+    true condition among them is level ``index`` lands on exactly that
+    level, so its bound is that level's weight. ``else_max`` bounds every
+    other pair: the largest weight among the remaining levels, plus the
+    last non-null level, which the gamma ladder's ``ELSE 0`` assigns when
+    no condition holds.
+    """
+    leading: list[tuple[int, float]] = []
+    for i, lv in enumerate(levels):
+        if not (lv.is_null_level or lv.is_exact_match_level) or lv.is_else_level:
+            break
+        leading.append((i, _level_weight_bound(lv)))
+    tail = levels[len(leading):]
+    non_null = [lv for lv in levels if not lv.is_null_level]
+    if non_null:
+        tail = tail + non_null[-1:]
+    return leading, max((_level_weight_bound(lv) for lv in tail), default=0.0)
 
 
 def match_weight_columns(prior_lambda: float) -> tuple[float, str]:

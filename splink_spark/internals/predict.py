@@ -7,17 +7,33 @@ with the numerically-stable sigmoid (:216-227):
 
 All arithmetic is Column math inside whole-stage codegen; the per-gamma
 bayes-factor constants are computed once on the driver.
+
+Thresholded scoring prunes before the similarity functions run. The match
+weight is the prior plus one driver-known constant per comparison level, so
+a threshold bounds what each comparison must contribute.
+:func:`score_bound` builds that bound from each comparison's cheap leading
+null / exact-match conditions (``Comparison.score_bound_column``), and
+:func:`where_score_can_reach` drops the pairs whose bound falls short of the
+threshold before the gamma projection evaluates Jaro-Winkler, Levenshtein
+and the like. The threshold WHERE in :func:`predict_from_comparison_vectors`
+still decides the output, so it is identical with or without the bound.
 """
 
 from __future__ import annotations
 
+import logging
 import math
+import sys
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .misc import optimizer_barrier
 from .settings import Settings
+from .splink_logging import PIPELINE
+
+logger = logging.getLogger(__name__)
 
 
 def prior_log2_bayes_factor(prior: float) -> float:
@@ -34,6 +50,83 @@ def stable_sigmoid(match_weight: Column) -> Column:
     )
 
 
+def _require_probabilities(settings: Settings) -> None:
+    if not settings.all_probabilities_set:
+        raise ValueError(
+            "m/u probabilities not set on every comparison level — train the "
+            "model or supply probabilities before predict()"
+        )
+
+
+def threshold_weight_floor(
+    threshold_match_probability: Optional[float] = None,
+    threshold_match_weight: Optional[float] = None,
+) -> Optional[float]:
+    """A match weight every pair passing the thresholds reaches, or None
+    when no finite threshold constrains the weight (p <= 0 or p >= 1).
+
+    A probability threshold maps to ``log2(p/(1-p))`` less a slack for the
+    sigmoid's rounding: its result carries a relative error of a few ulps,
+    which the logit's slope ``1/(p(1-p) ln 2)`` magnifies near p = 1, plus
+    at most a few subnormal steps near p = 0. The slack allows 64 ulps and
+    64 subnormal steps, far above what three roundings and a ``pow`` make.
+    """
+    floors = []
+    if threshold_match_weight is not None and math.isfinite(threshold_match_weight):
+        w = float(threshold_match_weight)
+        floors.append(w - 1e-9 * max(1.0, abs(w)))
+    p = threshold_match_probability
+    if p is not None and 0.0 < p < 1.0:
+        p = float(p)
+        slack = (64 * sys.float_info.epsilon / (1.0 - p) + 64 * 5e-324 / p) / math.log(2)
+        floors.append(math.log2(p / (1.0 - p)) - slack - 1e-9)
+    return max(floors) if floors else None
+
+
+def score_bound(
+    settings: Settings,
+    threshold_match_probability: Optional[float] = None,
+    threshold_match_weight: Optional[float] = None,
+) -> Optional[dict]:
+    """The threshold's bound, as data: ``w_min`` (the weight floor), the
+    prior and each comparison's bound table. None when the thresholds give
+    no floor. Logged at ``PIPELINE`` level."""
+    w_min = threshold_weight_floor(threshold_match_probability, threshold_match_weight)
+    if w_min is None:
+        return None
+    _require_probabilities(settings)
+    comps = [c.score_bound_record() for c in settings.comparisons]
+    record = {
+        "w_min": w_min,
+        "prior": prior_log2_bayes_factor(settings.probability_two_random_records_match),
+        "comparisons": comps,
+    }
+    logger.log(PIPELINE, "score bound: w_min=%.6g prior=%.6g", w_min, record["prior"])
+    for c in comps:
+        logger.log(PIPELINE, "score bound: %s else_max=%.6g arms=%s unbounded=%s",
+                   c["comparison"], c["else_max"], c["arms"], c["unbounded"])
+    return record
+
+
+def where_score_can_reach(
+    pairs_with_cols: DataFrame, settings: Settings, w_min: float
+) -> DataFrame:
+    """Keep the pairs whose weight bound, ``prior + sum(bound_c)``, reaches
+    ``w_min``.
+
+    The bound is summed in the order :func:`predict_from_comparison_vectors`
+    sums the match weight, over the same float constants, and rounded float
+    addition is monotone, so ``bound >= match_weight`` for every pair: no
+    pair that passes the threshold is dropped. The predicate sits behind an
+    optimizer barrier: Catalyst would otherwise push its CASE ladders into
+    the junction join's condition.
+    """
+    bound: Column = F.lit(prior_log2_bayes_factor(settings.probability_two_random_records_match))
+    for comp in settings.comparisons:
+        bound = bound + comp.score_bound_column()
+    return pairs_with_cols.where(optimizer_barrier(bound >= F.lit(float(w_min))))
+
+
 def predict_from_comparison_vectors(
     cv: DataFrame,
     settings: Settings,
@@ -42,14 +135,15 @@ def predict_from_comparison_vectors(
 ) -> DataFrame:
     """Append bf_*, match_weight, match_probability; optionally filter.
 
-    The threshold is pushed into a WHERE on the same plan (predict.py:100-107)
-    so Catalyst can pipeline filter+project in one codegen stage.
+    A threshold is a WHERE over the score columns re-aliased through an
+    optimizer barrier (``shuffle(array(x))[0]``, the same value, O(1) per
+    row). A plain WHERE lets Catalyst substitute the score aliases into the
+    predicate and push the whole scoring tree (gamma CASE ladders and
+    similarity functions) into the junction join's condition, which scores
+    every pair a second time; behind the barrier the filter stays a plain
+    attribute comparison above ONE scoring pass.
     """
-    if not settings.all_probabilities_set:
-        raise ValueError(
-            "m/u probabilities not set on every comparison level — train the "
-            "model or supply probabilities before predict()"
-        )
+    _require_probabilities(settings)
     bf_cols: list[Column] = []
     for comp in settings.comparisons:
         bf_cols.append(comp.bayes_factor_column())
@@ -72,10 +166,16 @@ def predict_from_comparison_vectors(
     scored = scored.withColumn("match_weight", mw)
     scored = scored.withColumn("match_probability", stable_sigmoid(F.col("match_weight")))
 
-    if threshold_match_weight is not None:
-        scored = scored.where(F.col("match_weight") >= threshold_match_weight)
-    if threshold_match_probability is not None:
-        scored = scored.where(F.col("match_probability") >= threshold_match_probability)
+    front = ["match_weight", "match_probability"]
+    if threshold_match_weight is not None or threshold_match_probability is not None:
+        scored = scored.select(
+            *[c for c in scored.columns if c not in front],
+            *[optimizer_barrier(F.col(c)).alias(c) for c in front],
+        )
+        if threshold_match_weight is not None:
+            scored = scored.where(F.col("match_weight") >= threshold_match_weight)
+        if threshold_match_probability is not None:
+            scored = scored.where(F.col("match_probability") >= threshold_match_probability)
 
     if not settings.retain_intermediate_calculation_columns:
         # drop ONLY the internal audit aliases — a prefix match would also
@@ -86,6 +186,5 @@ def predict_from_comparison_vectors(
             internal.add(f"{comp.bf_prefix}tf_adj_{comp.gamma_column_name}")
         scored = scored.drop(*[c for c in scored.columns if c in internal])
 
-    front = ["match_weight", "match_probability"]
     rest = [c for c in scored.columns if c not in front]
     return scored.select(*front, *rest)

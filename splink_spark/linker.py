@@ -23,7 +23,11 @@ from .internals.comparison_vectors import (
 from .internals.connected_components import node_id_columns
 from .internals.functions import register_udfs
 from .internals.materialize import MaterializationPolicy
-from .internals.predict import predict_from_comparison_vectors
+from .internals.predict import (
+    predict_from_comparison_vectors,
+    score_bound,
+    where_score_can_reach,
+)
 from .internals.settings import Settings
 from .internals.term_frequencies import (
     compute_all_term_frequencies,
@@ -328,6 +332,7 @@ class Linker:
         nodes: Optional[DataFrame] = None,
         nodes_right: Optional[DataFrame] = None,
         link_type: Optional[str] = None,
+        min_match_weight: Optional[float] = None,
     ) -> DataFrame:
         """The one place records become a gamma frame
         (``__splink__df_comparison_vectors``).
@@ -348,6 +353,10 @@ class Linker:
         Training reads its gammas here too: EM blocks on its training rule
         (over its ``max_pairs`` record sample when one is drawn), and
         u-sampling blocks its record sample with a ``TRUE`` rule.
+
+        ``min_match_weight`` (set by the thresholded scorers) drops, before
+        any gamma is computed, the pairs whose match weight cannot reach it
+        (``predict.where_score_can_reach``).
         """
         s = self.settings
         if pairs is not None:
@@ -365,6 +374,8 @@ class Linker:
                 nodes=nodes,
                 nodes_right=nodes_right,
             )
+        if min_match_weight is not None:
+            with_cols = where_score_can_reach(with_cols, s, min_match_weight)
         return self._debug_stage(
             compute_comparison_vectors(with_cols, s),
             "__splink__df_comparison_vectors",
@@ -407,6 +418,13 @@ class LinkerInference:
         into separate jobs would re-run that plan once per chunk. To score
         one slice of the pair space on its own, use ``predict_chunk``.
 
+        A threshold prunes before the similarity functions run: pairs whose
+        match weight cannot reach it, judged from the cheap null and
+        exact-match levels alone, are dropped before the gamma projection
+        (see ``_scored``). The output is identical to thresholding after
+        scoring every pair, and only the survivors are persisted.
+        ``_splink_score_bound`` on the output records the bound used.
+
         ``cache_result=True`` additionally persists the WIDE output (opt in
         when >2 downstream consumers scan the full-width rows).
         """
@@ -420,14 +438,11 @@ class LinkerInference:
         # run as ONE fused pipeline into the core's persist. A user-registered
         # pair table replaces the blocking join (reference
         # table_management.py:95-140).
-        cv = self._l.comparison_vectors(pairs=self._l._registered_blocked_pairs)
-        # score WITHOUT the threshold: a threshold WHERE below the persist
-        # would be pushed under the score projection, and Catalyst's
-        # filter/project split re-evaluates the fuzzy-metric pandas UDFs
-        # once per copy (two ArrowEvalPython passes over every pair —
-        # measured ~2x the scoring cost). The unfiltered core is persisted
-        # once; the threshold is a cheap WHERE on the cached rows.
-        wide = predict_from_comparison_vectors(cv, s)
+        wide = self._scored(
+            threshold_match_probability,
+            threshold_match_weight,
+            pairs=self._l._registered_blocked_pairs,
+        )
         # narrow core: project away the compare-value columns (recoverable
         # by key), persist lazily, re-attach the record columns by node
         # re-join for the returned wide frame
@@ -442,51 +457,12 @@ class LinkerInference:
             and not c.startswith(s.term_frequency_adjustment_column_prefix)
         ]
         if not drop_cols:
-            wide = predict_from_comparison_vectors(
-                cv,
-                s,
-                threshold_match_probability=threshold_match_probability,
-                threshold_match_weight=threshold_match_weight,
-            )
             return self._cache(wide) if cache_result else wide
         from pyspark import StorageLevel
 
-        narrow = wide.drop(*drop_cols)
-        if threshold_match_weight is not None or threshold_match_probability is not None:
-            # thresholded predict (VERDICT r3 #4): persist ONLY the
-            # surviving rows — at scale a selective threshold means the
-            # cache holds ~1% of the pair table, not all of it. A naive
-            # WHERE below the persist is 2x: Catalyst substitutes the
-            # score aliases into the predicate and pushes the whole
-            # scoring expression tree (gamma CASE ladders + similarity
-            # UDFs) into the junction join condition, evaluating it twice
-            # per pair (measured; see plan test). Re-aliasing the score
-            # columns through a nondeterministic identity
-            # (shuffle(array(x))[0] — exact same value, O(1) per row)
-            # makes the aliases non-substitutable, so the filter stays a
-            # plain attribute comparison directly above ONE scoring pass.
-            others = [
-                c for c in narrow.columns
-                if c not in ("match_weight", "match_probability")
-            ]
-
-            from .internals.misc import optimizer_barrier
-
-            def _barrier(c: str):
-                return optimizer_barrier(F.col(c)).alias(c)
-
-            narrow = narrow.select(
-                *others, _barrier("match_weight"), _barrier("match_probability")
-            )
-            if threshold_match_weight is not None:
-                narrow = narrow.where(
-                    F.col("match_weight") >= threshold_match_weight
-                )
-            if threshold_match_probability is not None:
-                narrow = narrow.where(
-                    F.col("match_probability") >= threshold_match_probability
-                )
-        narrow = narrow.persist(StorageLevel.MEMORY_AND_DISK)
+        # with a threshold the core holds only the surviving rows — at scale
+        # a selective threshold means the cache holds ~1% of the pair table
+        narrow = wide.drop(*drop_cols).persist(StorageLevel.MEMORY_AND_DISK)
         self._l.materialization._registry.append(narrow)
         narrow = self._l._debug_stage(narrow, "__splink__df_predict")
         logger.log(PIPELINE, "stage __splink__df_predict narrow core "
@@ -510,7 +486,36 @@ class LinkerInference:
             rejoined = rejoined.drop(rejoin_pairs[c])
         out = rejoined.select(*wide.columns)
         out._splink_narrow = narrow  # type: ignore[attr-defined]
+        out._splink_score_bound = wide._splink_score_bound  # type: ignore[attr-defined]
         return self._cache(out) if cache_result else out
+
+    def _scored(
+        self,
+        threshold_match_probability: Optional[float] = None,
+        threshold_match_weight: Optional[float] = None,
+        **records,
+    ) -> DataFrame:
+        """The one scoring path: ``Linker.comparison_vectors(**records)``,
+        then ``predict_from_comparison_vectors``. With a threshold, the pairs
+        whose weight bound cannot reach it are dropped before the gamma
+        projection, so the similarity functions never run on them; the
+        threshold WHERE then decides the output exactly as without the
+        bound. The bound (``predict.score_bound``, None when unthresholded)
+        is attached to the result as ``_splink_score_bound``."""
+        s = self._l.settings
+        bound = score_bound(s, threshold_match_probability, threshold_match_weight)
+        cv = self._l.comparison_vectors(
+            **records,
+            min_match_weight=bound["w_min"] if bound else None,
+        )
+        out = predict_from_comparison_vectors(
+            cv,
+            s,
+            threshold_match_probability=threshold_match_probability,
+            threshold_match_weight=threshold_match_weight,
+        )
+        out._splink_score_bound = bound  # type: ignore[attr-defined]
+        return out
 
     def _cache(self, df: DataFrame) -> DataFrame:
         from pyspark import StorageLevel
@@ -530,8 +535,7 @@ class LinkerInference:
         needs columns join_key_l / join_key_r (unique ids)."""
         if "match_key" not in id_pairs.columns:
             id_pairs = id_pairs.withColumn("match_key", F.lit("user"))
-        cv = self._l.comparison_vectors(pairs=id_pairs)
-        return predict_from_comparison_vectors(cv, self._l.settings)
+        return self._scored(pairs=id_pairs)
 
     def predict_between(
         self,
@@ -545,24 +549,22 @@ class LinkerInference:
         the trained model — pairs across left/right only, never within
         (reference inference.py predict_between; left/right are roles, e.g.
         existing vs new, the incremental-linkage shape). TF values for both
-        sides come from the linker's base TF tables."""
+        sides come from the linker's base TF tables. A threshold prunes the
+        pairs that cannot reach it before the similarity functions run, and
+        scores the rest once (see ``_scored``)."""
         from .internals.blocking import CustomRule
 
         s = self._l.settings
         tf = self._l.tf_tables()
-        cv = self._l.comparison_vectors(
+        return self._scored(
+            threshold_match_probability,
+            threshold_match_weight,
             rules=[
                 r if isinstance(r, BlockingRule) else CustomRule(r)
                 for r in (blocking_rules or s.blocking_rules_to_generate_predictions)
             ],
             nodes=join_term_frequencies(left, tf),
             nodes_right=join_term_frequencies(right, tf),
-        )
-        return predict_from_comparison_vectors(
-            cv,
-            s,
-            threshold_match_probability=threshold_match_probability,
-            threshold_match_weight=threshold_match_weight,
         )
 
     def compute_blocked_pairs_for_predict(self) -> DataFrame:
@@ -607,20 +609,20 @@ class LinkerInference:
         tuples using the ``compute_blocked_pairs_for_predict_chunk`` split,
         so the union over all (i, j) slices equals the full predict output.
         Not supported when blocked pairs were manually registered (matching
-        the reference): call ``predict()`` to score a registered table."""
+        the reference): call ``predict()`` to score a registered table. A
+        threshold prunes the pairs that cannot reach it before the
+        similarity functions run, and scores the rest once (see
+        ``_scored``)."""
         if self._l._registered_blocked_pairs is not None:
             raise ValueError(
                 "predict_chunk is not supported when blocked pairs have been "
                 "registered via register_blocked_pairs_for_predict; use "
                 "predict() to score the registered table"
             )
-        pairs = self.compute_blocked_pairs_for_predict_chunk(left_chunk, right_chunk)
-        cv = self._l.comparison_vectors(pairs=pairs)
-        return predict_from_comparison_vectors(
-            cv,
-            self._l.settings,
-            threshold_match_probability=threshold_match_probability,
-            threshold_match_weight=threshold_match_weight,
+        return self._scored(
+            threshold_match_probability,
+            threshold_match_weight,
+            pairs=self.compute_blocked_pairs_for_predict_chunk(left_chunk, right_chunk),
         )
 
     def score_pair(
@@ -646,20 +648,18 @@ class LinkerInference:
         left. TF values for new records come from the base's TF tables (the
         register_term_frequency_lookup semantics, table_management.py:204-253).
         """
-        cv = self._l.comparison_vectors(
+        return self._scored(
             nodes=self._l.df_concat_with_tf(),
             nodes_right=join_term_frequencies(new_records, self._l.tf_tables()),
         )
-        return predict_from_comparison_vectors(cv, self._l.settings)
 
     def predict_within(self, new_records: DataFrame) -> DataFrame:
         """Dedupe within a new batch using the trained model + base TF tables
         (inference.py predict_within)."""
-        cv = self._l.comparison_vectors(
+        return self._scored(
             nodes=join_term_frequencies(new_records, self._l.tf_tables()),
             link_type="dedupe_only",
         )
-        return predict_from_comparison_vectors(cv, self._l.settings)
 
     def score_missing_cluster_edges(
         self, df_clustered: DataFrame, df_predict: DataFrame
@@ -710,8 +710,7 @@ class LinkerInference:
             [("0", r1[s.unique_id_column_name], r2[s.unique_id_column_name])],
             ["match_key", "join_key_l", "join_key_r"],
         )
-        cv = self._l.comparison_vectors(pairs=pairs, nodes=two_tf)
-        return predict_from_comparison_vectors(cv, s)
+        return self._scored(pairs=pairs, nodes=two_tf)
 
 
 class LinkerTraining:

@@ -97,3 +97,96 @@ def test_jaro_floors_odd_transposition_count():
         assert _jaro(s1, s2) == pytest.approx(d, abs=1e-12)
     except ImportError:
         pass
+
+
+_prob = st.floats(1e-6, 1.0, allow_nan=False, allow_infinity=False)
+_level_spec = st.tuples(
+    st.sampled_from(["null", "exact", "fuzzy"]),
+    _prob,  # m
+    _prob,  # u
+    st.booleans(),  # term-frequency adjusted (exact and fuzzy levels)
+    st.booleans(),  # fixed m and u
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_level_spec, min_size=1, max_size=6), st.booleans())
+def test_score_bound_arms_cover_every_reachable_level(specs, with_else):
+    """Each arm of a comparison's weight bound is >= the log2 bayes factor
+    of every level a pair taking that arm can land on, enumerated over every
+    true/false outcome of the level conditions, and +inf wherever the
+    landing level is term-frequency adjusted. Gamma assignment is modelled
+    from the ladder: the first true non-ELSE condition in declaration
+    order, else gamma 0 (the last non-null level)."""
+    import itertools
+    import math
+
+    from splink_spark.internals.comparison import Comparison, score_bound_arms
+    from splink_spark.internals.comparison_level import ComparisonLevel
+
+    levels = [
+        ComparisonLevel(
+            lambda: None,
+            f"level {i}",
+            is_null_level=kind == "null",
+            is_exact_match_level=kind == "exact",
+            m_probability=m,
+            u_probability=u,
+            tf_adjustment_column="c" if tf and kind != "null" else None,
+            fix_m_probability=fixed,
+            fix_u_probability=fixed,
+        )
+        for i, (kind, m, u, tf, fixed) in enumerate(specs)
+    ]
+    if with_else:
+        levels.append(ComparisonLevel(lambda: None, "else", is_else_level=True,
+                                      m_probability=0.1, u_probability=0.9))
+    if all(lv.is_null_level for lv in levels):
+        return
+    comp = Comparison("c", levels)
+    leading, else_max = score_bound_arms(levels)
+    arm_of = dict(leading)
+    # only the cheap conditions are evaluated: a leading run of null and
+    # exact-match levels
+    assert list(arm_of) == list(range(len(leading)))
+    assert all(levels[i].is_null_level or levels[i].is_exact_match_level for i in arm_of)
+
+    for truth in itertools.product([False, True], repeat=len(levels)):
+        truth = [t or lv.is_else_level for t, lv in zip(truth, levels)]
+        # the gamma ladder: first true non-ELSE condition, else gamma 0
+        hit = next((lv for t, lv in zip(truth, levels) if t and not lv.is_else_level), None)
+        landed = hit if hit is not None else comp.level_for_gamma(0)
+        # the bound ladder: first true leading condition, else the ELSE arm
+        first = next((i for i, t in enumerate(truth) if t and i in arm_of), None)
+        bound = arm_of[first] if first is not None else else_max
+        if landed.has_tf_adjustment:
+            assert bound == math.inf
+        else:
+            weight = 0.0 if landed.is_null_level else landed.log2_bayes_factor
+            assert bound >= weight
+
+
+@settings(max_examples=500, deadline=None)
+@given(
+    st.floats(-1100.0, 1100.0, allow_nan=False),
+    st.one_of(
+        st.floats(0.0, 1.0, allow_nan=False),
+        st.integers(1, 60).map(lambda k: 1.0 - 2.0**-k),
+        st.integers(1, 1074).map(lambda k: 2.0**-k),
+    ),
+)
+def test_threshold_weight_floor_admits_every_passing_weight(mw, p):
+    """A weight whose sigmoid (computed as the scorer computes it) passes a
+    probability threshold is never below that threshold's weight floor, so
+    the bound cannot drop a pair the threshold keeps — also next to p = 0
+    and p = 1, where the logit is steepest."""
+    from splink_spark.internals.predict import threshold_weight_floor
+
+    floor = threshold_weight_floor(threshold_match_probability=p)
+    if floor is None:
+        assert p <= 0.0 or p >= 1.0
+        return
+    prob = 1.0 / (1.0 + 2.0**-mw) if mw >= 0 else 2.0**mw / (1.0 + 2.0**mw)
+    if prob >= p:
+        assert mw >= floor
+    assert threshold_weight_floor(threshold_match_weight=mw) <= mw
