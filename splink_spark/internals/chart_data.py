@@ -27,6 +27,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .misc import prob_to_bayes_factor, prob_to_match_weight
 from .settings import Settings
 
 
@@ -120,10 +121,11 @@ def tf_adjustment_chart_data(
     vals_to_include: Optional[Sequence[str]] = None,
 ) -> DataFrame:
     """Per-value TF-adjusted match weights for every TF level of a comparison
-    (reference term_frequencies.py:130-260): value, tf, log2_bf_tf =
-    log2(u/tf) * tf_adjustment_weight, log2_bf of the level, their sum, and
-    most/least-frequent ranks. Filtered to the requested ranks plus any
-    explicitly requested values.
+    (reference term_frequencies.py:130-260): value, tf, the exact-match u the
+    adjustment normalises against, log2_bf_tf (predict's TF term,
+    ``Comparison.log2_tf_adjustment``, for two records sharing the value),
+    log2_bf of the level, their sum, and most/least-frequent ranks. Filtered
+    to the requested ranks plus any explicitly requested values.
     """
     s = linker.settings
     comparison = None
@@ -149,15 +151,15 @@ def tf_adjustment_chart_data(
         col = lv.tf_adjustment_column
         tfp = comparison.tf_prefix
         tf_table = tf_tables[col]  # columns: <col>, <tf_prefix><col>
-        u_prob = float(lv.u_probability)
+        tf = F.col(f"{tfp}{col}")
+        u_prob = float(comparison._u_probability_for_exact_match(lv))
         weight = float(lv.tf_adjustment_weight)
         log2_bf = lv.log2_bayes_factor
-        log2_bf_tf = (
-            F.log2(F.lit(u_prob) / F.col(f"{tfp}{col}")) * F.lit(weight)
-        )
+        # predict's TF term for a pair whose two records share this value
+        log2_bf_tf = comparison.log2_tf_adjustment(lv, tf, tf)
         part = tf_table.where(F.col(col).isNotNull()).select(
             F.col(col).cast("string").alias("value"),
-            F.col(f"{tfp}{col}").alias("tf"),
+            tf.alias("tf"),
             F.lit(u_prob).alias("u_probability"),
             F.lit(weight).alias("tf_adjustment_weight"),
             log2_bf_tf.alias("log2_bf_tf"),
@@ -190,7 +192,6 @@ def match_weights_chart_data(settings: Settings) -> list[dict]:
     charts.py match_weights_chart input): one record per non-null level with
     m, u, bayes factor and log2 bayes factor, plus the prior row."""
     lam = settings.probability_two_random_records_match
-    lam = min(max(lam, 1e-300), 1 - 1e-15)
     records: list[dict] = [
         {
             "comparison_name": "probability_two_random_records_match",
@@ -198,8 +199,8 @@ def match_weights_chart_data(settings: Settings) -> list[dict]:
             "comparison_vector_value": None,
             "m_probability": None,
             "u_probability": None,
-            "bayes_factor": lam / (1 - lam),
-            "log2_bayes_factor": math.log2(lam / (1 - lam)),
+            "bayes_factor": prob_to_bayes_factor(lam),
+            "log2_bayes_factor": prob_to_match_weight(lam),
         }
     ]
     for comp in settings.comparisons:
@@ -249,9 +250,7 @@ def waterfall_data(settings: Settings, scored_records: Sequence[dict]) -> list[d
     level), a TF bar where the level carries a term-frequency adjustment,
     and a final bar. ``scored_records`` are collected predict() rows as
     dicts (they contain gamma_* and tf_* columns)."""
-    lam = settings.probability_two_random_records_match
-    lam = min(max(lam, 1e-300), 1 - 1e-15)
-    prior_l2 = math.log2(lam / (1 - lam))
+    prior_l2 = prob_to_match_weight(settings.probability_two_random_records_match)
     out: list[dict] = []
     for ri, rec in enumerate(scored_records):
         bar_sort = 0
@@ -299,7 +298,7 @@ def waterfall_data(settings: Settings, scored_records: Sequence[dict]) -> list[d
                     cand = [v for v in (tf_l, tf_r) if v is not None]
                     tf_val = max(max(cand), float(lv.tf_minimum_u_value))
                 if tf_val is not None and tf_val > 0 and lv.has_probabilities:
-                    u_ex = settings_u_for_exact(comp, lv)
+                    u_ex = comp._u_probability_for_exact_match(lv)
                     l2_tf = (
                         math.log2(max(u_ex, 1e-300) / tf_val)
                         * float(lv.tf_adjustment_weight)
@@ -330,14 +329,6 @@ def waterfall_data(settings: Settings, scored_records: Sequence[dict]) -> list[d
             }
         )
     return out
-
-
-def settings_u_for_exact(comp, lv) -> float:
-    """u of the exact-match level the TF adjustment normalises against
-    (predict uses the same rule: the exact level's u, falling back to the
-    level's own u)."""
-    u = comp._u_probability_for_exact_match(lv)
-    return float(u)
 
 
 def cluster_studio_sample(

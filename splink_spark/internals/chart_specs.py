@@ -22,6 +22,8 @@ from __future__ import annotations
 import json
 from typing import Any, Mapping, Optional, Sequence
 
+from .misc import match_weight_to_prob
+
 VEGA_LITE_SCHEMA = "https://vega.github.io/schema/vega-lite/v5.json"
 
 # match the reference's rendered palette: red for evidence against a match,
@@ -941,8 +943,7 @@ def threshold_selection_tool_spec(
         elif t < -1000:
             p = 0.0
         else:
-            odds = 2.0 ** t
-            p = odds / (1.0 + odds)
+            p = match_weight_to_prob(t)
         recs.append({**r, "score_index": i, "match_probability": p})
     init = recs[len(recs) // 2]["truth_threshold"] if recs else 0.0
 

@@ -7,7 +7,12 @@ count down from n_nonnull-1 in declaration order — so the first (most
 specific) level gets the highest gamma, matching reference CASE semantics.
 
 Native rewrite: the CASE ladder is an ``F.when`` chain (identical first-match
-semantics); bayes-factor ladders are ``F.when`` chains over the gamma column.
+semantics); bayes-factor ladders are ``F.when`` chains over the gamma column,
+all built by one helper, ``Comparison._gamma_case``, and every TF term by
+``Comparison._tf_term``. ``predict.match_weight_column`` sums a comparison's
+log2 ladders into the match weight: predict and EM's with-TF E-step (which
+passes its session m/u) both score through it, and the TF chart weighs a
+value with the same ``log2_tf_adjustment``.
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from typing import Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .comparison_level import _UNSUPPLIED, ComparisonLevel
+from .comparison_level import _UNSUPPLIED, ComparisonLevel, prob_to_log2_bayes_factor
 
 
 class Comparison:
@@ -110,69 +115,114 @@ class Comparison:
             return F.lit(0)
         return expr.otherwise(F.lit(0)).alias(self.gamma_column_name)
 
-    def bayes_factor_column(self) -> Column:
-        """Per-pair bayes factor keyed off the materialised gamma column.
+    # -- weight ladders over the gamma column ----------------------------------
+    # predict.match_weight_column sums log2_bayes_factor_column and
+    # log2_tf_adjustment_column; the bf_* audit columns are their
+    # multiplicative forms. ``m_u`` maps a gamma value to (m, u) and defaults
+    # to the levels' own probabilities (EM's E-step passes its session's).
+    def _m_u(self, lv: ComparisonLevel, m_u: Optional[dict] = None) -> tuple:
+        if m_u is None:
+            return lv.m_probability, lv.u_probability
+        return m_u[lv.comparison_vector_value]
 
-        Reference: comparison_level.py:664-669 emits log2(m/u) per gamma; we
-        emit the bayes factor itself (``bf_gamma_<col>`` in predict output)
-        and take log2 at combine time — numerically identical because the
-        constants are computed once on the driver.
-        """
+    def _gamma_case(self, arms: list, otherwise: float, alias: str) -> Column:
+        """``CASE WHEN gamma = k THEN value_k ... ELSE otherwise END`` over
+        ``arms`` = [(level, value)], a value being a float or a Column."""
         gamma = F.col(self.gamma_column_name)
         expr: Optional[Column] = None
-        for lv in self.comparison_levels:
-            if lv.is_null_level:
-                continue
-            bf = F.lit(float(lv.bayes_factor))
+        for lv, value in arms:
+            if not isinstance(value, Column):
+                value = F.lit(float(value))
             cond = gamma == F.lit(lv.comparison_vector_value)
-            expr = F.when(cond, bf) if expr is None else expr.when(cond, bf)
+            expr = F.when(cond, value) if expr is None else expr.when(cond, value)
         assert expr is not None
-        # null level → bayes factor 1 (no evidence)
-        return expr.otherwise(F.lit(1.0)).alias(f"{self.bf_prefix}{self.gamma_column_name}")
+        return expr.otherwise(F.lit(otherwise)).alias(alias)
 
-    def log2_bayes_factor_column(self) -> Column:
+    def _tf_term(
+        self, lv: ComparisonLevel, tf_l: Optional[Column] = None, tf_r: Optional[Column] = None
+    ) -> Column:
+        """The pair's term frequency on ``lv``'s TF column:
+        ``greatest(coalesce(tf_l, tf_r), coalesce(tf_r, tf_l), tf_minimum_u_value)``
+        (reference comparison_level.py:671-731). ``tf_l`` / ``tf_r`` default
+        to the pair's ``tf_<col>_l`` / ``tf_<col>_r`` columns."""
+        c = lv.tf_adjustment_column
+        if tf_l is None:
+            tf_l = F.col(f"{self.tf_prefix}{c}_l")
+        if tf_r is None:
+            tf_r = F.col(f"{self.tf_prefix}{c}_r")
+        return F.greatest(
+            F.coalesce(tf_l, tf_r),
+            F.coalesce(tf_r, tf_l),
+            F.lit(float(lv.tf_minimum_u_value)),
+        )
+
+    def log2_tf_adjustment(
+        self,
+        lv: ComparisonLevel,
+        tf_l: Optional[Column] = None,
+        tf_r: Optional[Column] = None,
+        m_u: Optional[dict] = None,
+    ) -> Column:
+        """log2 of ``lv``'s TF multiplier, ``w * (log2(u_exact) - log2(tf))``
+        (log-space form per SURVEY §2.8); 0 where the pair has no TF."""
+        tf_term = self._tf_term(lv, tf_l, tf_r)
+        u_exact = self._u_probability_for_exact_match(lv, m_u)
+        log2_u_exact = F.lit(math.log2(max(u_exact, 1e-300)))
+        adj = F.lit(float(lv.tf_adjustment_weight)) * (log2_u_exact - F.log2(tf_term))
+        return F.when(tf_term.isNotNull() & (tf_term > 0), adj).otherwise(F.lit(0.0))
+
+    def log2_bayes_factor_column(self, m_u: Optional[dict] = None) -> Column:
         """``mw_<col>``: per-pair log2 bayes factor as a CASE ladder over
         driver-precomputed constants (comparison_level.py:664-669). Using
         log2 constants (not runtime log2(bf)) keeps the combine step a pure
         sum of literals — deterministic across engines for oracle parity."""
-        gamma = F.col(self.gamma_column_name)
-        expr: Optional[Column] = None
-        for lv in self.comparison_levels:
-            if lv.is_null_level:
-                continue
-            c = F.lit(float(lv.log2_bayes_factor))
-            cond = gamma == F.lit(lv.comparison_vector_value)
-            expr = F.when(cond, c) if expr is None else expr.when(cond, c)
-        assert expr is not None
-        return expr.otherwise(F.lit(0.0)).alias(f"{self.mw_prefix}{self.output_column_name}".replace(" ", "_"))
+        arms = [
+            (lv, prob_to_log2_bayes_factor(*self._m_u(lv, m_u)))
+            for lv in self.comparison_levels
+            if not lv.is_null_level
+        ]
+        return self._gamma_case(
+            arms, 0.0, f"{self.mw_prefix}{self.output_column_name}".replace(" ", "_")
+        )
 
-    def log2_tf_adjustment_column(self) -> Optional[Column]:
-        """log2 of the TF-adjusted multiplier: w * (log2(u_exact) - log2(tf))
-        (comparison_level.py:671-731, log-space form per SURVEY §2.8)."""
+    def log2_tf_adjustment_column(self, m_u: Optional[dict] = None) -> Optional[Column]:
+        """``mw_tf_<col>``: :meth:`log2_tf_adjustment` on the pair's TF level,
+        0 on every other level; None without TF levels."""
         if not self.has_tf_adjustments:
             return None
-        import math as _math
+        arms = [
+            (lv, self.log2_tf_adjustment(lv, m_u=m_u))
+            for lv in self.comparison_levels
+            if lv.has_tf_adjustment
+        ]
+        return self._gamma_case(
+            arms, 0.0, f"{self.mw_prefix}tf_{self.output_column_name}".replace(" ", "_")
+        )
 
-        gamma = F.col(self.gamma_column_name)
-        expr: Optional[Column] = None
+    def bayes_factor_column(self) -> Column:
+        """``bf_gamma_<col>``: the audit form of :meth:`log2_bayes_factor_column`
+        (the null level's bayes factor is 1)."""
+        arms = [(lv, lv.bayes_factor) for lv in self.comparison_levels if not lv.is_null_level]
+        return self._gamma_case(arms, 1.0, f"{self.bf_prefix}{self.gamma_column_name}")
+
+    def tf_adjustment_column_expr(self) -> Optional[Column]:
+        """``bf_tf_adj_gamma_<col>``: the audit form of
+        :meth:`log2_tf_adjustment_column`, ``(u_exact / tf) ^ w`` on a TF
+        level and 1 elsewhere. u_exact carries the same 1e-300 clamp, so the
+        bf_* columns reconcile with match_weight even for a trained u of 0."""
+        if not self.has_tf_adjustments:
+            return None
+        arms = []
         for lv in self.comparison_levels:
             if not lv.has_tf_adjustment:
                 continue
-            c = lv.tf_adjustment_column
-            tf_l, tf_r = F.col(f"{self.tf_prefix}{c}_l"), F.col(f"{self.tf_prefix}{c}_r")
-            tf_term = F.greatest(
-                F.coalesce(tf_l, tf_r),
-                F.coalesce(tf_r, tf_l),
-                F.lit(float(lv.tf_minimum_u_value)),
+            tf_term = self._tf_term(lv)
+            u_exact = F.lit(max(float(self._u_probability_for_exact_match(lv)), 1e-300))
+            mult = F.pow(u_exact / tf_term, F.lit(float(lv.tf_adjustment_weight)))
+            arms.append(
+                (lv, F.when(tf_term.isNotNull() & (tf_term > 0), mult).otherwise(F.lit(1.0)))
             )
-            u_exact = self._u_probability_for_exact_match(lv)
-            log2_u_exact = F.lit(_math.log2(max(u_exact, 1e-300)))
-            adj = F.lit(float(lv.tf_adjustment_weight)) * (log2_u_exact - F.log2(tf_term))
-            cond = gamma == F.lit(lv.comparison_vector_value)
-            arm = F.when(tf_term.isNotNull() & (tf_term > 0), adj).otherwise(F.lit(0.0))
-            expr = F.when(cond, arm) if expr is None else expr.when(cond, arm)
-        assert expr is not None
-        return expr.otherwise(F.lit(0.0)).alias(f"{self.mw_prefix}tf_{self.output_column_name}".replace(" ", "_"))
+        return self._gamma_case(arms, 1.0, f"{self.bf_prefix}tf_adj_{self.gamma_column_name}")
 
     def score_bound_column(self) -> Column:
         """Per-pair upper bound on this comparison's share of the match
@@ -207,43 +257,12 @@ class Comparison:
             ),
         }
 
-    def tf_adjustment_column_expr(self) -> Optional[Column]:
-        """Term-frequency adjusted bayes-factor multiplier (``bf_tf_adj_*``).
-
-        Reference comparison_level.py:671-731: for a TF-adjusted level k on
-        column c, multiplier = (u_for_exact_match / tf_term)^tf_weight where
-        tf_term = greatest(coalesce(tf_l, tf_r), coalesce(tf_r, tf_l),
-        tf_minimum_u_value). Levels without TF config contribute 1.
-        """
-        if not self.has_tf_adjustments:
-            return None
-        gamma = F.col(self.gamma_column_name)
-        expr: Optional[Column] = None
-        for lv in self.comparison_levels:
-            if not lv.has_tf_adjustment:
-                continue
-            c = lv.tf_adjustment_column
-            tf_l, tf_r = F.col(f"{self.tf_prefix}{c}_l"), F.col(f"{self.tf_prefix}{c}_r")
-            tf_term = F.greatest(
-                F.coalesce(tf_l, tf_r),
-                F.coalesce(tf_r, tf_l),
-                F.lit(float(lv.tf_minimum_u_value)),
-            )
-            # same 1e-300 clamp as log2_tf_adjustment_column — without it a
-            # trained u of exactly 0 makes this audit column 0 (log2 = -inf)
-            # while the match weight uses log2(1e-300), and the bf_* columns
-            # stop reconciling with match_weight
-            u_exact = F.lit(max(float(self._u_probability_for_exact_match(lv)), 1e-300))
-            mult = F.pow(u_exact / tf_term, F.lit(float(lv.tf_adjustment_weight)))
-            cond = gamma == F.lit(lv.comparison_vector_value)
-            arm = F.when(tf_term.isNotNull() & (tf_term > 0), mult).otherwise(F.lit(1.0))
-            expr = F.when(cond, arm) if expr is None else expr.when(cond, arm)
-        assert expr is not None
-        return expr.otherwise(F.lit(1.0)).alias(f"{self.bf_prefix}tf_adj_{self.gamma_column_name}")
-
-    def _u_probability_for_exact_match(self, level: ComparisonLevel) -> float:
+    def _u_probability_for_exact_match(
+        self, level: ComparisonLevel, m_u: Optional[dict] = None
+    ) -> float:
         """u of the exact-match level for the SAME TF column as ``level``;
-        fallback: any exact level, then the level's own u.
+        fallback: any exact level, then the level's own u. u is read through
+        ``m_u`` (see :meth:`_m_u`).
 
         Replaces the reference's sqlglot-signature autodetection
         (comparison_level.py:587-662) with the structural
@@ -255,25 +274,27 @@ class Comparison:
         ``disable_tf_exact_match_detection`` (reference
         comparison_level.py:623-634) anchors on the level's OWN u instead.
         """
+        own_u = self._m_u(level, m_u)[1]
         if level.disable_tf_exact_match_detection:
-            if level.u_probability is None:
+            if own_u is None:
                 raise ValueError(
                     "Cannot compute term frequency adjustment when "
                     "disable_tf_exact_match_detection is True but "
                     "u_probability is not set on this level."
                 )
-            return level.u_probability
-        for lv in self.comparison_levels:
-            if (
-                lv.is_exact_match_level
-                and lv.u_probability is not None
-                and lv.tf_adjustment_column == level.tf_adjustment_column
-            ):
-                return lv.u_probability
-        for lv in self.comparison_levels:
-            if lv.is_exact_match_level and lv.u_probability is not None:
-                return lv.u_probability
-        return level.u_probability if level.u_probability is not None else 1.0
+            return own_u
+        exact = [
+            (lv, self._m_u(lv, m_u)[1])
+            for lv in self.comparison_levels
+            if lv.is_exact_match_level and not lv.is_null_level
+        ]
+        exact = [(lv, u) for lv, u in exact if u is not None]
+        for lv, u in exact:
+            if lv.tf_adjustment_column == level.tf_adjustment_column:
+                return u
+        if exact:
+            return exact[0][1]
+        return own_u if own_u is not None else 1.0
 
     # -- parameter access ------------------------------------------------------
     def level_for_gamma(self, gamma: int) -> ComparisonLevel:
@@ -431,8 +452,3 @@ def score_bound_arms(
         tail = tail + non_null[-1:]
     return leading, max((_level_weight_bound(lv) for lv in tail), default=0.0)
 
-
-def match_weight_columns(prior_lambda: float) -> tuple[float, str]:
-    """log2 prior bayes factor (reference predict.py:203-212)."""
-    lam = min(max(prior_lambda, 1e-300), 1 - 1e-15)
-    return math.log2(lam / (1 - lam)), "match_weight"

@@ -5,6 +5,10 @@ Reference: splink/internals/predict.py:42-132 —
 with the numerically-stable sigmoid (:216-227):
 ``p = 1/(1+2^-mw)`` when mw >= 0 else ``2^mw/(1+2^mw)``.
 
+:func:`match_weight_column` is the one place the match weight is written:
+the prior plus, per comparison in order, its log2 bayes-factor CASE ladder
+and its TF-adjustment ladder. predict sums it over the levels' own m/u; EM's
+with-TF E-step (``training._em_tf_aggs``) sums it over the session's m/u.
 All arithmetic is Column math inside whole-stage codegen; the per-gamma
 bayes-factor constants are computed once on the driver.
 
@@ -29,16 +33,34 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .misc import optimizer_barrier
+from .misc import optimizer_barrier, prob_to_match_weight
 from .settings import Settings
 from .splink_logging import PIPELINE
 
 logger = logging.getLogger(__name__)
 
 
-def prior_log2_bayes_factor(prior: float) -> float:
-    lam = min(max(prior, 1e-300), 1.0 - 1e-15)
-    return math.log2(lam / (1.0 - lam))
+def match_weight_column(
+    comparisons: list, prior: float, m_u: Optional[dict] = None
+) -> Column:
+    """The match weight: ``log2(prior / (1 - prior))`` plus, per comparison
+    in order, its log2 bayes-factor CASE ladder and its TF-adjustment ladder.
+
+    ``m_u`` maps ``(comparison index, gamma value)`` to (m, u); None takes
+    the levels' own m/u (predict). Summing driver-precomputed log2 constants
+    (plus the runtime log2(tf) terms) equals log2(prod bf), deterministically
+    in summation order.
+    """
+    mw: Column = F.lit(prob_to_match_weight(prior))
+    for ci, comp in enumerate(comparisons):
+        comp_m_u = None
+        if m_u is not None:
+            comp_m_u = {k: v for (i, k), v in m_u.items() if i == ci}
+        mw = mw + comp.log2_bayes_factor_column(comp_m_u)
+        tf_mw = comp.log2_tf_adjustment_column(comp_m_u)
+        if tf_mw is not None:
+            mw = mw + tf_mw
+    return mw
 
 
 def stable_sigmoid(match_weight: Column) -> Column:
@@ -98,7 +120,7 @@ def score_bound(
     comps = [c.score_bound_record() for c in settings.comparisons]
     record = {
         "w_min": w_min,
-        "prior": prior_log2_bayes_factor(settings.probability_two_random_records_match),
+        "prior": prob_to_match_weight(settings.probability_two_random_records_match),
         "comparisons": comps,
     }
     logger.log(PIPELINE, "score bound: w_min=%.6g prior=%.6g", w_min, record["prior"])
@@ -114,14 +136,14 @@ def where_score_can_reach(
     """Keep the pairs whose weight bound, ``prior + sum(bound_c)``, reaches
     ``w_min``.
 
-    The bound is summed in the order :func:`predict_from_comparison_vectors`
-    sums the match weight, over the same float constants, and rounded float
+    The bound is summed in the order :func:`match_weight_column` sums the
+    match weight, over the same float constants, and rounded float
     addition is monotone, so ``bound >= match_weight`` for every pair: no
     pair that passes the threshold is dropped. The predicate sits behind an
     optimizer barrier: Catalyst would otherwise push its CASE ladders into
     the junction join's condition.
     """
-    bound: Column = F.lit(prior_log2_bayes_factor(settings.probability_two_random_records_match))
+    bound: Column = F.lit(prob_to_match_weight(settings.probability_two_random_records_match))
     for comp in settings.comparisons:
         bound = bound + comp.score_bound_column()
     return pairs_with_cols.where(optimizer_barrier(bound >= F.lit(float(w_min))))
@@ -133,7 +155,9 @@ def predict_from_comparison_vectors(
     threshold_match_probability: Optional[float] = None,
     threshold_match_weight: Optional[float] = None,
 ) -> DataFrame:
-    """Append bf_*, match_weight, match_probability; optionally filter.
+    """Prepend match_weight and match_probability; optionally filter. The
+    bf_* audit columns are built only under
+    ``retain_intermediate_calculation_columns``.
 
     A threshold is a WHERE over the score columns re-aliased through an
     optimizer barrier (``shuffle(array(x))[0]``, the same value, O(1) per
@@ -144,26 +168,19 @@ def predict_from_comparison_vectors(
     attribute comparison above ONE scoring pass.
     """
     _require_probabilities(settings)
-    bf_cols: list[Column] = []
-    for comp in settings.comparisons:
-        bf_cols.append(comp.bayes_factor_column())
-        tf_col = comp.tf_adjustment_column_expr()
-        if tf_col is not None:
-            bf_cols.append(tf_col)
-
-    scored = cv.select("*", *bf_cols)
-
-    # match weight: a sum of driver-precomputed log2 constants selected by
-    # CASE-on-gamma ladders (plus the runtime log2(tf) terms) — identical
-    # result to log2(prod bf) but deterministic in summation order
-    mw: Column = F.lit(prior_log2_bayes_factor(settings.probability_two_random_records_match))
-    for comp in settings.comparisons:
-        mw = mw + comp.log2_bayes_factor_column()
-        tf_mw = comp.log2_tf_adjustment_column()
-        if tf_mw is not None:
-            mw = mw + tf_mw
-
-    scored = scored.withColumn("match_weight", mw)
+    scored = cv
+    if settings.retain_intermediate_calculation_columns:
+        audit = []
+        for comp in settings.comparisons:
+            audit.append(comp.bayes_factor_column())
+            tf_col = comp.tf_adjustment_column_expr()
+            if tf_col is not None:
+                audit.append(tf_col)
+        scored = scored.select("*", *audit)
+    scored = scored.withColumn(
+        "match_weight",
+        match_weight_column(settings.comparisons, settings.probability_two_random_records_match),
+    )
     scored = scored.withColumn("match_probability", stable_sigmoid(F.col("match_weight")))
 
     front = ["match_weight", "match_probability"]
@@ -176,15 +193,6 @@ def predict_from_comparison_vectors(
             scored = scored.where(F.col("match_weight") >= threshold_match_weight)
         if threshold_match_probability is not None:
             scored = scored.where(F.col("match_probability") >= threshold_match_probability)
-
-    if not settings.retain_intermediate_calculation_columns:
-        # drop ONLY the internal audit aliases — a prefix match would also
-        # delete user input columns that happen to start with "bf_"
-        internal = set()
-        for comp in settings.comparisons:
-            internal.add(f"{comp.bf_prefix}{comp.gamma_column_name}")
-            internal.add(f"{comp.bf_prefix}tf_adj_{comp.gamma_column_name}")
-        scored = scored.drop(*[c for c in scored.columns if c in internal])
 
     rest = [c for c in scored.columns if c not in front]
     return scored.select(*front, *rest)

@@ -19,7 +19,10 @@ Reference:
   the loop-invariant hoist), then iterate E/M on the driver over the tiny
   pattern table: mathematically identical to the reference's SQL loop, and
   the idiomatic Spark design (per-iteration work is O(#patterns), no reason
-  to launch a job per iteration).
+  to launch a job per iteration). With ``estimate_without_term_frequencies
+  =False`` the E-step instead scores every pair through predict's own
+  ``predict.match_weight_column``, over the session's prior and m/u, so
+  predict and EM weigh a comparison level (TF term included) the same way.
 """
 
 from __future__ import annotations
@@ -38,7 +41,8 @@ from .blocking import (
     cartesian_count,
     count_comparisons_per_rule,
 )
-from .misc import row_count
+from .misc import bayes_factor_to_prob, row_count
+from .predict import match_weight_column, stable_sigmoid
 
 logger = logging.getLogger(__name__)
 
@@ -350,49 +354,11 @@ def estimate_m_from_label_column(linker, label_column: str) -> dict:
 
 
 def _em_tf_aggs(active, m, u, session_lam):
-    """Aggregate expressions for the with-TF E-step: p per pair from current
-    session params (match-weight ladder + TF adjustment, predict.py
-    semantics), then expected-count sums per level."""
-    import math as _math
-
-    from .predict import stable_sigmoid
-
-    mw = F.lit(_math.log2(session_lam / (1.0 - session_lam)))
-    for ci, comp in enumerate(active):
-        gamma = F.col(comp.gamma_column_name)
-        case = None
-        exact_u = None
-        for lv in comp.comparison_levels:
-            if lv.is_null_level:
-                continue
-            k = lv.comparison_vector_value
-            const = F.lit(_math.log2(max(m[(ci, k)], 1e-300) / max(u[(ci, k)], 1e-300)))
-            cond = gamma == F.lit(k)
-            case = F.when(cond, const) if case is None else case.when(cond, const)
-            if lv.is_exact_match_level:
-                exact_u = u[(ci, k)]
-        mw = mw + case.otherwise(F.lit(0.0))
-        for lv in comp.comparison_levels:
-            if not lv.has_tf_adjustment:
-                continue
-            c = lv.tf_adjustment_column
-            tfp = comp.tf_prefix
-            tf_l, tf_r = F.col(f"{tfp}{c}_l"), F.col(f"{tfp}{c}_r")
-            tf_term = F.greatest(
-                F.coalesce(tf_l, tf_r),
-                F.coalesce(tf_r, tf_l),
-                F.lit(float(lv.tf_minimum_u_value)),
-            )
-            u_ex = exact_u if exact_u is not None else u[(ci, lv.comparison_vector_value)]
-            adj = F.lit(float(lv.tf_adjustment_weight)) * (
-                F.lit(_math.log2(max(u_ex, 1e-300))) - F.log2(tf_term)
-            )
-            arm = F.when(tf_term.isNotNull() & (tf_term > 0), adj).otherwise(F.lit(0.0))
-            mw = mw + F.when(
-                gamma == F.lit(lv.comparison_vector_value), arm
-            ).otherwise(F.lit(0.0))
-
-    p = stable_sigmoid(mw)
+    """Aggregate expressions for the with-TF E-step: p per pair is predict's
+    match weight (``predict.match_weight_column``) over the session's prior
+    and m/u, then expected-count sums per level."""
+    m_u = {key: (m[key], u[key]) for key in m}
+    p = stable_sigmoid(match_weight_column(active, session_lam, m_u))
     aggs = [
         F.sum(p).alias("__lam_num"),
         F.count(F.lit(1)).cast("double").alias("__lam_den"),
@@ -417,10 +383,6 @@ def _em_tf_aggs(active, m, u, session_lam):
 def _prob_to_bayes_factor(p: float) -> float:
     p = min(max(p, 1e-12), 1 - 1e-12)
     return p / (1 - p)
-
-
-def _bayes_factor_to_prob(bf: float) -> float:
-    return bf / (1 + bf)
 
 
 def _levels_to_reverse_blocking_rule(s, rule: BlockingRule) -> list:
@@ -624,7 +586,7 @@ def estimate_parameters_using_em(
                 "EM session: cannot blocking-adjust lambda through %s (no m/u "
                 "set on its exact-match level yet)", comp.output_column_name,
             )
-    session_lam = _bayes_factor_to_prob(lam_bf)
+    session_lam = bayes_factor_to_prob(lam_bf)
 
     # pre-loop parameter snapshot: the reference's
     # _core_model_settings_history[0] is the settings BEFORE iteration 1
@@ -754,7 +716,7 @@ def estimate_parameters_using_em(
             else:
                 continue
             bf = bf / rbf
-        recip = 1.0 / _bayes_factor_to_prob(bf)
+        recip = 1.0 / bayes_factor_to_prob(bf)
         if not hasattr(linker, "_em_lambda_recips"):
             linker._em_lambda_recips = []
         linker._em_lambda_recips.append(recip)

@@ -23,6 +23,7 @@ from .internals.comparison_vectors import (
 from .internals.connected_components import node_id_columns
 from .internals.functions import register_udfs
 from .internals.materialize import MaterializationPolicy
+from .internals.misc import match_weight_to_prob
 from .internals.predict import (
     predict_from_comparison_vectors,
     score_bound,
@@ -790,8 +791,7 @@ class LinkerClustering:
                 "threshold_match_weight. Please specify only one."
             )
         if threshold_match_weight is not None:
-            odds = 2.0 ** float(threshold_match_weight)
-            threshold_match_probability = odds / (1.0 + odds)
+            threshold_match_probability = match_weight_to_prob(float(threshold_match_weight))
         return cluster_pairwise_predictions_at_threshold(
             self._l, df_predict, threshold_match_probability
         )

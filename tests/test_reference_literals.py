@@ -354,6 +354,28 @@ def test_tf_weight_and_clamp_literal(spark):
     assert res["London"][0] * res["London"][1] == pytest.approx(5.0 * 0.25**0.5)
 
 
+@pytest.mark.parametrize(
+    "level_extras",
+    [{}, {"tf_minimum_u_value": 0.1}, {"tf_adjustment_weight": 0.5, "tf_minimum_u_value": 0.1}],
+    ids=["basic", "clamp", "weight_and_clamp"],
+)
+def test_tf_chart_weight_equals_predict_weight(spark, level_extras):
+    """The TF chart's per-value weight is the weight predict gives two
+    records sharing the value: log2_bf_final == log2(bf * bf_tf_adj), with
+    the tf_minimum_u_value floor applied."""
+    import math
+
+    linker = _tf_city_linker(spark, **level_extras)
+    chart = {
+        r["value"]: r["log2_bf_final"]
+        for r in linker.visualisations.tf_adjustment_chart_data("city", None, None).collect()
+    }
+    res = _city_bfs(linker)
+    assert set(chart) == set(res)
+    for city, (bf, bf_adj) in res.items():
+        assert chart[city] == pytest.approx(math.log2(bf * bf_adj), abs=1e-12), city
+
+
 # ---------------------------------------------------------------------------
 # prediction-error literals (reference test_accuracy.py)
 # ---------------------------------------------------------------------------

@@ -547,3 +547,81 @@ def test_estimate_u_minstd_sampler_matches_xxhash_statistically(spark):
     assert res2["col[1]"] == res["col[1]"]
     with pytest.raises(ValueError):
         linker.training.estimate_u_using_random_sampling(sampling_method="bogus")
+
+
+def _em_vs_predict_ladder(case):
+    """One comparison (as a settings dict) with m/u set on every level."""
+    null = {"sql_condition": "my_col_l IS NULL OR my_col_r IS NULL", "is_null_level": True}
+    else_ = {"sql_condition": "ELSE", "m_probability": 0.1, "u_probability": 0.643}
+    if case == "disable_detection":
+        levels = [
+            null,
+            {"sql_condition": "my_col_l = my_col_r", "tf_adjustment_column": "my_col",
+             "m_probability": 0.7, "u_probability": 0.123},
+            {"sql_condition": "levenshtein(my_col_l, my_col_r) <= 1",
+             "tf_adjustment_column": "my_col", "disable_tf_exact_match_detection": True,
+             "m_probability": 0.2, "u_probability": 0.234},
+            else_,
+        ]
+        return {"output_column_name": "my_col", "comparison_levels": levels}
+    if case == "two_tf_columns":
+        levels = [
+            {"sql_condition": "forename_l IS NULL OR forename_r IS NULL", "is_null_level": True},
+            {"sql_condition": "forename_l = forename_r", "tf_adjustment_column": "forename",
+             "m_probability": 0.6, "u_probability": 0.02},
+            {"sql_condition": "surname_l = surname_r", "tf_adjustment_column": "surname",
+             "m_probability": 0.3, "u_probability": 0.05},
+            else_,
+        ]
+        return {"output_column_name": "name", "comparison_levels": levels}
+    levels = [
+        null,
+        {"sql_condition": "my_col_l = my_col_r", "tf_adjustment_column": "my_col",
+         "m_probability": 0.8, "u_probability": 0.1},
+        else_,
+    ]
+    return {"output_column_name": "my_col", "comparison_levels": levels}
+
+
+@pytest.mark.parametrize("case", ["disable_detection", "two_tf_columns", "single_column"])
+def test_em_tf_estep_equals_predict(spark, case):
+    """The with-TF E-step's expected counts, computed from the levels' own
+    m/u and prior, equal the same sums over predict's match_probability:
+    both score a pair, TF term included, through one match weight."""
+    from splink_spark.internals.predict import predict_from_comparison_vectors
+    from splink_spark.internals.training import _em_tf_aggs
+
+    rows = [
+        (1, 1, "smith", "anna", "lee"), (2, 1, "smith", "anna", "ray"),
+        (3, 1, "smyth", "bob", "lee"), (4, 1, "jones", "cara", "lee"),
+        (5, 2, "smith", "anna", "moss"), (6, 2, "brown", "dan", "moss"),
+        (7, 2, None, None, None),
+    ]
+    df = spark.createDataFrame(rows, ["unique_id", "grp", "my_col", "forename", "surname"])
+    prior = 0.01
+    linker = Linker(df, {
+        "link_type": "dedupe_only",
+        "comparisons": [_em_vs_predict_ladder(case)],
+        "blocking_rules_to_generate_predictions": ["l.grp = r.grp"],
+        "probability_two_random_records_match": prior,
+    })
+    comps = linker.settings.comparisons
+    m, u = {}, {}
+    for ci, comp in enumerate(comps):
+        for lv in comp.comparison_levels:
+            if not lv.is_null_level:
+                m[(ci, lv.comparison_vector_value)] = lv.m_probability
+                u[(ci, lv.comparison_vector_value)] = lv.u_probability
+    cv = linker.comparison_vectors(rules=[block_on("grp")])
+    estep = cv.agg(*_em_tf_aggs(comps, m, u, prior)).collect()[0].asDict()
+
+    p = F.col("match_probability")
+    expected = [F.sum(p).alias("__lam_num")]
+    for ci, k in m:
+        hit = (F.col(comps[ci].gamma_column_name) == k).cast("double")
+        expected.append(F.sum(p * hit).alias(f"__m_{ci}_{k}"))
+        expected.append(F.sum((F.lit(1.0) - p) * hit).alias(f"__u_{ci}_{k}"))
+    scored = predict_from_comparison_vectors(cv, linker.settings)
+    want = scored.agg(*expected).collect()[0].asDict()
+    for key, value in want.items():
+        assert estep[key] == pytest.approx(value, rel=1e-12, abs=1e-15), key
