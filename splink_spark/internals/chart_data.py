@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from .misc import prob_to_bayes_factor, prob_to_match_weight
 from .settings import Settings
+from .term_frequencies import tf_column_name
 
 
 def comparison_vector_distribution(
@@ -145,13 +146,11 @@ def tf_adjustment_chart_data(
             f"comparison {output_column_name!r} has no term frequency "
             "adjustment (or its m/u are not set)"
         )
-    tf_tables = linker.tf_tables()
     parts = []
     for lv in tf_levels:
         col = lv.tf_adjustment_column
-        tfp = comparison.tf_prefix
-        tf_table = tf_tables[col]  # columns: <col>, <tf_prefix><col>
-        tf = F.col(f"{tfp}{col}")
+        tf_table = linker._tf_table(col)  # columns: <col>, <prefix><col>
+        tf = F.col(tf_column_name(s, col))
         u_prob = float(comparison._u_probability_for_exact_match(lv))
         weight = float(lv.tf_adjustment_weight)
         log2_bf = lv.log2_bayes_factor

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from .blocking import block_using_rules
 from .misc import row_count
 from .settings import Settings
+from .term_frequencies import tf_column_name
 
 
 def _needed_columns(settings: Settings, concat_with_tf: DataFrame) -> list[str]:
@@ -35,9 +36,8 @@ def _needed_columns(settings: Settings, concat_with_tf: DataFrame) -> list[str]:
     for c in getattr(settings, "additional_columns_to_retain", []) or []:
         if c in concat_with_tf.columns and c not in cols:
             cols.append(c)
-    tfp = getattr(settings, "term_frequency_adjustment_column_prefix", "tf_")
     for c in settings.tf_columns:
-        tf = f"{tfp}{c}"
+        tf = tf_column_name(settings, c)
         if tf in concat_with_tf.columns and tf not in cols:
             cols.append(tf)
     known = {c for comp in settings.comparisons for c in (getattr(comp, "input_columns", None) or [])}

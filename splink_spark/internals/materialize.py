@@ -14,6 +14,7 @@ iterative loops (plan-size growth is the failure mode there, not recompute).
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 import uuid
@@ -33,6 +34,8 @@ from pyspark import StorageLevel
 # from a constant. 4 rounds of compounding keeps the BigInt under ~100k bits,
 # where stats math is microseconds.
 _STATS_RESET_EVERY = 4
+
+logger = logging.getLogger(__name__)
 
 
 @dataclass
@@ -90,12 +93,11 @@ class MaterializationPolicy:
                 if has_ckpt_dir:
                     return df.checkpoint(eager=True)
                 return df.localCheckpoint(eager=True)
-            out = df.persist(StorageLevel.MEMORY_AND_DISK)
+            out = self.persist(df, stage)
             if eager:
                 out.count()  # force
             # eager=False: stay lazy — the first consumer's job populates the
             # cache as a side effect, saving one full pass over the input
-            self._registry.append(out)
             return out
         if self.method == "local_checkpoint":
             return df.localCheckpoint(eager=True)
@@ -104,6 +106,15 @@ class MaterializationPolicy:
         if self.method == "parquet":
             return self._parquet_roundtrip(df, stage)
         raise ValueError(f"unknown materialization method {self.method!r}")
+
+    def persist(self, df: DataFrame, stage: str = "generic") -> DataFrame:
+        """Persist ``df`` lazily and register it under ``stage`` for
+        ``release`` / ``unpersist_all``, whatever ``method`` is: for frames
+        that are re-read rather than lineage breaks."""
+        out = df.persist(StorageLevel.MEMORY_AND_DISK)
+        out._splink_stage = stage  # type: ignore[attr-defined]
+        self._registry.append(out)
+        return out
 
     def release(self, df: DataFrame) -> None:
         """Unpersist one frame ``materialize`` returned, before the policy's
@@ -170,12 +181,15 @@ class MaterializationPolicy:
         for df in self._registry:
             try:
                 df.unpersist()
-            except Exception:
-                pass
+            except Exception as e:
+                logger.warning("could not unpersist the %r frame: %s",
+                               getattr(df, "_splink_stage", "unnamed"), e,
+                               exc_info=True)
         self._registry.clear()
         for spark, name in self._bucketed_tables:
             try:
                 spark.sql(f"DROP TABLE IF EXISTS {name}")
-            except Exception:
-                pass
+            except Exception as e:
+                logger.warning("could not drop table %s: %s", name, e,
+                               exc_info=True)
         self._bucketed_tables.clear()

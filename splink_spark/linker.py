@@ -31,8 +31,9 @@ from .internals.predict import (
 )
 from .internals.settings import Settings
 from .internals.term_frequencies import (
-    compute_all_term_frequencies,
+    compute_term_frequencies,
     join_term_frequencies,
+    tf_column_name,
 )
 from .internals.vertically_concatenate import (
     split_link_only_two_datasets,
@@ -85,7 +86,7 @@ class Linker:
         self.debug_tables: dict[str, DataFrame] = {}
         self._concat: Optional[DataFrame] = None
         self._concat_with_tf: Optional[DataFrame] = None
-        self._tf_tables: Optional[dict[str, DataFrame]] = None
+        self._tf_tables: dict[str, DataFrame] = {}  # see tf_tables()
         # user-registered blocked pairs (table_management): when set,
         # predict() scores these instead of running the blocking join
         self._registered_blocked_pairs: Optional[DataFrame] = None
@@ -201,25 +202,47 @@ class Linker:
         return self._concat
 
     def tf_tables(self) -> dict[str, DataFrame]:
-        if self._tf_tables is None:
-            self._tf_tables = compute_all_term_frequencies(
-                self.df_concat(),
-                self.settings.tf_columns,
-                tf_prefix=self.settings.term_frequency_adjustment_column_prefix,
-            )
-        return self._tf_tables
+        """The TF store (the reference's ``__splink__df_tf_<col>`` tables):
+        ``{column: (column, <prefix><column>)}`` for every TF-adjusted column
+        plus any added through ``table_management``. Each table is built
+        once, persisted lazily and released by ``invalidate_cache``."""
+        for column in self.settings.tf_columns:
+            self._tf_table(column)
+        return dict(self._tf_tables)
+
+    def _tf_table(self, column: str) -> DataFrame:
+        if column not in self._tf_tables:
+            self._set_tf_table(column, compute_term_frequencies(
+                self.df_concat(), column, tf_column_name(self.settings, column)))
+        return self._tf_tables[column]
+
+    def _set_tf_table(self, column: str, df: DataFrame) -> None:
+        """The store's one writer. It releases the table it replaces and
+        ``df_concat_with_tf``, which the next reader rebuilds."""
+        for old in (self._tf_tables.get(column), self._concat_with_tf):
+            if old is not None:
+                self.materialization.release(old)
+        self._concat_with_tf = None
+        self._tf_tables[column] = self.materialization.materialize(
+            df.select(column, tf_column_name(self.settings, column)),
+            "term_frequencies", eager=False)
+
+    def _with_tf(self, records: DataFrame) -> DataFrame:
+        """``records`` LEFT-joined to the TF store: how every caller gets
+        TF values."""
+        return join_term_frequencies(records, self.tf_tables())
 
     def df_concat_with_tf(self) -> DataFrame:
-        """``__splink__df_concat_with_tf`` (vertically_concatenate.py:74-81).
+        """``__splink__df_concat_with_tf`` (vertically_concatenate.py:74-81):
+        ``df_concat`` read through the TF store (``_with_tf``).
 
         Persisted: it feeds both sides of the blocking join AND both sides of
         the junction re-join — 4 scans of the same plan otherwise (the
         reference materializes exactly this stage, spark/database_api.py:
-        292-312). The forced count doubles as the node count the junction
-        join's broadcast decision needs.
+        292-312). A write to the TF store releases it.
         """
         if self._concat_with_tf is None:
-            df = join_term_frequencies(self.df_concat(), self.tf_tables())
+            df = self._with_tf(self.df_concat())
             # single-file inputs arrive as one partition; the blocking join
             # would then probe on one core — spread before persisting
             from .internals.misc import default_parallelism
@@ -238,7 +261,7 @@ class Linker:
                 df, "concat_with_tf", eager=False
             )
             logger.log(PIPELINE, "stage __splink__df_concat_with_tf built "
-                       "(%d tf columns)", len(self.tf_tables()))
+                       "(%d tf columns)", len(self._tf_tables))
             df = self._debug_stage(df, "__splink__df_concat_with_tf")
             self._concat_with_tf = df
         return self._concat_with_tf
@@ -457,14 +480,12 @@ class LinkerInference:
             and c[:-2] not in keep_prefixes
             and not c.startswith(s.term_frequency_adjustment_column_prefix)
         ]
+        persist = self._l.materialization.persist
         if not drop_cols:
-            return self._cache(wide) if cache_result else wide
-        from pyspark import StorageLevel
-
+            return persist(wide, "predict") if cache_result else wide
         # with a threshold the core holds only the surviving rows — at scale
         # a selective threshold means the cache holds ~1% of the pair table
-        narrow = wide.drop(*drop_cols).persist(StorageLevel.MEMORY_AND_DISK)
-        self._l.materialization._registry.append(narrow)
+        narrow = persist(wide.drop(*drop_cols), "predict")
         narrow = self._l._debug_stage(narrow, "__splink__df_predict")
         logger.log(PIPELINE, "stage __splink__df_predict narrow core "
                    "persisted (thresholded=%s)",
@@ -488,7 +509,7 @@ class LinkerInference:
         out = rejoined.select(*wide.columns)
         out._splink_narrow = narrow  # type: ignore[attr-defined]
         out._splink_score_bound = wide._splink_score_bound  # type: ignore[attr-defined]
-        return self._cache(out) if cache_result else out
+        return persist(out, "predict") if cache_result else out
 
     def _scored(
         self,
@@ -518,13 +539,6 @@ class LinkerInference:
         out._splink_score_bound = bound  # type: ignore[attr-defined]
         return out
 
-    def _cache(self, df: DataFrame) -> DataFrame:
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self._l.materialization._registry.append(out)
-        return out
-
     def deterministic_link(self) -> DataFrame:
         """Pairs from the blocking rules alone, no scoring
         (inference.py:223-292)."""
@@ -550,13 +564,12 @@ class LinkerInference:
         the trained model — pairs across left/right only, never within
         (reference inference.py predict_between; left/right are roles, e.g.
         existing vs new, the incremental-linkage shape). TF values for both
-        sides come from the linker's base TF tables. A threshold prunes the
+        sides come from the linker's TF store. A threshold prunes the
         pairs that cannot reach it before the similarity functions run, and
         scores the rest once (see ``_scored``)."""
         from .internals.blocking import CustomRule
 
         s = self._l.settings
-        tf = self._l.tf_tables()
         return self._scored(
             threshold_match_probability,
             threshold_match_weight,
@@ -564,8 +577,8 @@ class LinkerInference:
                 r if isinstance(r, BlockingRule) else CustomRule(r)
                 for r in (blocking_rules or s.blocking_rules_to_generate_predictions)
             ],
-            nodes=join_term_frequencies(left, tf),
-            nodes_right=join_term_frequencies(right, tf),
+            nodes=self._l._with_tf(left),
+            nodes_right=self._l._with_tf(right),
         )
 
     def compute_blocked_pairs_for_predict(self) -> DataFrame:
@@ -645,20 +658,20 @@ class LinkerInference:
     def find_matches_to_new_records(self, new_records: DataFrame) -> DataFrame:
         """Link a new batch against the indexed base (inference.py:1156-1511
         predict_between + find_matches_to_new_records.py:14-60):
-        ``predict_between`` with the cached, already TF-joined base on the
-        left. TF values for new records come from the base's TF tables (the
+        ``predict_between`` with the cached ``df_concat_with_tf`` on the
+        left. New records get TF values from the persisted TF store (the
         register_term_frequency_lookup semantics, table_management.py:204-253).
         """
         return self._scored(
             nodes=self._l.df_concat_with_tf(),
-            nodes_right=join_term_frequencies(new_records, self._l.tf_tables()),
+            nodes_right=self._l._with_tf(new_records),
         )
 
     def predict_within(self, new_records: DataFrame) -> DataFrame:
-        """Dedupe within a new batch using the trained model + base TF tables
-        (inference.py predict_within)."""
+        """Dedupe within a new batch using the trained model + the linker's
+        TF store (inference.py predict_within)."""
         return self._scored(
-            nodes=join_term_frequencies(new_records, self._l.tf_tables()),
+            nodes=self._l._with_tf(new_records),
             link_type="dedupe_only",
         )
 
@@ -697,7 +710,7 @@ class LinkerInference:
         Record values are coerced to the base table's schema (ISO date /
         timestamp / numeric strings accepted, unparseable → NULL), matching
         the implicit casts users get when the reference registers records
-        through its SQL backend."""
+        through its SQL backend. TF values come from the TF store."""
         s = self._l.settings
         spark = self._l.spark
         concat = self._l.df_concat()
@@ -706,12 +719,14 @@ class LinkerInference:
         r1.setdefault(s.unique_id_column_name, 0)
         r2.setdefault(s.unique_id_column_name, 1)
         two = spark.createDataFrame([r1, r2], schema=concat.schema)
-        two_tf = join_term_frequencies(two, self._l.tf_tables())
         pairs = spark.createDataFrame(
             [("0", r1[s.unique_id_column_name], r2[s.unique_id_column_name])],
             ["match_key", "join_key_l", "join_key_r"],
         )
-        return self._scored(pairs=pairs, nodes=two_tf)
+        nodes = self._l._with_tf(two)
+        # known size: the broadcast decision needs no count job
+        nodes._splink_row_count = 2  # type: ignore[attr-defined]
+        return self._scored(pairs=pairs, nodes=nodes)
 
 
 class LinkerTraining:
@@ -1120,7 +1135,7 @@ class LinkerMisc:
         self._l.materialization.unpersist_all()
         self._l._concat = None
         self._l._concat_with_tf = None
-        self._l._tf_tables = None
+        self._l._tf_tables = {}
         self._l._registered_blocked_pairs = None
 
 
@@ -1132,34 +1147,11 @@ class LinkerTableManagement:
     def __init__(self, linker: Linker):
         self._l = linker
 
-    def _drop_concat_with_tf_cache(self) -> None:
-        """Release the cached concat_with_tf so the next consumer rebuilds it
-        — unpersisting the old frame, not just dropping the reference (a
-        silent leak of a full-width cached copy of the node table)."""
-        old = self._l._concat_with_tf
-        if old is not None:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-            reg = self._l.materialization._registry
-            if old in reg:
-                reg.remove(old)
-        self._l._concat_with_tf = None
-
     def compute_tf_table(self, column_name: str) -> DataFrame:
         """Term-frequency table for one column (reference
-        table_management.py:37-93). Computed from the concat and memoised in
-        the linker's TF dict so predict reuses it."""
-        from .internals.term_frequencies import compute_term_frequencies
-
-        tfs = self._l.tf_tables()
-        if column_name not in tfs:
-            tfs[column_name] = compute_term_frequencies(
-                self._l.df_concat(), column_name
-            )
-            self._drop_concat_with_tf_cache()  # rebuild with the new column
-        return tfs[column_name]
+        table_management.py:37-93): the TF store's entry, built on first
+        use, so ``df_concat_with_tf`` carries it too."""
+        return self._l._tf_table(column_name)
 
     def register_term_frequency_lookup(
         self, df: DataFrame, column_name: str
@@ -1167,24 +1159,22 @@ class LinkerTableManagement:
         """Override the TF lookup for a column with a precomputed table —
         e.g. global frequencies estimated from a much larger corpus than the
         input (reference table_management.py:204-252). Expected columns:
-        (``column_name``, tf_``column_name``)."""
-        tfp = self._l.settings.term_frequency_adjustment_column_prefix
-        expected = {column_name, f"{tfp}{column_name}"}
+        (``column_name``, ``<prefix><column_name>``), the prefix being the
+        settings' ``term_frequency_adjustment_column_prefix``. It replaces
+        the column's entry in the TF store."""
+        expected = {column_name, tf_column_name(self._l.settings, column_name)}
         if not expected.issubset(set(df.columns)):
             raise ValueError(
                 f"TF lookup for {column_name!r} needs columns {sorted(expected)}, "
                 f"got {df.columns}"
             )
-        self._l.tf_tables()[column_name] = df
-        self._drop_concat_with_tf_cache()
+        self._l._set_tf_table(column_name, df)
 
     def register_table_predict(self, df: DataFrame) -> DataFrame:
         """Use a previously saved predict output (e.g. read back from
         parquet) for downstream clustering/evaluation without re-scoring
         (reference table_management.py:168-202). The frame is persisted and
         tagged the same way a fresh predict's narrow core is."""
-        from pyspark import StorageLevel
-
         uid = self._l.settings.unique_id_column_name
         required = {f"{uid}_l", f"{uid}_r", "match_probability"}
         missing = required - set(df.columns)
@@ -1195,8 +1185,7 @@ class LinkerTableManagement:
                 "re-register predict's output (the narrow core or the wide "
                 "frame both qualify)"
             )
-        cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self._l.materialization._registry.append(cached)
+        cached = self._l.materialization.persist(df, "predict")
         cached._splink_narrow = cached  # type: ignore[attr-defined]
         return cached
 
@@ -1219,10 +1208,7 @@ class LinkerTableManagement:
             )
         if "match_key" not in df.columns:
             df = df.withColumn("match_key", F.lit("registered"))
-        from pyspark import StorageLevel
-
-        cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self._l.materialization._registry.append(cached)
+        cached = self._l.materialization.persist(df, "blocked_pairs")
         self._l._registered_blocked_pairs = cached
         return cached
 
@@ -1236,11 +1222,7 @@ class LinkerTableManagement:
             raise ValueError(
                 f"register_labels_table: missing {sorted(missing)} (got {df.columns})"
             )
-        from pyspark import StorageLevel
-
-        cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self._l.materialization._registry.append(cached)
-        return cached
+        return self._l.materialization.persist(df, "labels")
 
     def invalidate_cache(self) -> None:
         self._l.misc.invalidate_cache()

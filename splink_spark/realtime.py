@@ -9,8 +9,10 @@ settings JSON into comparison objects, so the cache holds the parsed
 is microseconds once the settings objects exist).
 
 Term frequencies: like the reference, "assumes any required term frequency
-values are provided in the input records" — supply ``tf_<col>`` keys when the
-model has TF-adjusted comparisons; missing TF values score with no adjustment.
+values are provided in the input records" — supply ``<prefix><col>`` keys when
+the model has TF-adjusted comparisons, where ``<prefix>`` is the settings'
+``term_frequency_adjustment_column_prefix`` (``tf_`` by default), the name the
+linker's TF store gives them; missing TF values score with no adjustment.
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ from .internals.comparison_vectors import compute_comparison_vectors
 from .internals.functions import register_udfs
 from .internals.predict import predict_from_comparison_vectors
 from .internals.settings import Settings
+from .internals.term_frequencies import tf_column_name
 
 RecordsInput = Union[dict, Sequence[dict], DataFrame]
 
@@ -110,21 +113,16 @@ def compare_records(
     # union of both sides' columns, so a key present on one side only still
     # scores (null on the other side → null level); plus every column the
     # model's comparisons read — a column absent from (or None in) both
-    # records must still exist as a typed null so its levels resolve to -1
-    all_cols = list(dict.fromkeys([*left.columns, *right.columns]))
-    for comp in s.comparisons:
-        for c in getattr(comp, "input_columns", None) or []:
-            if c not in all_cols:
-                all_cols.append(c)
-    tf_cols = [f"tf_{c}" for c in s.tf_columns]
-    for c in tf_cols:
-        if c not in all_cols:
-            all_cols.append(c)
+    # records must still exist as a typed null so its levels resolve to -1,
+    # and so must its TF columns
+    model_cols = [c for comp in s.comparisons for c in comp.input_columns or []]
+    tf_cols = [tf_column_name(s, c) for c in s.tf_columns]
+    all_cols = list(dict.fromkeys([*left.columns, *right.columns, *model_cols, *tf_cols]))
 
     def norm(df: DataFrame) -> DataFrame:
         missing = [c for c in all_cols if c not in df.columns]
         for c in missing:
-            cast = "double" if c.startswith("tf_") else "string"
+            cast = "double" if c in tf_cols else "string"
             df = df.withColumn(c, F.lit(None).cast(cast))
         return df.select(*all_cols)
 

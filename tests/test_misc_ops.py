@@ -87,6 +87,35 @@ def test_invalidate_cache(spark, trained2):
     assert trained2.inference.predict().count() > 0
 
 
+def test_unpersist_all_names_what_it_could_not_release(spark, persons, caplog):
+    """A frame or table the policy fails to release is named in a warning on
+    the splink_spark logger, not skipped silently."""
+    import logging
+
+    from pyspark.sql import DataFrame
+
+    from splink_spark.internals.materialize import MaterializationPolicy
+
+    class _LostCatalog:
+        def sql(self, _query):
+            raise RuntimeError("catalog gone")
+
+    def _lost_executor(*_args):
+        raise RuntimeError("executor gone")
+
+    policy = MaterializationPolicy()
+    frame = policy.materialize(persons.select("unique_id"), "probe_stage", eager=False)
+    frame.unpersist = _lost_executor
+    policy._bucketed_tables.append((_LostCatalog(), "splink_bucketed_probe"))
+    with caplog.at_level(logging.WARNING, logger="splink_spark"):
+        policy.unpersist_all()
+    DataFrame.unpersist(frame)
+    msgs = [r.getMessage() for r in caplog.records]
+    assert any("'probe_stage'" in m and "executor gone" in m for m in msgs), msgs
+    assert any("splink_bucketed_probe" in m and "catalog gone" in m for m in msgs), msgs
+    assert not policy._registry and not policy._bucketed_tables
+
+
 def test_dataset_catalog_offline_fallback(spark, tmp_path):
     """splink_datasets equivalent (SURVEY §2.1): with no cache and no
     network, each dataset resolves to a deterministic synthetic stand-in
@@ -293,6 +322,40 @@ def test_table_management_namespace(spark, persons, tmp_path):
     assert clustered.select("cluster_id").distinct().count() > 0
 
     tm.delete_tables_created_by_splink_from_db()  # must not raise
+
+
+def test_tf_store_names_columns_by_the_settings_prefix(spark, persons):
+    """Under ``term_frequency_adjustment_column_prefix="tfx_"``, every TF
+    table the store hands out (computed, or registered and projected) names
+    its value column ``tfx_<col>``, and predict scores with it."""
+    settings = SettingsCreator(
+        comparisons=[
+            _set(cl.ExactMatch("surname", term_frequency_adjustments=True),
+                 {1: (0.9, 0.02), 0: (0.1, 0.98)}),
+            _set(cl.ExactMatch("dob"), {1: (0.85, 0.01), 0: (0.15, 0.99)}),
+        ],
+        blocking_rules_to_generate_predictions=[block_on("dob")],
+        probability_two_random_records_match=0.05,
+        term_frequency_adjustment_column_prefix="tfx_",
+    )
+    linker = Linker(persons, settings)
+    tm = linker.table_management
+    assert tm.compute_tf_table("first_name").columns == ["first_name", "tfx_first_name"]
+    assert linker.tf_tables()["surname"].columns == ["surname", "tfx_surname"]
+
+    tm.register_term_frequency_lookup(
+        spark.createDataFrame([("taylor", 0.5, "extra")],
+                              ["surname", "tfx_surname", "note"]),
+        "surname",
+    )
+    assert linker.tf_tables()["surname"].columns == ["surname", "tfx_surname"]
+    rows = linker.inference.predict().collect()
+    assert {r["tfx_surname_l"] for r in rows if r["surname_l"] == "taylor"} == {0.5}
+    with pytest.raises(ValueError, match="tfx_surname"):
+        tm.register_term_frequency_lookup(
+            spark.createDataFrame([("taylor", 0.5)], ["surname", "tf_surname"]),
+            "surname",
+        )
 
 
 def test_labels_table_evaluation(spark, persons, trained2):

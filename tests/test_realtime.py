@@ -6,6 +6,8 @@ Linker, per-settings cache) and inference.py:294-444 (num_chunks_l/_r).
 
 from __future__ import annotations
 
+import uuid
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -152,3 +154,92 @@ def test_compare_records_all_none_and_missing_model_columns(spark, rt_settings):
         spark=spark,
     ).collect()[0]
     assert out2["gamma_city"] == -1
+
+
+def _tfx_settings(rt_settings):
+    """``rt_settings`` (a TF-adjusted city comparison) under the TF column
+    prefix ``tfx_``."""
+    d = rt_settings.as_dict()
+    d["term_frequency_adjustment_column_prefix"] = "tfx_"
+    return d
+
+
+def test_compare_records_reads_tf_values_under_the_settings_prefix(
+    spark, rt_settings, rt_records
+):
+    """Record TF values are keyed ``<prefix><col>``, as the linker's TF store
+    names them, and score exactly as ``compare_two_records`` does."""
+    settings = _tfx_settings(rt_settings)
+    linker = Linker(rt_records, settings)
+    tf_city = {r["city"]: r["tfx_city"] for r in linker.tf_tables()["city"].collect()}
+    r1 = {"unique_id": 0, "first_name": "julia", "city": "london"}
+    r2 = {"unique_id": 1, "first_name": "julia ", "city": "london"}
+    via_linker = linker.inference.compare_two_records(r1, r2).collect()[0]
+    via_facade = realtime.compare_records(
+        r1 | {"tfx_city": tf_city["london"]},
+        r2 | {"tfx_city": tf_city["london"]},
+        settings,
+        spark=spark,
+    ).collect()[0]
+    assert via_facade["tfx_city_l"] == tf_city["london"]
+    assert via_facade["match_weight"] == pytest.approx(
+        via_linker["match_weight"], abs=1e-12
+    )
+    # without TF values the pair scores with no adjustment
+    plain = realtime.compare_records(r1, r2, settings, spark=spark).collect()[0]
+    assert plain["tfx_city_l"] is None
+    assert plain["match_weight"] != pytest.approx(via_linker["match_weight"])
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _jobs(spark, action) -> int:
+    """Spark jobs ``action()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_realtime_requests_reuse_the_tf_store_and_release_it(spark, rt_settings):
+    """Requests read the linker's persisted TF store instead of rebuilding
+    TF tables: after the first request they persist nothing new, a
+    repeated ``compare_two_records`` runs at most 4 jobs (7 here when each
+    request re-aggregated its TF table), and ``invalidate_cache`` returns
+    the persisted RDDs to what they were before the linker existed."""
+    rows = [(i, f"n{i % 7}", f"c{i % 5}") for i in range(60)]
+    records = spark.createDataFrame(rows, ["unique_id", "first_name", "city"])
+    # compare ids, not sizes: the context cleaner may release other tests'
+    # caches while this one runs
+    baseline = _persisted(spark)
+    linker = Linker(records, rt_settings)
+    new = spark.createDataFrame(
+        [(1000, "n1", "c1"), (1001, "n2", "c3")], records.schema
+    )
+    r1 = {"unique_id": 2000, "first_name": "n3", "city": "c3"}
+    r2 = {"unique_id": 2001, "first_name": "n3", "city": "c3"}
+
+    found = linker.inference.find_matches_to_new_records(new).collect()
+    assert found
+    served = _persisted(spark)
+    weights = set()
+    for _ in range(3):
+        jobs = _jobs(
+            spark,
+            lambda: weights.add(
+                linker.inference.compare_two_records(r1, r2).collect()[0]["match_weight"]
+            ),
+        )
+        assert jobs <= 4
+    assert len(weights) == 1
+    assert _persisted(spark) - served == set()
+
+    linker.misc.invalidate_cache()
+    assert _persisted(spark) - baseline == set()

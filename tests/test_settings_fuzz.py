@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 import splink_spark.internals.comparison_level_library as cll
 import splink_spark.internals.comparison_library as cl
-from splink_spark import Linker, Settings, SettingsCreator, block_on
+from splink_spark import Linker, Settings, SettingsCreator, block_on, realtime
 
 
 def _random_comparison(rng: random.Random, col: str):
@@ -62,13 +62,15 @@ def _random_settings(rng: random.Random) -> Settings:
         kw["comparison_vector_value_column_prefix"] = "g_"
     if rng.random() < 0.3:
         kw["bayes_factor_column_prefix"] = "bfx_"
+    kw["probability_two_random_records_match"] = rng.uniform(0.001, 0.2)
+    kw["retain_matching_columns"] = rng.random() < 0.7
+    kw["retain_intermediate_calculation_columns"] = rng.random() < 0.5
+    if rng.random() < 0.5:
+        kw["term_frequency_adjustment_column_prefix"] = "tfx_"
     return SettingsCreator(
         link_type="dedupe_only",
         comparisons=comparisons,
         blocking_rules_to_generate_predictions=rules,
-        probability_two_random_records_match=rng.uniform(0.001, 0.2),
-        retain_matching_columns=rng.random() < 0.7,
-        retain_intermediate_calculation_columns=rng.random() < 0.5,
         **kw,
     )
 
@@ -94,3 +96,21 @@ def test_settings_round_trip_fixpoint_and_predict_equality(spark, persons, seed)
         )
 
     assert rows(settings) == rows(rebuilt)
+
+    # one pair through the standalone realtime path, given the linker's TF
+    # values under the settings' prefix, scores as compare_two_records does
+    linker = Linker(persons, settings)
+    r1, r2 = (
+        {k: v for k, v in r.asDict().items() if k != "cluster"}
+        for r in persons.where(F.col("unique_id").isin(0, 2)).orderBy("unique_id").collect()
+    )
+    tfs = {c: dict(t.collect()) for c, t in linker.tf_tables().items()}
+    prefix = settings.term_frequency_adjustment_column_prefix
+    with_tf = [
+        r | {f"{prefix}{c}": tf.get(r[c]) for c, tf in tfs.items()} for r in (r1, r2)
+    ]
+    via_linker = linker.inference.compare_two_records(r1, r2).collect()[0]
+    via_facade = realtime.compare_records(*with_tf, settings, spark=spark).collect()[0]
+    assert via_facade["match_weight"] == pytest.approx(
+        via_linker["match_weight"], abs=1e-9
+    )
