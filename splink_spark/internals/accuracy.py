@@ -1,17 +1,26 @@
-"""Evaluation: truth-space (threshold sweep) tables.
+"""Evaluation: truth-space (threshold sweep) tables, prediction errors and
+unlinkables.
 
 Reference: splink/internals/accuracy.py:60-290 — group scored pairs by
 truth_threshold, running-total windows for cumulative TP/FP/TN/FN, then the
 derived metrics (precision, recall, specificity, F1...) at every threshold.
+
+Labels tables and self-links are turned into pair tables by
+``comparison_vectors.id_pairs`` and scored by ``LinkerInference._scored``,
+the scorer predict uses.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .comparison_vectors import id_pairs
 
 
 def truth_space_table(
@@ -136,55 +145,50 @@ def prediction_errors_from_labels_column(
     include_false_negatives: bool = True,
 ) -> DataFrame:
     """FP/FN pair lists at a threshold (accuracy.py:442-520)."""
-    # validate BEFORE the (expensive, cache-populating) predict() call
+    truth = F.coalesce(
+        F.col(f"{labels_column}_l") == F.col(f"{labels_column}_r"), F.lit(False)
+    )
+    errors = _prediction_errors(
+        truth, threshold_match_probability, include_false_positives, include_false_negatives
+    )
+    if df_predict is None:
+        df_predict = linker.inference.predict()
+    return _with_labels(linker, df_predict, labels_column).where(errors)
+
+
+def _prediction_errors(
+    truth: Column,
+    threshold_match_probability: float,
+    include_false_positives: bool,
+    include_false_negatives: bool,
+) -> Column:
+    """The WHERE selecting false positives and/or false negatives: pairs whose
+    ``match_probability >= threshold_match_probability`` disagrees with
+    ``truth``. Callers build it before any scoring, so invalid flags fail
+    before predict runs."""
     if not include_false_positives and not include_false_negatives:
         raise ValueError(
             "at least one of include_false_positives / include_false_negatives "
             "must be True"
         )
-    if df_predict is None:
-        df_predict = linker.inference.predict()
-    df_predict = _with_labels(linker, df_predict, labels_column)
-    truth = F.coalesce(
-        F.col(f"{labels_column}_l") == F.col(f"{labels_column}_r"), F.lit(False)
-    )
     pred = F.col("match_probability") >= threshold_match_probability
-    conds = []
-    if include_false_positives:
-        conds.append(pred & ~truth)
+    errors = [pred & ~truth] if include_false_positives else []
     if include_false_negatives:
-        conds.append(~pred & truth)
-    cond = conds[0]
-    for c in conds[1:]:
-        cond = cond | c
-    return df_predict.where(cond)
+        errors.append(~pred & truth)
+    return functools.reduce(operator.or_, errors)
 
 
 def unlinkables_table(linker) -> DataFrame:
     """Self-link match-weight distribution (reference unlinkables.py;
     linker.py:493-552): score every record against itself; records whose
     self-match weight is low are intrinsically unlinkable."""
-    from .predict import predict_from_comparison_vectors
-
     s = linker.settings
     uid = s.unique_id_column_name
-    concat = linker.df_concat_with_tf()
-    sd = s.source_dataset_column_name if s.needs_source_dataset else None
-    sd_cols = (
-        [
-            F.col(sd).alias("source_dataset_l"),
-            F.col(sd).alias("source_dataset_r"),
-        ]
-        if sd and sd in concat.columns
-        else []
+    sd = s.source_dataset_column_name
+    pairs = id_pairs(
+        linker.df_concat_with_tf(), s, "self", uid=(uid, uid), source_dataset=(sd, sd)
     )
-    pairs = concat.select(
-        F.lit("self").alias("match_key"),
-        *sd_cols,
-        F.col(uid).alias("join_key_l"),
-        F.col(uid).alias("join_key_r"),
-    )
-    scored = predict_from_comparison_vectors(linker.comparison_vectors(pairs=pairs), s)
+    scored = linker.inference._scored(pairs=pairs)
     rounded = F.round(F.col("match_weight"), 2).alias("match_weight")
     return (
         scored.select(rounded)
@@ -194,68 +198,25 @@ def unlinkables_table(linker) -> DataFrame:
     )
 
 
-def _orient_labels_pairs(linker, labels: DataFrame) -> DataFrame:
-    """Labels-table pairs oriented lower-id-first with the clerical score
-    carried (reference block_from_labels.py / lower_id_on_lhs conventions,
-    shared with training.estimate_m_from_pairwise_labels)."""
-    s = linker.settings
+def _score_labels_table(linker, labels: DataFrame) -> DataFrame:
+    """Score EVERY labelled pair with the trained model — whether or not the
+    blocking rules would have found it (the reference's labels-table
+    evaluation contract, accuracy.py:40-120). Pairs are oriented lower id
+    first, one row each; the clerical score rides through the junction join
+    as ``__clerical_score``."""
     score = (
         F.col("clerical_match_score")
         if "clerical_match_score" in labels.columns
         else F.lit(1.0)
     ).cast("double")
-    if s.needs_source_dataset and "source_dataset_l" in labels.columns:
-        swap = (F.col("source_dataset_l") > F.col("source_dataset_r")) | (
-            (F.col("source_dataset_l") == F.col("source_dataset_r"))
-            & (F.col("unique_id_l") > F.col("unique_id_r"))
-        )
-
-        def pick(a, b):
-            return F.when(swap, F.col(b)).otherwise(F.col(a))
-
-        return labels.select(
-            F.lit("labels").alias("match_key"),
-            pick("source_dataset_l", "source_dataset_r").alias("source_dataset_l"),
-            pick("source_dataset_r", "source_dataset_l").alias("source_dataset_r"),
-            pick("unique_id_l", "unique_id_r").alias("join_key_l"),
-            pick("unique_id_r", "unique_id_l").alias("join_key_r"),
-            score.alias("__clerical_score"),
-        ).dropDuplicates(["join_key_l", "join_key_r"])
-    lo = F.least(F.col("unique_id_l"), F.col("unique_id_r"))
-    hi = F.greatest(F.col("unique_id_l"), F.col("unique_id_r"))
-    return labels.select(
-        F.lit("labels").alias("match_key"),
-        lo.alias("join_key_l"),
-        hi.alias("join_key_r"),
-        score.alias("__clerical_score"),
-    ).dropDuplicates(["join_key_l", "join_key_r"])
-
-
-def _score_labels_table(linker, labels: DataFrame) -> DataFrame:
-    """Score EVERY labelled pair with the trained model — whether or not the
-    blocking rules would have found it (the reference's labels-table
-    evaluation contract, accuracy.py:40-120)."""
-    from .predict import predict_from_comparison_vectors
-
-    pairs = _orient_labels_pairs(linker, labels)
-    scored = predict_from_comparison_vectors(
-        linker.comparison_vectors(pairs=pairs.drop("__clerical_score")),
+    pairs = id_pairs(
+        labels,
         linker.settings,
+        "labels",
+        carry=[score.alias("__clerical_score")],
+        lower_id_on_lhs=True,
     )
-    uid = linker.settings.unique_id_column_name
-    key_cols = [f"{uid}_l", f"{uid}_r"]
-    sel = [
-        F.col("join_key_l").alias(f"{uid}_l"),
-        F.col("join_key_r").alias(f"{uid}_r"),
-        F.col("__clerical_score"),
-    ]
-    # with source datasets, uids are only unique per dataset — join on the
-    # composite keys the pair table carries
-    if "source_dataset_l" in pairs.columns and "source_dataset_l" in scored.columns:
-        key_cols += ["source_dataset_l", "source_dataset_r"]
-        sel += [F.col("source_dataset_l"), F.col("source_dataset_r")]
-    keys = pairs.select(*sel)
-    return scored.join(F.broadcast(keys), on=key_cols)
+    return linker.inference._scored(pairs=pairs)
 
 
 def truth_space_table_from_labels_table(
@@ -281,20 +242,10 @@ def prediction_errors_from_labels_table(
 ) -> DataFrame:
     """FP/FN pair lists judged against a clerical labels table
     (reference prediction_errors_from_labels_table, accuracy.py:442-520)."""
-    if not include_false_positives and not include_false_negatives:
-        raise ValueError(
-            "at least one of include_false_positives / include_false_negatives "
-            "must be True"
-        )
-    scored = _score_labels_table(linker, labels)
-    truth = F.col("__clerical_score") >= threshold_actual
-    pred = F.col("match_probability") >= threshold_match_probability
-    conds = []
-    if include_false_positives:
-        conds.append(pred & ~truth)
-    if include_false_negatives:
-        conds.append(~pred & truth)
-    cond = conds[0]
-    for c in conds[1:]:
-        cond = cond | c
-    return scored.where(cond)
+    errors = _prediction_errors(
+        F.col("__clerical_score") >= threshold_actual,
+        threshold_match_probability,
+        include_false_positives,
+        include_false_negatives,
+    )
+    return _score_labels_table(linker, labels).where(errors)

@@ -7,13 +7,21 @@ concat_tf r ...``, :98-115) followed by the gamma CASE ladders. The ids-only
 blocking output + this junction join is a deliberate shuffle-width
 optimisation at scale: the wide columns move through exactly two hash joins
 instead of through the blocking join's output.
+
+The id-pair contract: a pair table is ``(match_key, [source_dataset_l,
+source_dataset_r,] join_key_l, join_key_r, *carried)``. The source-dataset
+keys are present whenever the job has source datasets, because uids are only
+unique per dataset (the reference's composite ids, unique_id_concat.py).
+Blocking emits this shape, and ``id_pairs`` builds it from any other table
+of pairs (labels, cluster members, single records). Carried columns ride
+through the junction join onto the scored rows.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Optional, Sequence, Union
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .blocking import block_using_rules
@@ -56,12 +64,64 @@ def _needed_columns(settings: Settings, concat_with_tf: DataFrame) -> list[str]:
 BROADCAST_NODES_MAX_ROWS = 200_000
 
 
+def id_pairs(
+    df: DataFrame,
+    settings: Settings,
+    match_key: str,
+    uid: tuple = ("unique_id_l", "unique_id_r"),
+    source_dataset: Optional[tuple] = ("source_dataset_l", "source_dataset_r"),
+    carry: Sequence[Union[str, Column]] = (),
+    lower_id_on_lhs: bool = False,
+) -> DataFrame:
+    """A pair table in the id-pair contract, read from ``df``.
+
+    ``uid`` and ``source_dataset`` name the (left, right) key columns of
+    ``df``, as column names or expressions; the defaults are the labels-table
+    names. The source-dataset keys are carried whenever the job has source
+    datasets. ``source_dataset=None`` leaves them out, which is sound only
+    when each side's node table holds a single record (``compare_two_records``).
+    ``carry`` columns are kept as pair columns.
+
+    ``lower_id_on_lhs`` orients each pair with the lower ``(source_dataset,
+    uid)`` on the left and keeps one row per pair (the reference's
+    lower_id_on_lhs.py, as its labels join does).
+    """
+    def col(c):
+        return F.col(c) if isinstance(c, str) else c
+
+    uid_l, uid_r = (col(c) for c in uid)
+    keys = {"join_key": (uid_l, uid_r)}
+    swap = uid_l > uid_r
+    if settings.needs_source_dataset and source_dataset is not None:
+        missing = [c for c in source_dataset if isinstance(c, str) and c not in df.columns]
+        if missing:
+            raise ValueError(
+                f"a {settings.link_type} job keys its pairs by (source dataset, "
+                f"unique id): missing {missing} (got {df.columns})"
+            )
+        sd_l, sd_r = (col(c) for c in source_dataset)
+        keys = {"source_dataset": (sd_l, sd_r), **keys}
+        swap = (sd_l > sd_r) | ((sd_l == sd_r) & swap)
+    if lower_id_on_lhs:
+        keys = {
+            name: (F.when(swap, r).otherwise(l), F.when(swap, l).otherwise(r))
+            for name, (l, r) in keys.items()
+        }
+    names = [f"{name}_{side}" for name in keys for side in ("l", "r")]
+    cols = [c for pair in keys.values() for c in pair]
+    out = df.select(
+        F.lit(match_key).alias("match_key"),
+        *[c.alias(n) for c, n in zip(cols, names)],
+        *carry,
+    )
+    return out.dropDuplicates(names) if lower_id_on_lhs else out
+
+
 def blocked_pairs_with_columns(
     blocked_pairs: DataFrame,
     concat_with_tf: DataFrame,
     settings: Settings,
     concat_with_tf_right: Optional[DataFrame] = None,
-    broadcast_nodes_max_rows: Optional[int] = BROADCAST_NODES_MAX_ROWS,
 ) -> DataFrame:
     """The junction re-join (comparison_vector_values.py:98-115).
 
@@ -77,28 +137,28 @@ def blocked_pairs_with_columns(
     narrow_l = concat_with_tf.select([F.col(c).alias(f"{c}_l") for c in cols])
     right_src = concat_with_tf_right if concat_with_tf_right is not None else concat_with_tf
     narrow_r = right_src.select([F.col(c).alias(f"{c}_r") for c in cols])
-    if broadcast_nodes_max_rows:
-        if row_count(concat_with_tf) <= broadcast_nodes_max_rows:
-            narrow_l = F.broadcast(narrow_l)
-            narrow_r = F.broadcast(narrow_r)
+    if row_count(concat_with_tf) <= BROADCAST_NODES_MAX_ROWS:
+        narrow_l = F.broadcast(narrow_l)
+        narrow_r = F.broadcast(narrow_r)
 
-    join_l = [blocked_pairs["join_key_l"] == narrow_l[f"{uid}_l"]]
-    join_r = [blocked_pairs["join_key_r"] == narrow_r[f"{uid}_r"]]
     sd = settings.source_dataset_column_name
-    if sd and "source_dataset_l" in blocked_pairs.columns:
-        join_l.append(blocked_pairs["source_dataset_l"] == narrow_l[f"{sd}_l"])
-        join_r.append(blocked_pairs["source_dataset_r"] == narrow_r[f"{sd}_r"])
+    keyed_by_sd = bool(sd) and "source_dataset_l" in blocked_pairs.columns
 
-    out = blocked_pairs.join(narrow_l, on=_and(join_l), how="inner").join(
-        narrow_r, on=_and(join_r), how="inner"
+    def on(narrow, side):
+        cond = blocked_pairs[f"join_key_{side}"] == narrow[f"{uid}_{side}"]
+        if keyed_by_sd:
+            cond = cond & (blocked_pairs[f"source_dataset_{side}"] == narrow[f"{sd}_{side}"])
+        return cond
+
+    out = blocked_pairs.join(narrow_l, on=on(narrow_l, "l"), how="inner").join(
+        narrow_r, on=on(narrow_r, "r"), how="inner"
     )
     # drop the pair table's copies by REFERENCE — the node table contributes
     # identically-named source_dataset_l/_r columns that must survive
-    out = out.drop(blocked_pairs["join_key_l"]).drop(blocked_pairs["join_key_r"])
-    if "source_dataset_l" in blocked_pairs.columns:
-        out = out.drop(blocked_pairs["source_dataset_l"]).drop(
-            blocked_pairs["source_dataset_r"]
-        )
+    for key in ("join_key", "source_dataset"):
+        for side in ("l", "r"):
+            if f"{key}_{side}" in blocked_pairs.columns:
+                out = out.drop(blocked_pairs[f"{key}_{side}"])
     return out
 
 
@@ -156,9 +216,3 @@ def compute_comparison_vectors(
     gammas = [comp.gamma_column() for comp in settings.comparisons]
     return pairs_with_cols.select("*", *gammas)
 
-
-def _and(conds):
-    out = conds[0]
-    for c in conds[1:]:
-        out = out & c
-    return out

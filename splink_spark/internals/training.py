@@ -41,6 +41,7 @@ from .blocking import (
     cartesian_count,
     count_comparisons_per_rule,
 )
+from .comparison_vectors import id_pairs
 from .misc import bayes_factor_to_prob, row_count
 from .predict import match_weight_column, stable_sigmoid
 
@@ -298,40 +299,15 @@ def estimate_u_using_random_sampling(
 
 def estimate_m_from_pairwise_labels(linker, labels: "DataFrame") -> dict:
     """m from a clerically-labelled pair table (unique_id_l, unique_id_r
-    [, clerical_match_score]) — reference m_from_labels.py / block_from_labels
-    .py: orient pairs lower-id-first, junction-join, count gamma levels.
+    [, source_dataset_l/_r, clerical_match_score]) — reference
+    m_from_labels.py / block_from_labels.py: orient pairs lower-id-first
+    (``comparison_vectors.id_pairs``), junction-join, count gamma levels.
     Rows with clerical_match_score < 1 are excluded (non-matches teach u,
     not m)."""
     s = linker.settings
     if "clerical_match_score" in labels.columns:
         labels = labels.where(F.col("clerical_match_score") >= 1.0)
-    # lower id on lhs (reference lower_id_on_lhs.py); with source datasets
-    # the ordering key and the join keys are (source_dataset, uid) — uids
-    # are only unique per dataset
-    if s.needs_source_dataset and "source_dataset_l" in labels.columns:
-        swap = (F.col("source_dataset_l") > F.col("source_dataset_r")) | (
-            (F.col("source_dataset_l") == F.col("source_dataset_r"))
-            & (F.col("unique_id_l") > F.col("unique_id_r"))
-        )
-
-        def pick(a, b):
-            return F.when(swap, F.col(b)).otherwise(F.col(a))
-
-        pairs = labels.select(
-            F.lit("labels").alias("match_key"),
-            pick("source_dataset_l", "source_dataset_r").alias("source_dataset_l"),
-            pick("source_dataset_r", "source_dataset_l").alias("source_dataset_r"),
-            pick("unique_id_l", "unique_id_r").alias("join_key_l"),
-            pick("unique_id_r", "unique_id_l").alias("join_key_r"),
-        ).distinct()
-    else:
-        lo = F.least(F.col("unique_id_l"), F.col("unique_id_r"))
-        hi = F.greatest(F.col("unique_id_l"), F.col("unique_id_r"))
-        pairs = labels.select(
-            F.lit("labels").alias("match_key"),
-            lo.alias("join_key_l"),
-            hi.alias("join_key_r"),
-        ).distinct()
+    pairs = id_pairs(labels, s, "labels", lower_id_on_lhs=True)
     return _m_from_cv(s, linker.comparison_vectors(pairs=pairs))
 
 

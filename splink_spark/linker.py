@@ -14,11 +14,18 @@ from typing import Mapping, Optional, Sequence, Union
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .internals.blocking import BlockingRule, block_using_rules, count_comparisons_per_rule
+from .internals.blocking import (
+    BlockingRule,
+    _pair_filter,
+    block_using_rules,
+    count_comparisons_per_rule,
+    suffix_all,
+)
 from .internals.comparison_vectors import (
     blocked_pairs_with_columns,
     build_pairs_with_columns,
     compute_comparison_vectors,
+    id_pairs,
 )
 from .internals.connected_components import node_id_columns
 from .internals.functions import register_udfs
@@ -364,8 +371,8 @@ class Linker:
         ``nodes`` are the TF-joined records, by default the linker's
         ``df_concat_with_tf``; pairs lie within them unless ``nodes_right``
         gives a second, disjoint record set for the right side. Given
-        ``pairs`` (``join_key_l`` / ``join_key_r`` [+ ``source_dataset_l`` /
-        ``_r``] id pairs, e.g. registered or labelled), the records are
+        ``pairs`` in the id-pair contract (``comparison_vectors.id_pairs``:
+        registered, labelled, chunked or cluster pairs), the records are
         junction-joined onto them. Otherwise the pairs are blocked from
         ``rules`` (default: the prediction rules) under ``link_type``
         (default: the settings') by ``build_pairs_with_columns``, which picks
@@ -679,33 +686,35 @@ class LinkerInference:
         self, df_clustered: DataFrame, df_predict: DataFrame
     ) -> DataFrame:
         """Score within-cluster pairs the blocking rules never produced
-        (inference.py:574-745): self-join clusters on cluster_id, anti-join
-        the already-scored edges, score the remainder."""
+        (inference.py:574-745): self-join clusters on cluster_id, keep each
+        pair the settings' link type allows once (the blocking join's pair
+        filter, so a link_only job pairs across datasets only), anti-join
+        the pairs ``df_predict`` already scored, score the remainder. Pairs
+        are keyed by (source_dataset, uid) when the job has source datasets,
+        so equal uids in different datasets still pair."""
         s = self._l.settings
         uid = s.unique_id_column_name
-        members = df_clustered.select("cluster_id", F.col(uid))
-        l = members.select(
-            F.col("cluster_id"), F.col(uid).alias("join_key_l")
+        sd = s.source_dataset_column_name
+        members = df_clustered.select(
+            "cluster_id", uid, *([sd] if s.needs_source_dataset else [])
         )
-        r = members.select(
-            F.col("cluster_id"), F.col(uid).alias("join_key_r")
+        in_cluster = suffix_all(members, "_l").join(
+            suffix_all(members, "_r"),
+            on=(F.col("cluster_id_l") == F.col("cluster_id_r"))
+            & _pair_filter(s.link_type, uid, sd),
         )
-        in_cluster = (
-            l.join(r, on="cluster_id")
-            .where(F.col("join_key_l") < F.col("join_key_r"))
-            .select("join_key_l", "join_key_r")
-        )
-        existing = df_predict.select(
-            F.col(f"{uid}_l").alias("join_key_l"),
-            F.col(f"{uid}_r").alias("join_key_r"),
-        )
-        missing = in_cluster.join(
-            existing, on=["join_key_l", "join_key_r"], how="left_anti"
-        ).withColumn("match_key", F.lit("missing_cluster_edge"))
-        return self.score_pairs(missing)
+        keys = dict(uid=(f"{uid}_l", f"{uid}_r"), source_dataset=(f"{sd}_l", f"{sd}_r"))
+        missing = id_pairs(in_cluster, s, "missing_cluster_edge", **keys)
+        predicted = id_pairs(df_predict, s, "predict", **keys).drop("match_key")
+        missing = missing.join(predicted, on=predicted.columns, how="left_anti")
+        return self._scored(pairs=missing)
 
     def compare_two_records(self, record_1: dict, record_2: dict) -> DataFrame:
         """realtime.py:44-159 — score one pair without blocking.
+
+        Each record is its own side's node table, so the pair is exactly
+        (record_1, record_2) even when both carry the same unique id; a
+        missing unique id defaults to 0 (left) and 1 (right).
 
         Record values are coerced to the base table's schema (ISO date /
         timestamp / numeric strings accepted, unparseable → NULL), matching
@@ -713,20 +722,21 @@ class LinkerInference:
         through its SQL backend. TF values come from the TF store."""
         s = self._l.settings
         spark = self._l.spark
-        concat = self._l.df_concat()
-        r1 = _coerce_record_to_schema(record_1, concat.schema)
-        r2 = _coerce_record_to_schema(record_2, concat.schema)
-        r1.setdefault(s.unique_id_column_name, 0)
-        r2.setdefault(s.unique_id_column_name, 1)
-        two = spark.createDataFrame([r1, r2], schema=concat.schema)
-        pairs = spark.createDataFrame(
-            [("0", r1[s.unique_id_column_name], r2[s.unique_id_column_name])],
-            ["match_key", "join_key_l", "join_key_r"],
-        )
-        nodes = self._l._with_tf(two)
-        # known size: the broadcast decision needs no count job
-        nodes._splink_row_count = 2  # type: ignore[attr-defined]
-        return self._scored(pairs=pairs, nodes=nodes)
+        uid = s.unique_id_column_name
+        schema = self._l.df_concat().schema
+        sides = []
+        for record, default_uid in ((record_1, 0), (record_2, 1)):
+            r = _coerce_record_to_schema(record, schema)
+            r.setdefault(uid, default_uid)
+            nodes = self._l._with_tf(spark.createDataFrame([r], schema=schema))
+            # known size: the broadcast decision needs no count job
+            nodes._splink_row_count = 1  # type: ignore[attr-defined]
+            sides.append((r[uid], nodes))
+        (uid_l, nodes_l), (uid_r, nodes_r) = sides
+        # one record per side: the uid pair names it, no source-dataset key
+        pair = spark.createDataFrame([(uid_l, uid_r)], ["l", "r"])
+        pairs = id_pairs(pair, s, "0", uid=("l", "r"), source_dataset=None)
+        return self._scored(pairs=pairs, nodes=nodes_l, nodes_right=nodes_r)
 
 
 class LinkerTraining:
@@ -1069,14 +1079,14 @@ class LinkerEvaluation:
                 "multiple input datasets: pass source_dataset= to identify "
                 "the record"
             )
-        base = self._l.df_concat()
-        cols = [F.col(uid).alias("join_key_l")]
-        if sd:
-            cols.append(F.col(sd).alias("source_dataset_l"))
-        pairs = base.select(*cols).withColumn("join_key_r", F.lit(unique_id))
-        if sd:
-            pairs = pairs.withColumn("source_dataset_r", F.lit(source_dataset))
-        scored = self._l.inference.score_pairs(pairs)
+        pairs = id_pairs(
+            self._l.df_concat(),
+            s,
+            "user",
+            uid=(uid, F.lit(unique_id)),
+            source_dataset=(sd, F.lit(source_dataset)),
+        )
+        scored = self._l.inference._scored(pairs=pairs)
         candidates = scored.where(F.col("match_weight") > match_weight_threshold)
         if out_path:
             import os

@@ -4,6 +4,8 @@ ids in clustering."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -266,3 +268,165 @@ def test_array_based_blocking_link_only_reference_case(spark):
     }
     expected = {(1, 6, "0"), (2, 4, "0"), (2, 6, "0"), (1, 4, "1"), (3, 5, "1")}
     assert triples == expected
+
+
+# -- pairs keyed by (source_dataset, uid) when two datasets reuse uids -------
+
+
+@pytest.fixture(scope="module")
+def reused_uids(spark):
+    """Two datasets that both use uids 1-3."""
+    cols = ["unique_id", "name", "city"]
+    a = spark.createDataFrame([(1, "ann", "x"), (2, "ann", "y"), (3, "cat", "z")], cols)
+    b = spark.createDataFrame([(1, "ann", "x"), (2, "bob", "y"), (3, "cat", "w")], cols)
+    return a, b
+
+
+def _reused_uid_linker(reused_uids, link_type="link_and_dedupe"):
+    a, b = reused_uids
+    settings = SettingsCreator(
+        link_type=link_type,
+        comparisons=[_set(cl.ExactMatch("name"), {1: (0.9, 0.1), 0: (0.1, 0.9)})],
+        blocking_rules_to_generate_predictions=[block_on("city")],
+        probability_two_random_records_match=0.5,
+    )
+    return Linker({"a": a, "b": b}, settings)
+
+
+def _keys(rows):
+    """Sorted ((source_dataset, uid), (source_dataset, uid)) per scored row;
+    a pair scored twice appears twice."""
+    return sorted(
+        ((r["source_dataset_l"], r["unique_id_l"]), (r["source_dataset_r"], r["unique_id_r"]))
+        for r in rows
+    )
+
+
+def _labels(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        ["source_dataset_l", "unique_id_l", "source_dataset_r", "unique_id_r",
+         "clerical_match_score"],
+    )
+
+
+def _m_from_pairwise_labels(spark, linker, monkeypatch):
+    seen = []
+    gammas = linker.comparison_vectors
+
+    def spy(**kwargs):
+        seen.append(gammas(**kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(linker, "comparison_vectors", spy)
+    linker.training.estimate_m_from_pairwise_labels(
+        _labels(spark, [("b", 1, "a", 1, 1.0), ("a", 2, "b", 2, 1.0), ("b", 2, "a", 2, 1.0)])
+    )
+    return _keys(seen[0].collect())
+
+
+def _labels_truth_space(spark, linker, monkeypatch):
+    ts = linker.evaluation.accuracy_analysis_from_labels_table(
+        _labels(spark, [("a", 1, "a", 2, 1.0), ("b", 2, "b", 1, 0.0)]),
+        output_type="table",
+    ).orderBy("truth_threshold").collect()
+    return [(r["tp"], r["fp"], r["fn"], r["tn"]) for r in ts]
+
+
+def _labels_prediction_errors(spark, linker, monkeypatch):
+    # ann/ann labelled a non-match (a false positive), ann/bob a match (a
+    # false negative): both pairs are errors
+    return _keys(linker.evaluation.prediction_errors_from_labels_table(
+        _labels(spark, [("a", 2, "a", 1, 0.0), ("b", 1, "b", 2, 1.0)])
+    ).collect())
+
+
+def _unlinkables(spark, linker, monkeypatch):
+    return [(r["match_weight"], r["count"]) for r in linker.evaluation.unlinkables_table().collect()]
+
+
+def _missing_cluster_edges(spark, linker, monkeypatch):
+    clusters = spark.createDataFrame(
+        [(0, "a", 1), (0, "b", 1), (0, "a", 2), (1, "b", 2), (1, "b", 3), (1, "a", 3)],
+        ["cluster_id", "source_dataset", "unique_id"],
+    )
+    return _keys(linker.inference.score_missing_cluster_edges(
+        clusters, linker.inference.predict()
+    ).collect())
+
+
+def _labelling_tool(spark, linker, monkeypatch):
+    return _keys(linker.evaluation.labelling_tool_for_specific_record(
+        1, source_dataset="b", match_weight_threshold=-100
+    ).collect())
+
+
+def _compare_two_records(spark, linker, monkeypatch):
+    return _keys(linker.inference.compare_two_records(
+        {"source_dataset": "a", "unique_id": 1, "name": "ann", "city": "x"},
+        {"source_dataset": "b", "unique_id": 1, "name": "bob", "city": "x"},
+    ).collect())
+
+
+_AGREE = round(math.log2(9), 2)  # prior 0.5, name agrees: m/u = 0.9/0.1
+
+
+_PRODUCERS = [
+    (_m_from_pairwise_labels, [(("a", 1), ("b", 1)), (("a", 2), ("b", 2))]),
+    # at the ann/bob weight both pairs predict a match (tp 1, fp 1); at the
+    # ann/ann weight only the labelled match does (tp 1, tn 1)
+    (_labels_truth_space, [(1, 1, 0, 0), (1, 0, 0, 1)]),
+    (_labels_prediction_errors, [(("a", 1), ("a", 2)), (("b", 1), ("b", 2))]),
+    (_unlinkables, [(_AGREE, 6)]),
+    (
+        _missing_cluster_edges,
+        [(("a", 1), ("a", 2)), (("a", 2), ("b", 1)), (("a", 3), ("b", 2)),
+         (("a", 3), ("b", 3)), (("b", 2), ("b", 3))],
+    ),
+    (
+        _labelling_tool,
+        [(("a", u), ("b", 1)) for u in (1, 2, 3)] + [(("b", u), ("b", 1)) for u in (1, 2, 3)],
+    ),
+    (_compare_two_records, [(("a", 1), ("b", 1))]),
+]
+
+
+@pytest.mark.parametrize(
+    "producer, expected", _PRODUCERS, ids=[p.__name__[1:] for p, _ in _PRODUCERS]
+)
+def test_pair_producers_score_each_intended_pair_once(
+    spark, reused_uids, monkeypatch, producer, expected
+):
+    """Every producer of caller-built pairs keys them by (source_dataset,
+    uid): the reused uids neither fan a pair out into its namesakes nor
+    merge two pairs into one."""
+    linker = _reused_uid_linker(reused_uids)
+    assert producer(spark, linker, monkeypatch) == expected
+
+
+def test_link_only_missing_cluster_edges_pair_equal_uids(spark, reused_uids):
+    """link_only clusters that pair each uid with its namesake in the other
+    dataset: the three cross-dataset edges are missing from an empty
+    prediction and are scored."""
+    linker = _reused_uid_linker(reused_uids, "link_only")
+    clusters = spark.createDataFrame(
+        [(u, sd, u) for u in (1, 2, 3) for sd in ("a", "b")],
+        ["cluster_id", "source_dataset", "unique_id"],
+    )
+    rows = linker.inference.score_missing_cluster_edges(
+        clusters, linker.inference.predict().limit(0)
+    ).collect()
+    assert _keys(rows) == [(("a", u), ("b", u)) for u in (1, 2, 3)]
+
+
+def test_labels_table_pairs_within_each_dataset_both_score(spark, reused_uids):
+    """Labels (a:1, a:2) and (b:1, b:2) share their uids but are two pairs:
+    both are scored, the match as a true positive and the non-match as a
+    true negative."""
+    linker = _reused_uid_linker(reused_uids)
+    labels = _labels(spark, [("a", 1, "a", 2, 1.0), ("b", 1, "b", 2, 0.0)])
+    ts = linker.evaluation.accuracy_analysis_from_labels_table(
+        labels, output_type="table"
+    ).orderBy("truth_threshold").collect()
+    # thresholds: the ann/bob weight, then the ann/ann weight
+    assert [(r["tp"], r["fp"], r["fn"], r["tn"]) for r in ts] == [(1, 1, 0, 0), (1, 0, 0, 1)]

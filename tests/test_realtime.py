@@ -243,3 +243,39 @@ def test_realtime_requests_reuse_the_tf_store_and_release_it(spark, rt_settings)
 
     linker.misc.invalidate_cache()
     assert _persisted(spark) - baseline == set()
+
+
+def test_compare_two_records_scores_one_pair_when_uids_are_equal(spark):
+    """Two records under the same unique id are still one pair: each record
+    is its own side, so neither is compared with itself, and the pair
+    scores as it does under distinct ids."""
+    comps = [
+        cl.ExactMatch("first_name"),
+        cl.ExactMatch("city", term_frequency_adjustments=True),
+    ]
+    for comp in comps:
+        for lv in comp.comparison_levels:
+            if not lv.is_null_level:
+                lv.m_probability, lv.u_probability = (
+                    (0.9, 0.1) if lv.comparison_vector_value == 1 else (0.1, 0.9)
+                )
+    settings = SettingsCreator(
+        link_type="dedupe_only",
+        comparisons=comps,
+        blocking_rules_to_generate_predictions=[block_on("city")],
+        probability_two_random_records_match=0.1,
+    )
+    records = spark.createDataFrame(
+        [(1, "ann", "x"), (2, "bob", "x"), (3, "cy", "y")],
+        ["unique_id", "first_name", "city"],
+    )
+    linker = Linker(records, settings)
+    ann = {"unique_id": 7, "first_name": "ann", "city": "x"}
+    bob = {"unique_id": 7, "first_name": "bob", "city": "x"}
+    rows = linker.inference.compare_two_records(ann, bob).collect()
+    assert len(rows) == 1
+    assert (rows[0]["first_name_l"], rows[0]["first_name_r"]) == ("ann", "bob")
+    distinct = linker.inference.compare_two_records(ann, bob | {"unique_id": 8})
+    assert rows[0]["match_weight"] == pytest.approx(
+        distinct.collect()[0]["match_weight"], abs=1e-12
+    )

@@ -114,3 +114,12 @@ def test_settings_round_trip_fixpoint_and_predict_equality(spark, persons, seed)
     assert via_facade["match_weight"] == pytest.approx(
         via_linker["match_weight"], abs=1e-9
     )
+
+    # the same two records under one unique id are still one pair
+    same_uid = linker.inference.compare_two_records(
+        r1, r2 | {"unique_id": r1["unique_id"]}
+    ).collect()
+    assert len(same_uid) == 1
+    assert same_uid[0]["match_weight"] == pytest.approx(
+        via_linker["match_weight"], abs=1e-9
+    )
