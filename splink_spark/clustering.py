@@ -1,8 +1,10 @@
 """Standalone clustering — mirrors ``splink.clustering`` (reference
 splink/clustering.py → internals/clustering.py:44-180
 ``cluster_pairwise_predictions_at_threshold``): cluster arbitrary node/edge
-tables without a Linker, thresholding on match_probability / match_weight
-when present (all edges are matches when neither threshold is given).
+tables without a Linker. It runs the linker's own threshold → solve →
+attach core (``connected_components.cluster_at_threshold``): at most one of
+the two thresholds, a match weight read as its probability, and every edge a
+match when neither is given.
 """
 
 from __future__ import annotations
@@ -10,12 +12,8 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .internals.connected_components import (
-    join_assignments_onto_nodes,
-    solve_connected_components,
-)
+from .internals.connected_components import cluster_at_threshold
 
 __all__ = ["cluster_pairwise_predictions_at_threshold"]
 
@@ -33,27 +31,13 @@ def cluster_pairwise_predictions_at_threshold(
     table with ``cluster_id`` = the minimum node id in each component.
 
     Column-name conventions follow the reference: the edge endpoint columns
-    default to ``{node_id_column_name}_l`` / ``_r``; with no threshold every
-    edge is a match."""
-    l_col = edge_id_column_name_left or f"{node_id_column_name}_l"
-    r_col = edge_id_column_name_right or f"{node_id_column_name}_r"
-    live = edges
-    if threshold_match_probability is not None:
-        live = live.where(
-            F.col("match_probability") >= threshold_match_probability
-        )
-    if threshold_match_weight is not None:
-        live = live.where(F.col("match_weight") >= threshold_match_weight)
-    assignments = solve_connected_components(
-        live.select(l_col, r_col),
-        nodes=None,
-        node_col=node_id_column_name,
-        edge_l_col=l_col,
-        edge_r_col=r_col,
-        assignments_only=True,
+    default to ``{node_id_column_name}_l`` / ``_r``."""
+    return cluster_at_threshold(
+        nodes,
+        edges,
+        node_id_column_name,
+        edge_id_column_name_left or f"{node_id_column_name}_l",
+        edge_id_column_name_right or f"{node_id_column_name}_r",
+        threshold_match_probability,
+        threshold_match_weight,
     )
-    # a pre-existing cluster_id (re-clustering a previous output at a new
-    # threshold) is replaced by the new assignment, not joined ambiguously
-    nodes = nodes.drop("cluster_id")
-    out = join_assignments_onto_nodes(nodes, assignments, node_id_column_name)
-    return out.select("cluster_id", *nodes.columns)

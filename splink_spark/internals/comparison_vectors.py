@@ -67,7 +67,7 @@ BROADCAST_NODES_MAX_ROWS = 200_000
 def id_pairs(
     df: DataFrame,
     settings: Settings,
-    match_key: str,
+    match_key: Union[str, Column],
     uid: tuple = ("unique_id_l", "unique_id_r"),
     source_dataset: Optional[tuple] = ("source_dataset_l", "source_dataset_r"),
     carry: Sequence[Union[str, Column]] = (),
@@ -80,7 +80,8 @@ def id_pairs(
     names. The source-dataset keys are carried whenever the job has source
     datasets. ``source_dataset=None`` leaves them out, which is sound only
     when each side's node table holds a single record (``compare_two_records``).
-    ``carry`` columns are kept as pair columns.
+    ``carry`` columns are kept as pair columns. ``match_key`` is a literal,
+    or a column of ``df``.
 
     ``lower_id_on_lhs`` orients each pair with the lower ``(source_dataset,
     uid)`` on the left and keeps one row per pair (the reference's

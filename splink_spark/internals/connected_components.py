@@ -13,6 +13,12 @@ iteration, spark/database_api.py:292-312). Exit condition = zero changed
 representatives, one driver round-trip per iteration exactly like the
 reference (:305-307). Iteration count ~ O(log(cluster diameter)) because
 representatives chain-contract via min-propagation over the rep graph.
+
+One path: ``LinkerClustering._graph`` builds every linker clustering graph,
+and ``cluster_at_threshold`` is the threshold → solve → attach core of the
+linker and ``splink_spark.clustering``. One output contract: both solvers
+produce sparse assignments (a node absent from them is its own cluster), and
+``join_assignments_onto_nodes`` alone serves them onto a node table.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .materialize import MaterializationPolicy
+from .misc import match_weight_to_prob, threshold_args_to_match_weight
 
 logger = logging.getLogger(__name__)
 
@@ -39,32 +46,42 @@ logger = logging.getLogger(__name__)
 #: (0 disables).
 DRIVER_SOLVE_MAX_EDGES = 5_000_000
 
+#: Round cap of the distributed loop. Pointer jumping converges in
+#: O(log diameter) rounds, so hitting the cap means the labels are not yet
+#: components: the solve raises rather than return them.
+MAX_ROUNDS = 50
+
+#: Row count at or below which a narrow (id, id) table is broadcast: the
+#: node join's assignments, and the frontier side of every per-round join in
+#: the distributed loop (4M narrow rows is ~64 MB — well inside executor
+#: memory; a round then costs one aggregation exchange instead of five
+#: sort-merge shuffles — measured ~16-20s -> ~5s per full-size round on the
+#: 1.2M-node chain bench). Above it the loop's frontier sides carry a
+#: SHUFFLE_HASH hint: every join there pairs a large neighbour/rep table with
+#: a strictly smaller frontier-derived side, so hash beats sort-merge and
+#: skips both sorts.
+BROADCAST_MAX_ROWS = 4_000_000
+
 
 def _solve_cc_driver(
     edges: DataFrame,
-    nodes: Optional[DataFrame],
     node_col: str,
     edge_l_col: str,
     edge_r_col: str,
-    assignments_only: bool = False,
-    pdf=None,
+    pdf,
 ) -> DataFrame:
-    """Driver-side union-find over a collected edge list.
+    """Driver-side union-find over the collected edge list ``pdf`` (the
+    cutover probe's rows), as sparse assignments without self-rooted rows.
 
     Min-label propagation with pointer doubling in rank space: node ids are
     factorized then ranked by their natural ordering, so the converged root
     (min rank in component) maps back to the min node id — identical
     semantics to the distributed loop and to the reference's SQL loop.
-
-    ``pdf``: the already-collected edge pandas frame, when the caller's
-    cutover probe fetched it (avoids a second collect of the same rows).
     """
     import numpy as np
     import pandas as pd
 
     spark = edges.sparkSession
-    if pdf is None:
-        pdf = edges.toPandas()
     # null endpoints would factorize to code -1 and silently index the last
     # element of the rank array, corrupting assignments; the distributed
     # join path drops such edges — match it
@@ -76,6 +93,7 @@ def _solve_cc_driver(
     schema = StructType(
         [StructField("node", id_type), StructField("cluster_id", id_type)]
     )
+    n_rows = None
     if len(pdf) == 0:
         assignments = spark.createDataFrame([], schema)
     else:
@@ -107,30 +125,14 @@ def _solve_cc_driver(
             {"node": sorted_ids, "cluster_id": sorted_ids[parent]}
         )
         # self-rooted rows (node == its component minimum) are redundant:
-        # every consumer coalesces a missing assignment to the node id, so
-        # dropping them here shrinks the broadcast/join side by the number
-        # of components for free
+        # the assignments contract leaves them to the node join's coalesce,
+        # which shrinks the broadcast/join side by the number of components
         out = out[out["node"] != out["cluster_id"]]
         assignments = spark.createDataFrame(out, schema)
-        assignments._splink_row_count = len(out)  # type: ignore[attr-defined]
-
-    if assignments_only:
-        out_df = assignments.select(
-            F.col("node").alias(node_col), F.col("cluster_id")
-        )
-        out_df._splink_row_count = getattr(  # type: ignore[attr-defined]
-            assignments, "_splink_row_count", None
-        )
-        return out_df
-    rep = (
-        nodes.select(F.col(node_col).alias("node"))
-        .join(assignments, on="node", how="left")
-        .select(
-            F.col("node").alias(node_col),
-            F.coalesce(F.col("cluster_id"), F.col("node")).alias("cluster_id"),
-        )
-    )
-    return rep
+        n_rows = len(out)
+    out_df = assignments.select(F.col("node").alias(node_col), F.col("cluster_id"))
+    out_df._splink_row_count = n_rows  # type: ignore[attr-defined]
+    return out_df
 
 
 def solve_connected_components(
@@ -140,47 +142,95 @@ def solve_connected_components(
     edge_l_col: str = "node_id_l",
     edge_r_col: str = "node_id_r",
     materialization: Optional[MaterializationPolicy] = None,
-    max_iterations: int = 50,
-    delta_broadcast_rows: int = 4_000_000,
     driver_solve_max_edges: Optional[int] = None,
     assignments_only: bool = False,
     edges_cheap_to_recompute: bool = False,
     contract_frac: Optional[float] = 0.05,
     contract_min_gap: int = 2,
 ) -> DataFrame:
-    """Return (node_id, cluster_id) with cluster_id = min node id in component.
+    """(node_col, cluster_id) with cluster_id = min node id in component.
 
-    ``assignments_only=True`` returns rows ONLY for nodes that appear in an
-    edge — and, on the driver-solve path, only those whose cluster_id
-    differs from the node id (isolated and self-rooted nodes are absent —
-    callers MUST coalesce ``cluster_id`` to the node id themselves). This
-    skips the full-node-table join and the ``nodes.distinct()`` shuffle
-    entirely — the caller's own output join does that work anyway, so doing
-    it here too would pay it twice.
+    Both solvers produce only the sparse assignments: rows for edge
+    endpoints, and on the driver path only those whose cluster_id differs
+    from the node id. A node absent from them is its own cluster. With
+    ``nodes`` (and not ``assignments_only``) the assignments are served onto
+    ``nodes[node_col]`` by ``join_assignments_onto_nodes``; otherwise they are
+    returned as they are, and the caller's own node join does that work.
+
+    Edge sets of at most ``driver_solve_max_edges`` (default
+    ``DRIVER_SOLVE_MAX_EDGES``; 0 disables) are solved on the driver, larger
+    ones by the distributed loop (``_solve_cc_distributed``), which reports
+    its round and contraction counts as ``_splink_cc_rounds`` /
+    ``_splink_cc_contractions`` on the output.
+    """
+    mat = materialization or MaterializationPolicy(method="local_checkpoint")
+
+    # materialize the (narrow) edge list BEFORE the symmetrize union — the
+    # fwd/rev branches would otherwise each re-execute the edge-producing
+    # plan (for thresholded predictions: the junction join + fuzzy UDFs).
+    # ``edges_cheap_to_recompute=True`` (edges already derive from a persisted
+    # frame, e.g. predict's narrow core) skips this: the count + collect the
+    # driver path runs are each a cheap cached-filter scan, and the extra
+    # checkpoint job would cost more than the two re-reads it saves.
+    edges = edges.select(
+        F.col(edge_l_col).alias(edge_l_col), F.col(edge_r_col).alias(edge_r_col)
+    )
+    if not edges_cheap_to_recompute:
+        edges = mat.materialize(edges, "clustering")
+    cutover = (
+        DRIVER_SOLVE_MAX_EDGES
+        if driver_solve_max_edges is None
+        else driver_solve_max_edges
+    )
+    # single bounded probe instead of count-then-collect: fetch at most
+    # cutover+1 rows — under the cutover this IS the full edge list (one
+    # action saved per solve); over it, the wasted work is bounded by the
+    # cutover and the distributed loop takes over
+    probe = edges.limit(cutover + 1).toPandas() if cutover else None
+    rounds = contractions = None
+    if probe is not None and len(probe) <= cutover:
+        assignments = _solve_cc_driver(edges, node_col, edge_l_col, edge_r_col, probe)
+    else:
+        assignments, rounds, contractions = _solve_cc_distributed(
+            edges, mat, node_col, edge_l_col, edge_r_col,
+            contract_frac, contract_min_gap,
+        )
+    out = assignments
+    if nodes is not None and not assignments_only:
+        out = join_assignments_onto_nodes(
+            nodes.select(node_col), assignments, node_col
+        ).select(node_col, "cluster_id")
+    out._splink_cc_rounds = rounds  # type: ignore[attr-defined]
+    out._splink_cc_contractions = contractions  # type: ignore[attr-defined]
+    return out
+
+
+def _solve_cc_distributed(
+    edges: DataFrame,
+    mat: MaterializationPolicy,
+    node_col: str,
+    edge_l_col: str,
+    edge_r_col: str,
+    contract_frac: Optional[float],
+    contract_min_gap: int,
+) -> "tuple[DataFrame, int, int]":
+    """The iterative join loop over a materialized edge list: the sparse
+    assignments of every edge endpoint, the rounds run and the contractions.
 
     Delta (frontier) iteration: after the first round only a shrinking
     frontier of nodes still changes representative (measured: round 2 touches
     ~2%% of nodes, round 3 <0.1%%), so each round joins the neighbour table
     against ONLY the rows that changed last round — broadcast-joined once the
-    frontier is small — instead of re-shuffling the full representative table
-    every round (the naive loop's cost is O(rounds x |V|+|E|); the delta
-    loop's is O(|V|+|E| + sum of frontier sizes)). This is the Pregel-style
-    formulation GraphX uses; correctness does not depend on the accelerator
-    steps: the fixpoint (empty frontier) implies rep(x)==rep(y) for every
-    edge, hence rep == component minimum.
+    frontier is small (``BROADCAST_MAX_ROWS``) — instead of re-shuffling
+    the full representative table every round (the naive loop's cost is
+    O(rounds x |V|+|E|); the delta loop's is O(|V|+|E| + sum of frontier
+    sizes)). This is the Pregel-style formulation GraphX uses; correctness
+    does not depend on the accelerator steps: the fixpoint (empty frontier)
+    implies rep(x)==rep(y) for every edge, hence rep == component minimum.
+    A frontier still non-empty after ``MAX_ROUNDS`` rounds raises.
 
     Pointer jumping (path halving) is applied to frontier rows each round, so
     chain-shaped clusters still converge in O(log diameter) rounds.
-
-    ``delta_broadcast_rows``: frontier size at or below which every
-    per-round join broadcasts the frontier side (4M narrow (id, rep) rows
-    is ~64 MB — well inside executor memory; the round then costs one
-    aggregation exchange instead of five sort-merge shuffles — measured
-    ~16-20s -> ~5s per full-size round on the 1.2M-node chain bench).
-    Above the cap the frontier sides carry a SHUFFLE_HASH hint: every join
-    here pairs a large neighbour/rep table with a strictly smaller
-    frontier-derived side, so hash beats sort-merge and skips both sorts
-    (guide: prefer shuffled-hash when the per-partition build side fits).
 
     ``contract_frac`` (default 0.05; 0/None disables): graph contraction
     once the frontier has collapsed. Every round scans the FULL cached neighbour table (the
@@ -214,58 +264,19 @@ def solve_connected_components(
     bench) contract only in their cheap tail, while cluster-shaped graphs
     (dedup components, hub skew) contract right after the mass settles.
     """
-    mat = materialization or MaterializationPolicy(method="local_checkpoint")
-
-    # materialize the (narrow) edge list BEFORE the symmetrize union — the
-    # fwd/rev branches would otherwise each re-execute the edge-producing
-    # plan (for thresholded predictions: the junction join + fuzzy UDFs).
-    # ``edges_cheap_to_recompute=True`` (edges already derive from a persisted
-    # frame, e.g. predict's narrow core) skips this: the count + collect the
-    # driver path runs are each a cheap cached-filter scan, and the extra
-    # checkpoint job would cost more than the two re-reads it saves.
-    edges = edges.select(
-        F.col(edge_l_col).alias(edge_l_col), F.col(edge_r_col).alias(edge_r_col)
-    )
-    if not edges_cheap_to_recompute:
-        edges = mat.materialize(edges, "clustering")
-    cutover = (
-        DRIVER_SOLVE_MAX_EDGES
-        if driver_solve_max_edges is None
-        else driver_solve_max_edges
-    )
-    if cutover:
-        # single bounded probe instead of count-then-collect: fetch at most
-        # cutover+1 rows — under the cutover this IS the full edge list (one
-        # action saved per solve); over it, the wasted work is bounded by
-        # the cutover and the distributed loop takes over
-        probe = edges.limit(cutover + 1).toPandas()
-        if len(probe) <= cutover:
-            return _solve_cc_driver(
-                edges, nodes, node_col, edge_l_col, edge_r_col,
-                assignments_only=assignments_only, pdf=probe,
-            )
     # symmetric neighbour list (reference :169-187 reverse-union)
     fwd = edges.select(F.col(edge_l_col).alias("node"), F.col(edge_r_col).alias("nbr"))
     rev = edges.select(F.col(edge_r_col).alias("node"), F.col(edge_l_col).alias("nbr"))
     neighbours = fwd.unionByName(rev)
     neighbours = mat.materialize(neighbours, "clustering")
 
-    # init: rep = min(self, direct neighbours) (reference :197-220)
+    # init: rep = min(self, direct neighbours) (reference :197-220); every
+    # edge endpoint appears in neighbours, so nbr_min covers the node
+    # universe of the assignments — no extra shuffle
     nbr_min = neighbours.groupBy("node").agg(F.min("nbr").alias("nbr_min"))
-    if assignments_only:
-        # every edge endpoint appears in neighbours, so nbr_min already
-        # covers the assignments-only node universe — no extra shuffle
-        rep = nbr_min.select(
-            "node", F.least(F.col("node"), F.col("nbr_min")).alias("rep")
-        )
-    else:
-        self_rep = nodes.select(
-            F.col(node_col).alias("node"), F.col(node_col).alias("rep")
-        )
-        rep = (
-            self_rep.join(nbr_min, on="node", how="left")
-            .select("node", F.least(F.col("rep"), F.col("nbr_min")).alias("rep"))
-        )
+    rep = nbr_min.select(
+        "node", F.least(F.col("node"), F.col("nbr_min")).alias("rep")
+    )
     rep = mat.materialize(rep, "clustering", iterative=True)
 
     def _universe_and_delta(rep_df: DataFrame) -> "tuple[int, int]":
@@ -273,10 +284,10 @@ def solve_connected_components(
         count — the node UNIVERSE every full-rep join side is bounded by —
         and the frontier size. The universe count is what gates the
         contraction/composition broadcasts: the initial frontier does NOT
-        bound the rep table (nodes-supplied solves carry isolated nodes;
-        assignments_only reps reach ~2x the frontier), so gating a full-rep
-        broadcast on the frontier size risks an oversized broadcast on a
-        huge settled universe with a small frontier."""
+        bound the rep table (it holds every edge endpoint, ~2x the
+        frontier), so gating a full-rep broadcast on the frontier size
+        risks an oversized broadcast on a huge settled universe with a
+        small frontier."""
         row = rep_df.agg(
             F.count(F.lit(1)).alias("__n"),
             F.count(
@@ -298,12 +309,12 @@ def solve_connected_components(
     base_maps: list = []
     n_contractions = 0
 
-    for it in range(max_iterations):
+    for it in range(MAX_ROUNDS):
         if n_delta == 0:
             break
         rounds_run = it + 1
         t_iter = time.time()
-        small = n_delta <= delta_broadcast_rows
+        small = n_delta <= BROADCAST_MAX_ROWS
 
         delta_as_nbr = delta.select(
             F.col("node").alias("nbr"), F.col("rep").alias("nbr_rep")
@@ -385,7 +396,7 @@ def solve_connected_components(
             # universe, counted once per solve and re-counted after each
             # contraction) fits the broadcast budget, else SHUFFLE_HASH
             # per the loop's join convention
-            small_u = n_universe <= delta_broadcast_rows
+            small_u = n_universe <= BROADCAST_MAX_ROWS
             r1 = rep.select(
                 F.col("node").alias("m_node"), F.col("rep").alias("m_rep")
             )
@@ -451,6 +462,13 @@ def solve_connected_components(
             since_rep_checkpoint = 0
         delta = improved
 
+    # every break leaves an empty frontier: this one is the round cap's
+    if n_delta:
+        raise RuntimeError(
+            f"connected components did not converge in {MAX_ROUNDS} rounds: "
+            f"{n_delta} nodes still changing"
+        )
+
     # compose the archived mappings back over the contracted result,
     # innermost first: out(u) = cluster'(rep_k(u)). The composed side's
     # universe is the labels of that contraction, bounded by the universe
@@ -470,11 +488,7 @@ def solve_connected_components(
             rep = mat.materialize(rep, "clustering", iterative=True)
 
     out = rep.select(F.col("node").alias(node_col), F.col("rep").alias("cluster_id"))
-    # observability for benches/tests: how many delta rounds the
-    # distributed loop ran (the loop is eager, so this is final)
-    out._splink_cc_rounds = rounds_run  # type: ignore[attr-defined]
-    out._splink_cc_contractions = n_contractions  # type: ignore[attr-defined]
-    return out
+    return out, rounds_run, n_contractions
 
 
 def node_id_columns(
@@ -502,18 +516,17 @@ def join_assignments_onto_nodes(
     nodes: DataFrame,
     assignments: DataFrame,
     node_col: str = "node_id",
-    broadcast_max_rows: int = 4_000_000,
 ) -> DataFrame:
-    """Left-join CC assignments onto a node table, coalescing a missing
-    assignment to the node id itself (the assignments contract omits
+    """The one left-join of CC assignments onto a node table: a missing
+    assignment coalesces to the node id itself (the sparse assignments omit
     isolated — and on the driver path self-rooted — nodes). A few million
     narrow (id, id) rows broadcast far cheaper than shuffling the full-width
     node table into a sort-merge join, so broadcast when the solver reported
-    an exact row count under the cap."""
+    an exact row count under ``BROADCAST_MAX_ROWS``."""
     n_assign = getattr(assignments, "_splink_row_count", None)
     join_side = (
         F.broadcast(assignments)
-        if n_assign is not None and n_assign <= broadcast_max_rows
+        if n_assign is not None and n_assign <= BROADCAST_MAX_ROWS
         else assignments
     )
     out = nodes.join(join_side, on=node_col, how="left")
@@ -522,62 +535,59 @@ def join_assignments_onto_nodes(
     )
 
 
-def cluster_pairwise_predictions_at_threshold(
-    linker,
-    df_predict: DataFrame,
-    threshold_match_probability: "float | None" = None,
+def threshold_edges(
+    edges: DataFrame,
+    threshold_match_probability: Optional[float] = None,
+    threshold_match_weight: Optional[float] = None,
 ) -> DataFrame:
-    """linker_components/clustering.py:43-179: threshold the edges, solve CC,
-    join cluster ids back onto the input columns.
-
-    Reference semantics (clustering.py:102-118): ``None`` keeps every edge —
-    the deterministic-link output has no ``match_probability`` column and
-    clusters as-is; providing a threshold against such a frame raises."""
-    s = linker.settings
-    uid = s.unique_id_column_name
-    concat = linker.df_concat()
-    # predict() attaches its persisted narrow core (ids + scores, no wide
-    # compare columns) — edge extraction reads it directly and skips the
-    # node re-join entirely
-    narrow = getattr(df_predict, "_splink_narrow", None)
-    edges_cached = narrow is not None
-    if edges_cached:
-        df_predict = narrow
-
-    sd = s.source_dataset_column_name
-    node_expr, edge_l, edge_r = node_id_columns(
-        uid, sd if s.needs_source_dataset and sd in concat.columns else None
-    )
-
-    has_match_prob = "match_probability" in df_predict.columns
-    if threshold_match_probability is not None and not has_match_prob:
+    """The edges at or above at most one threshold; a match weight converts
+    to a probability, p = 2^w / (1 + 2^w) (reference clustering.py:102-118).
+    No threshold keeps every edge: the deterministic-link output has no
+    ``match_probability`` column and clusters as-is."""
+    if threshold_args_to_match_weight(threshold_match_probability, threshold_match_weight) is None:
+        return edges
+    p = threshold_match_probability
+    if p is None:
+        p = match_weight_to_prob(float(threshold_match_weight))
+    if "match_probability" not in edges.columns:
         raise ValueError(
-            "df_predict must have a column called 'match_probability' if "
-            "threshold_match_probability is provided"
+            "df_predict must have a column called 'match_probability' if a "
+            "threshold is provided"
         )
-    if threshold_match_probability is not None:
-        df_predict = df_predict.where(
-            F.col("match_probability") >= threshold_match_probability
-        )
-    edges = df_predict.select(
-        edge_l.alias("node_id_l"), edge_r.alias("node_id_r")
-    )
+    return edges.where(F.col("match_probability") >= p)
 
-    # assignments_only: the solver returns rows only for edge-endpoint nodes
-    # and this caller coalesces cluster_id to the node id anyway — solving
-    # over the full node table would pay a concat.distinct() shuffle plus a
-    # second full-width join for nothing
+
+def cluster_at_threshold(
+    nodes: DataFrame,
+    edges: DataFrame,
+    node_col: str = "node_id",
+    edge_l_col: str = "node_id_l",
+    edge_r_col: str = "node_id_r",
+    threshold_match_probability: Optional[float] = None,
+    threshold_match_weight: Optional[float] = None,
+    materialization: Optional[MaterializationPolicy] = None,
+    edges_cheap_to_recompute: bool = False,
+) -> DataFrame:
+    """``(cluster_id, *nodes.columns)``: threshold the edges, solve CC, join
+    the assignments onto the node table (linker_components/clustering.py:
+    43-179). A pre-existing ``cluster_id`` (re-clustering a previous output
+    at a new threshold) is replaced by the new one, not joined ambiguously.
+
+    The solve returns the sparse assignments (``nodes=None``): this join
+    serves every node anyway, so solving over the node table would pay its
+    shuffle and a second full-width join for nothing."""
     assignments = solve_connected_components(
-        edges,
-        nodes=None,
-        materialization=linker.materialization,
-        assignments_only=True,
-        edges_cheap_to_recompute=edges_cached,
+        threshold_edges(edges, threshold_match_probability, threshold_match_weight),
+        None,
+        node_col=node_col,
+        edge_l_col=edge_l_col,
+        edge_r_col=edge_r_col,
+        materialization=materialization,
+        edges_cheap_to_recompute=edges_cheap_to_recompute,
     )
-    out = join_assignments_onto_nodes(
-        concat.withColumn("node_id", node_expr), assignments, "node_id"
-    )
-    return out.drop("node_id").select("cluster_id", *concat.columns)
+    nodes = nodes.drop("cluster_id")
+    out = join_assignments_onto_nodes(nodes, assignments, node_col)
+    return out.select("cluster_id", *nodes.columns)
 
 
 def _find_bridges(edge_list: list) -> set:
@@ -644,19 +654,13 @@ def compute_edge_metrics(
     import pandas as pd
 
     l_col, r_col = f"{node_col}_l", f"{node_col}_r"
-    # LEFT join + coalesce: assignments from an assignments_only solve omit
-    # self-rooted nodes, and an inner join would silently drop their edges
-    with_cluster = (
-        edges.join(
-            assignments.select(
-                F.col(node_col).alias(l_col), F.col("cluster_id")
-            ),
-            on=l_col,
-            how="left",
-        )
-        .withColumn("cluster_id", F.coalesce(F.col("cluster_id"), F.col(l_col)))
-        .select("cluster_id", l_col, r_col)
-    )
+    # the left endpoint's cluster; sparse assignments omit self-rooted
+    # nodes, whose edges the node join's coalesce keeps
+    with_cluster = join_assignments_onto_nodes(
+        edges,
+        assignments.select(F.col(node_col).alias(l_col), F.col("cluster_id")),
+        l_col,
+    ).select("cluster_id", l_col, r_col)
 
     def bridges_per_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         edge_list = list(zip(pdf[l_col], pdf[r_col]))
@@ -681,10 +685,9 @@ def compute_graph_metrics(
     """Cluster size, density, degree centralisation
     (reference graph_metrics.py:257-330). Bridges: ``compute_edge_metrics``.
 
-    ``assignments`` must be the FULL per-node cluster table (the
-    cluster_pairwise_predictions_at_threshold output shape) — an
-    assignments_only solver result omits isolated/self-rooted nodes and
-    would undercount ``n_nodes``."""
+    ``assignments`` must be the FULL per-node cluster table (a clustering
+    output, or a solve given ``nodes``) — sparse assignments omit
+    isolated/self-rooted nodes and would undercount ``n_nodes``."""
     fwd = edges.select(F.col(f"{node_col}_l").alias("node"))
     rev = edges.select(F.col(f"{node_col}_r").alias("node"))
     degrees = fwd.unionByName(rev).groupBy("node").agg(F.count("*").alias("degree"))

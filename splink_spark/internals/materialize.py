@@ -47,6 +47,7 @@ class MaterializationPolicy:
     _registry: list[DataFrame] = field(default_factory=list)
     _iterative_counts: dict = field(default_factory=dict)
     _bucketed_tables: list = field(default_factory=list)
+    _parquet_paths: list = field(default_factory=list)
 
     def repartition_count(self, df: DataFrame) -> int:
         """Partitions to spread blocked pairs over before the fuzzy-metric
@@ -145,7 +146,8 @@ class MaterializationPolicy:
         co-location does.
 
         The table is session-scoped (in-memory catalog) with its files under
-        ``parquet_dir``; ``unpersist_all()`` drops it.
+        ``parquet_dir``; ``unpersist_all()`` drops it and deletes them (an
+        external table's files outlive ``DROP TABLE``).
         """
         spark = df.sparkSession
         if num_buckets is None:
@@ -156,25 +158,28 @@ class MaterializationPolicy:
             tempfile.gettempdir(), "splink_spark_materialize"
         )
         name = f"splink_bucketed_{stage}_{uuid.uuid4().hex}"
+        path = os.path.join(base, name)
         writer = (
             df.write.mode("overwrite")
-            .option("path", os.path.join(base, name))
+            .option("path", path)
             .bucketBy(num_buckets, *bucket_cols)
         )
         if sort:
             writer = writer.sortBy(*bucket_cols)
         writer.saveAsTable(name)
         self._bucketed_tables.append((spark, name))
+        self._parquet_paths.append((spark, path))
         return spark.table(name)
 
     def _parquet_roundtrip(self, df: DataFrame, stage: str) -> DataFrame:
-        """True lineage break with REAL statistics (files are kept for the
-        session lifetime — downstream plans read them lazily)."""
+        """True lineage break with REAL statistics. Downstream plans read the
+        files lazily, so they stay until ``unpersist_all()`` deletes them."""
         base = self.parquet_dir or os.path.join(
             tempfile.gettempdir(), "splink_spark_materialize"
         )
         path = os.path.join(base, f"{stage}_{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(path)
+        self._parquet_paths.append((df.sparkSession, path))
         return df.sparkSession.read.parquet(path)
 
     def unpersist_all(self) -> None:
@@ -193,3 +198,10 @@ class MaterializationPolicy:
                 logger.warning("could not drop table %s: %s", name, e,
                                exc_info=True)
         self._bucketed_tables.clear()
+        for spark, path in self._parquet_paths:
+            try:
+                jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+                jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jpath, True)
+            except Exception as e:
+                logger.warning("could not delete %s: %s", path, e, exc_info=True)
+        self._parquet_paths.clear()

@@ -30,7 +30,10 @@ def threshold_args_to_match_weight(
     threshold_match_weight: Optional[float],
 ) -> Optional[float]:
     if threshold_match_probability is not None and threshold_match_weight is not None:
-        raise ValueError("specify at most one of probability/weight thresholds")
+        raise ValueError(
+            "Cannot provide both threshold_match_probability and "
+            "threshold_match_weight. Please specify only one."
+        )
     if threshold_match_probability is not None:
         return prob_to_match_weight(threshold_match_probability)
     return threshold_match_weight

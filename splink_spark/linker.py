@@ -27,10 +27,13 @@ from .internals.comparison_vectors import (
     compute_comparison_vectors,
     id_pairs,
 )
-from .internals.connected_components import node_id_columns
+from .internals.connected_components import (
+    cluster_at_threshold,
+    node_id_columns,
+    threshold_edges,
+)
 from .internals.functions import register_udfs
 from .internals.materialize import MaterializationPolicy
-from .internals.misc import match_weight_to_prob
 from .internals.predict import (
     predict_from_comparison_vectors,
     score_bound,
@@ -554,10 +557,9 @@ class LinkerInference:
 
     def score_pairs(self, id_pairs: DataFrame) -> DataFrame:
         """Score caller-supplied id pairs (inference.py:746-1021). ``id_pairs``
-        needs columns join_key_l / join_key_r (unique ids)."""
-        if "match_key" not in id_pairs.columns:
-            id_pairs = id_pairs.withColumn("match_key", F.lit("user"))
-        return self._scored(pairs=id_pairs)
+        needs columns join_key_l / join_key_r (unique ids), and
+        source_dataset_l / _r in a link job."""
+        return self._scored(pairs=_caller_pairs(id_pairs, self._l.settings, "user"))
 
     def predict_between(
         self,
@@ -796,6 +798,34 @@ class LinkerClustering:
     def __init__(self, linker: Linker):
         self._l = linker
 
+    def _graph(
+        self,
+        df_predict: DataFrame,
+        threshold_match_probability: Optional[float] = None,
+        edge_columns: Sequence = (),
+        nodes: Optional[DataFrame] = None,
+    ) -> tuple[DataFrame, DataFrame, bool]:
+        """``(nodes, edges, edges_cached)``: the one place a clustering
+        method reads pairs and keys nodes. ``nodes`` (default: the input)
+        gains ``node_id``; ``edges`` are ``node_id_l, node_id_r``
+        [, ``match_probability``], ``*edge_columns``, read from predict's
+        persisted narrow core when attached (``edges_cached``). Node ids are
+        ``(source_dataset, uid)`` composites exactly when the job has source
+        datasets (uids are unique only per dataset)."""
+        s = self._l.settings
+        narrow = getattr(df_predict, "_splink_narrow", None)
+        pairs = threshold_edges(
+            df_predict if narrow is None else narrow, threshold_match_probability
+        )
+        sd = s.source_dataset_column_name if s.needs_source_dataset else None
+        node, edge_l, edge_r = node_id_columns(s.unique_id_column_name, sd)
+        scores = ["match_probability"] if "match_probability" in pairs.columns else []
+        edges = pairs.select(
+            edge_l.alias("node_id_l"), edge_r.alias("node_id_r"), *scores, *edge_columns
+        )
+        nodes = self._l.df_concat() if nodes is None else nodes
+        return nodes.withColumn("node_id", node), edges, narrow is not None
+
     def cluster_pairwise_predictions_at_threshold(
         self,
         df_predict: DataFrame,
@@ -805,45 +835,25 @@ class LinkerClustering:
         """Reference clustering.py:43-179: threshold defaults to None (keep
         every edge — the deterministic-link output has no score column);
         a match-weight threshold converts via p = 2^w / (1 + 2^w)."""
-        from .internals.connected_components import cluster_pairwise_predictions_at_threshold
-
-        if (
-            threshold_match_probability is not None
-            and threshold_match_weight is not None
-        ):
-            raise ValueError(
-                "Cannot provide both threshold_match_probability and "
-                "threshold_match_weight. Please specify only one."
-            )
-        if threshold_match_weight is not None:
-            threshold_match_probability = match_weight_to_prob(float(threshold_match_weight))
-        return cluster_pairwise_predictions_at_threshold(
-            self._l, df_predict, threshold_match_probability
-        )
+        nodes, edges, edges_cached = self._graph(df_predict)
+        return cluster_at_threshold(
+            nodes,
+            edges,
+            threshold_match_probability=threshold_match_probability,
+            threshold_match_weight=threshold_match_weight,
+            materialization=self._l.materialization,
+            edges_cheap_to_recompute=edges_cached,
+        ).drop("node_id")
 
     def cluster_pairwise_predictions_at_multiple_thresholds(
         self, df_predict: DataFrame, thresholds: Sequence[float]
     ) -> DataFrame:
         from .internals.one_to_one import cluster_at_multiple_thresholds
 
-        s = self._l.settings
-        uid = s.unique_id_column_name
-        df_predict = getattr(df_predict, "_splink_narrow", df_predict)
-        concat = self._l.df_concat()
-        # composite node ids for link jobs: uids are only unique PER DATASET
-        # (same reason cluster_pairwise_predictions_at_threshold builds them)
-        sd = s.source_dataset_column_name if s.needs_source_dataset else None
-        node_expr, edge_l, edge_r = node_id_columns(
-            uid, sd if sd and sd in concat.columns else None
-        )
-        edges = df_predict.select(
-            edge_l.alias("node_id_l"),
-            edge_r.alias("node_id_r"),
-            "match_probability",
-        )
-        nodes = concat.select(node_expr.alias("node_id"))
+        nodes, edges, _ = self._graph(df_predict)
         return cluster_at_multiple_thresholds(
-            edges, nodes, list(thresholds), materialization=self._l.materialization
+            edges, nodes.select("node_id"), list(thresholds),
+            materialization=self._l.materialization,
         )
 
     def cluster_using_single_best_links(
@@ -856,29 +866,16 @@ class LinkerClustering:
         from .internals.one_to_one import cluster_using_single_best_links
 
         s = self._l.settings
-        uid = s.unique_id_column_name
-        sd = s.source_dataset_column_name
-        if not sd:
+        if not s.needs_source_dataset:
             raise ValueError("single-best-links clustering needs source datasets")
-        df_predict = getattr(df_predict, "_splink_narrow", df_predict)
-        # composite node ids: uids are only unique PER DATASET (same reason
-        # cluster_pairwise_predictions_at_threshold builds them) — bare uids
-        # would conflate colliding records across datasets into one graph
-        # node and corrupt the per-cluster dataset flags
-        node_expr, edge_l, edge_r = node_id_columns(uid, sd)
-        edges = df_predict.select(
-            edge_l.alias("node_id_l"),
-            edge_r.alias("node_id_r"),
+        sd = s.source_dataset_column_name
+        nodes, edges, _ = self._graph(df_predict, edge_columns=[
             F.col(f"{sd}_l").alias("source_dataset_l"),
             F.col(f"{sd}_r").alias("source_dataset_r"),
-            "match_probability",
-        )
-        nodes = self._l.df_concat().select(
-            node_expr.alias("node_id"), F.col(sd).alias("source_dataset")
-        )
+        ])
         return cluster_using_single_best_links(
             edges,
-            nodes,
+            nodes.select("node_id", F.col(sd).alias("source_dataset")),
             threshold_match_probability=threshold_match_probability,
             ties=ties,
             duplicate_free_datasets=duplicate_free_datasets,
@@ -891,10 +888,10 @@ class LinkerClustering:
     ) -> DataFrame:
         from .internals.connected_components import compute_graph_metrics
 
-        edges, assignments = self._edges_and_assignments(
-            df_predict, df_clustered, threshold_match_probability
+        nodes, edges, _ = self._graph(
+            df_predict, threshold_match_probability, nodes=df_clustered
         )
-        return compute_graph_metrics(edges, assignments)
+        return compute_graph_metrics(edges, nodes.select("node_id", "cluster_id"))
 
     def compute_edge_metrics(
         self, df_predict: DataFrame, df_clustered: DataFrame,
@@ -904,29 +901,10 @@ class LinkerClustering:
         75-160, igraph-on-driver → here per-cluster Tarjan in applyInPandas)."""
         from .internals.connected_components import compute_edge_metrics
 
-        edges, assignments = self._edges_and_assignments(
-            df_predict, df_clustered, threshold_match_probability
+        nodes, edges, _ = self._graph(
+            df_predict, threshold_match_probability, nodes=df_clustered
         )
-        return compute_edge_metrics(edges, assignments)
-
-    def _edges_and_assignments(
-        self, df_predict: DataFrame, df_clustered: DataFrame,
-        threshold_match_probability: float,
-    ) -> tuple[DataFrame, DataFrame]:
-        s = self._l.settings
-        uid = s.unique_id_column_name
-        sd = s.source_dataset_column_name if s.needs_source_dataset else None
-        df_predict = getattr(df_predict, "_splink_narrow", df_predict)
-        # composite node ids for link jobs — clustering keyed nodes on
-        # (dataset, uid), so graph/edge metrics must too, or colliding uids
-        # conflate records and duplicate edge-join matches
-        composite = sd and f"{sd}_l" in df_predict.columns and sd in df_clustered.columns
-        node, edge_l, edge_r = node_id_columns(uid, sd if composite else None)
-        edges = df_predict.where(
-            F.col("match_probability") >= threshold_match_probability
-        ).select(edge_l.alias("node_id_l"), edge_r.alias("node_id_r"))
-        assignments = df_clustered.select(node.alias("node_id"), "cluster_id")
-        return edges, assignments
+        return compute_edge_metrics(edges, nodes.select("node_id", "cluster_id"))
 
 
 class LinkerEvaluation:
@@ -1209,15 +1187,14 @@ class LinkerTableManagement:
         """Use a precomputed candidate-pair table for predict() instead of
         running the blocking join (reference table_management.py:95-140).
         Expected columns: join_key_l / join_key_r (unique ids), optional
-        match_key and source_dataset_l/_r."""
+        match_key, and source_dataset_l/_r in a link job."""
         missing = {"join_key_l", "join_key_r"} - set(df.columns)
         if missing:
             raise ValueError(
                 f"register_blocked_pairs_for_predict: missing {sorted(missing)} "
                 f"(got {df.columns})"
             )
-        if "match_key" not in df.columns:
-            df = df.withColumn("match_key", F.lit("registered"))
+        df = _caller_pairs(df, self._l.settings, "registered")
         cached = self._l.materialization.persist(df, "blocked_pairs")
         self._l._registered_blocked_pairs = cached
         return cached
@@ -1581,6 +1558,21 @@ class LinkerBlockingAnalysis:
             unique_id_column_name=s.unique_id_column_name,
             n_largest=n,
         )
+
+
+def _caller_pairs(df: DataFrame, settings: Settings, match_key: str) -> DataFrame:
+    """A caller's ``join_key_l/_r [, source_dataset_l/_r, match_key]`` table
+    through ``id_pairs``, whose key check stops a link job's keyless pairs
+    fanning out to their namesakes. Its own ``match_key`` wins; any other
+    column is carried."""
+    keys = {"match_key", "join_key_l", "join_key_r", "source_dataset_l", "source_dataset_r"}
+    return id_pairs(
+        df,
+        settings,
+        F.col("match_key") if "match_key" in df.columns else match_key,
+        uid=("join_key_l", "join_key_r"),
+        carry=[c for c in df.columns if c not in keys],
+    )
 
 
 def _coerce_record_to_schema(rec: dict, schema) -> dict:

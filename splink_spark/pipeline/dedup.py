@@ -503,20 +503,16 @@ def deduplicate_corpus(
             docs, text_col=text_col, id_col=id_col, n=n,
             threshold=threshold, block_cols=list(block_cols),
         )
-    assignments = solve_connected_components(
+    clusters = solve_connected_components(
         pairs,
-        nodes=None,
+        nodes=docs.select(id_col),
         node_col=id_col,
         edge_l_col=f"{id_col}_l",
         edge_r_col=f"{id_col}_r",
-        assignments_only=True,
     )
     q = quality_score(docs, text_col=text_col, id_col=id_col)
     out = (
-        docs.select(id_col)
-        .join(assignments, on=id_col, how="left")
-        .withColumn("cluster_id", F.coalesce(F.col("cluster_id"), F.col(id_col)))
-        .join(q, on=id_col)
+        clusters.join(q, on=id_col)
         .withColumn("__q", F.round(F.col("quality_score"), 6))
     )
     w = Window.partitionBy("cluster_id").orderBy(
@@ -580,7 +576,10 @@ def semantic_dedup(
     Output: one row per input vector —
     (``id_col``, cluster, group_id, exemplar_id, is_kept, centroid_sim).
     """
-    from ..internals.connected_components import solve_connected_components
+    from ..internals.connected_components import (
+        join_assignments_onto_nodes,
+        solve_connected_components,
+    )
     from .ann import _kmeans_int_index
 
     if k is None:
@@ -698,13 +697,10 @@ def semantic_dedup(
         node_col=id_col,
         edge_l_col=f"{id_col}_l",
         edge_r_col=f"{id_col}_r",
-        assignments_only=True,
     )
-    base = (
-        assigned.select(id_col, "cluster", "__dot")
-        .join(assignments, on=id_col, how="left")
-        .withColumn("group_id", F.coalesce(F.col("cluster_id"), F.col(id_col)))
-    )
+    base = join_assignments_onto_nodes(
+        assigned.select(id_col, "cluster", "__dot"), assignments, id_col
+    ).withColumnRenamed("cluster_id", "group_id")
     # exemplar = lowest centroid similarity in the group (integer order —
     # identical in any engine), lower id on ties
     w = Window.partitionBy("group_id").orderBy(F.asc("__dot"), F.asc(id_col))

@@ -9,6 +9,7 @@ import networkx as nx
 import pytest
 from pyspark.sql import functions as F
 
+import splink_spark.internals.connected_components as cc
 from splink_spark.internals.connected_components import (
     compute_graph_metrics,
     solve_connected_components,
@@ -350,3 +351,49 @@ def test_cc_contraction_string_ids_and_assignments_only(spark):
     )
     assert contracted_a.exceptAll(plain_a).count() == 0
     assert plain_a.exceptAll(contracted_a).count() == 0
+
+
+def _chain_edges(spark, n):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], ["node_id_l", "node_id_r"]
+    )
+
+
+def test_cc_round_cap_raises(spark, monkeypatch):
+    """A distributed loop that runs out of rounds with a non-empty frontier
+    has labels that are not components: it raises instead of returning
+    them."""
+    monkeypatch.setattr(cc, "MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        solve_connected_components(
+            _chain_edges(spark, 32), None, driver_solve_max_edges=0
+        )
+
+
+def test_invalidate_cache_deletes_parquet_roundtrips(spark, tmp_path, monkeypatch):
+    """The distributed loop round-trips every 4th iterative materialization
+    through parquet under the policy's ``parquet_dir``; ``invalidate_cache``
+    deletes those directories."""
+    import splink_spark.internals.comparison_library as cl
+    from splink_spark import Linker, SettingsCreator, block_on
+
+    monkeypatch.setattr(cc, "DRIVER_SOLVE_MAX_EDGES", 0)
+    n = 64
+    linker = Linker(
+        spark.createDataFrame([(i, f"n{i}") for i in range(n)], ["unique_id", "name"]),
+        SettingsCreator(
+            comparisons=[cl.ExactMatch("name")],
+            blocking_rules_to_generate_predictions=[block_on("name")],
+        ),
+        materialization=MaterializationPolicy(parquet_dir=str(tmp_path)),
+    )
+    chain = _chain_edges(spark, n).select(
+        F.col("node_id_l").alias("unique_id_l"),
+        F.col("node_id_r").alias("unique_id_r"),
+        F.lit(0.9).alias("match_probability"),
+    )
+    clustered = linker.clustering.cluster_pairwise_predictions_at_threshold(chain, 0.5)
+    assert {r["cluster_id"] for r in clustered.collect()} == {0}
+    assert any(tmp_path.iterdir())
+    linker.misc.invalidate_cache()
+    assert not any(tmp_path.iterdir())

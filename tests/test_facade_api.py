@@ -81,6 +81,22 @@ def test_clustering_facade(spark, small):
     assert re == [(1, 1), (2, 1), (3, 3), (4, 4)]
 
 
+def test_clustering_facade_rejects_both_thresholds(spark, small):
+    """Standalone clustering takes at most one threshold, as the linker's
+    does."""
+    from splink_spark.clustering import cluster_pairwise_predictions_at_threshold
+
+    edges = spark.createDataFrame(
+        [(1, 2, 0.95, 4.2)],
+        "unique_id_l long, unique_id_r long, match_probability double, "
+        "match_weight double",
+    )
+    with pytest.raises(ValueError, match="Cannot provide both"):
+        cluster_pairwise_predictions_at_threshold(
+            small, edges, threshold_match_probability=0.5, threshold_match_weight=1.0
+        )
+
+
 def test_exploratory_facade(spark, small):
     import splink_spark.exploratory as ex
 

@@ -368,6 +368,13 @@ def _compare_two_records(spark, linker, monkeypatch):
     ).collect())
 
 
+def _score_pairs(spark, linker, monkeypatch):
+    pairs = spark.createDataFrame(
+        [("a", 1, "b", 2)], ["source_dataset_l", "join_key_l", "source_dataset_r", "join_key_r"]
+    )
+    return _keys(linker.inference.score_pairs(pairs).collect())
+
+
 _AGREE = round(math.log2(9), 2)  # prior 0.5, name agrees: m/u = 0.9/0.1
 
 
@@ -388,6 +395,7 @@ _PRODUCERS = [
         [(("a", u), ("b", 1)) for u in (1, 2, 3)] + [(("b", u), ("b", 1)) for u in (1, 2, 3)],
     ),
     (_compare_two_records, [(("a", 1), ("b", 1))]),
+    (_score_pairs, [(("a", 1), ("b", 2))]),
 ]
 
 
@@ -430,3 +438,94 @@ def test_labels_table_pairs_within_each_dataset_both_score(spark, reused_uids):
     ).orderBy("truth_threshold").collect()
     # thresholds: the ann/bob weight, then the ann/ann weight
     assert [(r["tp"], r["fp"], r["fn"], r["tn"]) for r in ts] == [(1, 1, 0, 0), (1, 0, 0, 1)]
+
+
+@pytest.mark.parametrize(
+    "method", ["score_pairs", "register_blocked_pairs_for_predict"]
+)
+def test_link_job_pair_tables_need_source_datasets(spark, reused_uids, method):
+    """A link job's caller-built pair table must name its source datasets:
+    keyed on bare uids, the one pair (1, 2) would score as its four
+    namesake pairs."""
+    linker = _reused_uid_linker(reused_uids)
+    call = getattr(linker.inference, method, None) or getattr(
+        linker.table_management, method
+    )
+    pairs = spark.createDataFrame([(1, 2)], ["join_key_l", "join_key_r"])
+    with pytest.raises(ValueError, match="source_dataset_l"):
+        call(pairs).collect()
+
+
+# -- the five clustering methods on reused uids, driver vs distributed CC ----
+
+
+def _at_threshold(linker, pred):
+    out = linker.clustering.cluster_pairwise_predictions_at_threshold(pred, 0.05)
+    return sorted((r["source_dataset"], r["unique_id"], r["cluster_id"]) for r in out.collect())
+
+
+def _at_multiple_thresholds(linker, pred):
+    out = linker.clustering.cluster_pairwise_predictions_at_multiple_thresholds(
+        pred, [0.05, 0.5]
+    )
+    return sorted((r["threshold"], r["node_id"], r["cluster_id"]) for r in out.collect())
+
+
+def _single_best_links(linker, pred):
+    out = linker.clustering.cluster_using_single_best_links(pred, 0.05)
+    return sorted((r["source_dataset"], r["node_id"], r["cluster_id"]) for r in out.collect())
+
+
+def _graph_metrics(linker, pred):
+    clustered = linker.clustering.cluster_pairwise_predictions_at_threshold(pred, 0.05)
+    out = linker.clustering.compute_graph_metrics(pred, clustered, 0.05)
+    return sorted(
+        (r["cluster_id"], r["n_nodes"], r["n_edges"], r["density"]) for r in out.collect()
+    )
+
+
+def _edge_metrics(linker, pred):
+    clustered = linker.clustering.cluster_pairwise_predictions_at_threshold(pred, 0.05)
+    out = linker.clustering.compute_edge_metrics(pred, clustered, 0.05)
+    return sorted(
+        (r["cluster_id"], r["node_id_l"], r["node_id_r"], r["is_bridge"]) for r in out.collect()
+    )
+
+
+# edges at 0.05: a:1-b:1 (ann/ann, p 0.9) and a:2-b:2 (ann/bob, p 0.1); at
+# 0.5 only the first. Bare uids would fold a:1 and b:1 into one node.
+_A1, _A2, _A3, _B1, _B2, _B3 = (f"{sd}-__-{u}" for sd in "ab" for u in (1, 2, 3))
+_CLUSTERING_METHODS = [
+    (_at_threshold, [("a", 1, _A1), ("a", 2, _A2), ("a", 3, _A3),
+                     ("b", 1, _A1), ("b", 2, _A2), ("b", 3, _B3)]),
+    (_at_multiple_thresholds, sorted(
+        [(0.05, n, c) for n, c in [(_A1, _A1), (_A2, _A2), (_A3, _A3),
+                                  (_B1, _A1), (_B2, _A2), (_B3, _B3)]]
+        + [(0.5, n, c) for n, c in [(_A1, _A1), (_A2, _A2), (_A3, _A3),
+                                   (_B1, _A1), (_B2, _B2), (_B3, _B3)]]
+    )),
+    (_single_best_links, [("a", _A1, _A1), ("a", _A2, _A2), ("a", _A3, _A3),
+                          ("b", _B1, _A1), ("b", _B2, _A2), ("b", _B3, _B3)]),
+    (_graph_metrics, [(_A1, 2, 1.0, 1.0), (_A2, 2, 1.0, 1.0),
+                      (_A3, 1, 0.0, None), (_B3, 1, 0.0, None)]),
+    (_edge_metrics, [(_A1, _A1, _B1, True), (_A2, _A2, _B2, True)]),
+]
+
+
+@pytest.mark.parametrize(
+    "method, expected", _CLUSTERING_METHODS,
+    ids=[m.__name__[1:] for m, _ in _CLUSTERING_METHODS],
+)
+def test_clustering_methods_key_nodes_by_source_dataset_and_uid(
+    spark, reused_uids, monkeypatch, method, expected
+):
+    """Every LinkerClustering method keys graph nodes by (source_dataset,
+    uid), and gives the same answer with CC solved on the driver (default
+    cutover) and by the distributed loop (cutover 0)."""
+    import splink_spark.internals.connected_components as cc
+
+    linker = _reused_uid_linker(reused_uids)
+    pred = linker.inference.predict()
+    assert method(linker, pred) == expected
+    monkeypatch.setattr(cc, "DRIVER_SOLVE_MAX_EDGES", 0)
+    assert method(linker, pred) == expected

@@ -227,9 +227,10 @@ def test_bucketed_materialization_joins_without_exchange(spark, persons, tmp_pat
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
-    # cleanup drops the session-scoped tables
+    # cleanup drops the session-scoped tables and deletes their files
     policy.unpersist_all()
     assert not policy._bucketed_tables
+    assert not [p for p in tmp_path.iterdir() if p.name.startswith("splink_bucketed_")]
 
 
 def test_no_unbounded_cartesian_nodes_in_gate_queries(spark):
