@@ -2,8 +2,9 @@
 
 Reference semantics: splink/internals/blocking.py —
 - per-rule join ``l JOIN r ON <rule> WHERE uid_l < uid_r [AND src_l != src_r]``
-  emitting only ``(match_key, join_key_l, join_key_r)`` (:193-226) to keep the
-  shuffle narrow (an algorithmic width optimisation we keep deliberately);
+  emitting only ``(match_key, join_key_l, join_key_r)`` (:193-226); the
+  scorers' blocking instead carries the compared columns through the join
+  (``output_columns``, comparison_vectors.build_pairs_with_columns);
 - multi-rule dedup: rule k adds ``AND NOT (coalesce(rule_1,false) OR ...)``
   (:158-191, 747-830), results unioned with match_key = rule index;
 - exploding rules unnest array columns on both sides first, dedup the distinct
@@ -369,6 +370,7 @@ def block_using_rules(
     source_dataset_column_name: Optional[str] = None,
     nodes_right: Optional[DataFrame] = None,
     output_columns: Optional[Sequence[str]] = None,
+    broadcast_right: bool = False,
 ) -> DataFrame:
     """Candidate pairs ``(match_key, join_key_l, join_key_r)``.
 
@@ -377,11 +379,13 @@ def block_using_rules(
     the union and filtering src_l != src_r.
 
     ``output_columns`` switches to carry-through output: instead of the
-    ids-only pair table (junction re-join shape), the named base columns are
-    emitted suffixed ``_l``/``_r`` directly from the join — one join, no
-    junction, no node broadcast. The right plan when the node table is too
-    large to broadcast cheaply but the retained column set is narrow. Not
-    valid with exploding rules (their pair-level dedup must run on ids).
+    ids-only pair table, the named base columns are emitted suffixed
+    ``_l`` (all of them) then ``_r`` directly from the join, the column
+    order of the junction re-join. Not valid with exploding rules (their
+    pair-level dedup must run on ids).
+
+    ``broadcast_right`` hints a broadcast of each rule's right side, so the
+    join keeps the left side's partitioning instead of shuffling both.
     """
     uid = unique_id_column_name
     left_raw = nodes
@@ -394,7 +398,7 @@ def block_using_rules(
                 "exploding rules (pair dedup must run on ids)"
             )
         out_cols = [F.col("match_key")] + [
-            F.col(f"{c}_{side}") for c in output_columns for side in ("l", "r")
+            F.col(f"{c}_{side}") for side in ("l", "r") for c in output_columns
         ]
     else:
         out_cols = [
@@ -445,6 +449,8 @@ def block_using_rules(
         else:
             where = _pair_filter(link_type, uid, source_dataset_column_name)
 
+        if broadcast_right:
+            rhs = F.broadcast(rhs)
         joined = lhs.join(rhs, on=cond & where, how="inner")
         pairs = joined.select(F.lit(str(k)).alias("match_key"), *[c for c in out_cols[1:]])
         if rule.exploded_columns:

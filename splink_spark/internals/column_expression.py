@@ -144,6 +144,10 @@ class ColumnExpression:
     def is_pure_column_reference(self) -> bool:
         return not self.transforms
 
+    @property
+    def base_columns(self) -> list[str]:
+        return [self.name]
+
     def __repr__(self) -> str:  # pragma: no cover
         return f"ColumnExpression({self.name!r}, {len(self.transforms)} transforms)"
 
@@ -159,15 +163,10 @@ _SQL_KEYWORDS = {
 }
 
 
-def suffix_sql_identifiers(sql: str, suffix: str) -> str:
-    """Append ``suffix`` to every bare column identifier in a SQL snippet,
-    leaving function names (identifier followed by '('), SQL keywords,
-    numeric literals, and single-quoted string literals untouched —
-    ``substr(surname, 1, 2)`` + ``_l`` → ``substr(surname_l, 1, 2)``.
-    The reference gets the same effect by prefixing a table alias via
-    sqlglot; this lexical rewrite covers the function-call/arithmetic
-    snippets block_on documents."""
-    out = []
+def _sql_chunks(sql: str):
+    """``(text, column)`` chunks of a SQL snippet; ``column`` is None unless
+    the chunk is a bare or backticked column name (not a function name,
+    keyword, qualified name or literal)."""
     i, n = 0, len(sql)
     while i < n:
         c = sql[i]
@@ -179,22 +178,22 @@ def suffix_sql_identifiers(sql: str, suffix: str) -> str:
                 if sql[j] == q and not (j + 1 < n and sql[j + 1] == q):
                     break
                 j += 2 if sql[j] == q else 1
-            out.append(sql[i : j + 1])
+            yield sql[i : j + 1], None
             i = j + 1
             continue
         if c.isdigit():  # numeric literal: consume 1e2 / 0xFF / 1.5 verbatim
             j = i
             while j < n and (sql[j].isalnum() or sql[j] in "._"):
                 j += 1
-            out.append(sql[i:j])
+            yield sql[i:j], None
             i = j
             continue
-        if c == "`":  # backtick-quoted identifier: suffix INSIDE the quotes
+        if c == "`":  # backtick-quoted identifier
             j = sql.find("`", i + 1)
             if j == -1:
-                out.append(sql[i:])
-                break
-            out.append(f"`{sql[i + 1 : j]}{suffix}`")
+                yield sql[i:], None
+                return
+            yield sql[i : j + 1], sql[i + 1 : j]
             i = j + 1
             continue
         m = _SQL_IDENT.match(sql, i)
@@ -204,14 +203,25 @@ def suffix_sql_identifiers(sql: str, suffix: str) -> str:
             prev = sql[:i].rstrip()
             is_func = rest.startswith("(")
             is_kw = tok.upper() in _SQL_KEYWORDS
-            # alias.col: leave both the qualifier and the field untouched
+            # alias.col: neither the qualifier nor the field is a base column
             is_qualified = prev.endswith(".") or rest.startswith(".")
-            out.append(tok if (is_func or is_kw or is_qualified) else tok + suffix)
+            yield tok, None if (is_func or is_kw or is_qualified) else tok
             i = m.end()
             continue
-        out.append(c)
+        yield c, None
         i += 1
-    return "".join(out)
+
+
+def suffix_sql_identifiers(sql: str, suffix: str) -> str:
+    """Append ``suffix`` to every column name in a SQL snippet —
+    ``substr(surname, 1, 2)`` + ``_l`` → ``substr(surname_l, 1, 2)``.
+    The reference gets the same effect by prefixing a table alias via
+    sqlglot; this lexical rewrite covers the function-call/arithmetic
+    snippets block_on documents."""
+    return "".join(
+        text if col is None else f"`{col}{suffix}`" if text.startswith("`") else col + suffix
+        for text, col in _sql_chunks(sql)
+    )
 
 
 class SqlColumnExpression(ColumnExpression):
@@ -234,6 +244,10 @@ class SqlColumnExpression(ColumnExpression):
     @property
     def is_pure_column_reference(self) -> bool:
         return False
+
+    @property
+    def base_columns(self) -> list[str]:
+        return list(dict.fromkeys(c for _, c in _sql_chunks(self.sql) if c))
 
     def as_dict(self) -> dict:
         return {"name": self.sql, "sql": self.sql}

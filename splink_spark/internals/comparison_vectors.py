@@ -1,20 +1,24 @@
-"""Comparison vectors: re-join blocked id pairs to their columns and compute
+"""Comparison vectors: blocked pairs with their compared columns, and
 per-comparison gamma values.
 
 Reference: splink/internals/comparison_vector_values.py:41-132 — the junction
 re-join (``blocked_id_pairs b JOIN concat_tf l ON uid_l = b.join_key_l JOIN
-concat_tf r ...``, :98-115) followed by the gamma CASE ladders. The ids-only
-blocking output + this junction join is a deliberate shuffle-width
-optimisation at scale: the wide columns move through exactly two hash joins
-instead of through the blocking join's output.
+concat_tf r ...``, :98-115) followed by the gamma CASE ladders.
+
+Rule-blocked pairs carry their compared columns through the blocking join
+itself (``build_pairs_with_columns``): one join per rule, with the node
+table broadcast while it is small. The junction re-join
+(``blocked_pairs_with_columns``) attaches the columns to pairs that arrive
+as ids: a caller's pair table, exploding rules (whose pair dedup runs on
+ids) and predict's re-join of its narrow core.
 
 The id-pair contract: a pair table is ``(match_key, [source_dataset_l,
 source_dataset_r,] join_key_l, join_key_r, *carried)``. The source-dataset
 keys are present whenever the job has source datasets, because uids are only
 unique per dataset (the reference's composite ids, unique_id_concat.py).
-Blocking emits this shape, and ``id_pairs`` builds it from any other table
-of pairs (labels, cluster members, single records). Carried columns ride
-through the junction join onto the scored rows.
+Ids-only blocking emits this shape, and ``id_pairs`` builds it from any
+other table of pairs (labels, cluster members, single records). Carried
+columns ride through the junction join onto the scored rows.
 """
 
 from __future__ import annotations
@@ -31,36 +35,25 @@ from .term_frequencies import tf_column_name
 
 
 def _needed_columns(settings: Settings, concat_with_tf: DataFrame) -> list[str]:
-    """Columns the comparisons actually touch (narrow shuffle width)."""
-    cols: list[str] = [settings.unique_id_column_name]
-    if settings.source_dataset_column_name and (
-        settings.source_dataset_column_name in concat_with_tf.columns
-    ):
-        cols.append(settings.source_dataset_column_name)
-    for comp in settings.comparisons:
-        for c in getattr(comp, "input_columns", None) or []:
-            if c in concat_with_tf.columns and c not in cols:
-                cols.append(c)
-    for c in getattr(settings, "additional_columns_to_retain", []) or []:
-        if c in concat_with_tf.columns and c not in cols:
-            cols.append(c)
-    for c in settings.tf_columns:
-        tf = tf_column_name(settings, c)
-        if tf in concat_with_tf.columns and tf not in cols:
-            cols.append(tf)
-    known = {c for comp in settings.comparisons for c in (getattr(comp, "input_columns", None) or [])}
-    if not known:  # no declared inputs (custom SQL levels) → carry everything
+    """Columns the comparisons actually touch (narrow shuffle width); all of
+    them when no comparison declares its inputs (custom SQL levels)."""
+    s = settings
+    inputs = [c for comp in s.comparisons for c in (getattr(comp, "input_columns", None) or [])]
+    if not inputs:
         return list(concat_with_tf.columns)
-    return cols
+    wanted = [s.unique_id_column_name, s.source_dataset_column_name, *inputs,
+              *(getattr(s, "additional_columns_to_retain", None) or []),
+              *(tf_column_name(s, c) for c in s.tf_columns)]
+    return [c for c in dict.fromkeys(wanted) if c in concat_with_tf.columns]
 
 
-# node tables at or below this row count are broadcast into the junction
-# join; larger tables either carry columns through the blocking join
-# (build_pairs_with_columns) or sort-merge-join the junction. 200k rows of a
-# narrow projection is ~10-30 MB serialized — comfortably broadcastable;
-# beyond that the per-task hash-build cost of a forced broadcast exceeds the
-# shuffle it saves (measured: a 1M-row forced broadcast junction ran ~3x
-# slower than carry-through on the 1M-row dedupe bench).
+# node tables at or below this row count are broadcast into the join that
+# attaches their columns (the blocking join, or the junction re-join); larger
+# tables are shuffled on the join keys instead. 200k rows of a narrow
+# projection is ~10-30 MB serialized — comfortably broadcastable; beyond that
+# the per-task hash-build cost of a forced broadcast exceeds the shuffle it
+# saves (measured: a 1M-row forced broadcast junction ran ~3x slower than a
+# shuffled carry-through join on the 1M-row dedupe bench).
 BROADCAST_NODES_MAX_ROWS = 200_000
 
 
@@ -130,8 +123,6 @@ def blocked_pairs_with_columns(
     the narrow node table is small enough to broadcast we hint it explicitly
     — otherwise Catalyst sort-merge-joins and shuffles the (much larger) pair
     table twice. At billions of nodes the hint is skipped and SMJ is correct.
-    The row count is known for free: the concat was already counted when the
-    blocked pairs materialized.
     """
     uid = settings.unique_id_column_name
     cols = _needed_columns(settings, concat_with_tf)
@@ -168,25 +159,18 @@ def build_pairs_with_columns(
     rules,
     settings: Settings,
     nodes_right: Optional[DataFrame] = None,
-    repartition_count: Optional[int] = None,
     link_type: Optional[str] = None,
 ) -> DataFrame:
-    """Blocked pairs WITH their compared columns, by whichever join shape is
-    right for the node-table size:
+    """Blocked pairs WITH their compared columns: the blocking join carries
+    the columns the comparisons read (``_needed_columns``) straight through,
+    one join per rule and no junction. While the node table has at most
+    ``BROADCAST_NODES_MAX_ROWS`` rows its right side is broadcast, so the
+    join runs on the left side's partitions; above that it shuffles on the
+    blocking keys.
 
-    - small node table (<= BROADCAST_NODES_MAX_ROWS) or exploding rules:
-      ids-only blocking join + broadcast junction re-join (narrow shuffle,
-      two broadcast hash joins — the 100 TB shape when records are wide);
-    - large node table, no exploding rules: carry the needed columns through
-      the blocking join directly (one shuffle of the narrow node projection
-      on the blocking keys, no junction, no mega-broadcast — the shape a
-      single-node engine's planner picks, and the right one when the
-      retained column set is narrow).
-
-    ``repartition_count`` (small-table path only) spreads the ids-only join
-    output before the junction so a fuzzy-metric stage keeps full
-    parallelism under AQE coalescing. ``link_type`` overrides the
-    settings' link type for the pair filter.
+    Exploding rules dedup their pairs on ids, so they block ids-only and
+    junction-join the columns (``blocked_pairs_with_columns``).
+    ``link_type`` overrides the settings' link type for the pair filter.
     """
     s = settings
     block = dict(
@@ -197,16 +181,14 @@ def build_pairs_with_columns(
         ),
         nodes_right=nodes_right,
     )
-    can_carry = not any(r.exploded_columns for r in rules)
-    if can_carry and row_count(nodes) > BROADCAST_NODES_MAX_ROWS:
-        return block_using_rules(
-            nodes, rules, output_columns=_needed_columns(s, nodes), **block
+    if any(r.exploded_columns for r in rules):
+        return blocked_pairs_with_columns(
+            block_using_rules(nodes, rules, **block), nodes, s,
+            concat_with_tf_right=nodes_right,
         )
-    pairs = block_using_rules(nodes, rules, **block)
-    if repartition_count:
-        pairs = pairs.repartition(repartition_count)
-    return blocked_pairs_with_columns(
-        pairs, nodes, s, concat_with_tf_right=nodes_right
+    return block_using_rules(
+        nodes, rules, output_columns=_needed_columns(s, nodes),
+        broadcast_right=row_count(nodes) <= BROADCAST_NODES_MAX_ROWS, **block,
     )
 
 

@@ -70,6 +70,19 @@ def default_parallelism(spark) -> int:
             return 200
 
 
+def spread_to_cores(df):
+    """``df`` repartitioned to the session's parallelism when it has fewer
+    partitions: small single-file inputs arrive as one partition, and every
+    pairwise step over them would run on one core. Reading the partition
+    count of a plan without exchanges (a scan, a union) runs no job."""
+    target = default_parallelism(df.sparkSession)
+    try:
+        nparts = df.rdd.getNumPartitions()
+    except Exception:  # Spark Connect exposes no RDD
+        return df
+    return df.repartition(target) if nparts < target else df
+
+
 def row_count(df) -> int:
     """``df.count()``, memoised on the frame as ``_splink_row_count`` so
     every size decision on the same (usually persisted) frame shares one

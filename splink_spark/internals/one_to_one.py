@@ -45,7 +45,8 @@ def cluster_using_single_best_links(
 
     ``duplicate_free_datasets`` defaults to every dataset present in
     ``nodes`` (the reference requires the caller to name them; all-of-them is
-    the common case this API exists for).
+    the common case this API exists for). Merges still happening after
+    ``max_iterations`` rounds raise instead of returning unstable clusters.
     """
     if ties not in ("drop", "lowest_id"):
         raise ValueError("ties must be 'drop' or 'lowest_id'")
@@ -214,6 +215,11 @@ def cluster_using_single_best_links(
         rep = stepped.select("nid", "representative", "sd")
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"single best links did not converge in {max_iterations} "
+            f"iterations: {changed} nodes changed cluster in the last one"
+        )
 
     return rep.select(
         F.col("nid").alias(node_col),

@@ -171,7 +171,8 @@ def _to_rule(rule: Union[str, BlockingRule]) -> BlockingRule:
 def referenced_base_columns(settings: Settings) -> list[str]:
     """Every base input column the model reads: comparison inputs, TF
     columns, blocking-rule columns, and additional_columns_to_retain.
-    Blocking rules contribute their parsed equality keys plus any suffixed
+    A rule with key expressions (``block_on``) contributes the columns those
+    read; any other rule, its parsed equality keys plus any suffixed
     ``<col>_l`` / ``<col>_r`` identifiers found in the (normalised) rule SQL
     outside string literals."""
     import re
@@ -190,6 +191,12 @@ def referenced_base_columns(settings: Settings) -> list[str]:
     for rule in settings.blocking_rules_to_generate_predictions:
         for c in rule.columns or []:
             add(c)
+        keys = rule.key_expressions or getattr(rule, "exploded_key_expressions", [])
+        if keys:
+            for ce in keys:
+                for c in ce.base_columns:
+                    add(c)
+            continue
         sql = _normalise_rule_sql(rule.description or "")
         spans = re.split(r"('(?:[^'\\]|\\.|'')*')", sql)
         for i, s in enumerate(spans):

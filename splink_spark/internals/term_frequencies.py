@@ -7,14 +7,14 @@ and :79-109 — LEFT JOIN each tf table back onto the concat.
 
 A linker keeps them as one persisted store (``Linker.tf_tables``).
 
-Scale notes: the denominator is computed with a map-side partial count (one
-aggregate, no window over all rows); tf tables are ~|distinct values| rows so
-the re-join broadcasts.
+Scale notes: one aggregate per column; the denominator is a window sum over
+its output, which has one row per distinct value. TF tables are
+~|distinct values| rows, so the re-join broadcasts.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -29,19 +29,19 @@ def compute_term_frequencies(
 ) -> DataFrame:
     """tf table: (column, tf_column) with tf = count / total non-null count;
     ``tf_column`` defaults to ``tf_<column>``."""
-    nonnull = concat.where(F.col(column).isNotNull())
-    counts = nonnull.groupBy(column).agg(F.count(F.lit(1)).alias("__n"))
-    # scalar total via a 1-row cross join (map-side partial agg, no shuffle of
-    # the full table through a window)
-    total = nonnull.agg(F.count(F.lit(1)).alias("__total"))
-    return (
-        counts.crossJoin(F.broadcast(total))
-        .select(
-            F.col(column),
-            (F.col("__n").cast("double") / F.col("__total").cast("double")).alias(
-                tf_column or f"tf_{column}"
-            ),
-        )
+    counts = (
+        concat.where(F.col(column).isNotNull())
+        .groupBy(column)
+        .agg(F.count(F.lit(1)).alias("__n"))
+    )
+    # the non-null total is the sum of the counts: a window over the counts
+    # table (one row per distinct value), not a second pass over the records
+    total = F.sum("__n").over(Window.partitionBy())
+    return counts.select(
+        F.col(column),
+        (F.col("__n").cast("double") / total.cast("double")).alias(
+            tf_column or f"tf_{column}"
+        ),
     )
 
 

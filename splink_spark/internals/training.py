@@ -61,11 +61,11 @@ def _deterministic_pairs_count_via_aggregation(linker, rules) -> Optional[int]:
     A pure-equality rule's pair set is fully determined by per-key record
     counts (sum of c*(c-1)/2), and the intersection of two equality rules is
     equality on the union of their key expressions — so |A_1 ∪ ... ∪ A_k| is
-    a sum of 2^k - 1 per-key aggregations, each a map-side-combined hash agg
-    over the (cached) concat, all unioned into ONE Spark job. At 100 TB this
-    replaces k self-joins of the full node table with k narrow aggregations —
-    the same O(distinct keys) shape as the pre-filter blocking estimator
-    (reference blocking_analysis.py:78-190), but exact.
+    a signed sum over the key sets of the 2^k - 1 rule subsets, counted by
+    ONE ``GROUPING SETS`` aggregate (one shuffle) over the cached concat
+    instead of k self-joins — the O(distinct keys) shape of the pre-filter
+    estimator (reference blocking_analysis.py:78-190), but exact. The empty
+    key set's count is memoised on ``df_concat`` (``row_count``).
 
     Returns None when any rule is not pure-equality (or there are too many
     rules) — the caller falls back to executing the blocking join.
@@ -83,44 +83,54 @@ def _deterministic_pairs_count_via_aggregation(linker, rules) -> Optional[int]:
     if link_only and (sd is None or sd not in concat.columns):
         return None
 
-    subset_terms = []
-    for r_size in range(1, len(rules) + 1):
-        for subset in combinations(range(len(rules)), r_size):
-            ces = [ce for i in subset for ce in rules[i].key_expressions]
-            knames = [f"k{j}" for j in range(len(ces))]
-            keys = [ce.on(ce.name).alias(a) for ce, a in zip(ces, knames)]
-            cols = keys + ([F.col(sd).alias("__sd")] if link_only else [])
-            df = concat.select(*cols)
-            not_null = keys and F.col(knames[0]).isNotNull()
-            for a in knames[1:]:
-                not_null = not_null & F.col(a).isNotNull()
-            df = df.where(not_null)
-            if link_only:
-                # within-key cross-dataset pairs: (tot^2 - sum(c_d^2)) / 2
-                per_kd = df.groupBy(*knames, "__sd").agg(
-                    F.count(F.lit(1)).alias("c")
-                )
-                per_k = per_kd.groupBy(*knames).agg(
-                    F.sum("c").alias("tot"),
-                    F.sum(F.col("c") * F.col("c")).alias("sq"),
-                )
-                cnt = per_k.agg(
-                    F.sum(F.expr("(tot * tot - sq) DIV 2")).alias("pairs")
-                )
-            else:
-                per_k = df.groupBy(*knames).agg(F.count(F.lit(1)).alias("c"))
-                cnt = per_k.agg(F.sum(F.expr("c * (c - 1) DIV 2")).alias("pairs"))
-            sign = 1 if r_size % 2 == 1 else -1
-            subset_terms.append(
-                cnt.select(
-                    (F.lit(sign) * F.coalesce(F.col("pairs"), F.lit(0))).alias("term")
-                )
-            )
-    unioned = subset_terms[0]
-    for t in subset_terms[1:]:
-        unioned = unioned.unionByName(t)
-    total = unioned.agg(F.sum("term").alias("observed")).collect()[0]["observed"]
-    return int(total or 0)
+    # one column per distinct key expression, shared by the rules using it
+    keys: dict = {}  # expression -> (alias, column)
+    rule_keys = []
+    for r in rules:
+        cols = [ce.on(ce.name) for ce in r.key_expressions]
+        rule_keys.append(frozenset(
+            keys.setdefault(str(c), (f"k{len(keys)}", c))[0] for c in cols))
+    knames = [alias for alias, _ in keys.values()]
+    sign = {frozenset(): 0}
+    for size in range(1, len(rules) + 1):
+        for subset in combinations(rule_keys, size):
+            ks = frozenset().union(*subset)
+            sign[ks] = sign.get(ks, 0) + (1 if size % 2 else -1)
+    sets = [ks for ks, c in sign.items() if c or not ks]
+
+    def gid(ks) -> int:  # bit j set: key j rolled up
+        return sum(1 << j for j, k in enumerate(knames) if k not in ks)
+
+    by_sd = ["__sd"] if link_only else []
+    records = concat.select(
+        *[c.alias(a) for a, c in keys.values()],
+        *([F.col(sd).alias("__sd")] if link_only else []),
+    )
+    counts = records.groupingSets(
+        [[k for k in knames if k in ks] + by_sd for ks in sets], *knames, *by_sd
+    ).agg(
+        F.count(F.lit(1)).alias("tot"),
+        sum(F.grouping(k) * (1 << j) for j, k in enumerate(knames)).alias("__gid"),
+    )
+    # a NULL in a grouped key is a NULL key value: it never joins
+    for j, k in enumerate(knames):
+        rolled_up = F.col("__gid").bitwiseAND(1 << j) != 0
+        counts = counts.where(rolled_up | F.col(k).isNotNull())
+    pairs = F.expr("tot * (tot - 1) DIV 2")
+    if link_only:
+        # within-key cross-dataset pairs: (tot^2 - sum(c_d^2)) / 2
+        counts = counts.groupBy("__gid", *knames).agg(
+            F.sum(F.col("tot") * F.col("tot")).alias("sq"), F.sum("tot").alias("tot"))
+        pairs = F.expr("(tot * tot - sq) DIV 2")
+    coef = F.lit(0)
+    for ks in sets:
+        coef = F.when(F.col("__gid") == gid(ks), sign[ks]).otherwise(coef)
+    row = counts.agg(
+        F.sum(coef * pairs).alias("observed"),
+        F.sum(F.when(F.col("__gid") == gid(frozenset()), F.col("tot"))).alias("n"),
+    ).collect()[0]
+    concat._splink_row_count = int(row["n"] or 0)
+    return int(row["observed"] or 0)
 
 
 def estimate_probability_two_random_records_match(
@@ -250,18 +260,16 @@ def estimate_u_using_random_sampling(
     else:
         raise ValueError("sampling_method must be 'xxhash64' or 'minstd'")
     sample = concat.where(bucket < threshold)
-    # The TRUE-rule self-join plans as a CartesianProduct whose task count is
-    # |parts_l| x |parts_r| — inherited from the (wide) parent, that's a grid
-    # of thousands of micro-tasks each paying pandas-UDF invocation overhead
-    # for a table of only ~sqrt(2*max_pairs) rows. Coalesce the sample to
-    # ~sqrt(cores) partitions so the cartesian emits ~cores right-sized tasks,
-    # and cache it so both join sides scan the tiny table, not the concat.
+    # The TRUE-rule self-join plans as a BroadcastNestedLoopJoin over the
+    # sample's partitions, one task each: inherited from the (wide) parent,
+    # that is thousands of micro-tasks for a table of only
+    # ~sqrt(2*max_pairs) rows. Coalesce the sample to one partition per
+    # core, and cache it so both join sides scan the tiny table, not the
+    # concat.
     from .misc import default_parallelism
 
-    side = max(2, math.isqrt(2 * default_parallelism(sample.sparkSession)))
-    sample = sample.coalesce(side).persist()
+    sample = sample.coalesce(default_parallelism(sample.sparkSession)).persist()
     try:
-        sample._splink_row_count = sample.count()  # type: ignore[attr-defined]
         # every unordered pair of sampled records once, in the space predict
         # scores (link_only drops within-dataset pairs)
         cv = linker.comparison_vectors(rules=[CustomRule("TRUE")], nodes=sample)

@@ -34,6 +34,7 @@ from .internals.connected_components import (
 )
 from .internals.functions import register_udfs
 from .internals.materialize import MaterializationPolicy
+from .internals.misc import spread_to_cores
 from .internals.predict import (
     predict_from_comparison_vectors,
     score_bound,
@@ -201,6 +202,9 @@ class Linker:
                 if self.settings.needs_source_dataset
                 else None,
             )
+            # every join over the records keeps their partitions; spread
+            # them here, where it costs no job
+            df = spread_to_cores(df)
             # lazy persist: the first consumer's job (usually a TF aggregate
             # or a broadcast build) populates the cache in passing — an eager
             # count here would add a full extra pass over the inputs
@@ -246,30 +250,22 @@ class Linker:
         """``__splink__df_concat_with_tf`` (vertically_concatenate.py:74-81):
         ``df_concat`` read through the TF store (``_with_tf``).
 
-        Persisted: it feeds both sides of the blocking join AND both sides of
-        the junction re-join — 4 scans of the same plan otherwise (the
+        Persisted: it feeds both sides of every blocking join and predict's
+        node re-join — repeated scans of the same plan otherwise (the
         reference materializes exactly this stage, spark/database_api.py:
         292-312). A write to the TF store releases it.
         """
         if self._concat_with_tf is None:
-            df = self._with_tf(self.df_concat())
-            # single-file inputs arrive as one partition; the blocking join
-            # would then probe on one core — spread before persisting
-            from .internals.misc import default_parallelism
-
-            target = default_parallelism(self.spark)
-            try:
-                nparts = df.rdd.getNumPartitions()
-            except Exception:  # Spark Connect: no RDD access
-                nparts = None
-            if nparts is not None and nparts < target:
-                df = df.repartition(target)
-            # lazy persist — the first consumer (a blocking join's broadcast
-            # build or a count in build_pairs_with_columns) populates the
-            # cache; those callers set _splink_row_count themselves
+            concat = self.df_concat()
+            # lazy persist — the first consumer (a blocking join or a count
+            # in build_pairs_with_columns) populates the cache
             df = self.materialization.materialize(
-                df, "concat_with_tf", eager=False
+                self._with_tf(concat), "concat_with_tf", eager=False
             )
+            # LEFT joins to unique-keyed TF tables keep the row count
+            n = getattr(concat, "_splink_row_count", None)
+            if n is not None:
+                df._splink_row_count = n  # type: ignore[attr-defined]
             logger.log(PIPELINE, "stage __splink__df_concat_with_tf built "
                        "(%d tf columns)", len(self._tf_tables))
             df = self._debug_stage(df, "__splink__df_concat_with_tf")
@@ -326,36 +322,22 @@ class Linker:
     def pairs_with_columns(
         self,
         rules: Optional[Sequence[BlockingRule]] = None,
-        repartition_for_udfs: bool = True,
-    ) -> DataFrame:
-        """Blocked pairs with compared columns attached, choosing between
-        ids+broadcast-junction (small node tables / exploding rules) and
-        carry-through blocking (large node tables) — see
-        comparison_vectors.build_pairs_with_columns."""
-        return self._pairs_with_columns(
-            rules, self.settings.link_type, repartition_for_udfs
-        )
-
-    def _pairs_with_columns(
-        self,
-        rules: Optional[Sequence[BlockingRule]],
-        link_type: str,
-        repartition_for_udfs: bool,
+        link_type: Optional[str] = None,
         nodes: Optional[DataFrame] = None,
         nodes_right: Optional[DataFrame] = None,
     ) -> DataFrame:
+        """Blocked pairs with their compared columns carried through the
+        blocking join (``comparison_vectors.build_pairs_with_columns``);
+        the arguments are ``comparison_vectors``'."""
         s = self.settings
+        link_type = link_type or s.link_type
         if nodes is None:
             nodes, nodes_right = self._blocking_nodes(link_type)
-        n_parts = None
-        if repartition_for_udfs:
-            n_parts = self.materialization.repartition_count(nodes)
         return build_pairs_with_columns(
             nodes,
             list(rules or s.blocking_rules_to_generate_predictions),
             s,
             nodes_right=nodes_right,
-            repartition_count=n_parts,
             link_type=link_type,
         )
 
@@ -378,11 +360,12 @@ class Linker:
         registered, labelled, chunked or cluster pairs), the records are
         junction-joined onto them. Otherwise the pairs are blocked from
         ``rules`` (default: the prediction rules) under ``link_type``
-        (default: the settings') by ``build_pairs_with_columns``, which picks
-        the join shape by node-table size. Blocking the linker's own records
-        also applies the link_only split and spreads the pairs for the
-        fuzzy-metric stage; caller-supplied records (new batches, single
-        requests, training's hash samples) are blocked as given.
+        (default: the settings') by ``build_pairs_with_columns``: the
+        blocking join carries the compared columns through, with the records
+        broadcast while they are small. Blocking the linker's own records
+        also applies the link_only split; caller-supplied records (new
+        batches, single requests, training's hash samples) are blocked as
+        given.
 
         Training reads its gammas here too: EM blocks on its training rule
         (over its ``max_pairs`` record sample when one is drawn), and
@@ -401,13 +384,7 @@ class Linker:
                 concat_with_tf_right=nodes_right,
             )
         else:
-            with_cols = self._pairs_with_columns(
-                rules,
-                link_type or s.link_type,
-                repartition_for_udfs=nodes is None,
-                nodes=nodes,
-                nodes_right=nodes_right,
-            )
+            with_cols = self.pairs_with_columns(rules, link_type, nodes, nodes_right)
         if min_match_weight is not None:
             with_cols = where_score_can_reach(with_cols, s, min_match_weight)
         return self._debug_stage(

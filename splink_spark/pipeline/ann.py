@@ -31,12 +31,12 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k by cosine: broadcast the (small) query side against the
     corpus, window-rank per query. Ties broken by corpus id (deterministic)."""
-    from .dedup import _widen
+    from ..internals.misc import spread_to_cores
 
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(embedding_col).alias("__q_emb")
     )
-    c = _widen(corpus).select(
+    c = spread_to_cores(corpus).select(
         F.col(id_col).alias("neighbour_id"), F.col(embedding_col).alias("__c_emb")
     )
     scored = (
@@ -805,10 +805,10 @@ def sq8_topk(
     embeddings, via a broadcast-able candidate list.  Pure Column HOFs
     throughout; no Python.
     """
-    from .dedup import _widen
+    from ..internals.misc import spread_to_cores
 
     m = rerank_candidates or max(2 * k, k + 8)
-    qc = _quantize_int(_widen(corpus), embedding_col, id_col, 127).select(
+    qc = _quantize_int(spread_to_cores(corpus), embedding_col, id_col, 127).select(
         F.col(id_col).alias("neighbour_id"), F.col("__q").alias("__cq")
     )
     qq = _quantize_int(queries, embedding_col, id_col, 127).select(

@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..internals.misc import optimizer_barrier
+from ..internals.misc import optimizer_barrier, spread_to_cores
 
 # Gopher App. A required stop words ("must contain >= 2 of ...")
 GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
@@ -632,7 +632,7 @@ def decontaminate_spans(
     (``id_col``, n_tokens, n_removed_tokens, n_contaminated_spans,
     cleaned_text).
     """
-    from ..internals.misc import optimizer_barrier
+    from ..internals.misc import optimizer_barrier, spread_to_cores
 
     eval_text_col = eval_text_col or text_col
     nn = int(n)
@@ -726,7 +726,7 @@ def dedup_repeated_spans(
     cleaned_text) — n_repeated_spans counts removed (non-keeper) span
     occurrences in the document.
     """
-    from ..internals.misc import optimizer_barrier
+    from ..internals.misc import optimizer_barrier, spread_to_cores
 
     nn = int(n)
     if nn < 1:
@@ -906,14 +906,13 @@ def chunk_documents(
 
     Output: ``(id_col, chunk_id, n_tokens, chunk_text)``.
     """
-    from .dedup import _widen
 
     if stride is None:
         stride = chunk_tokens
     if chunk_tokens < 1 or stride < 1:
         raise ValueError("chunk_tokens and stride must be >= 1")
 
-    staged = _widen(df).select(
+    staged = spread_to_cores(df).select(
         F.col(id_col),
         optimizer_barrier(_tokens(F.col(text_col))).alias("__toks"),
     ).withColumn("__n", F.size("__toks"))

@@ -15,21 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _widen(df: DataFrame) -> DataFrame:
-    """Small single-file inputs arrive as one partition; pairwise ops would
-    then run on one core. Repartition up to the session's parallelism (a
-    no-op shape at real scale where inputs have many splits)."""
-    from ..internals.misc import default_parallelism
-
-    target = default_parallelism(df.sparkSession)
-    try:
-        nparts = df.rdd.getNumPartitions()
-    except Exception:  # Spark Connect exposes no RDD; skip the rebalance probe
-        nparts = None
-    if nparts is not None and nparts < target:
-        return df.repartition(target)
-    return df
+from ..internals.misc import spread_to_cores
 
 
 def exact_duplicates(
@@ -99,7 +85,7 @@ def ngram_jaccard_pairs(
     with no blocks this is the exact quadratic baseline — only for small n or
     as the verification oracle for the MinHash path.
     """
-    grams = _widen(df).select(
+    grams = spread_to_cores(df).select(
         F.col(id_col), *[F.col(c) for c in block_cols],
         char_ngrams(F.col(text_col), n).alias("__grams"),
     )
@@ -144,7 +130,7 @@ def minhash_signatures(
     cross the wire. ~3x faster than the nested-HOF formulation (whose
     codegen alone costs seconds) and the same shape at 100 TB.
     """
-    ex = _widen(df).select(
+    ex = spread_to_cores(df).select(
         F.col(id_col), F.explode(char_ngrams(F.col(text_col), shingle_size)).alias("__s")
     ).withColumn("__h", F.xxhash64("__s"))
     aggs = [
@@ -401,7 +387,7 @@ def embedding_near_duplicates(
     from ..internals.functions import cosine_similarity
 
     cols = [id_col, embedding_col, *block_cols]
-    df = _widen(df)
+    df = spread_to_cores(df)
 
     if method == "auto":
         if block_cols:
@@ -757,7 +743,7 @@ def cross_document_span_dedup(
     n = int(span_tokens)
     if n < 1:
         raise ValueError("span_tokens must be >= 1")
-    staged = _widen(corpus).select(
+    staged = spread_to_cores(corpus).select(
         F.col(id_col), optimizer_barrier(_tokens(F.col(text_col))).alias("__toks")
     ).persist()
     toks = F.col("__toks")

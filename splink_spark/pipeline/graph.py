@@ -579,9 +579,10 @@ def k_core(
     semi-join of the edge list against surviving nodes (both endpoints);
     the edge list shrinks monotonically, so later iterations are cheaper.
     Iteration count is bounded by the peeling depth (typically small;
-    ``max_iterations`` is a safety stop, convergence is detected by the
-    surviving-node count reaching a fixpoint). The driver holds only the
-    loop counter and one count per iteration.
+    convergence is an iteration that finds no node to peel). Peeling still
+    under way after ``max_iterations`` raises instead of returning a
+    subgraph that is not the core. The driver holds only the loop counter
+    and one count per iteration.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -597,24 +598,24 @@ def k_core(
         .distinct()
         .localCheckpoint()
     )
-    prev_nodes = -1
     for _ in range(int(max_iterations)):
         und = cur.unionByName(
             cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
         deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
+        if deg.where(F.col("d") < int(k)).count() == 0:
+            break  # nothing left to peel: the fixpoint
         keep = deg.where(F.col("d") >= int(k)).select(F.col("a").alias("n"))
-        n_keep = keep.count()
-        if n_keep == prev_nodes or n_keep == 0:
-            if n_keep == 0:
-                cur = cur.where(F.lit(False))
-            break
-        prev_nodes = n_keep
         cur = (
             cur.join(keep.withColumnRenamed("n", "a"), "a")
             .join(keep.withColumnRenamed("n", "b"), "b")
             .select("a", "b")
             .localCheckpoint()
+        )
+    else:
+        raise RuntimeError(
+            f"k_core did not converge in {max_iterations} iterations: "
+            "nodes below degree k remain"
         )
     und = cur.unionByName(
         cur.select(F.col("b").alias("a"), F.col("a").alias("b"))

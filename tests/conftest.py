@@ -4,6 +4,8 @@ shuffle.partitions small, AQE off for tiny data)."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -24,6 +26,25 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(action)``: the Spark jobs ``action()`` runs, counted
+    through a job group."""
+    sc = spark.sparkContext
+
+    def count(action) -> int:
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -153,6 +153,25 @@ def test_single_best_links_three_dataset_chain(spark):
     assert out[9] == 9  # isolated node keeps its own id
 
 
+def test_single_best_links_raises_when_merging_outlasts_max_iterations(spark):
+    """The A-B-C chain takes two merge rounds and a third that changes
+    nothing: capped at one round it raises instead of returning unstable
+    clusters; at three it returns the chain's one cluster as before."""
+    nodes = spark.createDataFrame(
+        [(3, "d1"), (2, "d2"), (1, "d3"), (9, "d1")],
+        ["node_id", "source_dataset"],
+    )
+    edges = spark.createDataFrame(
+        [(3, 2, "d1", "d2", 0.95), (2, 1, "d2", "d3", 0.90)],
+        ["node_id_l", "node_id_r", "source_dataset_l", "source_dataset_r", "match_probability"],
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        cluster_using_single_best_links(edges, nodes, max_iterations=1)
+    out = {r["node_id"]: r["cluster_id"] for r in
+           cluster_using_single_best_links(edges, nodes, max_iterations=3).collect()}
+    assert out == {3: 1, 2: 1, 1: 1, 9: 9}
+
+
 def test_single_best_links_duplicate_free_guard(spark):
     """A chain A1-B1, B1-C1, C1-A2 must NOT merge A2 into the cluster that
     already holds A1 (ADVICE r2: unconstrained transitive closure collapsed

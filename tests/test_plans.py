@@ -1,7 +1,7 @@
 """Physical-plan assertions: the scale properties SURVEY §4 promises must be
 visible in ``.explain`` — broadcast TF joins, equi-join blocking (no
 nested-loop for equality rules), column pruning down to the parquet scan,
-broadcast junction joins for small node tables."""
+broadcast blocking joins for small node tables."""
 
 from __future__ import annotations
 
@@ -108,42 +108,50 @@ def test_whole_stage_codegen_covers_scoring(spark, parquet_persons):
     )
 
 
-def test_carry_through_blocking_matches_junction(spark, monkeypatch):
-    """Above the broadcast threshold the blocking join carries columns
-    through directly; output must be identical to the ids+junction path."""
-    import splink_spark.internals.comparison_vectors as cvmod
-    from splink_spark import Linker
+def test_rule_blocked_gammas_match_caller_pairs(spark):
+    """Rule-blocked gammas (columns carried through the blocking join, or
+    junction-joined for an exploding rule) equal those of the same pairs
+    sent through ``comparison_vectors(pairs=...)``, column order included:
+    dedupe, link_only with source datasets, and an exploding rule. The
+    small node table is broadcast into each rule's join, with no
+    round-robin spread of the pairs."""
+    from splink_spark.internals.comparison_vectors import id_pairs
 
     rows = [
-        (i, f"name{i % 7}", i % 3, f"seg{i % 2}")
+        (i, f"name{i % 7}", i % 3, f"seg{i % 2}", [f"t{i % 4}", f"t{i % 5}"])
         for i in range(60)
     ]
-    df = spark.createDataFrame(rows, ["unique_id", "name", "grp", "seg"])
+    df = spark.createDataFrame(rows, ["unique_id", "name", "grp", "seg", "tags"])
 
-    def settings():
-        import splink_spark.internals.comparison_library as cl
-        from splink_spark import SettingsCreator, block_on
-
+    def settings(rules, link_type="dedupe_only"):
         return SettingsCreator(
+            link_type=link_type,
             comparisons=[
                 cl.ExactMatch("name"),
                 cl.ExactMatch("seg", term_frequency_adjustments=True),
             ],
-            blocking_rules_to_generate_predictions=[block_on("grp")],
+            blocking_rules_to_generate_predictions=rules,
             probability_two_random_records_match=0.1,
         )
 
-    def cv_rows(linker):
-        out = linker.comparison_vectors().collect()
-        cols = sorted(out[0].asDict().keys()) if out else []
-        return sorted(tuple(r[c] for c in cols) for r in out), cols
+    def check(linker):
+        blocked = linker.comparison_vectors()
+        pairs = id_pairs(blocked, linker.settings, F.col("match_key"))
+        given = linker.comparison_vectors(pairs=pairs)
+        assert blocked.columns == given.columns
+        got, want = (sorted(tuple(r) for r in f.collect()) for f in (blocked, given))
+        assert got == want and len(got) > 0
+        return _plan(blocked)
 
-    junction, cols_j = cv_rows(Linker(df, settings()))
-    monkeypatch.setattr(cvmod, "BROADCAST_NODES_MAX_ROWS", 10)
-    carry, cols_c = cv_rows(Linker(df, settings()))
-    assert cols_j == cols_c
-    assert junction == carry
-    assert len(junction) > 0
+    plan = check(Linker(df, settings([block_on("grp"), block_on("name")])))
+    assert "RoundRobinPartitioning" not in plan and "SortMergeJoin" not in plan
+    # one inner join per rule, building on the broadcast node side (the TF
+    # joins inside the cached records are LEFT OUTER)
+    assert len(re.findall(r"BroadcastHashJoin .*, Inner, BuildRight", plan)) == 2
+    check(Linker([df.where("unique_id < 30"), df.where("unique_id >= 30")],
+                 settings([block_on("grp")], "link_only")))
+    check(Linker(df, settings([block_on("tags", arrays_to_explode=["tags"]),
+                               block_on("grp")])))
 
 
 def test_thresholded_predict_persists_only_survivors_one_scoring_pass(
@@ -420,3 +428,50 @@ def test_numeric_barrier_blocks_collapse_project(spark):
     # and the identity must hold
     vals = sorted(r["x"] for r in staged.collect())
     assert vals == sorted((i * 3) * 3 * 3 for i in range(10))
+
+
+def test_dedupe_pipeline_job_budget(spark, count_jobs):
+    """Spark jobs per phase of a small trained dedupe (the benchmark's
+    model shape: two TF columns, two prediction rules). Each exchange
+    materializes as a job, so a new exchange or action in λ, u, an EM
+    session or predict changes a count here."""
+    import random
+
+    rng = random.Random(7)
+    rows = []
+    for i in range(300):
+        e = rng.randrange(80)
+        rows.append((i, f"f{e % 23}", f"s{e % 31}", f"d{e % 17}", f"c{e % 5}",
+                     f"e{e}" if rng.random() > 0.2 else None))
+    df = spark.createDataFrame(
+        rows, ["unique_id", "first_name", "surname", "dob", "city", "email"])
+    settings = SettingsCreator(
+        comparisons=[
+            cl.JaroWinklerAtThresholds("first_name", [0.9]),
+            cl.ExactMatch("surname", term_frequency_adjustments=True),
+            cl.ExactMatch("dob"),
+            cl.ExactMatch("city", term_frequency_adjustments=True),
+            cl.ExactMatch("email"),
+        ],
+        blocking_rules_to_generate_predictions=[
+            block_on("surname", "dob"), block_on("email")],
+        probability_two_random_records_match=0.01,
+    )
+    linker = Linker(df, settings)
+    t = linker.training
+    out = {}
+
+    def phase(name, action):
+        out[name] = count_jobs(action)
+
+    phase("lambda", lambda: t.estimate_probability_two_random_records_match(
+        [block_on("email"), block_on("first_name", "surname", "dob")], recall=0.8))
+    phase("u", lambda: t.estimate_u_using_random_sampling(max_pairs=1e4, seed=1))
+    phase("em_email", lambda: t.estimate_parameters_using_expectation_maximisation(
+        block_on("email")))
+    phase("em_surname_dob", lambda: t.estimate_parameters_using_expectation_maximisation(
+        block_on("surname", "dob")))
+    phase("predict", lambda: linker.inference.predict(
+        threshold_match_probability=0.01)._splink_narrow.count())
+    assert out == {"lambda": 1, "u": 5, "em_email": 2, "em_surname_dob": 2, "predict": 3}
+    linker.misc.invalidate_cache()

@@ -6,8 +6,6 @@ Linker, per-settings cache) and inference.py:294-444 (num_chunks_l/_r).
 
 from __future__ import annotations
 
-import uuid
-
 import pyspark.sql.functions as F
 import pytest
 
@@ -195,20 +193,7 @@ def _persisted(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
-def _jobs(spark, action) -> int:
-    """Spark jobs ``action()`` runs, counted through a job group."""
-    sc = spark.sparkContext
-    group = f"count-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_realtime_requests_reuse_the_tf_store_and_release_it(spark, rt_settings):
+def test_realtime_requests_reuse_the_tf_store_and_release_it(spark, rt_settings, count_jobs):
     """Requests read the linker's persisted TF store instead of rebuilding
     TF tables: after the first request they persist nothing new, a
     repeated ``compare_two_records`` runs at most 4 jobs (7 here when each
@@ -231,8 +216,7 @@ def test_realtime_requests_reuse_the_tf_store_and_release_it(spark, rt_settings)
     served = _persisted(spark)
     weights = set()
     for _ in range(3):
-        jobs = _jobs(
-            spark,
+        jobs = count_jobs(
             lambda: weights.add(
                 linker.inference.compare_two_records(r1, r2).collect()[0]["match_weight"]
             ),

@@ -58,6 +58,28 @@ def test_linker_warns_on_missing_columns(spark, persons, caplog):
     )
 
 
+def test_sql_snippet_key_reads_its_base_columns(spark, persons, caplog):
+    """A ``block_on`` SQL-snippet key names the columns its expression
+    reads (``substr(dob, 1, 7)`` reads dob, not a column 'substr'), so a
+    valid snippet logs no warning; a rule on a truly missing column, as a
+    snippet or a bare key, still warns."""
+    def warnings(settings):
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger="splink_spark"):
+            Linker(persons, settings)
+        return [r.getMessage() for r in caplog.records
+                if "missing from input table" in r.getMessage()]
+
+    ok = _settings(cl.ExactMatch("surname"), rules=[block_on("substr(dob, 1, 7)")])
+    assert validate_settings_columns(ok, persons.columns) == []
+    assert warnings(ok) == []
+    for rule, missing in ((block_on("substr(birth, 1, 7)"), "birth"),
+                          (block_on("postcode"), "postcode")):
+        bad = _settings(cl.ExactMatch("surname"), rules=[rule])
+        assert validate_settings_columns(bad, persons.columns) == [missing]
+        assert any(missing in m for m in warnings(bad))
+
+
 def test_linker_missing_uid_is_fatal(spark, persons):
     s = _settings(cl.ExactMatch("surname"), rules=[block_on("dob")])
     s.unique_id_column_name = "person_key"

@@ -619,6 +619,21 @@ def test_k_core_plan_stays_bounded_across_iterations(spark):
     assert out.count() == 0  # a path has no 2-core
 
 
+def test_k_core_raises_when_peeling_outlasts_max_iterations(spark):
+    """Peeling still under way at ``max_iterations`` raises instead of
+    returning a subgraph that is not the core; within the cap the core is
+    returned as before."""
+    from splink_spark.pipeline.graph import k_core
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(6)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        k_core(chain, 2, max_iterations=1)
+    # a triangle with a tail: one peel, then one pass that finds nothing
+    tailed = spark.createDataFrame([(0, 1), (1, 2), (0, 2), (2, 3)], "src long, dst long")
+    got = {r["node"]: r["degree"] for r in k_core(tailed, 2, max_iterations=2).collect()}
+    assert got == {0: 2, 1: 2, 2: 2}
+
+
 def test_gap_fill_locf_literals(spark):
     from splink_spark.pipeline.temporal import gap_fill
 

@@ -132,7 +132,9 @@ def test_estimate_lambda_from_deterministic_rules(spark):
 
 def test_deterministic_count_by_aggregation_matches_join(spark):
     """The inclusion-exclusion per-key count must equal the executed
-    blocking join's pair count — overlapping rules, nulls, dedupe + link."""
+    blocking join's pair count — overlapping rules, keys shared across
+    rules, a SQL-snippet key, an all-null key, nulls, dedupe + link. The
+    aggregate's empty key set memoises the record count on df_concat."""
     from splink_spark.internals.blocking import block_using_rules
     from splink_spark.internals.training import (
         _deterministic_pairs_count_via_aggregation,
@@ -144,39 +146,50 @@ def test_deterministic_count_by_aggregation_matches_join(spark):
         name = f"n{rng.randrange(40)}" if rng.random() > 0.1 else None
         city = f"c{rng.randrange(8)}" if rng.random() > 0.1 else None
         dob = f"d{rng.randrange(25)}"
-        rows.append((i, name, city, dob))
-    df = spark.createDataFrame(rows, ["unique_id", "name", "city", "dob"])
-    rules = [block_on("name"), block_on("city", "dob"), block_on("dob")]
+        rows.append((i, name, city, dob, None))
+    schema = "unique_id long, name string, city string, dob string, nothing string"
+    df = spark.createDataFrame(rows, schema)
+    rule_sets = [
+        [block_on("name"), block_on("city", "dob"), block_on("dob")],
+        # dob shared by three rules, name by two; a snippet key; a key that
+        # is NULL on every record (it blocks nothing)
+        [block_on("name", "dob"), block_on("dob"), block_on("substr(dob, 1, 2)"),
+         block_on("nothing"), block_on("name", "city")],
+    ]
 
     settings = SettingsCreator(
         comparisons=[cl.ExactMatch("name")],
         blocking_rules_to_generate_predictions=[block_on("name")],
     )
     linker = Linker(df, settings)
-    agg = _deterministic_pairs_count_via_aggregation(linker, rules)
-    joined = block_using_rules(
-        linker.df_concat(), rules, link_type="dedupe_only",
-        unique_id_column_name="unique_id",
-    ).count()
-    assert agg == joined
+    for rules in rule_sets:
+        agg = _deterministic_pairs_count_via_aggregation(linker, rules)
+        joined = block_using_rules(
+            linker.df_concat(), rules, link_type="dedupe_only",
+            unique_id_column_name="unique_id",
+        ).count()
+        assert agg == joined
+    assert linker.df_concat()._splink_row_count == len(rows)
 
     # link_only: within-dataset pairs must be excluded
     half = len(rows) // 2
-    df_a = spark.createDataFrame(rows[:half], ["unique_id", "name", "city", "dob"])
-    df_b = spark.createDataFrame(rows[half:], ["unique_id", "name", "city", "dob"])
+    df_a = spark.createDataFrame(rows[:half], schema)
+    df_b = spark.createDataFrame(rows[half:], schema)
     link_settings = SettingsCreator(
         link_type="link_only",
         comparisons=[cl.ExactMatch("name")],
         blocking_rules_to_generate_predictions=[block_on("name")],
     )
     link_linker = Linker([df_a, df_b], link_settings)
-    agg_l = _deterministic_pairs_count_via_aggregation(link_linker, rules)
-    joined_l = block_using_rules(
-        link_linker.df_concat(), rules, link_type="link_only",
-        unique_id_column_name="unique_id",
-        source_dataset_column_name=link_settings.source_dataset_column_name,
-    ).count()
-    assert agg_l == joined_l
+    for rules in rule_sets:
+        agg_l = _deterministic_pairs_count_via_aggregation(link_linker, rules)
+        joined_l = block_using_rules(
+            link_linker.df_concat(), rules, link_type="link_only",
+            unique_id_column_name="unique_id",
+            source_dataset_column_name=link_settings.source_dataset_column_name,
+        ).count()
+        assert agg_l == joined_l
+    assert link_linker.df_concat()._splink_row_count == len(rows)
 
     # non-equality rule → not eligible, caller must fall back
     assert (
