@@ -5,9 +5,9 @@ Reference: splink/internals/accuracy.py:60-290 — group scored pairs by
 truth_threshold, running-total windows for cumulative TP/FP/TN/FN, then the
 derived metrics (precision, recall, specificity, F1...) at every threshold.
 
-Labels tables and self-links are turned into pair tables by
-``comparison_vectors.id_pairs`` and scored by ``LinkerInference._scored``,
-the scorer predict uses.
+Labels tables are turned into pair tables by ``comparison_vectors.id_pairs``;
+self-links block the records against themselves on their keys. Both are
+scored by ``LinkerInference._scored``, the scorer predict uses.
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .blocking import block_on
 from .comparison_vectors import id_pairs
 
 
@@ -182,13 +183,11 @@ def unlinkables_table(linker) -> DataFrame:
     """Self-link match-weight distribution (reference unlinkables.py;
     linker.py:493-552): score every record against itself; records whose
     self-match weight is low are intrinsically unlinkable."""
-    s = linker.settings
-    uid = s.unique_id_column_name
-    sd = s.source_dataset_column_name
-    pairs = id_pairs(
-        linker.df_concat_with_tf(), s, "self", uid=(uid, uid), source_dataset=(sd, sd)
-    )
-    scored = linker.inference._scored(pairs=pairs)
+    s, records = linker.settings, linker.df_concat_with_tf()
+    keys = [s.unique_id_column_name]
+    if s.needs_source_dataset:
+        keys.append(s.source_dataset_column_name)
+    scored = linker.inference._scored(rules=[block_on(*keys)], nodes=records, nodes_right=records)
     rounded = F.round(F.col("match_weight"), 2).alias("match_weight")
     return (
         scored.select(rounded)

@@ -5,11 +5,11 @@ Reference: splink/internals/comparison_vector_values.py:41-132 — the junction
 re-join (``blocked_id_pairs b JOIN concat_tf l ON uid_l = b.join_key_l JOIN
 concat_tf r ...``, :98-115) followed by the gamma CASE ladders.
 
-Rule-blocked pairs carry their compared columns through the blocking join
-itself (``build_pairs_with_columns``): one join per rule, with the node
-table broadcast while it is small. The junction re-join
-(``blocked_pairs_with_columns``) attaches the columns to pairs that arrive
-as ids: a caller's pair table, exploding rules (whose pair dedup runs on
+Records are blocked, id pairs are junction-joined. The blocking join carries
+the compared columns through (``build_pairs_with_columns``), one join per
+rule. The junction re-join (``blocked_pairs_with_columns``) attaches the
+linker's records to pairs that arrive as ids: caller, labelled, registered,
+chunked and cluster pair tables, exploding rules (whose pair dedup runs on
 ids) and predict's re-join of its narrow core.
 
 The id-pair contract: a pair table is ``(match_key, [source_dataset_l,
@@ -17,8 +17,8 @@ source_dataset_r,] join_key_l, join_key_r, *carried)``. The source-dataset
 keys are present whenever the job has source datasets, because uids are only
 unique per dataset (the reference's composite ids, unique_id_concat.py).
 Ids-only blocking emits this shape, and ``id_pairs`` builds it from any
-other table of pairs (labels, cluster members, single records). Carried
-columns ride through the junction join onto the scored rows.
+other table of pairs (labels, cluster members). Carried columns ride through
+the junction join onto the scored rows.
 """
 
 from __future__ import annotations
@@ -57,43 +57,50 @@ def _needed_columns(settings: Settings, concat_with_tf: DataFrame) -> list[str]:
 BROADCAST_NODES_MAX_ROWS = 200_000
 
 
+def _broadcast_side(nodes: DataFrame, nodes_right: DataFrame) -> Optional[DataFrame]:
+    """The side of a join between two record sets to broadcast: sides with
+    a memoised count first, the smaller first, then the left. A side is
+    counted only when no side before it is small, so a one-record side
+    costs no count job, nor does a new batch against a small base."""
+    def known(side):
+        n = getattr(side, "_splink_row_count", None)
+        return float("inf") if n is None else n
+
+    order = sorted((nodes, nodes_right), key=known)
+    return next((s for s in order if row_count(s) <= BROADCAST_NODES_MAX_ROWS), None)
+
+
 def id_pairs(
     df: DataFrame,
     settings: Settings,
     match_key: Union[str, Column],
-    uid: tuple = ("unique_id_l", "unique_id_r"),
-    source_dataset: Optional[tuple] = ("source_dataset_l", "source_dataset_r"),
+    uid: tuple[str, str] = ("unique_id_l", "unique_id_r"),
+    source_dataset: tuple[str, str] = ("source_dataset_l", "source_dataset_r"),
     carry: Sequence[Union[str, Column]] = (),
     lower_id_on_lhs: bool = False,
 ) -> DataFrame:
     """A pair table in the id-pair contract, read from ``df``.
 
     ``uid`` and ``source_dataset`` name the (left, right) key columns of
-    ``df``, as column names or expressions; the defaults are the labels-table
-    names. The source-dataset keys are carried whenever the job has source
-    datasets. ``source_dataset=None`` leaves them out, which is sound only
-    when each side's node table holds a single record (``compare_two_records``).
-    ``carry`` columns are kept as pair columns. ``match_key`` is a literal,
-    or a column of ``df``.
+    ``df``; the defaults are the labels-table names. The source-dataset keys
+    are carried whenever the job has source datasets. ``carry`` columns are
+    kept as pair columns. ``match_key`` is a literal, or a column of ``df``.
 
     ``lower_id_on_lhs`` orients each pair with the lower ``(source_dataset,
     uid)`` on the left and keeps one row per pair (the reference's
     lower_id_on_lhs.py, as its labels join does).
     """
-    def col(c):
-        return F.col(c) if isinstance(c, str) else c
-
-    uid_l, uid_r = (col(c) for c in uid)
+    uid_l, uid_r = (F.col(c) for c in uid)
     keys = {"join_key": (uid_l, uid_r)}
     swap = uid_l > uid_r
-    if settings.needs_source_dataset and source_dataset is not None:
-        missing = [c for c in source_dataset if isinstance(c, str) and c not in df.columns]
+    if settings.needs_source_dataset:
+        missing = [c for c in source_dataset if c not in df.columns]
         if missing:
             raise ValueError(
                 f"a {settings.link_type} job keys its pairs by (source dataset, "
                 f"unique id): missing {missing} (got {df.columns})"
             )
-        sd_l, sd_r = (col(c) for c in source_dataset)
+        sd_l, sd_r = (F.col(c) for c in source_dataset)
         keys = {"source_dataset": (sd_l, sd_r), **keys}
         swap = (sd_l > sd_r) | ((sd_l == sd_r) & swap)
     if lower_id_on_lhs:
@@ -119,19 +126,20 @@ def blocked_pairs_with_columns(
 ) -> DataFrame:
     """The junction re-join (comparison_vector_values.py:98-115).
 
-    Join-strategy note: |pairs| >> |nodes| in any blocked workload, so when
-    the narrow node table is small enough to broadcast we hint it explicitly
+    Join-strategy note: |pairs| >> |nodes| in any blocked workload, so each
+    narrow node side that is small enough to broadcast is hinted explicitly
     — otherwise Catalyst sort-merge-joins and shuffles the (much larger) pair
     table twice. At billions of nodes the hint is skipped and SMJ is correct.
     """
     uid = settings.unique_id_column_name
     cols = _needed_columns(settings, concat_with_tf)
-    narrow_l = concat_with_tf.select([F.col(c).alias(f"{c}_l") for c in cols])
     right_src = concat_with_tf_right if concat_with_tf_right is not None else concat_with_tf
-    narrow_r = right_src.select([F.col(c).alias(f"{c}_r") for c in cols])
-    if row_count(concat_with_tf) <= BROADCAST_NODES_MAX_ROWS:
-        narrow_l = F.broadcast(narrow_l)
-        narrow_r = F.broadcast(narrow_r)
+
+    def narrow(nodes, side):
+        out = nodes.select([F.col(c).alias(f"{c}_{side}") for c in cols])
+        return F.broadcast(out) if row_count(nodes) <= BROADCAST_NODES_MAX_ROWS else out
+
+    narrow_l, narrow_r = narrow(concat_with_tf, "l"), narrow(right_src, "r")
 
     sd = settings.source_dataset_column_name
     keyed_by_sd = bool(sd) and "source_dataset_l" in blocked_pairs.columns
@@ -163,10 +171,10 @@ def build_pairs_with_columns(
 ) -> DataFrame:
     """Blocked pairs WITH their compared columns: the blocking join carries
     the columns the comparisons read (``_needed_columns``) straight through,
-    one join per rule and no junction. While the node table has at most
-    ``BROADCAST_NODES_MAX_ROWS`` rows its right side is broadcast, so the
-    join runs on the left side's partitions; above that it shuffles on the
-    blocking keys.
+    one join per rule and no junction. A side with at most
+    ``BROADCAST_NODES_MAX_ROWS`` rows is broadcast (``_broadcast_side``), so
+    the join runs on the other side's partitions; when neither is, it
+    shuffles on the blocking keys.
 
     Exploding rules dedup their pairs on ids, so they block ids-only and
     junction-join the columns (``blocked_pairs_with_columns``).
@@ -186,9 +194,13 @@ def build_pairs_with_columns(
             block_using_rules(nodes, rules, **block), nodes, s,
             concat_with_tf_right=nodes_right,
         )
+    right = nodes if nodes_right is None else nodes_right
+    side = _broadcast_side(nodes, right)
+    if side is nodes and side is not right:
+        nodes = F.broadcast(nodes)
     return block_using_rules(
         nodes, rules, output_columns=_needed_columns(s, nodes),
-        broadcast_right=row_count(nodes) <= BROADCAST_NODES_MAX_ROWS, **block,
+        broadcast_right=side is right, **block,
     )
 
 

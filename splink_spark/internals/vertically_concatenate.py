@@ -8,7 +8,7 @@ column when missing (:52-66); all inputs must share an identical column set
 
 from __future__ import annotations
 
-from typing import Mapping, Optional, Sequence
+from typing import Mapping, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -19,7 +19,8 @@ def vertically_concatenate(
     source_dataset_column_name: Optional[str] = None,
 ) -> DataFrame:
     """Union the named input frames; add ``source_dataset`` if requested and
-    not already present. Column sets must match exactly."""
+    not already present, and then record the names written as the output's
+    ``_splink_dataset_names``. Column sets must match exactly."""
     items = list(frames.items())
     base_cols = items[0][1].columns
     for name, df in items[1:]:
@@ -28,32 +29,19 @@ def vertically_concatenate(
                 f"input {name!r} columns {df.columns} != {base_cols} "
                 "(all inputs must share an identical column set)"
             )
+    synthesize = source_dataset_column_name and source_dataset_column_name not in base_cols
     out_frames = []
     for name, df in items:
         df = df.select(*base_cols)
-        if source_dataset_column_name and source_dataset_column_name not in base_cols:
+        if synthesize:
             df = df.withColumn(source_dataset_column_name, F.lit(name))
         out_frames.append(df)
     out = out_frames[0]
     for df in out_frames[1:]:
         out = out.unionByName(df)
+    if synthesize:
+        out._splink_dataset_names = list(frames)  # type: ignore[attr-defined]
     return out
-
-
-def split_link_only_two_datasets(
-    concat: DataFrame, source_dataset_column_name: str
-) -> Optional[tuple[DataFrame, DataFrame]]:
-    """Two-dataset link_only optimisation (blocking.py:637-659): return the
-    (min-source, max-source) split if exactly two datasets, else None."""
-    names = [
-        r[0]
-        for r in concat.select(source_dataset_column_name).distinct().collect()
-    ]
-    if len(names) != 2:
-        return None
-    lo, hi = sorted(names)
-    c = F.col(source_dataset_column_name)
-    return concat.where(c == lo), concat.where(c == hi)
 
 
 def concat_input_frames(

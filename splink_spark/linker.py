@@ -13,12 +13,14 @@ from typing import Mapping, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .internals.blocking import (
     BlockingRule,
     _pair_filter,
     block_using_rules,
     count_comparisons_per_rule,
+    cross_rule,
     suffix_all,
 )
 from .internals.comparison_vectors import (
@@ -46,10 +48,7 @@ from .internals.term_frequencies import (
     join_term_frequencies,
     tf_column_name,
 )
-from .internals.vertically_concatenate import (
-    split_link_only_two_datasets,
-    vertically_concatenate,
-)
+from .internals.vertically_concatenate import vertically_concatenate
 
 FrameInput = Union[DataFrame, Sequence[DataFrame], Mapping[str, DataFrame]]
 
@@ -98,6 +97,7 @@ class Linker:
         self._concat: Optional[DataFrame] = None
         self._concat_with_tf: Optional[DataFrame] = None
         self._tf_tables: dict[str, DataFrame] = {}  # see tf_tables()
+        self._dataset_names: Optional[list] = None  # see _blocking_nodes()
         # user-registered blocked pairs (table_management): when set,
         # predict() scores these instead of running the blocking join
         self._registered_blocked_pairs: Optional[DataFrame] = None
@@ -202,6 +202,7 @@ class Linker:
                 if self.settings.needs_source_dataset
                 else None,
             )
+            self._dataset_names = getattr(df, "_splink_dataset_names", None)
             # every join over the records keeps their partitions; spread
             # them here, where it costs no job
             df = spread_to_cores(df)
@@ -242,9 +243,18 @@ class Linker:
             "term_frequencies", eager=False)
 
     def _with_tf(self, records: DataFrame) -> DataFrame:
-        """``records`` LEFT-joined to the TF store: how every caller gets
-        TF values."""
-        return join_term_frequencies(records, self.tf_tables())
+        """``records`` LEFT-joined to the TF store: how every caller gets TF
+        values. In a job with source datasets, records without that column
+        get it as NULL first. The joins keep a count memoised on them."""
+        n = getattr(records, "_splink_row_count", None)
+        sd = self.settings.source_dataset_column_name
+        if self.settings.needs_source_dataset and sd not in records.columns:
+            sd_type = self.df_concat().schema[sd].dataType
+            records = records.withColumn(sd, F.lit(None).cast(sd_type))
+        out = join_term_frequencies(records, self.tf_tables())
+        if n is not None:
+            out._splink_row_count = n  # type: ignore[attr-defined]
+        return out
 
     def df_concat_with_tf(self) -> DataFrame:
         """``__splink__df_concat_with_tf`` (vertically_concatenate.py:74-81):
@@ -278,20 +288,22 @@ class Linker:
         """The records a blocking join over the linker's input reads:
         ``(concat_with_tf, None)``, or for a two-dataset link_only job the
         (lower, upper) dataset split, so the join runs table-to-table
-        instead of self-joining the union (blocking.py:637-659)."""
+        instead of self-joining the union (blocking.py:637-659). The dataset
+        names are the ones ``df_concat`` wrote, or else the caller's column
+        read once per linker."""
         concat = self.df_concat_with_tf()
         sd = self.settings.source_dataset_column_name
-        if link_type == "link_only" and sd:
-            split = split_link_only_two_datasets(concat, sd)
-            if split is not None:
-                # the split frames are filters of the persisted concat — the
-                # broadcast/carry decision can reuse the parent's row count
-                # as an upper bound
-                parent_n = getattr(concat, "_splink_row_count", None)
-                if parent_n is not None:
-                    split[0]._splink_row_count = parent_n  # type: ignore[attr-defined]
-                return split
-        return concat, None
+        if link_type != "link_only" or not sd:
+            return concat, None
+        if self._dataset_names is None:
+            self._dataset_names = [r[0] for r in concat.select(sd).distinct().collect()]
+        if len(self._dataset_names) != 2:
+            return concat, None
+        split = tuple(concat.where(F.col(sd) == n) for n in sorted(self._dataset_names))
+        # a filter of the persisted concat: its row count bounds the side's
+        if getattr(concat, "_splink_row_count", None) is not None:
+            split[0]._splink_row_count = concat._splink_row_count  # type: ignore[attr-defined]
+        return split
 
     def blocked_pairs(
         self, rules: Optional[Sequence[BlockingRule]] = None, materialize: bool = True
@@ -351,21 +363,20 @@ class Linker:
         min_match_weight: Optional[float] = None,
     ) -> DataFrame:
         """The one place records become a gamma frame
-        (``__splink__df_comparison_vectors``).
+        (``__splink__df_comparison_vectors``): records are blocked, id pairs
+        are junction-joined.
 
-        ``nodes`` are the TF-joined records, by default the linker's
-        ``df_concat_with_tf``; pairs lie within them unless ``nodes_right``
-        gives a second, disjoint record set for the right side. Given
         ``pairs`` in the id-pair contract (``comparison_vectors.id_pairs``:
-        registered, labelled, chunked or cluster pairs), the records are
-        junction-joined onto them. Otherwise the pairs are blocked from
+        caller, labelled, registered, chunked or cluster pairs) are
+        junction-joined onto the linker's own ``df_concat_with_tf``, so no
+        ``nodes`` may come with them. Otherwise pairs are blocked from
         ``rules`` (default: the prediction rules) under ``link_type``
-        (default: the settings') by ``build_pairs_with_columns``: the
-        blocking join carries the compared columns through, with the records
-        broadcast while they are small. Blocking the linker's own records
-        also applies the link_only split; caller-supplied records (new
-        batches, single requests, training's hash samples) are blocked as
-        given.
+        (default: the settings') by ``build_pairs_with_columns``. ``nodes``
+        are the TF-joined records to block, by default the linker's
+        ``df_concat_with_tf`` (with the link_only split); pairs lie within
+        them unless ``nodes_right`` gives a second record set for the right
+        side. Caller-supplied records (new batches, single requests,
+        training's hash samples) are blocked as given.
 
         Training reads its gammas here too: EM blocks on its training rule
         (over its ``max_pairs`` record sample when one is drawn), and
@@ -377,12 +388,10 @@ class Linker:
         """
         s = self.settings
         if pairs is not None:
-            with_cols = blocked_pairs_with_columns(
-                pairs,
-                nodes if nodes is not None else self.df_concat_with_tf(),
-                s,
-                concat_with_tf_right=nodes_right,
-            )
+            if nodes is not None or nodes_right is not None:
+                raise ValueError("pairs are junction-joined onto the linker's "
+                                 "own records: pass no nodes with them")
+            with_cols = blocked_pairs_with_columns(pairs, self.df_concat_with_tf(), s)
         else:
             with_cols = self.pairs_with_columns(rules, link_type, nodes, nodes_right)
         if min_match_weight is not None:
@@ -689,7 +698,8 @@ class LinkerInference:
         return self._scored(pairs=missing)
 
     def compare_two_records(self, record_1: dict, record_2: dict) -> DataFrame:
-        """realtime.py:44-159 — score one pair without blocking.
+        """realtime.py:44-159 — score one pair: ``predict_between`` over two
+        one-row frames under a cross rule.
 
         Each record is its own side's node table, so the pair is exactly
         (record_1, record_2) even when both carry the same unique id; a
@@ -699,23 +709,17 @@ class LinkerInference:
         timestamp / numeric strings accepted, unparseable → NULL), matching
         the implicit casts users get when the reference registers records
         through its SQL backend. TF values come from the TF store."""
-        s = self._l.settings
-        spark = self._l.spark
-        uid = s.unique_id_column_name
+        uid = self._l.settings.unique_id_column_name
         schema = self._l.df_concat().schema
+        # nullable fields: a record may lack a key the base never misses
+        nullable = StructType([StructField(f.name, f.dataType) for f in schema])
         sides = []
         for record, default_uid in ((record_1, 0), (record_2, 1)):
             r = _coerce_record_to_schema(record, schema)
             r.setdefault(uid, default_uid)
-            nodes = self._l._with_tf(spark.createDataFrame([r], schema=schema))
-            # known size: the broadcast decision needs no count job
-            nodes._splink_row_count = 1  # type: ignore[attr-defined]
-            sides.append((r[uid], nodes))
-        (uid_l, nodes_l), (uid_r, nodes_r) = sides
-        # one record per side: the uid pair names it, no source-dataset key
-        pair = spark.createDataFrame([(uid_l, uid_r)], ["l", "r"])
-        pairs = id_pairs(pair, s, "0", uid=("l", "r"), source_dataset=None)
-        return self._scored(pairs=pairs, nodes=nodes_l, nodes_right=nodes_r)
+            sides.append(self._l.spark.createDataFrame([r], schema=nullable))
+            sides[-1]._splink_row_count = 1  # type: ignore[attr-defined]
+        return self.predict_between(*sides, blocking_rules=[cross_rule()])
 
 
 class LinkerTraining:
@@ -1034,14 +1038,12 @@ class LinkerEvaluation:
                 "multiple input datasets: pass source_dataset= to identify "
                 "the record"
             )
-        pairs = id_pairs(
-            self._l.df_concat(),
-            s,
-            "user",
-            uid=(uid, F.lit(unique_id)),
-            source_dataset=(sd, F.lit(source_dataset)),
-        )
-        scored = self._l.inference._scored(pairs=pairs)
+        records = self._l.df_concat_with_tf()
+        record = records.where(F.col(uid) == unique_id)
+        if sd:
+            record = record.where(F.col(sd) == source_dataset)
+        record._splink_row_count = 1  # type: ignore[attr-defined]  # one key, one record
+        scored = self._l.inference._scored(rules=[cross_rule()], nodes=records, nodes_right=record)
         candidates = scored.where(F.col("match_weight") > match_weight_threshold)
         if out_path:
             import os

@@ -22,6 +22,7 @@ from typing import Any, Optional, Sequence, Union
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .internals.blocking import CustomRule, block_using_rules
 from .internals.comparison_vectors import compute_comparison_vectors
 from .internals.functions import register_udfs
 from .internals.predict import predict_from_comparison_vectors
@@ -97,7 +98,9 @@ def compare_records(
     model in ``settings`` — the reference's ``realtime.compare_records``
     (realtime.py:44-159). Inputs are dicts, lists of dicts, or DataFrames;
     ``join_condition`` is a SQL boolean over tables ``l`` and ``r``
-    (default ``1=1`` = all cross pairs).
+    (default ``1=1`` = all cross pairs), blocked as a ``CustomRule`` with
+    every record column carried through. Right records given as dicts are
+    broadcast; for a DataFrame Spark chooses the join.
 
     ``include_found_by_blocking_rules`` appends a boolean column that is true
     when any of the settings' prediction blocking rules would have produced
@@ -124,17 +127,11 @@ def compare_records(
         for c in missing:
             cast = "double" if c in tf_cols else "string"
             df = df.withColumn(c, F.lit(None).cast(cast))
-        return df.select(*all_cols)
+        return df
 
-    pairs = (
-        norm(left)
-        .alias("l")
-        .join(norm(right).alias("r"), on=F.expr(join_condition), how="inner")
-        .select(
-            F.lit("0").alias("match_key"),
-            *[F.col(f"l.{c}").alias(f"{c}_l") for c in all_cols],
-            *[F.col(f"r.{c}").alias(f"{c}_r") for c in all_cols],
-        )
+    pairs = block_using_rules(
+        norm(left), [CustomRule(join_condition)], nodes_right=norm(right),
+        output_columns=all_cols, broadcast_right=not isinstance(record_2, DataFrame),
     )
     cv = compute_comparison_vectors(pairs, s)
     out = predict_from_comparison_vectors(cv, s)

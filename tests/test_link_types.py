@@ -456,6 +456,42 @@ def test_link_job_pair_tables_need_source_datasets(spark, reused_uids, method):
         call(pairs).collect()
 
 
+# -- link-job serving when the linker synthesized source_dataset -----------
+
+
+def test_link_job_compare_two_records_without_source_datasets(spark, reused_uids):
+    """Records without a source-dataset key score in a link job whose column
+    the linker synthesized: each side gets it as NULL."""
+    linker = _reused_uid_linker(reused_uids, "link_only")
+    rows = linker.inference.compare_two_records(
+        {"unique_id": 1, "name": "ann", "city": "x"},
+        {"unique_id": 2, "name": "ann", "city": "x"},
+    ).collect()
+    assert [(r["unique_id_l"], r["unique_id_r"], r["gamma_name"]) for r in rows] == [(1, 2, 1)]
+    assert rows[0]["source_dataset_l"] is None and rows[0]["source_dataset_r"] is None
+
+
+def test_link_job_find_matches_batch_without_source_datasets(spark, reused_uids):
+    """A new batch without the source-dataset column is matched against both
+    datasets of a link job."""
+    linker = _reused_uid_linker(reused_uids, "link_only")
+    new = spark.createDataFrame([(9, "ann", "x")], ["unique_id", "name", "city"])
+    rows = linker.inference.find_matches_to_new_records(new).collect()
+    assert sorted((r["source_dataset_l"], r["unique_id_l"], r["unique_id_r"], r["source_dataset_r"])
+                  for r in rows) == [("a", 1, 9, None), ("b", 1, 9, None)]
+
+
+def test_link_only_split_runs_no_job(spark, reused_uids, count_jobs):
+    """The two-dataset link_only split takes the dataset names from the
+    linker's inputs when it synthesized the column: blocking its records
+    runs no job."""
+    linker = _reused_uid_linker(reused_uids, "link_only")
+    assert count_jobs(lambda: linker._blocking_nodes("link_only")) == 0
+    lo, hi = linker._blocking_nodes("link_only")
+    assert {r["source_dataset"] for r in lo.collect()} == {"a"}
+    assert {r["source_dataset"] for r in hi.collect()} == {"b"}
+
+
 # -- the five clustering methods on reused uids, driver vs distributed CC ----
 
 

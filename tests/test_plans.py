@@ -154,6 +154,56 @@ def test_rule_blocked_gammas_match_caller_pairs(spark):
                                block_on("grp")])))
 
 
+def test_caller_pairs_are_joined_onto_the_linkers_own_records(spark):
+    """Id pairs are junction-joined onto the linker's records only: records
+    passed alongside them are refused, not silently ignored."""
+    from splink_spark.internals.comparison_vectors import id_pairs
+
+    df = spark.createDataFrame([(i, f"n{i % 2}") for i in range(4)], ["unique_id", "name"])
+    settings = SettingsCreator(
+        comparisons=[_set(cl.ExactMatch("name"), {1: (0.9, 0.1), 0: (0.1, 0.9)})],
+        blocking_rules_to_generate_predictions=[block_on("name")],
+        probability_two_random_records_match=0.1,
+    )
+    linker = Linker(df, settings)
+    pairs = id_pairs(linker.comparison_vectors(), linker.settings, F.col("match_key"))
+    for records in ({"nodes": df}, {"nodes_right": df}):
+        with pytest.raises(ValueError, match="junction-joined"):
+            linker.comparison_vectors(pairs=pairs, **records)
+
+
+def test_blocking_broadcasts_each_side_from_its_own_count(spark, monkeypatch, count_jobs):
+    """Between two record sets each side of the blocking join is broadcast
+    from its own row count (cutover 3 here): of 2 and 10 records only the 2
+    are broadcast, and a 2-record batch is broadcast against a 10-record
+    base. Under a cutover the base meets, the base is broadcast and a new
+    batch is not counted."""
+    import splink_spark.internals.comparison_vectors as cv
+
+    monkeypatch.setattr(cv, "BROADCAST_NODES_MAX_ROWS", 3)
+    rows = [(i, f"n{i % 3}", f"c{i % 2}") for i in range(12)]
+    df = spark.createDataFrame(rows, ["unique_id", "name", "city"])
+    few, many = df.where("unique_id < 2"), df.where("unique_id >= 2")
+    settings = SettingsCreator(
+        comparisons=[_set(cl.ExactMatch("name"), {1: (0.9, 0.1), 0: (0.1, 0.9)})],
+        blocking_rules_to_generate_predictions=[block_on("city")],
+        probability_two_random_records_match=0.1,
+    )
+    linker = Linker(many, settings)
+    between = _plan(linker.inference.predict_between(few, many))
+    assert "Inner, BuildLeft" in between and "Inner, BuildRight" not in between
+    found = _plan(linker.inference.find_matches_to_new_records(few))
+    assert "Inner, BuildRight" in found
+    monkeypatch.setattr(cv, "BROADCAST_NODES_MAX_ROWS", 100)
+    # the first uncounted batch has the base counted, once per linker
+    linker.inference.find_matches_to_new_records(df.where("unique_id < 4"))
+    batch = df.where("unique_id < 3")
+    jobs = count_jobs(lambda: linker.inference.find_matches_to_new_records(batch))
+    assert jobs == 0 and not hasattr(batch, "_splink_row_count")
+    found = _plan(linker.inference.find_matches_to_new_records(batch))
+    assert "Inner, BuildLeft" in found and "Inner, BuildRight" not in found
+
+
 def test_thresholded_predict_persists_only_survivors_one_scoring_pass(
     spark, parquet_persons
 ):
@@ -430,11 +480,9 @@ def test_numeric_barrier_blocks_collapse_project(spark):
     assert vals == sorted((i * 3) * 3 * 3 for i in range(10))
 
 
-def test_dedupe_pipeline_job_budget(spark, count_jobs):
-    """Spark jobs per phase of a small trained dedupe (the benchmark's
-    model shape: two TF columns, two prediction rules). Each exchange
-    materializes as a job, so a new exchange or action in λ, u, an EM
-    session or predict changes a count here."""
+def _budget_linker(spark) -> Linker:
+    """A small dedupe in the benchmark's model shape: two TF columns, two
+    prediction rules."""
     import random
 
     rng = random.Random(7)
@@ -457,7 +505,14 @@ def test_dedupe_pipeline_job_budget(spark, count_jobs):
             block_on("surname", "dob"), block_on("email")],
         probability_two_random_records_match=0.01,
     )
-    linker = Linker(df, settings)
+    return Linker(df, settings)
+
+
+def test_dedupe_pipeline_job_budget(spark, count_jobs):
+    """Spark jobs per phase of a small trained dedupe. Each exchange
+    materializes as a job, so a new exchange or action in λ, u, an EM
+    session or predict changes a count here."""
+    linker = _budget_linker(spark)
     t = linker.training
     out = {}
 
@@ -474,4 +529,38 @@ def test_dedupe_pipeline_job_budget(spark, count_jobs):
     phase("predict", lambda: linker.inference.predict(
         threshold_match_probability=0.01)._splink_narrow.count())
     assert out == {"lambda": 1, "u": 5, "em_email": 2, "em_surname_dob": 2, "predict": 3}
+    linker.misc.invalidate_cache()
+
+
+def test_serving_job_budget(spark, count_jobs):
+    """Spark jobs per serving call against a small dedupe, once its TF store
+    is built. Every call blocks records: each side's broadcast is decided
+    from its own memoised count, so a one-record side pays no count job."""
+    linker = _budget_linker(spark)
+    for comp in linker.settings.comparisons:
+        for lv in comp.comparison_levels:
+            if not lv.is_null_level:
+                lv.m_probability, lv.u_probability = (
+                    (0.9, 0.1) if lv.comparison_vector_value > 0 else (0.1, 0.9))
+    record = {"unique_id": 1000, "first_name": "f1", "surname": "s1", "dob": "d1",
+              "city": "c1", "email": "e1"}
+    batch = spark.createDataFrame(
+        [dict(record, unique_id=1000 + i) for i in range(3)],
+        linker.df_concat().schema)
+    calls = {
+        "compare_two_records": lambda: linker.inference.compare_two_records(
+            record, dict(record, unique_id=1001)).collect(),
+        "unlinkables_table": lambda: linker.evaluation.unlinkables_table().collect(),
+        "labelling_tool": lambda: linker.evaluation.labelling_tool_for_specific_record(
+            3).collect(),
+        "find_matches_to_new_records": lambda: linker.inference.find_matches_to_new_records(
+            batch).collect(),
+    }
+    out = {}
+    for name, call in calls.items():
+        call()
+        out[name] = count_jobs(call)
+    # the id-pair route these calls took before ran 5, 3, 3 and 5 jobs
+    assert out == {"compare_two_records": 4, "unlinkables_table": 3,
+                   "labelling_tool": 2, "find_matches_to_new_records": 5}
     linker.misc.invalidate_cache()

@@ -103,6 +103,43 @@ def test_compare_records_tables_and_join_condition(spark, rt_settings, rt_record
     assert all(r["found_by_blocking_rules"] for r in rows)
 
 
+def test_compare_records_found_by_a_rule_on_an_uncompared_column(spark, rt_settings):
+    """``include_found_by_blocking_rules`` evaluates a prediction rule on a
+    column no comparison reads (dob): every record column rides through the
+    blocking join, not only the compared ones."""
+    import dataclasses
+
+    settings = dataclasses.replace(
+        rt_settings, blocking_rules_to_generate_predictions=[block_on("dob")]
+    )
+    rows = realtime.compare_records(
+        {"unique_id": 0, "first_name": "ada", "city": "hull", "dob": "1990"},
+        [
+            {"unique_id": 1, "first_name": "ada", "city": "hull", "dob": "1990"},
+            {"unique_id": 2, "first_name": "ada", "city": "hull", "dob": "1991"},
+        ],
+        settings,
+        spark=spark,
+        include_found_by_blocking_rules=True,
+    ).collect()
+    assert {r["unique_id_r"]: r["found_by_blocking_rules"] for r in rows} == {
+        1: True, 2: False}
+
+
+def test_compare_records_hints_only_dict_records_for_broadcast(spark, rt_settings):
+    """Right records given as dicts are broadcast; a caller's DataFrame may
+    be of any size, so its join is left to Spark."""
+    left = {"unique_id": 0, "first_name": "ada", "city": "hull"}
+    right = [{"unique_id": 1, "first_name": "ada", "city": "hull"}]
+
+    def hinted(record_2):
+        out = realtime.compare_records(left, record_2, rt_settings, spark=spark)
+        return "broadcast" in out._jdf.queryExecution().analyzed().toString()
+
+    assert hinted(right)
+    assert not hinted(spark.createDataFrame(right))
+
+
 def test_compare_records_missing_column_scores_null_level(spark, rt_settings):
     out = realtime.compare_records(
         {"unique_id": 0, "first_name": "ada", "city": "hull"},
@@ -196,8 +233,9 @@ def _persisted(spark) -> set:
 def test_realtime_requests_reuse_the_tf_store_and_release_it(spark, rt_settings, count_jobs):
     """Requests read the linker's persisted TF store instead of rebuilding
     TF tables: after the first request they persist nothing new, a
-    repeated ``compare_two_records`` runs at most 4 jobs (7 here when each
-    request re-aggregated its TF table), and ``invalidate_cache`` returns
+    repeated ``compare_two_records`` runs at most 3 jobs (7 here when each
+    request re-aggregated its TF table, 4 when it junction-joined a uid
+    pair), and ``invalidate_cache`` returns
     the persisted RDDs to what they were before the linker existed."""
     rows = [(i, f"n{i % 7}", f"c{i % 5}") for i in range(60)]
     records = spark.createDataFrame(rows, ["unique_id", "first_name", "city"])
@@ -221,7 +259,7 @@ def test_realtime_requests_reuse_the_tf_store_and_release_it(spark, rt_settings,
                 linker.inference.compare_two_records(r1, r2).collect()[0]["match_weight"]
             ),
         )
-        assert jobs <= 4
+        assert jobs <= 3
     assert len(weights) == 1
     assert _persisted(spark) - served == set()
 
