@@ -344,7 +344,8 @@ def _fold(cols, op):
 
 
 def suffix_all(df: DataFrame, suffix: str) -> DataFrame:
-    return df.select([F.col(c).alias(f"{c}{suffix}") for c in df.columns])
+    # one toDF, not a Column per name: each pyspark Column costs py4j calls
+    return df.toDF(*[f"{c}{suffix}" for c in df.columns])
 
 
 def _pair_filter(link_type: str, uid: str, source_dataset: Optional[str]) -> Column:
@@ -397,12 +398,9 @@ def block_using_rules(
                 "carry-through blocking output is not supported with "
                 "exploding rules (pair dedup must run on ids)"
             )
-        out_cols = [F.col("match_key")] + [
-            F.col(f"{c}_{side}") for side in ("l", "r") for c in output_columns
-        ]
+        out_cols = [f"{c}_{side}" for side in ("l", "r") for c in output_columns]
     else:
         out_cols = [
-            F.col("match_key"),
             F.col(f"{uid}_l").alias("join_key_l"),
             F.col(f"{uid}_r").alias("join_key_r"),
         ]
@@ -410,10 +408,9 @@ def block_using_rules(
         # dataset, so the downstream junction join needs (source, uid) keys
         if source_dataset_column_name and source_dataset_column_name in left_raw.columns:
             out_cols = [
-                F.col("match_key"),
                 F.col(f"{source_dataset_column_name}_l").alias("source_dataset_l"),
                 F.col(f"{source_dataset_column_name}_r").alias("source_dataset_r"),
-            ] + out_cols[1:]
+            ] + out_cols
 
     results: list[DataFrame] = []
     for k, rule in enumerate(rules):
@@ -452,7 +449,7 @@ def block_using_rules(
         if broadcast_right:
             rhs = F.broadcast(rhs)
         joined = lhs.join(rhs, on=cond & where, how="inner")
-        pairs = joined.select(F.lit(str(k)).alias("match_key"), *[c for c in out_cols[1:]])
+        pairs = joined.select(F.lit(str(k)).alias("match_key"), *out_cols)
         if rule.exploded_columns:
             pairs = pairs.distinct()
         results.append(pairs)
@@ -497,19 +494,6 @@ def _sample_records(
     return sampled, threshold / _SAMPLE_MODULUS
 
 
-def cartesian_count(
-    nodes: DataFrame, link_type: str, source_dataset_column_name: Optional[str] = None
-) -> int:
-    """Total possible comparisons among ``nodes`` (misc.calculate_cartesian):
-    link_only counts per source dataset; every other link type, and nodes
-    without a source-dataset column, pair all records once."""
-    sd = source_dataset_column_name
-    if link_type == "link_only" and sd and sd in nodes.columns:
-        counts = [r["count"] for r in nodes.groupBy(sd).count().collect()]
-        return calculate_cartesian(counts, link_type)
-    return calculate_cartesian([row_count(nodes)], "dedupe_only")
-
-
 def count_comparisons_per_rule(
     nodes: DataFrame,
     rules: Sequence[BlockingRule],
@@ -545,7 +529,14 @@ def count_comparisons_per_rule(
         r["match_key"]: r["n"]
         for r in pairs.groupBy("match_key").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    cartesian = cartesian_count(nodes, link_type, source_dataset_column_name)
+    # total possible comparisons: link_only counts per source dataset; every
+    # other link type, and nodes without a source dataset, pair all records
+    sd = source_dataset_column_name
+    if link_type == "link_only" and sd and sd in nodes.columns:
+        counts = [r["count"] for r in nodes.groupBy(sd).count().collect()]
+        cartesian = calculate_cartesian(counts, link_type)
+    else:
+        cartesian = calculate_cartesian([row_count(nodes)], "dedupe_only")
 
     scale = 1.0 / (fraction**2)
     out = []

@@ -136,7 +136,7 @@ def blocked_pairs_with_columns(
     right_src = concat_with_tf_right if concat_with_tf_right is not None else concat_with_tf
 
     def narrow(nodes, side):
-        out = nodes.select([F.col(c).alias(f"{c}_{side}") for c in cols])
+        out = nodes.select(*cols).toDF(*[f"{c}_{side}" for c in cols])
         return F.broadcast(out) if row_count(nodes) <= BROADCAST_NODES_MAX_ROWS else out
 
     narrow_l, narrow_r = narrow(concat_with_tf, "l"), narrow(right_src, "r")

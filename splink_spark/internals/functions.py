@@ -272,12 +272,31 @@ _JAVA_UDF_CLASSES = [
 ]
 
 
+def _build_similarity_jar(src: str, jar: str) -> None:
+    """Compile ``src`` against pyspark's jars into ``jar``; the manifest's
+    ``Source-SHA256`` records the sha256 of ``src``."""
+    import hashlib
+    import os
+    import subprocess
+    import tempfile
+
+    import pyspark
+
+    pyjars = os.path.join(os.path.dirname(pyspark.__file__), "jars", "*")
+    with open(src, "rb") as f, tempfile.TemporaryDirectory() as td:
+        manifest = os.path.join(td, "MANIFEST.MF")
+        with open(manifest, "w") as m:
+            m.write(f"Source-SHA256: {hashlib.sha256(f.read()).hexdigest()}\n")
+        for cmd in (["javac", "-encoding", "UTF-8", "-cp", pyjars, "-d", td, src],
+                    ["jar", "cfm", jar, manifest, "-C", td, "splinkspark"]):
+            subprocess.run(cmd, check=True, capture_output=True, timeout=120)
+
+
 def _ensure_similarity_jar() -> "str | None":
     """Path to the compiled similarity jar; rebuild from the committed Java
     source with the host javac if the artifact is missing. Returns None when
     neither is possible (pandas fallback takes over)."""
     import os
-    import subprocess
     import tempfile
 
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -295,20 +314,9 @@ def _ensure_similarity_jar() -> "str | None":
     if built_dir and os.path.exists(os.path.join(built_dir, "splink-similarity.jar")):
         return os.path.join(built_dir, "splink-similarity.jar")
     try:
-        import pyspark
-
-        pyjars = os.path.join(os.path.dirname(pyspark.__file__), "jars", "*")
         out_dir = tempfile.mkdtemp(prefix="splink-simjar-")
         built = os.path.join(out_dir, "splink-similarity.jar")
-        with tempfile.TemporaryDirectory() as td:
-            subprocess.run(
-                ["javac", "-encoding", "UTF-8", "-cp", pyjars, "-d", td, src],
-                check=True, capture_output=True, timeout=120,
-            )
-            subprocess.run(
-                ["jar", "cf", built, "-C", td, "."],
-                check=True, capture_output=True, timeout=120,
-            )
+        _build_similarity_jar(src, built)
         _ensure_similarity_jar._built_dir = out_dir  # type: ignore[attr-defined]
         return built
     except Exception:

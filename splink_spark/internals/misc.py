@@ -96,29 +96,27 @@ def row_count(df) -> int:
 
 def optimizer_barrier(col):
     """Value-stable identity wrapper that Catalyst cannot optimize through:
-    ``shuffle(array(col))[0]`` — shuffling a one-element array is the
-    identity, but ``shuffle`` is declared nondeterministic, so
-    CollapseProject / alias substitution refuse to inline expressions
-    staged behind it. Used to MATERIALIZE an expensive expression (token
-    array, scored match weight) once per row where inlining would
-    re-evaluate it per downstream reference (measured O(L²) token
-    re-splits, double scoring passes; 2x wins on the predict path).
+    ``shuffle(array(col), 0)[0]`` — shuffling a one-element array is the
+    identity, but ``shuffle`` is nondeterministic, so CollapseProject and
+    alias substitution refuse to inline expressions staged behind it. Used
+    to MATERIALIZE an expensive expression (token array, match weight) once
+    per row where inlining would re-evaluate it per downstream reference
+    (measured O(L²) token re-splits, double scoring passes).
 
-    CONTRACT NOTE: this leans on undocumented optimizer behavior (the
-    nondeterminism check inside CollapseProject/PhysicalOperation). The
-    canary test ``tests/test_plans.py::
-    test_nondeterministic_barrier_blocks_collapse_project`` fails loudly
-    if a Spark upgrade starts optimizing through it. Fallbacks if that
-    happens: (a) set ``spark.sql.optimizer.excludedRules =
-    org.apache.spark.sql.catalyst.optimizer.CollapseProject`` on the
-    session, or (b) replace the barrier stage with
-    ``df.localCheckpoint(eager=False)`` — both keep the staged
-    materialization at the cost of, respectively, plan-wide collapse
-    suppression or a checkpoint write.
+    CONTRACT NOTE: this leans on undocumented optimizer behavior, guarded
+    by the canary ``tests/test_plans.py::
+    test_nondeterministic_barrier_blocks_collapse_project``. If it fires,
+    set ``spark.sql.optimizer.excludedRules`` to CollapseProject or stage
+    with ``df.localCheckpoint(eager=False)`` instead.
+
+    SEED CONTRACT: a barrier must be seeded, or every plan compiles unique,
+    JIT-cold code: the analyzer gives an unseeded ``shuffle`` a fresh random
+    seed, written into the generated Java. Seeded, a repeated plan reuses
+    Spark's compiled classes; any seed is the identity on one element.
     """
     from pyspark.sql import functions as F
 
-    return F.shuffle(F.array(col)).getItem(0)
+    return F.shuffle(F.array(col), 0).getItem(0)
 
 
 def optimizer_barrier_numeric(col, dtype: str = "bigint"):

@@ -38,7 +38,6 @@ from .blocking import (
     CustomRule,
     _sample_records,
     block_using_rules,
-    cartesian_count,
     count_comparisons_per_rule,
 )
 from .comparison_vectors import id_pairs
@@ -53,10 +52,11 @@ logger = logging.getLogger(__name__)
 # ---------------------------------------------------------------------------
 
 
-def _deterministic_pairs_count_via_aggregation(linker, rules) -> Optional[int]:
-    """Exact count of the pairs the deterministic rules produce WITHOUT
-    executing any self-join: per-blocking-key record counts + inclusion-
-    exclusion over the rule subsets.
+def _deterministic_pairs_count_via_aggregation(linker, rules) -> Optional[tuple[int, int]]:
+    """``(observed, cartesian)``: the exact count of the pairs the
+    deterministic rules produce WITHOUT executing any self-join (per-
+    blocking-key record counts + inclusion-exclusion over the rule subsets),
+    and the count of all possible pairs.
 
     A pure-equality rule's pair set is fully determined by per-key record
     counts (sum of c*(c-1)/2), and the intersection of two equality rules is
@@ -65,7 +65,7 @@ def _deterministic_pairs_count_via_aggregation(linker, rules) -> Optional[int]:
     ONE ``GROUPING SETS`` aggregate (one shuffle) over the cached concat
     instead of k self-joins — the O(distinct keys) shape of the pre-filter
     estimator (reference blocking_analysis.py:78-190), but exact. The empty
-    key set's count is memoised on ``df_concat`` (``row_count``).
+    key set gives the cartesian and a count memoised on ``df_concat``.
 
     Returns None when any rule is not pure-equality (or there are too many
     rules) — the caller falls back to executing the blocking join.
@@ -125,12 +125,14 @@ def _deterministic_pairs_count_via_aggregation(linker, rules) -> Optional[int]:
     coef = F.lit(0)
     for ks in sets:
         coef = F.when(F.col("__gid") == gid(ks), sign[ks]).otherwise(coef)
+    everything = F.col("__gid") == gid(frozenset())
     row = counts.agg(
         F.sum(coef * pairs).alias("observed"),
-        F.sum(F.when(F.col("__gid") == gid(frozenset()), F.col("tot"))).alias("n"),
+        F.sum(F.when(everything, pairs)).alias("cartesian"),
+        F.sum(F.when(everything, F.col("tot"))).alias("n"),
     ).collect()[0]
     concat._splink_row_count = int(row["n"] or 0)
-    return int(row["observed"] or 0)
+    return int(row["observed"] or 0), int(row["cartesian"] or 0)
 
 
 def estimate_probability_two_random_records_match(
@@ -144,23 +146,23 @@ def estimate_probability_two_random_records_match(
     rules = [r if isinstance(r, BlockingRule) else CustomRule(r) for r in deterministic_rules]
     s = linker.settings
     sd = s.source_dataset_column_name if s.needs_source_dataset else None
-    observed = None
-    if record_sample_proportion >= 1.0:
-        observed = _deterministic_pairs_count_via_aggregation(linker, rules)
-    if observed is None:
+    counted = (_deterministic_pairs_count_via_aggregation(linker, rules)
+               if record_sample_proportion >= 1.0 else None)
+    if counted is None:
         # reference linker_components/training.py:39 — the blocking-analysis
         # counter executes the join (on records sampled on both sides and
         # scaled back up by 1/p**2 when p < 1) and owns the dedup across
         # rules and the small-sample warning
-        observed = count_comparisons_per_rule(
+        last = count_comparisons_per_rule(
             linker.df_concat(),
             rules,
             link_type=s.link_type,
             unique_id_column_name=s.unique_id_column_name,
             source_dataset_column_name=sd,
             record_sample_proportion=record_sample_proportion,
-        )[-1]["cumulative_comparison_count"]
-    total = cartesian_count(linker.df_concat(), s.link_type, sd)
+        )[-1]
+        counted = last["cumulative_comparison_count"], last["total_possible_comparison_count"]
+    observed, total = counted
     prob = observed / recall / total if total else 0.0
     prob = min(max(prob, 1e-12), 1 - 1e-12)
     s.probability_two_random_records_match = prob

@@ -1,7 +1,6 @@
 package splinkspark;
 
-import java.util.HashMap;
-import java.util.HashSet;
+import java.util.Arrays;
 import org.apache.spark.sql.api.java.UDF2;
 
 /**
@@ -26,18 +25,38 @@ public final class Similarity {
      * All kernels operate on Unicode CODE POINTS, not UTF-16 code units —
      * Python's len()/indexing is code-point based, and the advertised
      * bit-for-bit parity with the pandas fallback must hold for non-BMP
-     * characters (emoji, rare CJK) too.
+     * characters (emoji, rare CJK) too. A plain loop: no stream, and no
+     * copy when the string has no surrogate pair.
      */
     private static int[] cps(String s) {
-        return s.codePoints().toArray();
+        int n = s.length();
+        int[] out = new int[n];
+        int k = 0;
+        for (int i = 0; i < n; k++) {
+            int cp = s.codePointAt(i);
+            out[k] = cp;
+            i += Character.charCount(cp);
+        }
+        return k == n ? out : Arrays.copyOf(out, k);
+    }
+
+    /** The distinct values of {@code a}, sorted (sorts {@code a} in place). */
+    private static int[] sortedDistinct(int[] a) {
+        Arrays.sort(a);
+        int n = 0;
+        for (int i = 0; i < a.length; i++) {
+            if (n == 0 || a[n - 1] != a[i]) {
+                a[n++] = a[i];
+            }
+        }
+        return n == a.length ? a : Arrays.copyOf(a, n);
     }
 
     public static double jaro(String s1, String s2) {
-        if (s1.equals(s2)) {
-            return 1.0;
-        }
-        int[] a = cps(s1);
-        int[] b = cps(s2);
+        return s1.equals(s2) ? 1.0 : jaro(cps(s1), cps(s2));
+    }
+
+    private static double jaro(int[] a, int[] b) {
         int len1 = a.length;
         int len2 = b.length;
         if (len1 == 0 || len2 == 0) {
@@ -88,13 +107,17 @@ public final class Similarity {
     }
 
     public static double jaroWinkler(String s1, String s2) {
-        double jaro = jaro(s1, s2);
+        // equal strings score jaro 1.0, which no prefix bonus changes
+        if (s1.equals(s2)) {
+            return 1.0;
+        }
+        int[] a = cps(s1);
+        int[] b = cps(s2);
+        double jaro = jaro(a, b);
         // Winkler prefix bonus only above 0.7 (DuckDB / rapidfuzz default)
         if (jaro <= 0.7) {
             return jaro;
         }
-        int[] a = cps(s1);
-        int[] b = cps(s2);
         int prefix = 0;
         int bound = Math.min(4, Math.min(a.length, b.length));
         for (int i = 0; i < bound; i++) {
@@ -107,30 +130,67 @@ public final class Similarity {
         return jaro + prefix * 0.1 * (1.0 - jaro);
     }
 
-    /** Character-set Jaccard similarity (DuckDB jaccard semantics). */
+    /**
+     * Character-set Jaccard similarity (DuckDB jaccard semantics). Two ASCII
+     * strings are two 128-bit masks counted with popcount; any other pair
+     * intersects its sorted distinct code points by a merge.
+     */
     public static double jaccardChars(String s1, String s2) {
-        HashSet<Integer> a = new HashSet<>();
-        HashSet<Integer> b = new HashSet<>();
-        for (int cp : cps(s1)) {
-            a.add(cp);
-        }
-        for (int cp : cps(s2)) {
-            b.add(cp);
-        }
-        if (a.isEmpty() && b.isEmpty()) {
-            return 1.0;
-        }
-        int inter = 0;
-        for (Integer c : a) {
-            if (b.contains(c)) {
-                inter++;
+        long lo1 = 0L;
+        long hi1 = 0L;
+        long lo2 = 0L;
+        long hi2 = 0L;
+        boolean ascii = true;
+        for (int i = 0; ascii && i < s1.length(); i++) {
+            char c = s1.charAt(i);
+            ascii = c < 128;
+            if (c < 64) {
+                lo1 |= 1L << c;
+            } else {
+                hi1 |= 1L << c;  // shifts use the low 6 bits: bit c - 64
             }
         }
-        int union = a.size() + b.size() - inter;
-        return union == 0 ? 0.0 : (double) inter / union;
+        for (int i = 0; ascii && i < s2.length(); i++) {
+            char c = s2.charAt(i);
+            ascii = c < 128;
+            if (c < 64) {
+                lo2 |= 1L << c;
+            } else {
+                hi2 |= 1L << c;
+            }
+        }
+        int inter;
+        int union;
+        if (ascii) {
+            inter = Long.bitCount(lo1 & lo2) + Long.bitCount(hi1 & hi2);
+            union = Long.bitCount(lo1 | lo2) + Long.bitCount(hi1 | hi2);
+        } else {
+            int[] a = sortedDistinct(cps(s1));
+            int[] b = sortedDistinct(cps(s2));
+            inter = 0;
+            for (int i = 0, j = 0; i < a.length && j < b.length; ) {
+                if (a[i] < b[j]) {
+                    i++;
+                } else if (a[i] > b[j]) {
+                    j++;
+                } else {
+                    inter++;
+                    i++;
+                    j++;
+                }
+            }
+            union = a.length + b.length - inter;
+        }
+        // union is 0 only when both sets are empty
+        return union == 0 ? 1.0 : (double) inter / union;
     }
 
-    /** Unrestricted Damerau-Levenshtein (adjacent transpositions). */
+    /**
+     * Unrestricted Damerau-Levenshtein (adjacent transpositions). The
+     * (len1 + 2) x (len2 + 2) table is one flat array; the last row each
+     * character of s1 was seen on is a primitive table indexed by the
+     * character's rank among s1's distinct code points.
+     */
     public static int damerauLevenshtein(String s1, String s2) {
         if (s1.equals(s2)) {
             return 0;
@@ -145,22 +205,35 @@ public final class Similarity {
         if (len2 == 0) {
             return len1;
         }
+        int[] alphabet = sortedDistinct(a.clone());
+        int[] rankA = new int[len1];
+        for (int i = 0; i < len1; i++) {
+            rankA[i] = Arrays.binarySearch(alphabet, a[i]);
+        }
+        int[] rankB = new int[len2];
+        for (int j = 0; j < len2; j++) {
+            rankB[j] = Arrays.binarySearch(alphabet, b[j]);  // < 0: not in s1
+        }
+        int[] da = new int[alphabet.length];
+        int w = len2 + 2;
         int maxdist = len1 + len2;
-        HashMap<Integer, Integer> da = new HashMap<>();
-        int[][] d = new int[len1 + 2][len2 + 2];
-        d[0][0] = maxdist;
+        int[] d = new int[(len1 + 2) * w];
+        d[0] = maxdist;
         for (int i = 0; i <= len1; i++) {
-            d[i + 1][0] = maxdist;
-            d[i + 1][1] = i;
+            d[(i + 1) * w] = maxdist;
+            d[(i + 1) * w + 1] = i;
         }
         for (int j = 0; j <= len2; j++) {
-            d[0][j + 1] = maxdist;
-            d[1][j + 1] = j;
+            d[j + 1] = maxdist;
+            d[w + j + 1] = j;
         }
         for (int i = 1; i <= len1; i++) {
             int db = 0;
+            int row = (i + 1) * w;
+            int up = i * w;
             for (int j = 1; j <= len2; j++) {
-                int k = da.getOrDefault(b[j - 1], 0);
+                int rb = rankB[j - 1];
+                int k = rb < 0 ? 0 : da[rb];
                 int l = db;
                 int cost;
                 if (a[i - 1] == b[j - 1]) {
@@ -169,14 +242,14 @@ public final class Similarity {
                 } else {
                     cost = 1;
                 }
-                d[i + 1][j + 1] = Math.min(
-                    Math.min(d[i][j] + cost, d[i + 1][j] + 1),
-                    Math.min(d[i][j + 1] + 1,
-                             d[k][l] + (i - k - 1) + 1 + (j - l - 1)));
+                d[row + j + 1] = Math.min(
+                    Math.min(d[up + j] + cost, d[row + j] + 1),
+                    Math.min(d[up + j + 1] + 1,
+                             d[k * w + l] + (i - k - 1) + 1 + (j - l - 1)));
             }
-            da.put(a[i - 1], i);
+            da[rankA[i - 1]] = i;
         }
-        return d[len1 + 1][len2 + 1];
+        return d[(len1 + 1) * w + len2 + 1];
     }
 
     public static final class JaroSim implements UDF2<String, String, Double> {

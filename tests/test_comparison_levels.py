@@ -466,6 +466,24 @@ def test_jvm_similarity_pack_matches_python_kernels(spark):
         )
         for _ in range(500)
     ]
+    # the kernels' fast paths: Jaccard's two 64-bit ASCII mask halves
+    # (characters 0, 63, 64, 127) and the code-point path above them (128,
+    # 255), repeated characters, empty strings, non-BMP code points, strings
+    # longer than 64 characters, and pairs mixing ASCII with non-ASCII
+    edges = "\x00?@\x7f\x80\xff"
+    long_ascii = "".join(rng.choices("ab?@\x00\x7f", k=70))
+    words = ["", "a", "aaaa", "abab", "baba", edges, edges[:4], edges[4:] * 2,
+             "\x00\x00?", "@\x7f@", "ab\U0001f600ab", "\U0001f600\U0001f600x",
+             long_ascii, long_ascii[::-1], long_ascii + "\xe9", "x" * 80, "na\xefve", "naive"]
+    pairs += [(a, b) for a in words for b in words]
+    for alpha, k in ((edges + "ab", 12), (edges + "ab\U0001f600", 90)):
+        pairs += [
+            (
+                "".join(rng.choices(alpha, k=rng.randrange(0, k))),
+                "".join(rng.choices(alpha, k=rng.randrange(0, k))),
+            )
+            for _ in range(150)
+        ]
     df = spark.createDataFrame(pairs, ["a", "b"])
     got = spark.sql(
         "SELECT a, b, jaro_winkler(a,b) jw, jaro_sim(a,b) j, jaccard(a,b) jc, "
@@ -477,6 +495,27 @@ def test_jvm_similarity_pack_matches_python_kernels(spark):
         assert r["j"] == _jaro(r["a"], r["b"])
         assert r["jc"] == _jaccard_charset(r["a"], r["b"])
         assert r["dl"] == float(_damerau_levenshtein(r["a"], r["b"]))
+
+
+def test_committed_similarity_jar_matches_its_source():
+    """The committed jar's manifest records the sha256 of the Similarity.java
+    it was compiled from. The jar is used whenever it exists, so a source
+    edit without a rebuild would otherwise ship the old classes silently;
+    rebuild with ``functions._build_similarity_jar``."""
+    import hashlib
+    import os
+    import zipfile
+
+    import splink_spark
+
+    pkg = os.path.dirname(splink_spark.__file__)
+    with zipfile.ZipFile(os.path.join(pkg, "jars", "splink-similarity.jar")) as jar:
+        manifest = jar.read("META-INF/MANIFEST.MF").decode()
+    # manifest lines wrap at 72 bytes; a continuation starts with a space
+    fields = manifest.replace("\r\n", "\n").replace("\n ", "").splitlines()
+    with open(os.path.join(pkg, "java", "Similarity.java"), "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()
+    assert f"Source-SHA256: {digest}" in fields, fields
 
 
 def test_else_level_must_be_last():

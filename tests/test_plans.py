@@ -251,6 +251,36 @@ def test_thresholded_predict_persists_only_survivors_one_scoring_pass(
     assert narrow.count() == len(got)
 
 
+def test_repeated_predict_compiles_no_new_code(spark, parquet_persons):
+    """Every optimizer barrier is seeded (misc.optimizer_barrier), so a
+    repeated identical thresholded predict generates the same Java and
+    Spark's codegen cache serves it. An unseeded ``shuffle`` gets a fresh random
+    seed per plan, written into the generated code: every predict compiled
+    new classes and ran them JIT-cold."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    settings = SettingsCreator(
+        comparisons=[
+            _set(cl.LevenshteinAtThresholds("first_name", [2]),
+                 {2: (0.8, 0.01), 1: (0.15, 0.09), 0: (0.05, 0.9)}),
+            _set(cl.ExactMatch("surname"), {1: (0.9, 0.02), 0: (0.1, 0.98)}),
+        ],
+        blocking_rules_to_generate_predictions=[block_on("dob")],
+        probability_two_random_records_match=0.05,
+    )
+
+    def predict_once():
+        linker = Linker(parquet_persons, settings)
+        linker.inference.predict(threshold_match_probability=0.5).collect()
+        linker.misc.invalidate_cache()
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
+    # the first run also releases any equal plan an earlier test left
+    # cached, so the next two run the same stages
+    predict_once()
+    second = predict_once()
+    assert predict_once() == second
+
+
 def test_bucketed_materialization_joins_without_exchange(spark, persons, tmp_path):
     """materialize_bucketed (SURVEY §7 step 10): two tables bucketed on the
     same key with the same bucket count must sort-merge-join with NO Exchange

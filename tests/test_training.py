@@ -134,7 +134,8 @@ def test_deterministic_count_by_aggregation_matches_join(spark):
     """The inclusion-exclusion per-key count must equal the executed
     blocking join's pair count — overlapping rules, keys shared across
     rules, a SQL-snippet key, an all-null key, nulls, dedupe + link. The
-    aggregate's empty key set memoises the record count on df_concat."""
+    aggregate's empty key set gives the cartesian and memoises the record
+    count on df_concat."""
     from splink_spark.internals.blocking import block_using_rules
     from splink_spark.internals.training import (
         _deterministic_pairs_count_via_aggregation,
@@ -163,12 +164,13 @@ def test_deterministic_count_by_aggregation_matches_join(spark):
     )
     linker = Linker(df, settings)
     for rules in rule_sets:
-        agg = _deterministic_pairs_count_via_aggregation(linker, rules)
+        agg, cartesian = _deterministic_pairs_count_via_aggregation(linker, rules)
         joined = block_using_rules(
             linker.df_concat(), rules, link_type="dedupe_only",
             unique_id_column_name="unique_id",
         ).count()
         assert agg == joined
+        assert cartesian == len(rows) * (len(rows) - 1) // 2
     assert linker.df_concat()._splink_row_count == len(rows)
 
     # link_only: within-dataset pairs must be excluded
@@ -182,13 +184,14 @@ def test_deterministic_count_by_aggregation_matches_join(spark):
     )
     link_linker = Linker([df_a, df_b], link_settings)
     for rules in rule_sets:
-        agg_l = _deterministic_pairs_count_via_aggregation(link_linker, rules)
+        agg_l, cartesian_l = _deterministic_pairs_count_via_aggregation(link_linker, rules)
         joined_l = block_using_rules(
             link_linker.df_concat(), rules, link_type="link_only",
             unique_id_column_name="unique_id",
             source_dataset_column_name=link_settings.source_dataset_column_name,
         ).count()
         assert agg_l == joined_l
+        assert cartesian_l == half * (len(rows) - half)
     assert link_linker.df_concat()._splink_row_count == len(rows)
 
     # non-equality rule → not eligible, caller must fall back
@@ -198,6 +201,36 @@ def test_deterministic_count_by_aggregation_matches_join(spark):
         )
         is None
     )
+
+
+def test_link_only_lambda_runs_one_aggregate_job(spark, count_jobs):
+    """Two-dataset link_only λ: the grouping-sets aggregate's empty key set
+    already holds the cross-dataset cartesian, so λ runs that one job and
+    no per-dataset count job after it."""
+    from splink_spark.internals.blocking import block_using_rules
+
+    left = spark.createDataFrame(
+        [(i, f"n{i % 7}", f"d{i % 3}") for i in range(30)], ["unique_id", "name", "dob"]
+    )
+    right = spark.createDataFrame(
+        [(i, f"n{i % 5}", f"d{i % 4}") for i in range(20)], ["unique_id", "name", "dob"]
+    )
+    settings = SettingsCreator(
+        link_type="link_only",
+        comparisons=[cl.ExactMatch("name")],
+        blocking_rules_to_generate_predictions=[block_on("name")],
+    )
+    linker = Linker([left, right], settings)
+    rules = [block_on("name"), block_on("dob")]
+    observed = block_using_rules(
+        linker.df_concat(), rules, link_type="link_only", unique_id_column_name="unique_id",
+        source_dataset_column_name=settings.source_dataset_column_name,
+    ).count()
+    estimate = linker.training.estimate_probability_two_random_records_match
+    jobs = count_jobs(lambda: estimate(rules, recall=0.8))
+    assert jobs == 1
+    expected = observed / 0.8 / (30 * 20)
+    assert settings.probability_two_random_records_match == pytest.approx(expected, rel=1e-12)
 
 
 def test_trained_model_predict_matches_driver_recompute(spark, em_fixture):

@@ -99,6 +99,7 @@ def main() -> None:
         "Jaro": F.expr("jaro_sim(s_l, s_r)"),
         "Jaro-Winkler": F.expr("jaro_winkler(s_l, s_r)"),
         "Jaccard": F.expr("jaccard(s_l, s_r)"),
+        "Jaccard (non-ASCII)": F.expr("jaccard(concat(s_l, 'é'), s_r)"),
         "Absolute Difference": F.abs(F.col("x_l") - F.col("x_r")),
         "Cosine Similarity Level": cosine_similarity(F.col("arr_l"), F.col("arr_r")),
     }
@@ -129,8 +130,8 @@ def main() -> None:
 
     out = {
         "protocol": (
-            "BASELINE.md row 5 / reference performance_of_comparison_functions"
-            ".nb.py: median seconds per n_evals function evaluations, as "
+            "BASELINE.md row 5 method (10M evaluations there) / reference performance_"
+            "of_comparison_functions.nb.py: median seconds per n_evals evaluations, as "
             "multiples of exact-match cost; best-of-3 on a noisy host; "
             "JVM-compiled similarity UDFs (Similarity.java), native "
             "levenshtein, HOF cosine"
