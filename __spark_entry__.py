@@ -1281,7 +1281,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_distance_in_km(spark, sf_dir):
-        """DistanceInKMLevel: haversine great-circle distance as pure Column
+        """DistanceInKMLevel: haversine great-circle distance as pure SQL
         trig (reference comparison_level_library.py:849); lat/lon synthesized
         deterministically from customer columns."""
         from splink_spark.internals.functions import haversine_km
@@ -1302,9 +1302,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             & (F.col("c_mktsegment_l") == F.col("c_mktsegment_r"))
             & (F.col("unique_id_l") < F.col("unique_id_r")),
         )
-        d = haversine_km(
-            F.col("lat_l"), F.col("lon_l"), F.col("lat_r"), F.col("lon_r")
-        )
+        d = F.expr(haversine_km("lat_l", "lon_l", "lat_r", "lon_r"))
         return pairs.select(
             "unique_id_l",
             "unique_id_r",

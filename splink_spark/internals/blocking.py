@@ -99,12 +99,13 @@ def block_on(
 
     ces = [_instantiate(c) for c in col_specs]
 
+    # one parse: a key matches null-safely and is not null on the left
+    sql = " AND ".join(
+        f"({ce.sql_l()} <=> {ce.sql_r()} AND {ce.sql_l()} IS NOT NULL)" for ce in ces
+    )
+
     def cond() -> Column:
-        parts = [ce.l().eqNullSafe(ce.r()) & ce.l().isNotNull() for ce in ces]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out & p
-        return out
+        return F.expr(sql)
 
     desc = " AND ".join(f"l.{ce.name} = r.{ce.name}" for ce in ces)
     rule = BlockingRule(

@@ -27,6 +27,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .column_expression import sql_ident
 from .misc import prob_to_bayes_factor, prob_to_match_weight
 from .settings import Settings
 from .term_frequencies import tf_column_name
@@ -150,12 +151,13 @@ def tf_adjustment_chart_data(
     for lv in tf_levels:
         col = lv.tf_adjustment_column
         tf_table = linker._tf_table(col)  # columns: <col>, <prefix><col>
+        tf_sql = sql_ident(tf_column_name(s, col))
         tf = F.col(tf_column_name(s, col))
         u_prob = float(comparison._u_probability_for_exact_match(lv))
         weight = float(lv.tf_adjustment_weight)
         log2_bf = lv.log2_bayes_factor
         # predict's TF term for a pair whose two records share this value
-        log2_bf_tf = comparison.log2_tf_adjustment(lv, tf, tf)
+        log2_bf_tf = F.expr(comparison.log2_tf_adjustment(lv, tf_sql, tf_sql))
         part = tf_table.where(F.col(col).isNotNull()).select(
             F.col(col).cast("string").alias("value"),
             tf.alias("tf"),

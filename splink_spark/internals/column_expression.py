@@ -1,4 +1,4 @@
-"""Lazy column-transform chains applied before comparison.
+"""Lazy column-transform chains applied before comparison, written as SQL.
 
 Reference semantics: splink/internals/column_expression.py:23-367 — a
 ``ColumnExpression`` is a column name plus an ordered chain of transforms
@@ -6,18 +6,54 @@ Reference semantics: splink/internals/column_expression.py:23-367 — a
 first/last array element) that is applied to the ``_l``/``_r`` suffixed
 variants of the column at comparison time.
 
-Native rewrite: each transform is a ``Column -> Column`` function composed in
-Python; no SQL strings, no dialects.
+Each transform is a ``str -> str`` function that wraps the SQL text of its
+input, so a chain compiles to one Spark SQL expression and ``on`` / ``l`` /
+``r`` parse it with a single ``F.expr``. :func:`sql_literal` and
+:func:`sql_ident` are the one place values and names become SQL text.
 """
 
 from __future__ import annotations
 
+import math
 from typing import Callable, Union
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-Transform = Callable[[Column], Column]
+Transform = Callable[[str], str]
+
+_ISO_FORMATS = ("yyyy-MM-dd'T'HH:mm:ssXXX", "yyyy-MM-dd'T'HH:mm:ss", "yyyy-MM-dd")
+
+
+def sql_literal(value) -> str:
+    """``value`` as a Spark SQL literal of the type ``F.lit`` gives it.
+
+    Doubles are ``repr(x) + "D"`` (a bare ``0.9`` parses as DECIMAL), the
+    negative ones parenthesised so no ``--`` comment can form; inf and nan
+    have no literal syntax and are casts. Strings escape ``\\`` and ``'``
+    for the default ``spark.sql.parser.escapedStringLiterals=false``, so a
+    regex pattern's backslashes reach the function unchanged."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "TRUE" if value else "FALSE"
+    if isinstance(value, int):
+        return str(value) if value >= 0 else f"({value})"
+    if isinstance(value, float):
+        if math.isnan(value) or math.isinf(value):
+            name = "NaN" if math.isnan(value) else "Infinity" if value > 0 else "-Infinity"
+            return f"CAST('{name}' AS DOUBLE)"
+        text = repr(value) + "D"
+        return f"({text})" if math.copysign(1.0, value) < 0 else text
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise TypeError(f"no SQL literal for {type(value).__name__} {value!r}")
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backticked Spark SQL identifier (a backtick doubled):
+    one column, whatever spaces or dots the name holds."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 class ColumnExpression:
@@ -66,37 +102,41 @@ class ColumnExpression:
 
     # -- transform library (reference column_expression.py:115-310) -----------
     def lower(self) -> "ColumnExpression":
-        return self._with(F.lower, "lower")
+        return self._with(lambda c: f"lower({c})", "lower")
 
     def upper(self) -> "ColumnExpression":
-        return self._with(F.upper, "upper")
+        return self._with(lambda c: f"upper({c})", "upper")
 
     def substr(self, start: int, length: int) -> "ColumnExpression":
-        return self._with(lambda c: F.substring(c, start, length), "substr", start, length)
+        return self._with(
+            lambda c: f"substring({c}, {sql_literal(start)}, {sql_literal(length)})",
+            "substr", start, length,
+        )
 
     def cast_to_string(self) -> "ColumnExpression":
-        return self._with(lambda c: c.cast("string"), "cast_to_string")
+        return self._with(lambda c: f"CAST({c} AS STRING)", "cast_to_string")
 
     def regex_extract(self, pattern: str, capture_group: int = 0) -> "ColumnExpression":
         # empty capture -> NULL, mirroring reference dialects.py:208-249
         return self._with(
-            lambda c: F.nullif(F.regexp_extract(c, pattern, capture_group), F.lit("")),
+            lambda c: f"nullif(regexp_extract({c}, {sql_literal(pattern)}, "
+                      f"{sql_literal(capture_group)}), '')",
             "regex_extract", pattern, capture_group,
         )
 
     def nullif(self, value) -> "ColumnExpression":
-        return self._with(lambda c: F.nullif(c, F.lit(value)), "nullif", value)
+        return self._with(lambda c: f"nullif({c}, {sql_literal(value)})", "nullif", value)
 
     def try_parse_date(self, fmt: str = "yyyy-MM-dd") -> "ColumnExpression":
         # Spark impl in reference dialects.py:481-491: date(try_to_timestamp(c, fmt))
         return self._with(
-            lambda c: F.try_to_timestamp(c, F.lit(fmt)).cast("date"),
+            lambda c: f"CAST(try_to_timestamp({c}, {sql_literal(fmt)}) AS DATE)",
             "try_parse_date", fmt,
         )
 
     def try_parse_timestamp(self, fmt: str = "yyyy-MM-dd HH:mm:ss") -> "ColumnExpression":
         return self._with(
-            lambda c: F.try_to_timestamp(c, F.lit(fmt)), "try_parse_timestamp", fmt
+            lambda c: f"try_to_timestamp({c}, {sql_literal(fmt)})", "try_parse_timestamp", fmt
         )
 
     def try_parse_iso_timestamp(self) -> "ColumnExpression":
@@ -105,12 +145,9 @@ class ColumnExpression:
         ``datetime_format``: DuckDB's try_strptime ISO behavior). Tries full
         timestamp, 'T'-separated with/without zone, then bare date."""
         return self._with(
-            lambda c: F.coalesce(
-                F.try_to_timestamp(c),
-                F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-                F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss")),
-                F.try_to_timestamp(c, F.lit("yyyy-MM-dd")),
-            ),
+            lambda c: "coalesce(" + ", ".join(
+                [f"try_to_timestamp({c})"]
+                + [f"try_to_timestamp({c}, {sql_literal(f)})" for f in _ISO_FORMATS]) + ")",
             "try_parse_iso_timestamp",
         )
 
@@ -119,20 +156,29 @@ class ColumnExpression:
             raise ValueError("first_or_last must be 'first' or 'last'")
         idx = 1 if first_or_last == "first" else -1
         return self._with(
-            lambda c: F.element_at(c, idx), "access_extreme_array_element", first_or_last
+            lambda c: f"element_at({c}, {sql_literal(idx)})",
+            "access_extreme_array_element", first_or_last,
         )
 
     def struct_field(self, field: str) -> "ColumnExpression":
-        return self._with(lambda c: c.getField(field), "struct_field", field)
+        return self._with(lambda c: f"{c}.{sql_ident(field)}", "struct_field", field)
 
     # -- application -----------------------------------------------------------
-    def apply(self, col: Column) -> Column:
+    def sql_on(self, column_name: str) -> str:
+        """The transform chain over ``column_name``, as SQL text."""
+        sql = sql_ident(column_name)
         for t in self.transforms:
-            col = t(col)
-        return col
+            sql = t(sql)
+        return sql
+
+    def sql_l(self) -> str:
+        return self.sql_on(f"{self.name}_l")
+
+    def sql_r(self) -> str:
+        return self.sql_on(f"{self.name}_r")
 
     def on(self, column_name: str) -> Column:
-        return self.apply(F.col(column_name))
+        return F.expr(self.sql_on(column_name))
 
     def l(self) -> Column:
         return self.on(f"{self.name}_l")
@@ -227,19 +273,19 @@ def suffix_sql_identifiers(sql: str, suffix: str) -> str:
 class SqlColumnExpression(ColumnExpression):
     """A blocking key defined by a SQL snippet over BASE column names
     (reference blocking_rule_library.py:162-210 ``block_on("substr(s,1,2)")``).
-    ``l()``/``r()`` rewrite the snippet's identifiers with the side suffix;
-    ``on(name)`` returns the raw expression (the shape the pre-filter
-    key-count estimator groups by)."""
+    ``sql_l()``/``sql_r()`` rewrite the snippet's identifiers with the side
+    suffix; ``sql_on(name)`` returns the raw expression (the shape the
+    pre-filter key-count estimator groups by)."""
 
     def __init__(self, sql: str):
         super().__init__(sql)
         self.sql = sql
 
-    def on(self, column_name: str) -> Column:
+    def sql_on(self, column_name: str) -> str:
         for suffix in ("_l", "_r"):
             if column_name == f"{self.name}{suffix}":
-                return F.expr(suffix_sql_identifiers(self.sql, suffix))
-        return F.expr(self.sql)
+                return f"({suffix_sql_identifiers(self.sql, suffix)})"
+        return f"({self.sql})"
 
     @property
     def is_pure_column_reference(self) -> bool:

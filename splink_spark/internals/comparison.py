@@ -6,13 +6,14 @@ assignment: the null level is -1, the ELSE arm is 0, and the remaining levels
 count down from n_nonnull-1 in declaration order — so the first (most
 specific) level gets the highest gamma, matching reference CASE semantics.
 
-Native rewrite: the CASE ladder is an ``F.when`` chain (identical first-match
-semantics); bayes-factor ladders are ``F.when`` chains over the gamma column,
-all built by one helper, ``Comparison._gamma_case``, and every TF term by
-``Comparison._tf_term``. ``predict.match_weight_column`` sums a comparison's
-log2 ladders into the match weight: predict and EM's with-TF E-step (which
-passes its session m/u) both score through it, and the TF chart weighs a
-value with the same ``log2_tf_adjustment``.
+Every ladder is written as Spark SQL text and parsed by one ``F.expr`` per
+output column: the gamma CASE over the levels' ``sql_condition``, and the
+bayes-factor ladders over the gamma column, all built by one helper,
+``_case`` (``Comparison._gamma_case`` for the gamma-keyed ones), and every
+TF term by ``Comparison._tf_term``. ``predict.match_weight_sql`` sums a
+comparison's log2 ladders into the match weight: predict and EM's with-TF
+E-step (which passes its session m/u) both score through it, and the TF
+chart weighs a value with the same ``log2_tf_adjustment``.
 """
 
 from __future__ import annotations
@@ -23,7 +24,21 @@ from typing import Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .column_expression import sql_ident, sql_literal
 from .comparison_level import _UNSUPPLIED, ComparisonLevel, prob_to_log2_bayes_factor
+
+
+def _case(arms: list, otherwise) -> str:
+    """``CASE WHEN cond THEN value ... ELSE otherwise END`` over ``arms`` =
+    [(condition SQL, value)], a value being SQL text or a Python literal;
+    just ``otherwise`` without arms."""
+    def text(v):
+        return v if isinstance(v, str) else sql_literal(v)
+
+    if not arms:
+        return text(otherwise)
+    whens = " ".join(f"WHEN ({cond}) THEN {text(v)}" for cond, v in arms)
+    return f"CASE {whens} ELSE {text(otherwise)} END"
 
 
 class Comparison:
@@ -44,14 +59,13 @@ class Comparison:
         # the *_column_prefix settings keys (reference settings.py:215-233)
         self.gamma_prefix = "gamma_"
         self.bf_prefix = "bf_"
-        self.mw_prefix = "mw_"
         self.tf_prefix = "tf_"
         self._assign_gamma_values()
 
     # -- gamma assignment ------------------------------------------------------
     def _assign_gamma_values(self) -> None:
         non_null = [lv for lv in self.comparison_levels if not lv.is_null_level]
-        # gamma_column() compiles the else arm as the CASE's otherwise(0), so
+        # gamma_sql() compiles the else arm as the CASE's ELSE 0, so
         # an else level anywhere but last would be keyed to a non-zero gamma
         # its pairs can never receive — probabilities silently land on the
         # wrong level. Reject the misordering instead.
@@ -96,28 +110,25 @@ class Comparison:
         )
 
     # -- CASE ladders ----------------------------------------------------------
-    def gamma_column(self) -> Column:
+    def gamma_sql(self) -> str:
         """``CASE WHEN <null> THEN -1 WHEN <level k> THEN k ... ELSE 0 END``.
 
         First-match-wins order is the declaration order, exactly as the
         reference compiles its CASE (comparison.py:161-168).
         """
-        expr: Optional[Column] = None
-        for lv in self.comparison_levels:
-            if lv.is_else_level:
-                continue
-            arm = F.lit(lv.comparison_vector_value)
-            if expr is None:
-                expr = F.when(lv.condition(), arm)
-            else:
-                expr = expr.when(lv.condition(), arm)
-        if expr is None:  # single ELSE-only comparison (degenerate)
-            return F.lit(0)
-        return expr.otherwise(F.lit(0)).alias(self.gamma_column_name)
+        arms = [
+            (lv.sql_condition, lv.comparison_vector_value)
+            for lv in self.comparison_levels
+            if not lv.is_else_level
+        ]
+        return _case(arms, 0)
+
+    def gamma_column(self) -> Column:
+        return F.expr(f"{self.gamma_sql()} AS {sql_ident(self.gamma_column_name)}")
 
     # -- weight ladders over the gamma column ----------------------------------
-    # predict.match_weight_column sums log2_bayes_factor_column and
-    # log2_tf_adjustment_column; the bf_* audit columns are their
+    # predict.match_weight_sql sums log2_bayes_factor_sql and
+    # log2_tf_adjustment_sql; the bf_* audit columns are their
     # multiplicative forms. ``m_u`` maps a gamma value to (m, u) and defaults
     # to the levels' own probabilities (EM's E-step passes its session's).
     def _m_u(self, lv: ComparisonLevel, m_u: Optional[dict] = None) -> tuple:
@@ -125,69 +136,58 @@ class Comparison:
             return lv.m_probability, lv.u_probability
         return m_u[lv.comparison_vector_value]
 
-    def _gamma_case(self, arms: list, otherwise: float, alias: str) -> Column:
+    def _gamma_case(self, arms: list, otherwise: float) -> str:
         """``CASE WHEN gamma = k THEN value_k ... ELSE otherwise END`` over
-        ``arms`` = [(level, value)], a value being a float or a Column."""
-        gamma = F.col(self.gamma_column_name)
-        expr: Optional[Column] = None
-        for lv, value in arms:
-            if not isinstance(value, Column):
-                value = F.lit(float(value))
-            cond = gamma == F.lit(lv.comparison_vector_value)
-            expr = F.when(cond, value) if expr is None else expr.when(cond, value)
-        assert expr is not None
-        return expr.otherwise(F.lit(otherwise)).alias(alias)
+        ``arms`` = [(level, value)], a value being a float or SQL text."""
+        gamma = sql_ident(self.gamma_column_name)
+        return _case(
+            [(f"{gamma} = {sql_literal(lv.comparison_vector_value)}", value)
+             for lv, value in arms],
+            otherwise,
+        )
 
-    def _tf_term(
-        self, lv: ComparisonLevel, tf_l: Optional[Column] = None, tf_r: Optional[Column] = None
-    ) -> Column:
+    def _tf_term(self, lv: ComparisonLevel, tf_l: Optional[str] = None,
+                 tf_r: Optional[str] = None) -> str:
         """The pair's term frequency on ``lv``'s TF column:
         ``greatest(coalesce(tf_l, tf_r), coalesce(tf_r, tf_l), tf_minimum_u_value)``
-        (reference comparison_level.py:671-731). ``tf_l`` / ``tf_r`` default
-        to the pair's ``tf_<col>_l`` / ``tf_<col>_r`` columns."""
+        (reference comparison_level.py:671-731). ``tf_l`` / ``tf_r`` (SQL
+        text) default to the pair's ``tf_<col>_l`` / ``tf_<col>_r`` columns."""
         c = lv.tf_adjustment_column
-        if tf_l is None:
-            tf_l = F.col(f"{self.tf_prefix}{c}_l")
-        if tf_r is None:
-            tf_r = F.col(f"{self.tf_prefix}{c}_r")
-        return F.greatest(
-            F.coalesce(tf_l, tf_r),
-            F.coalesce(tf_r, tf_l),
-            F.lit(float(lv.tf_minimum_u_value)),
-        )
+        tf_l = tf_l or sql_ident(f"{self.tf_prefix}{c}_l")
+        tf_r = tf_r or sql_ident(f"{self.tf_prefix}{c}_r")
+        return (f"greatest(coalesce({tf_l}, {tf_r}), coalesce({tf_r}, {tf_l}), "
+                f"{sql_literal(float(lv.tf_minimum_u_value))})")
 
     def log2_tf_adjustment(
         self,
         lv: ComparisonLevel,
-        tf_l: Optional[Column] = None,
-        tf_r: Optional[Column] = None,
+        tf_l: Optional[str] = None,
+        tf_r: Optional[str] = None,
         m_u: Optional[dict] = None,
-    ) -> Column:
+    ) -> str:
         """log2 of ``lv``'s TF multiplier, ``w * (log2(u_exact) - log2(tf))``
         (log-space form per SURVEY §2.8); 0 where the pair has no TF."""
         tf_term = self._tf_term(lv, tf_l, tf_r)
         u_exact = self._u_probability_for_exact_match(lv, m_u)
-        log2_u_exact = F.lit(math.log2(max(u_exact, 1e-300)))
-        adj = F.lit(float(lv.tf_adjustment_weight)) * (log2_u_exact - F.log2(tf_term))
-        return F.when(tf_term.isNotNull() & (tf_term > 0), adj).otherwise(F.lit(0.0))
+        log2_u_exact = sql_literal(math.log2(max(u_exact, 1e-300)))
+        adj = f"{sql_literal(float(lv.tf_adjustment_weight))} * ({log2_u_exact} - log2({tf_term}))"
+        return _case([(f"{tf_term} IS NOT NULL AND {tf_term} > 0", adj)], 0.0)
 
-    def log2_bayes_factor_column(self, m_u: Optional[dict] = None) -> Column:
-        """``mw_<col>``: per-pair log2 bayes factor as a CASE ladder over
-        driver-precomputed constants (comparison_level.py:664-669). Using
-        log2 constants (not runtime log2(bf)) keeps the combine step a pure
-        sum of literals — deterministic across engines for oracle parity."""
+    def log2_bayes_factor_sql(self, m_u: Optional[dict] = None) -> str:
+        """Per-pair log2 bayes factor as a CASE ladder over driver-precomputed
+        constants (comparison_level.py:664-669). Using log2 constants (not
+        runtime log2(bf)) keeps the combine step a pure sum of literals —
+        deterministic across engines for oracle parity."""
         arms = [
             (lv, prob_to_log2_bayes_factor(*self._m_u(lv, m_u)))
             for lv in self.comparison_levels
             if not lv.is_null_level
         ]
-        return self._gamma_case(
-            arms, 0.0, f"{self.mw_prefix}{self.output_column_name}".replace(" ", "_")
-        )
+        return self._gamma_case(arms, 0.0)
 
-    def log2_tf_adjustment_column(self, m_u: Optional[dict] = None) -> Optional[Column]:
-        """``mw_tf_<col>``: :meth:`log2_tf_adjustment` on the pair's TF level,
-        0 on every other level; None without TF levels."""
+    def log2_tf_adjustment_sql(self, m_u: Optional[dict] = None) -> Optional[str]:
+        """:meth:`log2_tf_adjustment` on the pair's TF level, 0 on every
+        other level; None without TF levels."""
         if not self.has_tf_adjustments:
             return None
         arms = [
@@ -195,19 +195,18 @@ class Comparison:
             for lv in self.comparison_levels
             if lv.has_tf_adjustment
         ]
-        return self._gamma_case(
-            arms, 0.0, f"{self.mw_prefix}tf_{self.output_column_name}".replace(" ", "_")
-        )
+        return self._gamma_case(arms, 0.0)
 
     def bayes_factor_column(self) -> Column:
-        """``bf_gamma_<col>``: the audit form of :meth:`log2_bayes_factor_column`
+        """``bf_gamma_<col>``: the audit form of :meth:`log2_bayes_factor_sql`
         (the null level's bayes factor is 1)."""
         arms = [(lv, lv.bayes_factor) for lv in self.comparison_levels if not lv.is_null_level]
-        return self._gamma_case(arms, 1.0, f"{self.bf_prefix}{self.gamma_column_name}")
+        name = sql_ident(f"{self.bf_prefix}{self.gamma_column_name}")
+        return F.expr(f"{self._gamma_case(arms, 1.0)} AS {name}")
 
     def tf_adjustment_column_expr(self) -> Optional[Column]:
         """``bf_tf_adj_gamma_<col>``: the audit form of
-        :meth:`log2_tf_adjustment_column`, ``(u_exact / tf) ^ w`` on a TF
+        :meth:`log2_tf_adjustment_sql`, ``(u_exact / tf) ^ w`` on a TF
         level and 1 elsewhere. u_exact carries the same 1e-300 clamp, so the
         bf_* columns reconcile with match_weight even for a trained u of 0."""
         if not self.has_tf_adjustments:
@@ -217,27 +216,22 @@ class Comparison:
             if not lv.has_tf_adjustment:
                 continue
             tf_term = self._tf_term(lv)
-            u_exact = F.lit(max(float(self._u_probability_for_exact_match(lv)), 1e-300))
-            mult = F.pow(u_exact / tf_term, F.lit(float(lv.tf_adjustment_weight)))
-            arms.append(
-                (lv, F.when(tf_term.isNotNull() & (tf_term > 0), mult).otherwise(F.lit(1.0)))
-            )
-        return self._gamma_case(arms, 1.0, f"{self.bf_prefix}tf_adj_{self.gamma_column_name}")
+            u_exact = sql_literal(max(float(self._u_probability_for_exact_match(lv)), 1e-300))
+            mult = f"power({u_exact} / {tf_term}, {sql_literal(float(lv.tf_adjustment_weight))})"
+            arms.append((lv, _case([(f"{tf_term} IS NOT NULL AND {tf_term} > 0", mult)], 1.0)))
+        name = sql_ident(f"{self.bf_prefix}tf_adj_{self.gamma_column_name}")
+        return F.expr(f"{self._gamma_case(arms, 1.0)} AS {name}")
 
-    def score_bound_column(self) -> Column:
+    def score_bound_sql(self) -> str:
         """Per-pair upper bound on this comparison's share of the match
-        weight (``mw_<col>`` plus ``mw_tf_<col>``), decided by the cheap
-        leading null / exact-match conditions alone — see
+        weight (its log2 bayes factor plus its TF adjustment), decided by
+        the cheap leading null / exact-match conditions alone — see
         :func:`score_bound_arms`. Same first-match CASE semantics as
-        :meth:`gamma_column`, so a pair taking arm k lands on level k."""
+        :meth:`gamma_sql`, so a pair taking arm k lands on level k."""
         leading, else_max = score_bound_arms(self.comparison_levels)
-        expr: Optional[Column] = None
-        for i, bound in leading:
-            cond, arm = self.comparison_levels[i].condition(), F.lit(bound)
-            expr = F.when(cond, arm) if expr is None else expr.when(cond, arm)
-        if expr is None:
-            return F.lit(else_max)
-        return expr.otherwise(F.lit(else_max))
+        return _case(
+            [(self.comparison_levels[i].sql_condition, bound) for i, bound in leading], else_max
+        )
 
     def score_bound_record(self) -> dict:
         """The bound table as data: each leading arm's level label and

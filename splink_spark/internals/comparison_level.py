@@ -5,18 +5,20 @@ Reference semantics: splink/internals/comparison_level.py:161-849. A
 suffixed columns of a candidate pair, (b) ``m_probability`` /
 ``u_probability``, (c) optional term-frequency adjustment config.
 
-Native rewrite: the condition is a ``pyspark.sql.Column`` factory, not an SQL
-string; match-weight math (log2(m/u), clamps at 1e-300 — reference
-comparison_level.py:33-52, 426-441) is plain Python on the driver; the CASE
-ladder is built with ``F.when`` chains in comparison.py.
+The condition is Spark SQL text over the suffixed columns, as in the
+reference's ``sql_condition``; comparison.py writes it into the gamma CASE
+ladder and the score bound, and Spark parses each ladder once. Match-weight
+math (log2(m/u), clamps at 1e-300 — reference comparison_level.py:33-52,
+426-441) is plain Python on the driver.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 # sentinel distinguishing "not supplied" from an explicit None in configure()
 # (the reference's unsupplied_option, comparison_level_creator.py)
@@ -43,13 +45,13 @@ def bayes_factor(m: float, u: float) -> float:
 class ComparisonLevel:
     """One arm of a comparison's CASE ladder.
 
-    ``condition`` is a zero-arg callable returning the boolean ``Column``
-    (lazy so that levels can be constructed without an active SparkSession).
+    ``sql_condition`` is the boolean Spark SQL expression over the
+    ``_l``/``_r`` columns (text, so levels need no active SparkSession).
     """
 
     def __init__(
         self,
-        condition: Callable[[], Column],
+        sql_condition: str,
         label_for_charts: str,
         *,
         is_null_level: bool = False,
@@ -64,7 +66,7 @@ class ComparisonLevel:
         fix_m_probability: bool = False,
         fix_u_probability: bool = False,
     ):
-        self._condition = condition
+        self.sql_condition = sql_condition
         self.label_for_charts = label_for_charts
         self.is_null_level = is_null_level
         self.is_else_level = is_else_level
@@ -98,7 +100,7 @@ class ComparisonLevel:
 
     # -- predicate -------------------------------------------------------------
     def condition(self) -> Column:
-        return self._condition()
+        return F.expr(self.sql_condition)
 
     def configure(
         self,

@@ -1,36 +1,35 @@
 """Comparison-level library: builders for every level type in the reference
 (splink/internals/comparison_level_library.py; class:line cited per builder).
 
-Each builder returns a ``ComparisonLevel`` whose condition is a lazy
-``pyspark.sql.Column`` factory over the ``_l``/``_r`` suffixed pair columns.
-Built-in Spark functions are used wherever they exist (levenshtein, array
-ops, date math, haversine trig, cosine HOFs); only jaro/jaro-winkler/
-damerau-levenshtein/char-jaccard drop to the pandas-UDF pack in functions.py.
+Each builder returns a ``ComparisonLevel`` whose condition is Spark SQL text
+over the ``_l``/``_r`` suffixed pair columns, like the reference's
+``sql_condition``. Built-in Spark functions are used wherever they exist
+(levenshtein, array ops, date math, haversine trig, cosine HOFs); the
+similarity metrics, pairwise array metrics and double metaphone are called by
+the names ``functions.register_udfs`` registers. Values and names enter the
+text only through ``sql_literal`` / ``sql_ident``.
 """
 
 from __future__ import annotations
 
 from typing import Optional, Union
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from .column_expression import ColumnExpression
+from .column_expression import ColumnExpression, sql_literal
 from .comparison_level import ComparisonLevel
-from .functions import (
-    cosine_similarity,
-    damerau_levenshtein_call,
-    haversine_km,
-    jaccard_call,
-    jaro_sim_call,
-    jaro_winkler_call,
-)
+from .functions import cosine_similarity, haversine_km
 
 ColSpec = Union[str, ColumnExpression]
 
 
 def _ce(spec: ColSpec) -> ColumnExpression:
     return ColumnExpression.instantiate(spec)
+
+
+def _fn_level(fn: str, ce: ColumnExpression, op: str, threshold, label: str) -> ComparisonLevel:
+    """``fn(l, r) <op> threshold`` — a metric over the two sides."""
+    return ComparisonLevel(
+        f"{fn}({ce.sql_l()}, {ce.sql_r()}) {op} {sql_literal(threshold)}", label
+    )
 
 
 # -- core levels (reference :88-404) ----------------------------------------
@@ -42,29 +41,27 @@ def NullLevel(col: ColSpec, valid_string_pattern: Optional[str] = None) -> Compa
     ce = _ce(col)
     if valid_string_pattern is not None:
         ce = ce.regex_extract(valid_string_pattern)
-
-    def cond() -> Column:
-        return ce.l().isNull() | ce.r().isNull()
-
-    return ComparisonLevel(cond, f"{ce.name} is NULL", is_null_level=True)
+    return ComparisonLevel(
+        f"{ce.sql_l()} IS NULL OR {ce.sql_r()} IS NULL", f"{ce.name} is NULL", is_null_level=True
+    )
 
 
 def ElseLevel() -> ComparisonLevel:
     """comparison_level_library.py:125 — the CASE ELSE arm."""
-    return ComparisonLevel(lambda: F.lit(True), "All other comparisons", is_else_level=True)
+    return ComparisonLevel("TRUE", "All other comparisons", is_else_level=True)
 
 
 def CustomLevel(sql_condition: str, label: Optional[str] = None, **kw) -> ComparisonLevel:
     """comparison_level_library.py:138 — user SQL fragment over ``*_l``/``*_r``
-    columns, parsed by Spark (``F.expr``): the engine's SQL escape hatch."""
-    return ComparisonLevel(lambda: F.expr(sql_condition), label or sql_condition, **kw)
+    columns, parsed by Spark: the engine's SQL escape hatch."""
+    return ComparisonLevel(sql_condition, label or sql_condition, **kw)
 
 
 def ExactMatchLevel(col: ColSpec, term_frequency_adjustments: bool = False) -> ComparisonLevel:
     """comparison_level_library.py:236."""
     ce = _ce(col)
     lv = ComparisonLevel(
-        lambda: ce.l() == ce.r(),
+        f"{ce.sql_l()} = {ce.sql_r()}",
         f"Exact match on {ce.name}",
         is_exact_match_level=True,
         tf_adjustment_column=ce.name if term_frequency_adjustments else None,
@@ -79,28 +76,20 @@ def LiteralMatchLevel(
     """comparison_level_library.py:295 — column equals a typed literal on
     one or both sides."""
     ce = _ce(col)
-    lit = F.lit(literal_value).cast(literal_datatype)
-
-    def cond() -> Column:
-        if side == "left":
-            return ce.l() == lit
-        if side == "right":
-            return ce.r() == lit
-        return (ce.l() == lit) & (ce.r() == lit)
-
+    lit = f"CAST({sql_literal(literal_value)} AS {literal_datatype})"
+    cond = {
+        "left": f"{ce.sql_l()} = {lit}",
+        "right": f"{ce.sql_r()} = {lit}",
+    }.get(side, f"({ce.sql_l()} = {lit}) AND ({ce.sql_r()} = {lit})")
     return ComparisonLevel(cond, f"{ce.name} = {literal_value!r}")
 
 
 def ColumnsReversedLevel(col1: ColSpec, col2: ColSpec, symmetrical: bool = False) -> ComparisonLevel:
     """comparison_level_library.py:363 — a_l = b_r (and a_r = b_l if symmetrical)."""
     a, b = _ce(col1), _ce(col2)
-
-    def cond() -> Column:
-        c = a.l() == b.r()
-        if symmetrical:
-            c = c & (a.r() == b.l())
-        return c
-
+    cond = f"{a.sql_l()} = {b.sql_r()}"
+    if symmetrical:
+        cond = f"({cond}) AND ({a.sql_r()} = {b.sql_l()})"
     return ComparisonLevel(cond, f"Match on reversed cols: {a.name} and {b.name}")
 
 
@@ -108,48 +97,38 @@ def ColumnsReversedLevel(col1: ColSpec, col2: ColSpec, symmetrical: bool = False
 
 
 def LevenshteinLevel(col: ColSpec, distance_threshold: int) -> ComparisonLevel:
-    """comparison_level_library.py:406 — native ``F.levenshtein`` (JVM-side)."""
+    """comparison_level_library.py:406 — Spark's native ``levenshtein``."""
     ce = _ce(col)
-    return ComparisonLevel(
-        lambda: F.levenshtein(ce.l(), ce.r()) <= distance_threshold,
-        f"Levenshtein distance of {ce.name} <= {distance_threshold}",
-    )
+    return _fn_level("levenshtein", ce, "<=", distance_threshold,
+                     f"Levenshtein distance of {ce.name} <= {distance_threshold}")
 
 
 def DamerauLevenshteinLevel(col: ColSpec, distance_threshold: int) -> ComparisonLevel:
-    """comparison_level_library.py:431 — pandas UDF (no native Spark fn)."""
+    """comparison_level_library.py:431 — registered UDF (no native Spark fn)."""
     ce = _ce(col)
-    return ComparisonLevel(
-        lambda: damerau_levenshtein_call(ce.l(), ce.r()) <= float(distance_threshold),
-        f"Damerau-Levenshtein distance of {ce.name} <= {distance_threshold}",
-    )
+    return _fn_level("damerau_levenshtein", ce, "<=", float(distance_threshold),
+                     f"Damerau-Levenshtein distance of {ce.name} <= {distance_threshold}")
 
 
 def JaroWinklerLevel(col: ColSpec, distance_threshold: float) -> ComparisonLevel:
     """comparison_level_library.py:458."""
     ce = _ce(col)
-    return ComparisonLevel(
-        lambda: jaro_winkler_call(ce.l(), ce.r()) >= float(distance_threshold),
-        f"Jaro-Winkler distance of {ce.name} >= {distance_threshold}",
-    )
+    return _fn_level("jaro_winkler", ce, ">=", float(distance_threshold),
+                     f"Jaro-Winkler distance of {ce.name} >= {distance_threshold}")
 
 
 def JaroLevel(col: ColSpec, distance_threshold: float) -> ComparisonLevel:
     """comparison_level_library.py:493."""
     ce = _ce(col)
-    return ComparisonLevel(
-        lambda: jaro_sim_call(ce.l(), ce.r()) >= float(distance_threshold),
-        f"Jaro distance of {ce.name} >= {distance_threshold}",
-    )
+    return _fn_level("jaro_sim", ce, ">=", float(distance_threshold),
+                     f"Jaro distance of {ce.name} >= {distance_threshold}")
 
 
 def JaccardLevel(col: ColSpec, distance_threshold: float) -> ComparisonLevel:
     """comparison_level_library.py:528 — char-set Jaccard."""
     ce = _ce(col)
-    return ComparisonLevel(
-        lambda: jaccard_call(ce.l(), ce.r()) >= float(distance_threshold),
-        f"Jaccard distance of {ce.name} >= {distance_threshold}",
-    )
+    return _fn_level("jaccard", ce, ">=", float(distance_threshold),
+                     f"Jaccard distance of {ce.name} >= {distance_threshold}")
 
 
 def DistanceFunctionLevel(
@@ -158,14 +137,16 @@ def DistanceFunctionLevel(
     """comparison_level_library.py:563 — arbitrary registered SQL function."""
     ce = _ce(col)
     op = ">=" if higher_is_more_similar else "<="
+    return _fn_level(distance_function_name, ce, op, distance_threshold,
+                     f"{distance_function_name}({ce.name}) {op} {distance_threshold}")
 
-    def cond() -> Column:
-        fn = F.expr(f"{distance_function_name}({ce.name}_l, {ce.name}_r)")
-        return fn >= distance_threshold if higher_is_more_similar else fn <= distance_threshold
 
-    return ComparisonLevel(
-        cond, f"{distance_function_name}({ce.name}) {op} {distance_threshold}"
-    )
+_PAIRWISE_UDFS = {
+    "jaro_winkler": "pairwise_jaro_winkler_max",
+    "jaro": "pairwise_jaro_max",
+    "jaccard": "pairwise_jaccard_max",
+    "damerau_levenshtein": "pairwise_damerau_levenshtein_min",
+}
 
 
 def PairwiseStringDistanceFunctionLevel(
@@ -173,69 +154,41 @@ def PairwiseStringDistanceFunctionLevel(
 ) -> ComparisonLevel:
     """comparison_level_library.py:613 — best score over the cross-product of
     two string arrays. The reference builds nested transform/flatten SQL
-    (:671-687); here: flatten(transform(l, x -> transform(r, y -> f(x,y))))
-    then array_max/min — native higher-order functions where possible."""
-    from .functions import (
-        pairwise_damerau_levenshtein_min_udf,
-        pairwise_jaccard_max_udf,
-        pairwise_jaro_max_udf,
-        pairwise_jaro_winkler_max_udf,
-    )
-
+    (:671-687); Levenshtein does the same with Spark's native higher-order
+    functions. HOF lambdas cannot call Python UDFs, so the other metrics run
+    the whole (tiny: alias arrays) cross product inside ONE Arrow-batched
+    pandas UDF over the two array columns."""
     ce = _ce(col)
-    best_udf_map = {
-        "jaro_winkler": pairwise_jaro_winkler_max_udf,
-        "jaro": pairwise_jaro_max_udf,
-        "jaccard": pairwise_jaccard_max_udf,
-        "damerau_levenshtein": pairwise_damerau_levenshtein_min_udf,
-    }
     lower_is_better = distance_function_name in ("levenshtein", "damerau_levenshtein")
-
-    def cond() -> Column:
-        if distance_function_name == "levenshtein":
-            # native higher-order functions — stays JVM-side
-            pairwise = F.flatten(
-                F.transform(ce.l(), lambda x: F.transform(ce.r(), lambda y: F.levenshtein(x, y)))
-            )
-            return F.array_min(pairwise) <= distance_threshold
-        if distance_function_name not in best_udf_map:
-            raise ValueError(
-                f"unknown pairwise distance function {distance_function_name!r}"
-            )
-        # HOF lambdas can't call Python UDFs, so the best-over-cross-product
-        # runs inside ONE Arrow-batched pandas UDF over the two array columns
-        # (alias arrays are tiny; reference comparison_level_library.py:613-687)
-        best = best_udf_map[distance_function_name](ce.l(), ce.r())
-        return (
-            best <= distance_threshold if lower_is_better else best >= distance_threshold
-        )
-
-    if lower_is_better:
-        label = f"min pairwise {distance_function_name}({ce.name}) <= {distance_threshold}"
-    else:
-        label = f"max pairwise {distance_function_name}({ce.name}) >= {distance_threshold}"
-    return ComparisonLevel(cond, label)
+    op = "<=" if lower_is_better else ">="
+    best_of = "min" if lower_is_better else "max"
+    label = f"{best_of} pairwise {distance_function_name}({ce.name}) {op} {distance_threshold}"
+    if distance_function_name == "levenshtein":
+        best = (f"array_min(flatten(transform({ce.sql_l()}, "
+                f"x -> transform({ce.sql_r()}, y -> levenshtein(x, y)))))")
+        return ComparisonLevel(f"{best} {op} {sql_literal(distance_threshold)}", label)
+    if distance_function_name not in _PAIRWISE_UDFS:
+        raise ValueError(f"unknown pairwise distance function {distance_function_name!r}")
+    return _fn_level(_PAIRWISE_UDFS[distance_function_name], ce, op, distance_threshold, label)
 
 
 def PhoneticMatchLevel(col: ColSpec) -> ComparisonLevel:
     """Double-metaphone agreement: any shared code between the two sides'
     [primary, alternate] arrays (the reference jar's Dmetaphone/DmetaphoneAlt
     pair, used by NameComparison comparison_library.py:1005-1090)."""
-    from .phonetic import dmetaphone_udf
-
     ce = _ce(col)
     return ComparisonLevel(
-        lambda: F.size(F.array_intersect(dmetaphone_udf(ce.l()), dmetaphone_udf(ce.r()))) >= 1,
+        f"size(array_intersect(double_metaphone({ce.sql_l()}), "
+        f"double_metaphone({ce.sql_r()}))) >= 1",
         f"Phonetic (double metaphone) match on {ce.name}",
     )
 
 
 def SoundexMatchLevel(col: ColSpec) -> ComparisonLevel:
-    """Native-JVM soundex agreement (F.soundex, no UDF)."""
+    """Native-JVM soundex agreement (no UDF)."""
     ce = _ce(col)
     return ComparisonLevel(
-        lambda: F.soundex(ce.l()) == F.soundex(ce.r()),
-        f"Soundex match on {ce.name}",
+        f"soundex({ce.sql_l()}) = soundex({ce.sql_r()})", f"Soundex match on {ce.name}"
     )
 
 
@@ -317,11 +270,9 @@ def AbsoluteTimeDifferenceLevel(
     ce = _date_parsed_ce(col, input_is_string, datetime_format)
     name = _ce(col).name
     seconds = float(threshold) * _SECONDS[metric]
+    epoch_l, epoch_r = (f"CAST(CAST({c} AS TIMESTAMP) AS DOUBLE)" for c in (ce.sql_l(), ce.sql_r()))
     return ComparisonLevel(
-        lambda: F.abs(
-            ce.l().cast("timestamp").cast("double") - ce.r().cast("timestamp").cast("double")
-        )
-        <= seconds,
+        f"abs({epoch_l} - {epoch_r}) <= {sql_literal(seconds)}",
         f"Abs difference of '{name} <= {threshold} {metric}'",
     )
 
@@ -345,17 +296,11 @@ def DistanceInKMLevel(
 ) -> ComparisonLevel:
     """comparison_level_library.py:849 — haversine great-circle distance."""
     lat, lon = _ce(lat_col), _ce(long_col)
-
-    def cond() -> Column:
-        d = haversine_km(
-            lat.l().cast("double"), lon.l().cast("double"),
-            lat.r().cast("double"), lon.r().cast("double"),
-        )
-        c = d <= km_threshold
-        if not_null:
-            c = c & lat.l().isNotNull() & lat.r().isNotNull() & lon.l().isNotNull() & lon.r().isNotNull()
-        return c
-
+    sides = [lat.sql_l(), lon.sql_l(), lat.sql_r(), lon.sql_r()]
+    d = haversine_km(*(f"CAST({c} AS DOUBLE)" for c in sides))
+    cond = f"{d} <= {sql_literal(km_threshold)}"
+    if not_null:
+        cond += "".join(f" AND {c} IS NOT NULL" for c in (sides[0], sides[2], sides[1], sides[3]))
     return ComparisonLevel(cond, f"Distance in km <= {km_threshold}")
 
 
@@ -366,7 +311,7 @@ def CosineSimilarityLevel(col: ColSpec, similarity_threshold: float) -> Comparis
     """comparison_level_library.py:907 — native HOF cosine (dialects.py:409-427)."""
     ce = _ce(col)
     return ComparisonLevel(
-        lambda: cosine_similarity(ce.l(), ce.r()) >= float(similarity_threshold),
+        f"{cosine_similarity(ce.sql_l(), ce.sql_r())} >= {sql_literal(float(similarity_threshold))}",
         f"Cosine similarity of {ce.name} >= {similarity_threshold}",
     )
 
@@ -375,7 +320,7 @@ def ArrayIntersectLevel(col: ColSpec, min_intersection: int = 1) -> ComparisonLe
     """comparison_level_library.py:957 — size(array_intersect) >= n."""
     ce = _ce(col)
     return ComparisonLevel(
-        lambda: F.size(F.array_intersect(ce.l(), ce.r())) >= min_intersection,
+        f"size(array_intersect({ce.sql_l()}, {ce.sql_r()})) >= {sql_literal(min_intersection)}",
         f"Array intersection size >= {min_intersection}",
     )
 
@@ -383,15 +328,10 @@ def ArrayIntersectLevel(col: ColSpec, min_intersection: int = 1) -> ComparisonLe
 def ArraySubsetLevel(col: ColSpec, empty_is_subset: bool = False) -> ComparisonLevel:
     """comparison_level_library.py:1003 — one side's set contained in the other."""
     ce = _ce(col)
-
-    def cond() -> Column:
-        inter = F.size(F.array_intersect(ce.l(), ce.r()))
-        smaller = F.least(F.size(ce.l()), F.size(ce.r()))
-        c = inter == smaller
-        if not empty_is_subset:
-            c = c & (smaller > 0)
-        return c
-
+    smaller = f"least(size({ce.sql_l()}), size({ce.sql_r()}))"
+    cond = f"size(array_intersect({ce.sql_l()}, {ce.sql_r()})) = {smaller}"
+    if not empty_is_subset:
+        cond = f"({cond}) AND ({smaller} > 0)"
     return ComparisonLevel(cond, f"Array subset on {ce.name}")
 
 
@@ -400,24 +340,24 @@ def ArraySubsetLevel(col: ColSpec, empty_is_subset: bool = False) -> ComparisonL
 
 def PercentageDifferenceLevel(col: ColSpec, percentage_threshold: float) -> ComparisonLevel:
     """comparison_level_library.py:1049 — abs(l-r)/greatest(l,r) < p."""
-    ce = _ce(col)
+    l, r = _as_double(_ce(col))
     return ComparisonLevel(
-        lambda: (
-            F.abs(ce.l().cast("double") - ce.r().cast("double"))
-            / F.greatest(ce.l().cast("double"), ce.r().cast("double"))
-        )
-        < float(percentage_threshold),
-        f"Percentage difference of '{ce.name}' within {percentage_threshold:.2%}",
+        f"abs({l} - {r}) / greatest({l}, {r}) < {sql_literal(float(percentage_threshold))}",
+        f"Percentage difference of '{_ce(col).name}' within {percentage_threshold:.2%}",
     )
 
 
 def AbsoluteDifferenceLevel(col: ColSpec, difference_threshold: float) -> ComparisonLevel:
     """comparison_level_library.py:1088 — abs(l-r) <= t."""
-    ce = _ce(col)
+    l, r = _as_double(_ce(col))
     return ComparisonLevel(
-        lambda: F.abs(ce.l().cast("double") - ce.r().cast("double")) <= float(difference_threshold),
-        f"Absolute difference of '{ce.name}' <= {difference_threshold}",
+        f"abs({l} - {r}) <= {sql_literal(float(difference_threshold))}",
+        f"Absolute difference of '{_ce(col).name}' <= {difference_threshold}",
     )
+
+
+def _as_double(ce: ColumnExpression) -> tuple[str, str]:
+    return f"CAST({ce.sql_l()} AS DOUBLE)", f"CAST({ce.sql_r()} AS DOUBLE)"
 
 
 # -- composition (reference comparison_level_composition.py) -----------------
@@ -428,7 +368,7 @@ def And(*levels: ComparisonLevel) -> ComparisonLevel:
         raise ValueError("And() requires at least one comparison level")
     label = " AND ".join(lv.label_for_charts for lv in levels)
     return ComparisonLevel(
-        lambda: _fold(levels, lambda a, b: a & b),
+        " AND ".join(f"({lv.sql_condition})" for lv in levels),
         f"({label})",
         is_null_level=all(lv.is_null_level for lv in levels),
     )
@@ -439,7 +379,7 @@ def Or(*levels: ComparisonLevel) -> ComparisonLevel:
         raise ValueError("Or() requires at least one comparison level")
     label = " OR ".join(lv.label_for_charts for lv in levels)
     return ComparisonLevel(
-        lambda: _fold(levels, lambda a, b: a | b),
+        " OR ".join(f"({lv.sql_condition})" for lv in levels),
         f"({label})",
         is_null_level=all(lv.is_null_level for lv in levels),
     )
@@ -448,15 +388,7 @@ def Or(*levels: ComparisonLevel) -> ComparisonLevel:
 def Not(level: ComparisonLevel) -> ComparisonLevel:
     if level.is_null_level:
         raise ValueError("Cannot negate a null level")
-    return ComparisonLevel(lambda: ~level.condition(), f"NOT ({level.label_for_charts})")
-
-
-def _fold(levels, op) -> Column:
-    cols = [lv.condition() for lv in levels]
-    out = cols[0]
-    for c in cols[1:]:
-        out = op(out, c)
-    return out
+    return ComparisonLevel(f"NOT ({level.sql_condition})", f"NOT ({level.label_for_charts})")
 
 
 # ---------------------------------------------------------------------------
@@ -513,8 +445,8 @@ def _normalise_identifier_quoting(sql: str) -> str:
 def _level_from_reference_dict(d: dict) -> ComparisonLevel:
     """Accept a genuine reference-splink settings level dict (sql_condition
     string + probabilities — reference comparison_level.py as_dict shape), so
-    models interchange at the JSON level (ADVICE r1). The condition goes
-    through ``F.expr`` exactly like ``CustomLevel``."""
+    models interchange at the JSON level (ADVICE r1). The condition becomes
+    the level's ``sql_condition`` exactly like ``CustomLevel``'s."""
     import re
 
     sql = d.get("sql_condition")

@@ -16,8 +16,7 @@ import math
 from itertools import islice
 
 import pandas as pd
-from pyspark.sql import Column, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
@@ -340,23 +339,37 @@ def _try_register_java(spark: SparkSession) -> bool:
 
 def register_udfs(spark: SparkSession) -> None:
     """Register the UDF pack under the same names the reference's jar used
-    (jar_location.py:42-64), so ``CustomLevel``/``DistanceFunctionLevel``
-    SQL fragments keep working via ``F.expr``.
+    (jar_location.py:42-64), so comparison levels and ``CustomLevel`` /
+    ``DistanceFunctionLevel`` SQL call them by name.
 
     Prefers the compiled JVM implementations (no Python workers in the
     scoring hot path — measured ~4x over the Arrow pandas UDFs on 2M pairs);
-    falls back to the pandas UDFs when the jar is unavailable.
+    falls back to the pandas UDFs when the jar is unavailable. The pairwise
+    array metrics and ``double_metaphone`` are pandas UDFs either way.
     """
+    from .phonetic import dmetaphone_udf
+
     key = id(spark)
     if key in _REGISTERED_SESSIONS:
         return
+    python_udfs = [
+        ("pairwise_jaro_winkler_max", pairwise_jaro_winkler_max_udf),
+        ("pairwise_jaro_max", pairwise_jaro_max_udf),
+        ("pairwise_jaccard_max", pairwise_jaccard_max_udf),
+        ("pairwise_damerau_levenshtein_min", pairwise_damerau_levenshtein_min_udf),
+        ("double_metaphone", dmetaphone_udf),
+    ]
     if _try_register_java(spark):
         _JVM_SESSIONS.add(key)
     else:
-        spark.udf.register("jaro_sim", jaro_sim_udf)
-        spark.udf.register("jaro_winkler", jaro_winkler_udf)
-        spark.udf.register("damerau_levenshtein", damerau_levenshtein_udf)
-        spark.udf.register("jaccard", jaccard_udf)
+        python_udfs += [
+            ("jaro_sim", jaro_sim_udf),
+            ("jaro_winkler", jaro_winkler_udf),
+            ("damerau_levenshtein", damerau_levenshtein_udf),
+            ("jaccard", jaccard_udf),
+        ]
+    for name, udf in python_udfs:
+        spark.udf.register(name, udf)
     _REGISTERED_SESSIONS.add(key)
 
 
@@ -365,61 +378,31 @@ def _jvm_active() -> bool:
     return s is not None and id(s) in _JVM_SESSIONS
 
 
-def jaro_sim_call(l: Column, r: Column) -> Column:
-    """Dispatcher for comparison levels: JVM function when registered on the
-    active session, else the Arrow pandas UDF."""
-    return F.call_function("jaro_sim", l, r) if _jvm_active() else jaro_sim_udf(l, r)
-
-
-def jaro_winkler_call(l: Column, r: Column) -> Column:
-    return (
-        F.call_function("jaro_winkler", l, r)
-        if _jvm_active()
-        else jaro_winkler_udf(l, r)
-    )
-
-
-def jaccard_call(l: Column, r: Column) -> Column:
-    return F.call_function("jaccard", l, r) if _jvm_active() else jaccard_udf(l, r)
-
-
-def damerau_levenshtein_call(l: Column, r: Column) -> Column:
-    return (
-        F.call_function("damerau_levenshtein", l, r)
-        if _jvm_active()
-        else damerau_levenshtein_udf(l, r)
-    )
-
-
 # ---------------------------------------------------------------------------
-# Native Column expressions (stay JVM-side; no UDF)
+# Native SQL expressions (stay JVM-side; no UDF)
 # ---------------------------------------------------------------------------
 
 
-def cosine_similarity(l: Column, r: Column) -> Column:
-    """Cosine similarity of two double arrays via higher-order functions.
+def cosine_similarity(l: str, r: str) -> str:
+    """Cosine similarity of two double arrays (SQL text ``l`` / ``r``) via
+    higher-order functions.
 
     Direct port of the reference's native Spark expression
     (dialects.py:409-427): aggregate(zip_with(l, r, *)) / (norm_l * norm_r).
     Stays inside whole-stage codegen — no Python.
     """
-    dot = F.aggregate(
-        F.zip_with(l, r, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm_l = F.sqrt(F.aggregate(l, F.lit(0.0), lambda acc, x: acc + x * x))
-    norm_r = F.sqrt(F.aggregate(r, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot / (norm_l * norm_r)
+    def norm(a: str) -> str:
+        return f"sqrt(aggregate({a}, 0.0D, (acc, x) -> acc + x * x))"
+
+    dot = f"aggregate(zip_with({l}, {r}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+    return f"{dot} / ({norm(l)} * {norm(r)})"
 
 
-def haversine_km(lat_l: Column, lon_l: Column, lat_r: Column, lon_r: Column) -> Column:
+def haversine_km(lat_l: str, lon_l: str, lat_r: str, lon_r: str) -> str:
     """Great-circle distance in km (reference comparison_level_sql.py
-    great_circle_distance_km_sql) as pure Column trig — JVM-side."""
-    dlat = F.radians(lat_r - lat_l)
-    dlon = F.radians(lon_r - lon_l)
-    a = (
-        F.sin(dlat / 2) * F.sin(dlat / 2)
-        + F.cos(F.radians(lat_l)) * F.cos(F.radians(lat_r)) * F.sin(dlon / 2) * F.sin(dlon / 2)
-    )
-    return F.lit(2.0 * 6371.0) * F.asin(F.sqrt(a))
+    great_circle_distance_km_sql) over SQL text operands — JVM-side."""
+    dlat = f"radians({lat_r} - {lat_l})"
+    dlon = f"radians({lon_r} - {lon_l})"
+    a = (f"sin({dlat} / 2) * sin({dlat} / 2) + cos(radians({lat_l})) * "
+         f"cos(radians({lat_r})) * sin({dlon} / 2) * sin({dlon} / 2)")
+    return f"12742.0D * asin(sqrt({a}))"

@@ -18,6 +18,7 @@ import logging
 import os
 import tempfile
 import uuid
+import weakref
 from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark import StorageLevel
@@ -37,8 +38,13 @@ _STATS_RESET_EVERY = 4
 
 logger = logging.getLogger(__name__)
 
+# every live policy: Spark's CacheManager keys a cache by canonical plan, so
+# two linkers over the same input share one cached frame, and a release must
+# see the other policies' registered frames before it unpersists
+_LIVE_POLICIES: "weakref.WeakSet[MaterializationPolicy]" = weakref.WeakSet()
 
-@dataclass
+
+@dataclass(eq=False)
 class MaterializationPolicy:
     """How to break lineage per pipeline stage."""
 
@@ -48,6 +54,9 @@ class MaterializationPolicy:
     _iterative_counts: dict = field(default_factory=dict)
     _bucketed_tables: list = field(default_factory=list)
     _parquet_paths: list = field(default_factory=list)
+
+    def __post_init__(self) -> None:
+        _LIVE_POLICIES.add(self)
 
     def repartition_count(self, df: DataFrame) -> int:
         """Partitions to spread blocked pairs over before the fuzzy-metric
@@ -120,8 +129,18 @@ class MaterializationPolicy:
     def release(self, df: DataFrame) -> None:
         """Unpersist one frame ``materialize`` returned, before the policy's
         owner is done with the rest."""
-        df.unpersist()
         self._registry = [d for d in self._registry if d is not df]
+        self._unpersist(df)
+
+    def _unpersist(self, df: DataFrame) -> None:
+        """Unpersist ``df`` unless a frame still registered with a live
+        policy has the same semantics in the same session: its cache is
+        the same cache."""
+        for policy in list(_LIVE_POLICIES):
+            for other in policy._registry:
+                if other.sparkSession is df.sparkSession and other.sameSemantics(df):
+                    return
+        df.unpersist()
 
     def materialize_bucketed(
         self,
@@ -183,14 +202,14 @@ class MaterializationPolicy:
         return df.sparkSession.read.parquet(path)
 
     def unpersist_all(self) -> None:
-        for df in self._registry:
+        while self._registry:
+            df = self._registry.pop()
             try:
-                df.unpersist()
+                self._unpersist(df)
             except Exception as e:
                 logger.warning("could not unpersist the %r frame: %s",
                                getattr(df, "_splink_stage", "unnamed"), e,
                                exc_info=True)
-        self._registry.clear()
         for spark, name in self._bucketed_tables:
             try:
                 spark.sql(f"DROP TABLE IF EXISTS {name}")

@@ -4,8 +4,11 @@ threshold_args_to_match_weight) and cartesian-count math."""
 
 from __future__ import annotations
 
+import logging
 import math
 from typing import Optional
+
+logger = logging.getLogger(__name__)
 
 
 def prob_to_bayes_factor(prob: float) -> float:
@@ -155,7 +158,7 @@ def attach_caches(df, *frames):
     existing = list(getattr(df, "_splink_caches", ()) or ())
     try:
         df._splink_caches = existing + [f for f in frames if f is not None]
-    except Exception:
+    except AttributeError:  # a result type that takes no attributes
         pass
     return df
 
@@ -171,9 +174,9 @@ def unpersist_caches(df, blocking: bool = False) -> int:
             frame.unpersist(blocking=blocking)
             n += 1
         except Exception:
-            pass
+            logger.warning("could not release a cached frame", exc_info=True)
     try:
         df._splink_caches = []
-    except Exception:
+    except AttributeError:  # a result type that takes no attributes
         pass
     return n

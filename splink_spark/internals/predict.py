@@ -5,18 +5,20 @@ Reference: splink/internals/predict.py:42-132 —
 with the numerically-stable sigmoid (:216-227):
 ``p = 1/(1+2^-mw)`` when mw >= 0 else ``2^mw/(1+2^mw)``.
 
-:func:`match_weight_column` is the one place the match weight is written:
+:func:`match_weight_sql` is the one place the match weight is written:
 the prior plus, per comparison in order, its log2 bayes-factor CASE ladder
 and its TF-adjustment ladder. predict sums it over the levels' own m/u; EM's
 with-TF E-step (``training._em_tf_aggs``) sums it over the session's m/u.
-All arithmetic is Column math inside whole-stage codegen; the per-gamma
-bayes-factor constants are computed once on the driver.
+The weight, the sigmoid and the score bound are each written as one SQL
+expression and parsed by one ``F.expr``; they run inside whole-stage
+codegen, and the per-gamma bayes-factor constants are computed once on the
+driver.
 
 Thresholded scoring prunes before the similarity functions run. The match
 weight is the prior plus one driver-known constant per comparison level, so
 a threshold bounds what each comparison must contribute.
 :func:`score_bound` builds that bound from each comparison's cheap leading
-null / exact-match conditions (``Comparison.score_bound_column``), and
+null / exact-match conditions (``Comparison.score_bound_sql``), and
 :func:`where_score_can_reach` drops the pairs whose bound falls short of the
 threshold before the gamma projection evaluates Jaro-Winkler, Levenshtein
 and the like. The threshold WHERE in :func:`predict_from_comparison_vectors`
@@ -30,9 +32,10 @@ import math
 import sys
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .column_expression import sql_ident, sql_literal
 from .misc import optimizer_barrier, prob_to_match_weight
 from .settings import Settings
 from .splink_logging import PIPELINE
@@ -40,36 +43,34 @@ from .splink_logging import PIPELINE
 logger = logging.getLogger(__name__)
 
 
-def match_weight_column(
-    comparisons: list, prior: float, m_u: Optional[dict] = None
-) -> Column:
-    """The match weight: ``log2(prior / (1 - prior))`` plus, per comparison
-    in order, its log2 bayes-factor CASE ladder and its TF-adjustment ladder.
+def match_weight_sql(comparisons: list, prior: float, m_u: Optional[dict] = None) -> str:
+    """The match weight as SQL: ``log2(prior / (1 - prior))`` plus, per
+    comparison in order, its log2 bayes-factor CASE ladder and its
+    TF-adjustment ladder.
 
     ``m_u`` maps ``(comparison index, gamma value)`` to (m, u); None takes
     the levels' own m/u (predict). Summing driver-precomputed log2 constants
     (plus the runtime log2(tf) terms) equals log2(prod bf), deterministically
     in summation order.
     """
-    mw: Column = F.lit(prob_to_match_weight(prior))
+    terms = [sql_literal(prob_to_match_weight(prior))]
     for ci, comp in enumerate(comparisons):
         comp_m_u = None
         if m_u is not None:
             comp_m_u = {k: v for (i, k), v in m_u.items() if i == ci}
-        mw = mw + comp.log2_bayes_factor_column(comp_m_u)
-        tf_mw = comp.log2_tf_adjustment_column(comp_m_u)
+        terms.append(comp.log2_bayes_factor_sql(comp_m_u))
+        tf_mw = comp.log2_tf_adjustment_sql(comp_m_u)
         if tf_mw is not None:
-            mw = mw + tf_mw
-    return mw
+            terms.append(tf_mw)
+    return " + ".join(terms)
 
 
-def stable_sigmoid(match_weight: Column) -> Column:
-    """2^mw / (1 + 2^mw), computed stably (predict.py:216-227)."""
-    two_pow = F.pow(F.lit(2.0), match_weight)
-    two_pow_neg = F.pow(F.lit(2.0), -match_weight)
-    return F.when(match_weight >= 0, F.lit(1.0) / (F.lit(1.0) + two_pow_neg)).otherwise(
-        two_pow / (F.lit(1.0) + two_pow)
-    )
+def stable_sigmoid(match_weight: str) -> str:
+    """2^mw / (1 + 2^mw) over the SQL text ``match_weight``, computed
+    stably (predict.py:216-227)."""
+    mw = f"({match_weight})"
+    return (f"CASE WHEN {mw} >= 0 THEN 1.0D / (1.0D + power(2.0D, -{mw})) "
+            f"ELSE power(2.0D, {mw}) / (1.0D + power(2.0D, {mw})) END")
 
 
 def _require_probabilities(settings: Settings) -> None:
@@ -136,17 +137,17 @@ def where_score_can_reach(
     """Keep the pairs whose weight bound, ``prior + sum(bound_c)``, reaches
     ``w_min``.
 
-    The bound is summed in the order :func:`match_weight_column` sums the
+    The bound is summed in the order :func:`match_weight_sql` sums the
     match weight, over the same float constants, and rounded float
     addition is monotone, so ``bound >= match_weight`` for every pair: no
     pair that passes the threshold is dropped. The predicate sits behind an
     optimizer barrier: Catalyst would otherwise push its CASE ladders into
     the junction join's condition.
     """
-    bound: Column = F.lit(prob_to_match_weight(settings.probability_two_random_records_match))
-    for comp in settings.comparisons:
-        bound = bound + comp.score_bound_column()
-    return pairs_with_cols.where(optimizer_barrier(bound >= F.lit(float(w_min))))
+    prior = sql_literal(prob_to_match_weight(settings.probability_two_random_records_match))
+    bound = " + ".join([prior] + [comp.score_bound_sql() for comp in settings.comparisons])
+    reaches = F.expr(f"{bound} >= {sql_literal(float(w_min))}")
+    return pairs_with_cols.where(optimizer_barrier(reaches))
 
 
 def predict_from_comparison_vectors(
@@ -177,11 +178,11 @@ def predict_from_comparison_vectors(
             if tf_col is not None:
                 audit.append(tf_col)
         scored = scored.select("*", *audit)
+    mw = match_weight_sql(settings.comparisons, settings.probability_two_random_records_match)
+    scored = scored.withColumn("match_weight", F.expr(mw))
     scored = scored.withColumn(
-        "match_weight",
-        match_weight_column(settings.comparisons, settings.probability_two_random_records_match),
+        "match_probability", F.expr(stable_sigmoid(sql_ident("match_weight")))
     )
-    scored = scored.withColumn("match_probability", stable_sigmoid(F.col("match_weight")))
 
     front = ["match_weight", "match_probability"]
     if threshold_match_weight is not None or threshold_match_probability is not None:
@@ -189,10 +190,9 @@ def predict_from_comparison_vectors(
             *[c for c in scored.columns if c not in front],
             *[optimizer_barrier(F.col(c)).alias(c) for c in front],
         )
-        if threshold_match_weight is not None:
-            scored = scored.where(F.col("match_weight") >= threshold_match_weight)
-        if threshold_match_probability is not None:
-            scored = scored.where(F.col("match_probability") >= threshold_match_probability)
+        for c, threshold in zip(front, (threshold_match_weight, threshold_match_probability)):
+            if threshold is not None:
+                scored = scored.where(F.expr(f"{sql_ident(c)} >= {sql_literal(threshold)}"))
 
     rest = [c for c in scored.columns if c not in front]
     return scored.select(*front, *rest)

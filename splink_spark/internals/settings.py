@@ -44,12 +44,11 @@ class Settings:
         self.blocking_rules_to_generate_predictions = [
             _to_rule(r) for r in self.blocking_rules_to_generate_predictions
         ]
-        # comparisons name their own gamma/bf/mw/tf columns; push the
+        # comparisons name their own gamma/bf/tf columns; push the
         # configured prefixes onto each
         for comp in self.comparisons:
             comp.gamma_prefix = self.comparison_vector_value_column_prefix
             comp.bf_prefix = self.bayes_factor_column_prefix
-            comp.mw_prefix = self.match_weight_column_prefix
             comp.tf_prefix = self.term_frequency_adjustment_column_prefix
 
     # -- conveniences ----------------------------------------------------------

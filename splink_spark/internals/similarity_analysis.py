@@ -22,13 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions import (
-    damerau_levenshtein_call,
-    jaccard_call,
-    jaro_sim_call,
-    jaro_winkler_call,
-    register_udfs,
-)
+from .functions import register_udfs
 from .phonetic import dmetaphone_udf, double_metaphone
 
 __all__ = [
@@ -77,14 +71,14 @@ def comparator_score_df(
         a.alias(col1),
         b.alias(col2),
         F.levenshtein(a, b).alias("levenshtein_distance"),
-        damerau_levenshtein_call(a, b).cast("long").alias(
+        F.call_function("damerau_levenshtein", a, b).cast("long").alias(
             "damerau_levenshtein_distance"
         ),
-        F.round(jaro_sim_call(a, b), decimal_places).alias("jaro_similarity"),
-        F.round(jaro_winkler_call(a, b), decimal_places).alias(
+        F.round(F.call_function("jaro_sim", a, b), decimal_places).alias("jaro_similarity"),
+        F.round(F.call_function("jaro_winkler", a, b), decimal_places).alias(
             "jaro_winkler_similarity"
         ),
-        F.round(jaccard_call(a, b), decimal_places).alias("jaccard_similarity"),
+        F.round(F.call_function("jaccard", a, b), decimal_places).alias("jaccard_similarity"),
     )
     return out.toPandas()
 

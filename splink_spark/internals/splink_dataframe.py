@@ -25,6 +25,7 @@ accessor aliases are absent).
 
 from __future__ import annotations
 
+import logging
 import os
 import uuid
 from typing import Any, Optional
@@ -38,6 +39,8 @@ try:  # classic (JVM-backed) sessions — the only mode this repo targets
 except ImportError:  # pragma: no cover - Spark Connect
     _ClassicDataFrame = DataFrame  # type: ignore[assignment,misc]
     _HAVE_CLASSIC = False
+
+logger = logging.getLogger(__name__)
 
 
 def _ascii_uid(n: int = 8) -> str:
@@ -202,13 +205,13 @@ class SplinkDataFrame(_ClassicDataFrame):
         try:
             self.unpersist(blocking=False)
         except Exception:
-            pass
+            logger.warning("could not unpersist %s", self.physical_name, exc_info=True)
         catalog = self.sparkSession.catalog
         for name in list(self._views_registered):
             try:
                 catalog.dropTempView(name)
             except Exception:
-                pass
+                logger.warning("could not drop temp view %s", name, exc_info=True)
             self._views_registered.discard(name)
 
     def _repr_pretty_(self, p, cycle) -> None:  # pragma: no cover - notebook

@@ -21,7 +21,7 @@ Reference:
   the idiomatic Spark design (per-iteration work is O(#patterns), no reason
   to launch a job per iteration). With ``estimate_without_term_frequencies
   =False`` the E-step instead scores every pair through predict's own
-  ``predict.match_weight_column``, over the session's prior and m/u, so
+  ``predict.match_weight_sql``, over the session's prior and m/u, so
   predict and EM weigh a comparison level (TF term included) the same way.
 """
 
@@ -40,9 +40,10 @@ from .blocking import (
     block_using_rules,
     count_comparisons_per_rule,
 )
+from .column_expression import sql_ident, sql_literal
 from .comparison_vectors import id_pairs
 from .misc import bayes_factor_to_prob, row_count
-from .predict import match_weight_column, stable_sigmoid
+from .predict import match_weight_sql, stable_sigmoid
 
 logger = logging.getLogger(__name__)
 
@@ -87,9 +88,9 @@ def _deterministic_pairs_count_via_aggregation(linker, rules) -> Optional[tuple[
     keys: dict = {}  # expression -> (alias, column)
     rule_keys = []
     for r in rules:
-        cols = [ce.on(ce.name) for ce in r.key_expressions]
+        sqls = [ce.sql_on(ce.name) for ce in r.key_expressions]
         rule_keys.append(frozenset(
-            keys.setdefault(str(c), (f"k{len(keys)}", c))[0] for c in cols))
+            keys.setdefault(sql, (f"k{len(keys)}", sql))[0] for sql in sqls))
     knames = [alias for alias, _ in keys.values()]
     sign = {frozenset(): 0}
     for size in range(1, len(rules) + 1):
@@ -103,33 +104,30 @@ def _deterministic_pairs_count_via_aggregation(linker, rules) -> Optional[tuple[
 
     by_sd = ["__sd"] if link_only else []
     records = concat.select(
-        *[c.alias(a) for a, c in keys.values()],
-        *([F.col(sd).alias("__sd")] if link_only else []),
+        *[F.expr(f"{sql} AS {a}") for a, sql in keys.values()],
+        *([F.expr(f"{sql_ident(sd)} AS __sd")] if link_only else []),
     )
+    grouping_id = " + ".join(["0"] + [f"grouping({k}) * {1 << j}" for j, k in enumerate(knames)])
     counts = records.groupingSets(
         [[k for k in knames if k in ks] + by_sd for ks in sets], *knames, *by_sd
-    ).agg(
-        F.count(F.lit(1)).alias("tot"),
-        sum(F.grouping(k) * (1 << j) for j, k in enumerate(knames)).alias("__gid"),
-    )
+    ).agg(F.expr("count(1) AS tot"), F.expr(f"{grouping_id} AS __gid"))
     # a NULL in a grouped key is a NULL key value: it never joins
     for j, k in enumerate(knames):
-        rolled_up = F.col("__gid").bitwiseAND(1 << j) != 0
-        counts = counts.where(rolled_up | F.col(k).isNotNull())
-    pairs = F.expr("tot * (tot - 1) DIV 2")
+        counts = counts.where(F.expr(f"(__gid & {1 << j}) != 0 OR {k} IS NOT NULL"))
+    pairs = "(tot * (tot - 1) DIV 2)"
     if link_only:
         # within-key cross-dataset pairs: (tot^2 - sum(c_d^2)) / 2
         counts = counts.groupBy("__gid", *knames).agg(
-            F.sum(F.col("tot") * F.col("tot")).alias("sq"), F.sum("tot").alias("tot"))
-        pairs = F.expr("(tot * tot - sq) DIV 2")
-    coef = F.lit(0)
+            F.expr("sum(tot * tot) AS sq"), F.expr("sum(tot) AS tot"))
+        pairs = "((tot * tot - sq) DIV 2)"
+    coef = "0"
     for ks in sets:
-        coef = F.when(F.col("__gid") == gid(ks), sign[ks]).otherwise(coef)
-    everything = F.col("__gid") == gid(frozenset())
+        coef = f"CASE WHEN __gid = {gid(ks)} THEN {sign[ks]} ELSE {coef} END"
+    everything = f"__gid = {gid(frozenset())}"
     row = counts.agg(
-        F.sum(coef * pairs).alias("observed"),
-        F.sum(F.when(everything, pairs)).alias("cartesian"),
-        F.sum(F.when(everything, F.col("tot"))).alias("n"),
+        F.expr(f"sum(({coef}) * {pairs}) AS observed"),
+        F.expr(f"sum(CASE WHEN {everything} THEN {pairs} END) AS cartesian"),
+        F.expr(f"sum(CASE WHEN {everything} THEN tot END) AS n"),
     ).collect()[0]
     concat._splink_row_count = int(row["n"] or 0)
     return int(row["observed"] or 0), int(row["cartesian"] or 0)
@@ -188,11 +186,11 @@ def _level_counts(comparisons, cv) -> dict:
         for lv in comp.comparison_levels:
             if not lv.is_null_level:
                 k = lv.comparison_vector_value
-                aggs.append(
-                    F.sum(F.when(F.col(g) == k, 1).otherwise(0)).alias(f"{g}__{k}")
-                )
-        aggs.append(F.sum(F.when(F.col(g) != -1, 1).otherwise(0)).alias(f"{g}__total"))
-    return {key: v or 0 for key, v in cv.agg(*aggs).collect()[0].asDict().items()}
+                aggs.append((f"{sql_ident(g)} = {sql_literal(k)}", f"{g}__{k}"))
+        aggs.append((f"{sql_ident(g)} != -1", f"{g}__total"))
+    row = cv.agg(*[F.expr(f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS {sql_ident(name)}")
+                   for cond, name in aggs]).collect()[0]
+    return {key: v or 0 for key, v in row.asDict().items()}
 
 
 def _set_level_proportions(comparisons, counts: dict, which: str) -> dict:
@@ -341,10 +339,10 @@ def estimate_m_from_label_column(linker, label_column: str) -> dict:
 
 def _em_tf_aggs(active, m, u, session_lam):
     """Aggregate expressions for the with-TF E-step: p per pair is predict's
-    match weight (``predict.match_weight_column``) over the session's prior
+    match weight (``predict.match_weight_sql``) over the session's prior
     and m/u, then expected-count sums per level."""
     m_u = {key: (m[key], u[key]) for key in m}
-    p = stable_sigmoid(match_weight_column(active, session_lam, m_u))
+    p = F.expr(stable_sigmoid(match_weight_sql(active, session_lam, m_u)))
     aggs = [
         F.sum(p).alias("__lam_num"),
         F.count(F.lit(1)).cast("double").alias("__lam_den"),
@@ -722,9 +720,7 @@ def estimate_parameters_using_em(
                 "comparison_sort_order": ci,
                 "comparison_vector_value": k,
                 "label_for_charts": lv.label_for_charts,
-                "sql_condition": (lv.spec or {}).get(
-                    "sql_condition", lv.label_for_charts
-                ),
+                "sql_condition": lv.sql_condition,
             }
 
     session = EMTrainingSession(

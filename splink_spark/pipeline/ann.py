@@ -18,8 +18,10 @@ from pyspark.sql.window import Window
 from ..internals.functions import cosine_similarity
 
 
-def _sim(l, r):
-    return cosine_similarity(l.cast("array<double>"), r.cast("array<double>"))
+def _sim():
+    """Cosine similarity of the ``__q_emb`` and ``__c_emb`` embeddings."""
+    return F.expr(cosine_similarity(
+        "CAST(__q_emb AS ARRAY<DOUBLE>)", "CAST(__c_emb AS ARRAY<DOUBLE>)"))
 
 
 def brute_force_topk(
@@ -45,7 +47,7 @@ def brute_force_topk(
         .select(
             "query_id",
             "neighbour_id",
-            _sim(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
+            _sim().alias("cosine_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -198,7 +200,7 @@ def ivf_topk(
     scored = cand.select(
         "query_id",
         "neighbour_id",
-        _sim(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
+        _sim().alias("cosine_sim"),
     ).dropDuplicates(["query_id", "neighbour_id"])
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbour_id"))
     return (
@@ -603,7 +605,7 @@ def ivf_topk_portable(
         .select(
             "query_id",
             "neighbour_id",
-            _sim(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
+            _sim().alias("cosine_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbour_id"))
@@ -660,7 +662,7 @@ def lsh_topk(
     scored = cand.select(
         "query_id",
         "neighbour_id",
-        _sim(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
+        _sim().alias("cosine_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbour_id"))
     return (
@@ -769,7 +771,7 @@ def topk_join(
         .select(
             "query_id",
             "neighbour_id",
-            _sim(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
+            _sim().alias("cosine_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -843,7 +845,7 @@ def sq8_topk(
         .select(
             "query_id",
             "neighbour_id",
-            _sim(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
+            _sim().alias("cosine_sim"),
         )
     )
     wf = Window.partitionBy("query_id").orderBy(
@@ -1154,7 +1156,7 @@ def pq_topk(
         .select(
             "query_id",
             "neighbour_id",
-            _sim(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
+            _sim().alias("cosine_sim"),
         )
     )
     wf = Window.partitionBy("query_id").orderBy(
@@ -1436,7 +1438,7 @@ def _ivfadc_search_core(
         .select(
             "query_id",
             "neighbour_id",
-            _sim(F.col("__q_emb"), F.col("__c_emb")).alias("cosine_sim"),
+            _sim().alias("cosine_sim"),
         )
     )
     wf = Window.partitionBy("query_id").orderBy(

@@ -384,6 +384,7 @@ def embedding_near_duplicates(
     an unblocked (or skew-blocked) corpus can never fall into an O(n^2)
     join by default.
     """
+    from ..internals.column_expression import sql_ident
     from ..internals.functions import cosine_similarity
 
     cols = [id_col, embedding_col, *block_cols]
@@ -400,10 +401,8 @@ def embedding_near_duplicates(
             F.sum(F.col("__c").cast("double") * (F.col("__c") - 1) / 2.0).alias("p")
         ).collect()[0]["p"] or 0.0
         method = "all_pairs" if est <= all_pairs_max_block_pairs else "lsh"
-    sim = cosine_similarity(
-        F.col(f"{embedding_col}_l").cast("array<double>"),
-        F.col(f"{embedding_col}_r").cast("array<double>"),
-    )
+    sim = F.expr(cosine_similarity(
+        *(f"CAST({sql_ident(embedding_col + s)} AS ARRAY<DOUBLE>)" for s in ("_l", "_r"))))
     block_eq = [
         F.col(f"{c}_l") == F.col(f"{c}_r") for c in block_cols
     ]

@@ -24,6 +24,11 @@ def spark():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()
     )
+    # comparison levels call the similarity pack by name, as a Linker's
+    # session has it
+    from splink_spark import register_udfs
+
+    register_udfs(spark)
     yield spark
     spark.stop()
 

@@ -87,6 +87,31 @@ def test_invalidate_cache(spark, trained2):
     assert trained2.inference.predict().count() > 0
 
 
+def test_invalidate_cache_keeps_another_linkers_equal_cache(spark, persons):
+    """Spark's CacheManager keys a cache by canonical plan, so two linkers
+    over one input share one cached ``df_concat``: one linker's
+    ``invalidate_cache`` leaves it cached for the other, and the last
+    holder's releases it."""
+    from pyspark import StorageLevel
+
+    records = persons.select("*", F.lit("shared cache probe").alias("probe"))
+
+    def linker():
+        return Linker(records, SettingsCreator(
+            comparisons=[cl.ExactMatch("surname")],
+            blocking_rules_to_generate_predictions=[block_on("dob")],
+        ))
+
+    a, b = linker(), linker()
+    frame_a = a.df_concat_with_tf()
+    b.df_concat_with_tf().count()
+    assert frame_a.storageLevel != StorageLevel.NONE
+    b.misc.invalidate_cache()
+    assert frame_a.storageLevel != StorageLevel.NONE
+    a.misc.invalidate_cache()
+    assert frame_a.storageLevel == StorageLevel.NONE
+
+
 def test_unpersist_all_names_what_it_could_not_release(spark, persons, caplog):
     """A frame or table the policy fails to release is named in a warning on
     the splink_spark logger, not skipped silently."""

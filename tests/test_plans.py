@@ -281,6 +281,53 @@ def test_repeated_predict_compiles_no_new_code(spark, parquet_persons):
     assert predict_once() == second
 
 
+def test_thresholded_predict_plan_builds_in_few_py4j_round_trips(spark, persons):
+    """Building (not running) a thresholded predict for a 5-comparison fuzzy
+    model stays within a py4j budget. Comparisons are SQL text, so every
+    gamma ladder, the score bound, the match weight and the sigmoid is one
+    ``F.expr`` parse; built from Column calls (each ``F.col`` and Column
+    method also captures its call site) the same plan took ~3,500-4,200
+    round trips."""
+    import gc
+
+    from splink_spark.internals.misc import row_count
+
+    settings = SettingsCreator(
+        comparisons=[
+            cl.JaroWinklerAtThresholds("first_name", [0.9, 0.7]),
+            cl.DamerauLevenshteinAtThresholds("surname", [1, 2]),
+            cl.JaccardAtThresholds("email", [0.9, 0.7]),
+            cl.ExactMatch("dob"),
+            cl.ExactMatch("city"),
+        ],
+        blocking_rules_to_generate_predictions=[block_on("substr(dob, 1, 7)")],
+        probability_two_random_records_match=1e-4,
+    )
+    for comp in settings.comparisons:
+        levels = [lv for lv in comp.comparison_levels if not lv.is_null_level]
+        for k, lv in enumerate(levels):
+            lv.m_probability, lv.u_probability = 0.9 ** (k + 1), 0.1 * (k + 1) / len(levels)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    linker = Linker(persons, settings)
+    row_count(linker.df_concat_with_tf())  # the broadcast decision's count job
+    gc.collect()
+    client.send_command = counting
+    try:
+        pred = linker.inference.predict(threshold_match_probability=0.5)
+    finally:
+        client.send_command = send
+    linker.misc.invalidate_cache()
+    assert "EvalPython" not in _plan(pred)
+    assert calls[0] <= 1200, calls[0]
+
+
 def test_bucketed_materialization_joins_without_exchange(spark, persons, tmp_path):
     """materialize_bucketed (SURVEY §7 step 10): two tables bucketed on the
     same key with the same bucket count must sort-merge-join with NO Exchange

@@ -4,6 +4,10 @@ inputs the example-based tests cannot."""
 
 from __future__ import annotations
 
+import math
+import re
+import struct
+
 import networkx as nx
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -126,7 +130,7 @@ def test_score_bound_arms_cover_every_reachable_level(specs, with_else):
 
     levels = [
         ComparisonLevel(
-            lambda: None,
+            "TRUE",
             f"level {i}",
             is_null_level=kind == "null",
             is_exact_match_level=kind == "exact",
@@ -139,7 +143,7 @@ def test_score_bound_arms_cover_every_reachable_level(specs, with_else):
         for i, (kind, m, u, tf, fixed) in enumerate(specs)
     ]
     if with_else:
-        levels.append(ComparisonLevel(lambda: None, "else", is_else_level=True,
+        levels.append(ComparisonLevel("TRUE", "else", is_else_level=True,
                                       m_probability=0.1, u_probability=0.9))
     if all(lv.is_null_level for lv in levels):
         return
@@ -190,3 +194,63 @@ def test_threshold_weight_floor_admits_every_passing_weight(mw, p):
     if prob >= p:
         assert mw >= floor
     assert threshold_weight_floor(threshold_match_weight=mw) <= mw
+
+
+# -- the SQL literal writer: the format half (the Spark half, one job over
+# the edge cases, is test_comparison_levels.py::
+# test_sql_literals_round_trip_through_spark) ------------------------------
+
+_DOUBLE_TOKEN = re.compile(r"-?(\d+(\.\d*)?|\.\d+)(e[+-]?\d+)?D", re.IGNORECASE)
+_SPECIAL_DOUBLES = {"NaN": math.nan, "Infinity": math.inf, "-Infinity": -math.inf}
+
+
+def _read_sql_literal(text: str):
+    """The value a literal ``sql_literal`` writes denotes, read by Spark's
+    lexer rules: a DOUBLE_LITERAL token (optionally parenthesised), a cast
+    of a special double, or a STRING_LITERAL whose only escapes are ``\\'``
+    and ``\\\\``."""
+    m = re.fullmatch(r"CAST\('(NaN|-?Infinity)' AS DOUBLE\)", text)
+    if m:
+        return _SPECIAL_DOUBLES[m.group(1)]
+    if text.startswith("'"):
+        inner = re.fullmatch(r"'((?:[^'\\]|\\.)*)'", text, re.DOTALL).group(1)
+        return re.sub(r"\\(.)", r"\1", inner, flags=re.DOTALL)
+    token = text[1:-1] if text.startswith("(") else text
+    assert _DOUBLE_TOKEN.fullmatch(token), text
+    assert token.startswith("-") == text.startswith("("), text
+    return float(token[:-1])
+
+
+def _same(a, b) -> bool:
+    """Equal values of one type: floats bit for bit (-0.0 is not 0.0), any
+    NaN equal to any NaN."""
+    if type(a) is not type(b):
+        return False
+    if isinstance(a, float):
+        return (math.isnan(a) and math.isnan(b)) or struct.pack("<d", a) == struct.pack("<d", b)
+    return a == b
+
+
+_literal_text = st.text(st.one_of(
+    st.sampled_from("'\\\n\t`\".*+?^$()[]{}|é😀𝄞"),
+    st.characters(blacklist_categories=("Cs",)),
+))
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.floats(allow_nan=True, allow_infinity=True, allow_subnormal=True), _literal_text)
+def test_sql_literal_text_denotes_its_value(x, s):
+    from splink_spark.internals.column_expression import sql_literal
+
+    for value in (x, -x, s):
+        assert _same(_read_sql_literal(sql_literal(value)), value), (value, sql_literal(value))
+
+
+@settings(max_examples=300, deadline=None)
+@given(_literal_text.filter(bool))
+def test_sql_ident_text_names_one_identifier(name):
+    from splink_spark.internals.column_expression import sql_ident
+
+    text = sql_ident(name)
+    inner = re.fullmatch(r"`((?:[^`]|``)*)`", text, re.DOTALL).group(1)
+    assert inner.replace("``", "`") == name

@@ -728,15 +728,15 @@ def test_lat_long_distance_formula_literals(
     reference pins (12742 km diameter spherical model), rel 1e-4 / abs 1e-3."""
     from pyspark.sql import functions as F
 
+    from splink_spark.internals.column_expression import sql_literal
     from splink_spark.internals.functions import haversine_km
 
     row = (
         spark.range(1)
         .select(
-            haversine_km(
-                F.lit(float(lat_l)), F.lit(float(long_l)),
-                F.lit(float(lat_r)), F.lit(float(long_r)),
-            ).alias("d")
+            F.expr(haversine_km(
+                *(sql_literal(float(v)) for v in (lat_l, long_l, lat_r, long_r))
+            )).alias("d")
         )
         .collect()[0]
     )
